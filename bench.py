@@ -347,7 +347,7 @@ def run_one(spark, name: str, sf_dir: str) -> float:
     df = fn(spark, sf_dir)
     df.count()
     dt = time.time() - t0
-    # Measurement-bug fix (r12, documented in OPTIMIZATION_r12.md):
+    # Measurement-bug fix:
     # query-BODY persists (cms/oov/bpe/vocab-overlap term tables) are
     # invocation-scoped, but Spark's CacheManager dedupes by analyzed
     # plan — without draining them here, the second timed pass read the

@@ -826,22 +826,28 @@ def channel_acf(
         "t",
         F.expr(f"CAST(floor(v * {vs} + 0.5) AS DECIMAL(19,0))").alias("_vi"),
     )
+    # bounds are parenthesized operands: a negative (pre-1970) literal
+    # spliced in bare would make pmod(-lo, ..) read "--5L", a SQL comment
     seq_expr = (
-        "CASE WHEN lo + pmod(-lo, {p}) <= hi - pmod(hi, {p})"
-        " THEN sequence(lo + pmod(-lo, {p}), hi - pmod(hi, {p}), {p})"
+        "CASE WHEN {lo} + pmod(-{lo}, {p}) <= {hi} - pmod({hi}, {p})"
+        " THEN sequence({lo} + pmod(-{lo}, {p}), {hi} - pmod({hi}, {p}), {p})"
         " ELSE array() END"
-    ).format(p=p_ns)
+    )
     if known_bounds is not None:
         lo, hi = known_bounds
         grid = samples.sparkSession.range(1).select(
             F.explode(
-                F.expr(seq_expr.replace("lo", f"{lo}L").replace("hi", f"{hi}L"))
+                F.expr(seq_expr.format(lo=f"({lo}L)", hi=f"({hi}L)", p=p_ns))
             ).alias("t")
         )
     else:
         grid = (
             s.agg(F.min("t").alias("lo"), F.max("t").alias("hi"))
-            .select(F.explode(F.expr(seq_expr)).alias("t"))
+            .select(
+                F.explode(
+                    F.expr(seq_expr.format(lo="lo", hi="hi", p=p_ns))
+                ).alias("t")
+            )
         )
     chans = samples.select("channel").distinct()
     gc = grid.crossJoin(F.broadcast(chans))

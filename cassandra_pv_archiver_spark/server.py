@@ -44,7 +44,7 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import functions as F
 
 from .management import ChannelRegistry, url_decode
-from .plans.planner import plan_samples
+from .plans.planner import plan_samples, select_decimation_level
 from .sources.archive_store import ArchiveStore
 
 _PREFIX = "/archive-access/api/1.0/archive"
@@ -159,10 +159,13 @@ class ArchiveApp:
         # serving fast lane: probe triples from partition-bounded manifest
         # walks (typically ONE date partition per level), so plan_samples
         # skips its generic probe aggregation — whose `t <= start` arm
-        # would scan history partitions at archive scale
+        # would scan history partitions at archive scale. Only levels the
+        # planner may use (at or above the selected one) are probed.
+        best = select_decimation_level(periods, start, end, count)
         stats = {
             (period, ch): triple
             for period in periods
+            if period >= best
             for ch, triple in self.store.probe_stats(
                 period, start, end, [channel]
             ).items()

@@ -23,3 +23,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn, *args)`` runs ``fn`` under a fresh job group and
+    returns ``(result, number of Spark jobs it launched)``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn, *args, **kwargs):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            sc._jsc.clearJobGroup()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -1486,3 +1486,165 @@ def test_cross_process_concurrent_runs_single_materialize(
     assert n == dec.dropDuplicates(["channel", "t"]).count()
     assert sum(results) == n  # double-publish would make this 2n
     assert len(results) + len(refused) == 2
+
+
+# -- file format -------------------------------------------------------------
+def _parquet_files(root: str) -> set[str]:
+    import glob
+
+    return set(glob.glob(f"{root}/**/*.parquet", recursive=True))
+
+
+def _assert_store_format(path: str) -> None:
+    """zstd on every column, v2 data pages, and ``t`` delta-packed."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for i in range(rg.num_columns):
+            col = rg.column(i)
+            where = (path, col.path_in_schema)
+            assert col.compression == "ZSTD", where
+            # v1 pages name their dictionary encoding PLAIN_DICTIONARY;
+            # v2 pages write RLE_DICTIONARY
+            assert "PLAIN_DICTIONARY" not in col.encodings, where
+            if col.path_in_schema == "t":
+                assert col.encodings == ("DELTA_BINARY_PACKED",), where
+
+
+def _two_day_raw(spark, shift_ns: int = 0):
+    return spark.range(3 * 2 * 1440).selectExpr(
+        "concat('PV:', id % 3) AS channel",
+        f"{shift_ns} + (id div 3) * {60 * NS} AS t",
+        "CAST(id % 101 AS DOUBLE) AS v",
+        "CAST(0 AS INT) AS severity",
+        "CAST(0 AS INT) AS status",
+    )
+
+
+def test_every_store_write_uses_the_store_format(spark, tmp_path):
+    """Each write path adds files, and every file it adds is zstd with
+    v2 pages and a DELTA_BINARY_PACKED ``t`` — data levels, the hwm log
+    (append and compaction) and the seed table alike."""
+    store = _store(spark, tmp_path)
+    root = str(tmp_path / "archive")
+    seen: set[str] = set()
+
+    def step(name, fn, *args, **kwargs):
+        fn(*args, **kwargs)
+        now = _parquet_files(root)
+        added = now - seen
+        assert added, f"{name} wrote no file"
+        for f in added:
+            _assert_store_format(f)
+        seen.update(now)
+        return added
+
+    step("write_samples", store.write_samples, _two_day_raw(spark), 0)
+    store.HWM_COMPACT_THRESHOLD = 1
+    added = step(
+        "write_samples + _compact_hwm", store.write_samples,
+        _two_day_raw(spark, 30 * NS), 0,
+    )
+    assert len(store._hwm_table(0).files()) == 1
+    assert any("/meta/hwm_level=0/" in f for f in added)
+    added = step("incremental_decimation", incremental_decimation, store, 3600)
+    assert any("/meta/seed_level=3600/" in f for f in added)
+    step("compact(zorder=True)", store.compact, 0, zorder=True)
+    store.write_samples(_two_day_raw(spark, 45 * NS), 0)
+    seen.update(_parquet_files(root))
+    step("compact", store.compact, 0)
+    step("delete_older_than", store.delete_older_than, 0, DAY_NS // 2)
+    added = step("rename_channel", store.rename_channel, "PV:0", "PV:9")
+    for table in ("samples/decimation_level=0/", "samples/decimation_level=3600/",
+                  "meta/hwm_level=0/", "meta/hwm_level=3600/",
+                  "meta/seed_level=3600/"):
+        assert any(table in f for f in added), table
+
+
+def test_legacy_v1_snappy_files_read_back_and_compact_converts(
+    spark, tmp_path
+):
+    """A level holding a file from Spark's default writer (v1 pages,
+    snappy) next to store-format files reads back exactly; compact
+    rewrites it into the store format with the same rows."""
+    import pyarrow.parquet as pq
+
+    from cassandra_pv_archiver_spark.sources.archive_store import _date_expr
+
+    store = _store(spark, tmp_path)
+    new = _two_day_raw(spark)
+    legacy = _two_day_raw(spark, 30 * NS)
+    store.write_samples(new, 0)
+    table = store._level_table(0)
+    stage = table.stage_dir()
+    legacy.withColumn("date", _date_expr("t")).write.partitionBy(
+        "date"
+    ).parquet(stage)
+    added = table.publish_stage(stage)
+    old = pq.ParquetFile(f"{tmp_path}/archive/samples/decimation_level=0/"
+                         f"{added[0]}").metadata.row_group(0)
+    assert old.column(0).compression == "SNAPPY"
+
+    want = sorted(map(tuple, new.union(legacy).collect()))
+    assert sorted(map(tuple, store.read_samples(0).collect())) == want
+    store.compact(0)
+    for f in store._level_files(0):
+        _assert_store_format(f.split("://", 1)[-1])
+    assert sorted(map(tuple, store.read_samples(0).collect())) == want
+
+
+def test_duckdb_reads_store_files_like_spark(spark, tmp_path):
+    """The format stays readable outside Spark: DuckDB over the
+    manifest-listed files returns the rows Spark reads."""
+    import duckdb
+
+    store = _store(spark, tmp_path)
+    raw = _two_day_raw(spark)
+    store.write_samples(raw, 0)
+    store.write_samples(decimate(raw, 3600), 3600)
+    con = duckdb.connect()
+    try:
+        for level in (0, 3600):
+            files = [f.split("://", 1)[-1] for f in store._level_files(level)]
+            df = store.read_samples(level)
+            cols = ", ".join(df.columns)
+            got = con.execute(
+                f"SELECT {cols} FROM read_parquet(?, hive_partitioning = false)",
+                [files],
+            ).fetchall()
+            assert sorted(got) == sorted(map(tuple, df.collect())), level
+    finally:
+        con.close()
+
+
+def test_hwm_append_adds_one_file(spark, tmp_path):
+    store = _store(spark, tmp_path)
+    store.write_samples(_two_day_raw(spark), 0)
+    assert len(store._hwm_table(0).files()) == 1
+    store.write_samples(_two_day_raw(spark, 30 * NS), 0)
+    assert len(store._hwm_table(0).files()) == 2
+
+
+def test_metadata_reads_launch_no_schema_inference(
+    spark, tmp_path, count_jobs
+):
+    """hwm reads declare their schema and level reads use the level's
+    manifest schema, so none launches a footer-inference job:
+    channel_hwm is one job, and each partition step of probe_stats (the
+    in-range min, the backward walk, the forward walk) is one."""
+    store = _store(spark, tmp_path)
+    day = _two_day_raw(spark).filter(f"t < {DAY_NS}")
+    store.write_samples(day, 0)
+    hwm, jobs = count_jobs(store.channel_hwm, 0)
+    assert jobs == 1
+    assert {r.channel: r.hwm for r in hwm.collect()} == {
+        r.channel: r.m
+        for r in day.groupBy("channel").agg(F.max("t").alias("m")).collect()
+    }
+    stats, jobs = count_jobs(
+        store.probe_stats, 0, 6 * 3600 * NS, 7 * 3600 * NS, ["PV:1"]
+    )
+    assert jobs == 3
+    assert stats["PV:1"][0] <= 6 * 3600 * NS <= stats["PV:1"][1]

@@ -353,6 +353,29 @@ class TestChannelAcf:
         assert abs(out[7200] - 1.0) < 1e-9
         assert abs(out[3600] + 1.0) < 1e-9
 
+    def test_pre_1970_bounds(self, spark):
+        """Negative ns bounds: the grid literals must not splice into
+        ``--<n>L`` (a SQL comment). Same wave as above, shifted ten days
+        before the epoch, with and without the bounds guard job."""
+        from cassandra_pv_archiver_spark.operators.stats import channel_acf
+
+        shift = -240 * HOUR
+        rows = [
+            ("c", shift + h * HOUR, 1.0 if h % 2 == 0 else -1.0, 0, 0)
+            for h in range(48)
+        ]
+        for guard in (50_000_000, None):
+            out = {
+                r.lag_s: (r.r, r.n_points)
+                for r in channel_acf(
+                    _samples(spark, rows), 3600, [3600, 7200],
+                    max_grid_work=guard,
+                ).collect()
+            }
+            assert abs(out[7200][0] - 1.0) < 1e-9
+            assert abs(out[3600][0] + 1.0) < 1e-9
+            assert out[3600][1] == 47 and out[7200][1] == 46
+
     def test_constant_channel_null_r(self, spark):
         from cassandra_pv_archiver_spark.operators.stats import channel_acf
 

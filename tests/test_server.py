@@ -336,3 +336,52 @@ def test_samples_honor_channel_configured_levels(spark, tmp_path):
     ))
     assert out  # served from raw-derived plan only
     assert all(item["type"] != "minMaxDouble" for item in out), out
+
+
+def test_samples_probe_only_usable_levels(
+    spark, tmp_path, count_jobs, monkeypatch
+):
+    """A count query probes only the levels at or above the one it
+    selects. Against probing every level, the raw level's probe jobs
+    disappear and the response stays byte-identical."""
+    from cassandra_pv_archiver_spark import server
+
+    rows = [("PV:D", k * NS, float(k), 0, 0) for k in range(0, 7200, 60)]
+    raw = spark.createDataFrame(
+        rows, "channel string, t long, v double, severity int, status int"
+    )
+    store = ArchiveStore(spark, str(tmp_path / "probe_archive"))
+    store.write_samples(raw, level=0)
+    store.write_samples(decimate(raw, 3600), level=3600)
+    reg = ChannelRegistry(spark, str(tmp_path / "probe_channels"))
+    reg.add_channel(
+        ChannelConfig(
+            channel_name="PV:D",
+            control_system_type="channel_access",
+            enabled=True,
+            decimation_levels={0: 0, 3600: 0},
+        )
+    )
+    app = ArchiveApp(store, reg)
+    probed = []
+    probe = store.probe_stats
+
+    def spy(level, *args, **kwargs):
+        probed.append(level)
+        return probe(level, *args, **kwargs)
+
+    monkeypatch.setattr(store, "probe_stats", spy)
+    query = {"start": ["0"], "end": [str(2 * HOUR)], "count": ["2"]}
+
+    def body() -> str:
+        return json.dumps(list(app.samples("PV:D", query)))
+
+    got, jobs = count_jobs(body)
+    assert probed == [3600]
+    probed.clear()
+    # every level passes the filter: the behaviour before it existed
+    monkeypatch.setattr(server, "select_decimation_level", lambda *a: 0)
+    want, jobs_all = count_jobs(body)
+    assert probed == [0, 3600]
+    assert got == want and json.loads(got)
+    assert jobs < jobs_all
