@@ -69,6 +69,21 @@ def select_decimation_level(
     return shorter
 
 
+def probe_triples(
+    df: DataFrame, start_ns: int, end_ns: int, key: str = "channel"
+) -> DataFrame:
+    """The planner's per-key probes ``(key, bt, rmin, ft)`` in one
+    aggregate: latest t <= start / min t in [start, end] / min t >= end.
+    Each level's "earliest available sample" decision needs all three,
+    because every backward probe row has t <= start <= rmin <= ft."""
+    t = F.col("t")
+    return df.groupBy(key).agg(
+        F.max(F.when(t <= start_ns, t)).alias("bt"),
+        F.min(F.when(t.between(start_ns, end_ns), t)).alias("rmin"),
+        F.min(F.when(t >= end_ns, t)).alias("ft"),
+    )
+
+
 class _Stats:
     __slots__ = ("bt", "rmin", "ft")
 
@@ -95,10 +110,10 @@ def plan_samples(
     ``stats`` optionally supplies the per-(period, key) probe triples
     ``(bt, rmin, ft)`` — latest t <= start / min t in range / min t >=
     end — skipping the generic probe job entirely. Store-backed callers
-    get them from partition-bounded manifest walks
-    (``ArchiveStore.probe_stats``), which is the planner's serving-path
-    fast lane: the generic probe's ``t <= start`` arm has no lower bound
-    to push down and reads history partitions at archive scale.
+    get them from ``ArchiveStore.probe_stats``, which runs
+    :func:`probe_triples` over the query's own date partitions: the
+    generic probe's ``t <= start`` arm has no lower bound to push down
+    and reads history partitions at archive scale.
 
     A passed ``stats`` mapping is AUTHORITATIVE, including when
     empty: ``stats={}`` means the probe ran and found no relevant
@@ -117,37 +132,17 @@ def plan_samples(
             levels, usable, norm, start_ns, end_ns, key
         )
 
-    # ONE probe job for every level (the reference issues one bucket-index
-    # lookup per level too, but those are single-partition metadata reads;
-    # a Spark job per level would serialize driver round-trips). Each
-    # level's "earliest available sample" decision needs, PER KEY:
-    #   bt   = latest t <= start   [backward probes]
-    #   rmin = min t in [start, end]                  [core range]
-    #   ft   = min t >= end       [forward probes]
-    # because every backward probe row has t <= start <= rmin <= ft.
-    # Stats stay per-key (the reference plans per channel): folding them
-    # to a global min would let a channel whose FINE data starts later
-    # than the globally earliest channel silently lose its coarse-level
-    # coverage. The collect is bounded: keys are the channels the request
-    # names, not data-sized.
-    #
-    # Scale note: these probes are conditional aggregates over each
-    # level's DataFrame — at archive scale the `t <= start` arm reads
-    # history partitions (no lower bound exists to push down). That
-    # mirrors running the planner against raw tables; a store-backed
-    # deployment answers the same three questions from manifest metadata
-    # (`ArchiveStore.latest_at_or_before` / `high_water_mark`) without
-    # touching data files.
+    # ONE probe job for every level (the reference's per-level bucket-index
+    # lookups are metadata reads; a job per level would serialize driver
+    # round-trips). Stats stay per-key, as the reference plans per
+    # channel: a global min would let a channel whose FINE data starts
+    # later than the earliest channel lose its coarse-level coverage.
+    # The collect is bounded by the keys the request names.
     stats_df = None
     for period in usable:
-        df = levels[period]
-        per_key = df.groupBy(key).agg(
-            F.max(F.when(F.col("t") <= start_ns, F.col("t"))).alias("bt"),
-            F.min(
-                F.when(F.col("t").between(start_ns, end_ns), F.col("t"))
-            ).alias("rmin"),
-            F.min(F.when(F.col("t") >= end_ns, F.col("t"))).alias("ft"),
-        ).select(F.lit(period).alias("period"), key, "bt", "rmin", "ft")
+        per_key = probe_triples(levels[period], start_ns, end_ns, key).select(
+            F.lit(period).alias("period"), key, "bt", "rmin", "ft"
+        )
         stats_df = per_key if stats_df is None else stats_df.unionByName(per_key)
     stats_map: dict[tuple[int, str], object] = {
         (r.period, r[key]): r for r in stats_df.collect()

@@ -141,7 +141,10 @@ class ArchiveApp:
         cfg = self.registry.get_channel(channel)
         if cfg is None:
             raise ApiError(404, f"unknown channel: {channel}")
-        if not self.store.levels():
+        # listed once per request: a level committed mid-request is
+        # either seen by both the probes and the plan, or by neither
+        store_levels = self.store.levels()
+        if not store_levels:
             # a registered channel on a store with no ingested data yet
             # (fresh deployment): the reference answers an empty sample
             # list, not an error — and the planner would (correctly)
@@ -154,13 +157,14 @@ class ArchiveApp:
         # (round-11 review; the reference scopes levels per channel in
         # its metadata)
         allowed = set(cfg.decimation_levels or {0}) | {0}
-        periods = [p for p in self.store.levels() if p in allowed]
+        periods = [p for p in store_levels if p in allowed]
         levels = self._aligned_levels(channel, periods)
-        # serving fast lane: probe triples from partition-bounded manifest
-        # walks (typically ONE date partition per level), so plan_samples
-        # skips its generic probe aggregation — whose `t <= start` arm
-        # would scan history partitions at archive scale. Only levels the
-        # planner may use (at or above the selected one) are probed.
+        # serving fast lane: probe triples from the query's own date
+        # partitions (one job per level in the common case), so
+        # plan_samples skips its generic probe aggregation — whose
+        # `t <= start` arm would scan history partitions at archive scale.
+        # Only levels the planner may use (at or above the selected one)
+        # are probed.
         best = select_decimation_level(periods, start, end, count)
         stats = {
             (period, ch): triple

@@ -25,7 +25,8 @@ Design for 100 TB / 100k channels:
     like the reference's bucket drops — and rewrites only the single
     boundary partition for exact trim.
   * **High-water mark** (W3, `...DecimatedSamplesDecimationLevel.java:
-    890-927`): per-level max t, read from the newest date partition only.
+    890-927`): per-channel max t in a small append-log folded by
+    :meth:`ArchiveStore.channel_hwm`, never a data-file scan.
   * **File format**: every file the store writes (samples, hwm log, seed
     state) goes through :meth:`ArchiveStore._write`, which fixes Parquet
     v2 data pages, zstd, and no dictionary on ``t``. v2 pages fall back
@@ -48,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.planner import probe_triples
 from .fs import HadoopFS
 from .manifest import ManifestTable
 
@@ -449,14 +451,7 @@ class ArchiveStore:
             at_version=at_version,
         )
         if not files:
-            # schema-stable empty result: after evolution an empty time
-            # window must still carry the evolved columns, or unionByName
-            # / .select("src_tag") against a non-empty read breaks only
-            # on empty windows
-            schema = self.level_schema(level, at_version)
-            if schema is None:
-                schema = RAW_SCHEMA if level == 0 else DEC_SCHEMA
-            return self.spark.createDataFrame([], schema)
+            return self._empty(level, at_version)
         df = self._read_level_files(level, files, at_version=at_version)
         if lo_ns is not None:
             df = df.filter(F.col("t") >= lo_ns)
@@ -465,6 +460,16 @@ class ArchiveStore:
         if channels is not None:
             df = df.filter(F.col("channel").isin(list(channels)))
         return df.drop("date")
+
+    def _empty(self, level: int, at_version: int | None) -> DataFrame:
+        """Schema-stable empty result: after evolution an empty time
+        window must still carry the evolved columns, or unionByName /
+        .select("src_tag") against a non-empty read breaks only on empty
+        windows."""
+        schema = self.level_schema(level, at_version)
+        if schema is None:
+            schema = RAW_SCHEMA if level == 0 else DEC_SCHEMA
+        return self.spark.createDataFrame([], schema)
 
     def _level_files(
         self,
@@ -536,10 +541,7 @@ class ArchiveStore:
             )
         added = [f"{self._level_path(level)}/{r}" for r in after if r not in before]
         if not added:
-            schema = self.level_schema(level, to_version)
-            if schema is None:
-                schema = RAW_SCHEMA if level == 0 else DEC_SCHEMA
-            return self.spark.createDataFrame([], schema)
+            return self._empty(level, to_version)
         # widest schema AS OF to_version, never schema-by-first-footer:
         # a CDC window spanning an ADD COLUMN commit mixes file schemas,
         # and an inferred read could silently drop the evolved column
@@ -579,143 +581,66 @@ class ArchiveStore:
                 out.append(int(name.split("=", 1)[1]))
         return sorted(out)
 
-    # -- high-water mark (W3) -------------------------------------------
-    def _level_dates(self, level: int) -> list[str]:
-        """Distinct date partitions in the level's current manifest."""
-        rel = self._level_table(level).files() or []
-        return sorted({d for d in (_file_date(r) for r in rel) if d is not None})
-
-    def high_water_mark(self, level: int) -> int | None:
-        """Max archived t for a level, scanning only the newest date
-        partition (manifest pruning keeps this O(1 day) at any scale)."""
-        dates = self._level_dates(level)
-        if not dates:
-            return None
-        files = self._level_files(level, dates[-1], dates[-1])
-        row = (
-            self._read_level_files(level, files)
-            .agg(F.max("t").alias("hwm"))
-            .first()
-        )
-        return None if row is None or row.hwm is None else row.hwm
-
+    # -- planner probes --------------------------------------------------
     def probe_stats(
-        self,
-        level: int,
-        start_ns: int,
-        end_ns: int,
-        channels: list[str],
-        max_backward_partitions: int = 64,
+        self, level: int, start_ns: int, end_ns: int, channels: list[str]
     ) -> dict[str, tuple[int | None, int | None, int | None]]:
-        """Per-channel planner probes — ``(bt, rmin, ft)`` = latest t <=
-        start / min t in [start, end] / min t >= end — answered from
-        PARTITION-BOUNDED scans driven by the manifest, for
-        ``plans.planner.plan_samples(stats=...)``:
+        """Per-channel planner probes ``(bt, rmin, ft)`` = latest t <=
+        start / min t in [start, end] / min t >= end, for
+        ``plans.planner.plan_samples(stats=...)``, with None for a probe
+        that finds nothing. Every scan runs the planner's own aggregate
+        (``probe_triples``) over a slice of ONE manifest read:
 
-          * ``rmin`` reads only the [start, end] date partitions (the
-            range a query touches anyway);
-          * ``bt`` steps BACKWARD one date partition at a time from
-            ``start`` (the reference's reverse bucket walk,
-            `ArchiveAccessServiceImpl.java:239-316`) and stops as soon as
-            every requested channel resolved — at any archive size the
-            common case touches ONE partition, where the generic probe
-            aggregation's ``t <= start`` arm must scan all history (no
-            lower bound to push down). The walk is capped at
-            ``max_backward_partitions`` date-steps; unresolved channels
-            then get one final scan over the remaining older partitions
-            (correct, just no longer incremental — the pathological
-            sparse-channel case);
-          * ``ft`` steps FORWARD from ``end`` symmetrically (uncapped:
-            the future side is normally short).
-
-        Returns {channel: (bt, rmin, ft)} with None for missing probes.
+          * one job over the query's date partitions [start, end]. It
+            answers ``rmin``, and ``bt``/``ft`` for every channel with a
+            sample in the start/end partition itself: older partitions
+            hold only smaller t, newer ones only larger;
+          * for channels still unresolved, one walk outward — backward
+            over the dates before ``start`` for ``bt`` (the reference's
+            reverse bucket walk, `ArchiveAccessServiceImpl.java:239-316`),
+            forward over the dates after ``end`` for ``ft`` — in windows
+            of 1, 2, 4, ... partitions per arm, both arms in one job per
+            step, until every channel resolves. The first window holding
+            a channel's probe row is the nearest one, so a sparse channel
+            costs O(log #partitions) jobs and the common case none.
         """
-        chans = list(channels)
-        out: dict[str, list] = {c: [None, None, None] for c in chans}
-        dates = self._level_dates(level)
+        out = {c: [None, None, None] for c in channels}
+        table = self._level_table(level)
+        by_date: dict[str, list[str]] = {}
+        for r in table.files() or []:
+            by_date.setdefault(_file_date(r), []).append(f"{table.root}/{r}")
+        dates = sorted(d for d in by_date if d is not None)
         d_start, d_end = _py_date(start_ns), _py_date(end_ns)
+
+        def scan(window: list[str], pending: set[str]) -> None:
+            df = self._read_level_files(
+                level, [f for d in window for f in by_date[d]]
+            ).filter(F.col("channel").isin(sorted(pending)))
+            for r in probe_triples(df, start_ns, end_ns).collect():
+                # a set slot is final: later windows lie farther out
+                slots = out[r.channel]
+                for i, x in enumerate((r.bt, r.rmin, r.ft)):
+                    if slots[i] is None:
+                        slots[i] = x
 
         in_range = [d for d in dates if d_start <= d <= d_end]
         if in_range:
-            df = self._read_level_files(
-                level, self._level_files(level, in_range[0], in_range[-1])
-            )
-            rows = (
-                df.filter(
-                    F.col("channel").isin(chans)
-                    & F.col("t").between(start_ns, end_ns)
-                )
-                .groupBy("channel")
-                .agg(F.min("t").alias("rmin"))
-                .collect()
-            )
-            for r in rows:
-                out[r.channel][1] = r.rmin
-
-        def _walk(cands: list[str], pending: set[str], slot: int,
-                  agg, pred, cap: int | None):
-            steps = 0
-            for i, d in enumerate(cands):
-                if not pending:
-                    return
-                if cap is not None and steps >= cap:
-                    # one bounded fallback scan over everything left
-                    rest = cands[i:]
-                    if not rest:
-                        return
-                    files = self._level_files(level, rest[-1], rest[0]) \
-                        if slot == 0 else self._level_files(level, rest[0], rest[-1])
-                    df = self._read_level_files(level, files)
-                    rows = (
-                        df.filter(F.col("channel").isin(list(pending)) & pred)
-                        .groupBy("channel").agg(agg.alias("x")).collect()
-                    )
-                    for r in rows:
-                        if r.x is not None:
-                            out[r.channel][slot] = r.x
-                    return
-                df = self._read_level_files(
-                    level, self._level_files(level, d, d)
-                )
-                rows = (
-                    df.filter(F.col("channel").isin(list(pending)) & pred)
-                    .groupBy("channel").agg(agg.alias("x")).collect()
-                )
-                for r in rows:
-                    if r.x is not None:
-                        out[r.channel][slot] = r.x
-                        pending.discard(r.channel)
-                steps += 1
-
-        _walk(
-            [d for d in reversed(dates) if d <= d_start],
-            set(chans), 0, F.max("t"), F.col("t") <= start_ns,
-            max_backward_partitions,
-        )
-        _walk(
-            [d for d in dates if d >= d_end],
-            set(chans), 2, F.min("t"), F.col("t") >= end_ns, None,
-        )
+            scan(in_range, set(out))
+        older = [d for d in reversed(dates) if d < d_start]
+        newer = [d for d in dates if d > d_end]
+        lo, width = 0, 1
+        while True:
+            window, pending = [], set()
+            for side, slot in ((older, 0), (newer, 2)):
+                todo = {c for c, v in out.items() if v[slot] is None}
+                if todo and lo < len(side):
+                    window += side[lo:lo + width]
+                    pending |= todo
+            if not pending:
+                break
+            scan(window, pending)
+            lo, width = lo + width, 2 * width
         return {c: tuple(v) for c, v in out.items()}
-
-    def latest_at_or_before(self, level: int, ts_ns: int) -> int | None:
-        """Max t with ``t <= ts`` — steps backward one date partition at a
-        time (newest first), the same shape as the reference's bucket-
-        stepping backward probe (`ArchiveAccessServiceImpl.java:239-316`):
-        typically touches exactly one partition regardless of archive size."""
-        limit = _py_date(ts_ns)
-        for d in reversed(self._level_dates(level)):
-            if d > limit:
-                continue
-            row = (
-                self._read_level_files(level, self._level_files(level, d, d))
-                .filter(F.col("t") <= ts_ns)
-                .agg(F.max("t").alias("t"))
-                .first()
-            )
-            if row is not None and row.t is not None:
-                return row.t
-        return None
 
     # -- retention (S6) --------------------------------------------------
     def delete_older_than(self, level: int, cutoff_ns: int) -> int:

@@ -65,16 +65,22 @@ def test_partition_count_selected(spark, tmp_path):
 
 
 def test_high_water_mark_and_asof_probe(spark, tmp_path):
+    """The level's high-water mark is the max of channel_hwm, and the
+    latest sample at or before a time is the max of probe_stats' bt."""
     store = _store(spark, tmp_path)
     raw = load_samples(spark, SF_DIR).select("channel", "t", "v", "severity", "status")
     store.write_samples(raw, level=0)
-    hwm = store.high_water_mark(0)
+    hwm = max(r.hwm for r in store.channel_hwm(0).collect())
     assert hwm == raw.agg(F.max("t")).first()[0]
     mid = hwm - 5 * DAY_NS
-    probe = store.latest_at_or_before(0, mid)
+    chans = [r.channel for r in raw.select("channel").distinct().collect()]
+    probe = max(
+        bt for bt, _, _ in store.probe_stats(0, mid, mid, chans).values()
+        if bt is not None
+    )
     want = raw.filter(F.col("t") <= mid).agg(F.max("t")).first()[0]
     assert probe == want
-    assert store.high_water_mark(3600) is None
+    assert store.channel_hwm(3600) is None
 
 
 def test_incremental_decimation_idempotent_and_complete(spark, tmp_path):
@@ -616,7 +622,7 @@ def test_negative_ns_write_read_same_partition(spark, tmp_path):
         ).collect()
     )
     assert got == [-DAY_NS - 1, -DAY_NS, -1]
-    assert store.latest_at_or_before(0, -1) == -1
+    assert store.probe_stats(0, -1, -1, ["PV:N"])["PV:N"][0] == -1
 
 
 def test_cascade_crash_between_data_and_hwm_commits(spark, tmp_path):
@@ -1632,8 +1638,9 @@ def test_metadata_reads_launch_no_schema_inference(
 ):
     """hwm reads declare their schema and level reads use the level's
     manifest schema, so none launches a footer-inference job:
-    channel_hwm is one job, and each partition step of probe_stats (the
-    in-range min, the backward walk, the forward walk) is one."""
+    channel_hwm is one job, and probe_stats on a one-day store, whose
+    bt, rmin and ft all lie in the query's own partition, is one job
+    with no walk."""
     store = _store(spark, tmp_path)
     day = _two_day_raw(spark).filter(f"t < {DAY_NS}")
     store.write_samples(day, 0)
@@ -1646,5 +1653,5 @@ def test_metadata_reads_launch_no_schema_inference(
     stats, jobs = count_jobs(
         store.probe_stats, 0, 6 * 3600 * NS, 7 * 3600 * NS, ["PV:1"]
     )
-    assert jobs == 3
+    assert jobs == 1
     assert stats["PV:1"][0] <= 6 * 3600 * NS <= stats["PV:1"][1]

@@ -259,8 +259,50 @@ def test_store_probe_stats_matches_scan(spark, tmp_path):
     assert got["A"] == (3 * DAY + 7, 5 * DAY + 1, 7 * DAY + 9)
     assert got["B"] == (None, 5 * DAY + 2, None)
     assert got["MISSING"] == (None, None, None)
-    # capped backward walk falls back to one bounded scan, same answer
-    got2 = store.probe_stats(
-        0, 5 * DAY, 6 * DAY, ["A"], max_backward_partitions=1
+
+
+def test_store_probe_stats_doubling_walk(spark, tmp_path, count_jobs):
+    """A sparse channel whose bt and ft lie tens of date partitions away
+    from a pre-1970 query gets the full-scan triple, and each walk arm
+    takes at most ceil(log2 n) + 1 jobs over its n partitions; a channel
+    resolved inside the query's partitions takes the one in-range job."""
+    import math
+
+    from cassandra_pv_archiver_spark.sources.archive_store import ArchiveStore
+
+    DAY, H = 86_400 * NS, 3600 * NS
+    days = range(-40, 25)
+    rows = [("D", d * DAY + h, 1.0, 0, 0) for d in days for h in (H, 12 * H)]
+    rows += [("S", -37 * DAY + 11, 2.0, 0, 0), ("S", 21 * DAY + 5, 3.0, 0, 0)]
+    # F's bt lies in the query's partitions while it walks forward for ft
+    # alongside channels walking backward: the older window holding F's
+    # earlier sample must not replace the nearer bt
+    rows += [("F", t, 4.0, 0, 0) for t in (-10 * DAY, -6 * DAY + H, 20 * DAY)]
+    store = ArchiveStore(spark, str(tmp_path / "arch"))
+    store.write_samples(
+        spark.createDataFrame(
+            rows, "channel string, t long, v double, severity int, status int"
+        ),
+        level=0,
     )
-    assert got2["A"] == got["A"]
+    start, end = -6 * DAY + 2 * H, -5 * DAY + 2 * H
+
+    def scan(ch):
+        ts = [t for c, t, *_ in rows if c == ch]
+        return (
+            max((t for t in ts if t <= start), default=None),
+            min((t for t in ts if start <= t <= end), default=None),
+            min((t for t in ts if t >= end), default=None),
+        )
+
+    got, jobs = count_jobs(store.probe_stats, 0, start, end, ["D"])
+    assert got == {"D": scan("D")} and jobs == 1
+    assert got["D"] == (-6 * DAY + H, -6 * DAY + 12 * H, -5 * DAY + 12 * H)
+    older, newer = 34, 29  # date partitions before / after the query's two
+    bound = max(math.ceil(math.log2(n)) + 1 for n in (older, newer))
+    for chans in (["S"], ["D", "S", "F", "MISSING"]):
+        got, jobs = count_jobs(store.probe_stats, 0, start, end, chans)
+        assert got == {c: scan(c) for c in chans}
+        assert 1 < jobs <= 1 + bound
+    assert got["S"] == (-37 * DAY + 11, None, 21 * DAY + 5)
+    assert got["F"] == (-6 * DAY + H, None, 20 * DAY)

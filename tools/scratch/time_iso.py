@@ -3,6 +3,9 @@
 Usage: python tools/scratch/time_iso.py [-nN] [sf_dir] query [...]
 Warms each query once at sf0.001, then times N passes at sf_dir
 (default /root/testdata/sf0.1), printing each pass and the min.
+Like ``bench.run_one``, it drains the invocation-scoped persists
+(``cache_scope.drain``) after the warm-up and after each timed pass, so
+no pass reads a cache an earlier one built.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__)))))
 
+from cassandra_pv_archiver_spark import cache_scope  # noqa: E402
 from cassandra_pv_archiver_spark.session import get_spark  # noqa: E402
 
 
@@ -38,11 +42,14 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"{name}: WARMUP FAILED: {e}")
             continue
+        finally:
+            cache_scope.drain()
         times = []
         for _ in range(n):
             t0 = time.time()
             fn(spark, sf_dir).count()
             times.append(time.time() - t0)
+            cache_scope.drain()
         print(
             f"{name}: min={min(times):.3f}  "
             + " ".join(f"{t:.3f}" for t in times),
