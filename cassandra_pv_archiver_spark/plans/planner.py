@@ -18,12 +18,22 @@ Reference (`Api10Controller.java:382-518`):
 
 Spark architecture: this is *plan construction*, not data flow — a thin
 driver-side layer (the reference's is too: it runs per-request on one
-channel's metadata). The per-level "earliest available sample" probes are
-batched into ONE Spark job (a union of per-level min/max aggregations over
-pruned scans) — the same metadata the reference reads from its bucket
-index, without a driver round-trip per level. The data path that
-comes out is a ``unionByName`` of disjoint range scans, fully declarative,
-so Catalyst sees one plan and prunes each branch independently.
+channel's metadata). The per-level probe triples ``(bt, rmin, ft)`` are
+batched into ONE Spark job (a union of per-level aggregations over pruned
+scans), or handed in precomputed by the store — the same metadata the
+reference reads from its bucket index, without a driver round-trip per
+level.
+
+The triples already name the limit-mode boundary rows: the row before
+``start`` is the one at ``bt``, the row after ``end`` the one at ``ft``.
+So every piece of a key's walk is an EXACT row range ``[lo, hi]`` and the
+data path is one range-filtered scan per level (an ``isin`` on the keys
+plus a ``t`` envelope, and a per-key bound lookup when keys' ranges
+differ), one ``unionByName`` and one sort — no probe aggregates at
+execution time. This relies on each level holding at most one row per
+``(key, t)``: a duplicate at a boundary ``t`` would be served twice. The
+store's monotonic guard (F5), decimation (one row per window) and
+``load_samples`` all guarantee it.
 """
 
 from __future__ import annotations
@@ -32,8 +42,6 @@ from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators import asof
 
 NS = 1_000_000_000
 
@@ -104,8 +112,10 @@ def plan_samples(
 
     ``levels`` maps decimation period seconds -> that level's DataFrame
     (columns must be aligned across levels; include a ``level`` column if
-    callers need provenance). Returns the ordered concatenation of disjoint
-    per-level range queries per `Api10Controller.java:443-518`.
+    callers need provenance). Each level must hold at most one row per
+    ``(key, t)``. Returns each key's disjoint per-level exact row ranges
+    (`Api10Controller.java:443-518`, see :func:`_decide_one_key`) as one
+    range-filtered scan per level, unioned and sorted by ``(key, t)``.
 
     ``stats`` optionally supplies the per-(period, key) probe triples
     ``(bt, rmin, ft)`` — latest t <= start / min t in range / min t >=
@@ -151,46 +161,40 @@ def plan_samples(
 
 
 def _plan_from_stats(levels, usable, stats, start_ns, end_ns, key):
-    keys = sorted({k for (_, k) in stats})
+    # Each key's fallback walk is decided in pure Python from the probe
+    # stats; a key uses a level at most once, so each level collects one
+    # exact range per key and becomes ONE filtered scan whatever the key
+    # count (per-key branches would make plan size and driver planning
+    # time grow with the keys a request names, ADVICE r3).
+    ranges: dict[int, dict] = {}
+    for kv in sorted({k for (_, k) in stats}):
+        for period, lo, hi in _decide_one_key(
+            usable, kv, stats, start_ns, end_ns
+        ):
+            ranges.setdefault(period, {})[kv] = (lo, hi)
 
-    # Decide each key's fallback walk in PURE PYTHON first (it only needs
-    # the probe stats), then GROUP keys whose decisions are identical and
-    # build ONE IN-filtered sub-plan per (decision, piece). Per-key
-    # sub-plans would put O(#keys x #levels) filtered branches (each with
-    # its own asof probe aggregations) into one Catalyst plan — correct,
-    # but plan size and driver planning time explode for requests naming
-    # hundreds of channels (ADVICE r3). Decisions coincide for every key
-    # whose finest usable level reaches back to ``start`` — the common
-    # case — so a typical wide request plans 1 group, not #keys.
-    by_decision: dict[tuple, list] = {}
-    for kv in keys:
-        spec = _decide_one_key(usable, kv, stats, start_ns, end_ns)
-        if spec:
-            by_decision.setdefault(spec, []).append(kv)
-
+    t = F.col("t")
     pieces: list[DataFrame] = []
-    for spec, group in by_decision.items():
-        for period, lo, hi, lo_mode, hi_mode in spec:
-            df = levels[period].filter(F.col(key).isin(group))
-            # Bound the piece's scan from below: the backward-probe arm
-            # (t <= lo) otherwise has NO lower bound and re-reads every
-            # history partition at execution time — the cost the stats
-            # fast lane exists to avoid, paid again per request. The
-            # probe stats already know each key's latest t <= lo (bt),
-            # and only that row can survive the probe's max_by, so
-            # t >= min(bt over the group) keeps every contributing row
-            # (keys with no backward row contribute nothing below lo).
-            # The bound is a plain range predicate -> partition pruning.
-            bts = [
-                bt if (r := stats.get((period, kv))) is not None
-                and (bt := getattr(r, "bt", None)) is not None
-                else lo
-                for kv in group
-            ]
-            df = df.filter(F.col("t") >= min(bts, default=lo))
-            pieces.append(
-                asof.get_samples(df, lo, hi, lo_mode, hi_mode, key=key)
+    for period in usable:
+        by_key = ranges.get(period)
+        if not by_key:
+            continue
+        los, his = zip(*by_key.values())
+        # the envelope is a plain range predicate -> partition pruning
+        cond = F.col(key).isin(list(by_key)) & t.between(min(los), max(his))
+        if len(set(by_key.values())) > 1:
+            lo_of, hi_of = (
+                F.element_at(
+                    F.create_map(*[
+                        c for kv, b in by_key.items()
+                        for c in (F.lit(kv), F.lit(b[i]).cast("long"))
+                    ]),
+                    F.col(key),
+                )
+                for i in (0, 1)
             )
+            cond &= t.between(lo_of, hi_of)
+        pieces.append(levels[period].filter(cond))
     if not pieces:
         # empty plan with the right schema
         some = next(iter(levels.values()))
@@ -205,30 +209,32 @@ def _decide_one_key(usable, kv, stats, start_ns, end_ns):
     """The reference's per-channel fallback walk
     (`Api10Controller.java:443-518`) for one key, decided from the probe
     stats alone: finest level first, coarser levels each serving only the
-    still-uncovered earlier range. Returns the piece specs oldest-range
-    first as ``(period, lo, hi, lo_mode, hi_mode)`` tuples — hashable, so
-    keys with identical walks share one IN-filtered sub-plan."""
+    still-uncovered earlier range. Returns the pieces oldest-range first
+    as exact row ranges ``(period, lo, hi)``: ``lo`` is the level's
+    backward probe row ``bt`` (else ``start``); ``hi`` is the forward
+    probe row ``ft`` (else ``end``) on the finest level, and the fallback
+    cap on coarser ones (limit mode AT_OR_BEFORE, no forward row)."""
     specs: list[tuple] = []  # oldest-range first
     earliest: int | None = None
     for period in usable:
         r = stats.get((period, kv))
         if r is None:
             continue
+        lo = r.bt if r.bt is not None else start_ns
         if not specs:
-            spec = (period, start_ns, end_ns, asof.AT_OR_BEFORE, asof.AT_OR_AFTER)
+            spec = (period, lo, r.ft if r.ft is not None else end_ns)
             first = r.bt if r.bt is not None else (
                 r.rmin if r.rmin is not None else r.ft
             )
         else:
-            # upper mode AT_OR_BEFORE = plain capped range (no forward
-            # probe). The cap is clamped to the query end: when the finer
-            # level's ONLY contribution was a forward probe (earliest =
-            # ft > end), an unclamped earliest-1 would let this coarser
-            # level serve arbitrarily many rows in (end, ft) — violating
-            # the at-most-one-row-past-hi limit-mode contract
+            # The cap is clamped to the query end: when the finer level's
+            # ONLY contribution was a forward probe (earliest = ft > end),
+            # an unclamped earliest-1 would let this coarser level serve
+            # arbitrarily many rows in (end, ft) — violating the
+            # at-most-one-row-past-hi limit-mode contract
             # (`ArchiveAccessService.java:77-103`) across the union.
             cap = min(earliest - 1, end_ns)
-            spec = (period, start_ns, cap, asof.AT_OR_BEFORE, asof.AT_OR_BEFORE)
+            spec = (period, lo, cap)
             first = r.bt if r.bt is not None else (
                 r.rmin if r.rmin is not None and r.rmin <= cap else None
             )
@@ -239,4 +245,4 @@ def _decide_one_key(usable, kv, stats, start_ns, end_ns):
             earliest = first
         if first <= start_ns:
             break
-    return tuple(specs)
+    return specs

@@ -27,11 +27,13 @@ stands in for the servlet container; any WSGI/ASGI frontend could bind
 
 Serving-at-scale note: count-driven queries are dashboard-sized, but a
 raw query (no ``count``) over a long range is unbounded — so the samples
-endpoint STREAMS: ``toLocalIterator()`` holds one partition at a time on
-the driver and the HTTP handler chunk-writes each sample, mirroring the
-reference's per-sample servlet streaming
-(`Api10Controller.sendSamples:520-532`). Driver memory stays bounded
-regardless of result size; the heavy lifting stays in Spark executors.
+endpoint STREAMS: ``toLocalIterator()`` pulls one partition of the plan's
+final sort at a time and the HTTP handler chunk-writes each sample,
+mirroring the reference's per-sample servlet streaming
+(`Api10Controller.sendSamples:520-532`). Driver memory is therefore
+bounded by the largest of the sort's ``spark.sql.shuffle.partitions``
+range partitions, not by a fixed size; the heavy lifting stays in Spark
+executors.
 """
 
 from __future__ import annotations
@@ -43,6 +45,7 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import functions as F
 
+from .functions.json_v1 import aggregated_to_json, raw_double_to_json
 from .management import ChannelRegistry, url_decode
 from .plans.planner import plan_samples, select_decimation_level
 from .sources.archive_store import ArchiveStore
@@ -158,79 +161,60 @@ class ArchiveApp:
         # its metadata)
         allowed = set(cfg.decimation_levels or {0}) | {0}
         periods = [p for p in store_levels if p in allowed]
-        levels = self._aligned_levels(channel, periods)
         # serving fast lane: probe triples from the query's own date
         # partitions (one job per level in the common case), so
         # plan_samples skips its generic probe aggregation — whose
         # `t <= start` arm would scan history partitions at archive scale.
         # Only levels the planner may use (at or above the selected one)
-        # are probed.
+        # are probed; the others are never scanned.
         best = select_decimation_level(periods, start, end, count)
-        stats = {
-            (period, ch): triple
-            for period in periods
-            if period >= best
-            for ch, triple in self.store.probe_stats(
-                period, start, end, [channel]
-            ).items()
-        }
+        levels, stats = {}, {}
+        for period in periods:
+            lo, hi, version = start, end, None
+            if period >= best:
+                # probe and read ONE manifest version: the plan serves
+                # the exact rows [bt, ft], and a commit landing between
+                # probe and read must not add rows inside that range
+                version = (self.store.level_versions(period) or [None])[-1]
+                triple = self.store.probe_stats(
+                    period, start, end, [channel], at_version=version
+                )[channel]
+                stats[(period, channel)] = triple
+                bt, _, ft = triple
+                lo = start if bt is None else bt
+                hi = end if ft is None else ft
+            levels[period] = _render_json_v1(
+                period,
+                self.store.read_samples(
+                    period, lo, hi, [channel], at_version=version
+                ),
+            )
         plan = plan_samples(levels, start, end, count=count, stats=stats)
-        rendered = _render_plan_json_v1(plan)
         # Stream, don't collect: the reference writes sample-by-sample
         # through the servlet stream (`Api10Controller.sendSamples:520-532`)
-        # precisely because a raw query (no ``count``) over a long range
-        # is unbounded — toLocalIterator holds one partition at a time
-        # driver-side, and the HTTP handler chunk-writes each sample, so
-        # driver memory stays bounded regardless of result size.
-        rows = rendered.orderBy("t", "level").select("json").toLocalIterator()
+        # because a raw query (no ``count``) over a long range is
+        # unbounded. toLocalIterator pulls one partition of the plan's
+        # final sort at a time, and the HTTP handler chunk-writes each
+        # sample.
+        rows = plan.select("json").toLocalIterator()
         return (json.loads(r.json) for r in rows)
 
-    def _aligned_levels(self, channel: str, periods=None):
-        """Store levels, column-aligned for the planner: raw rows carry v,
-        decimated rows carry mean/vmin/vmax; both get a ``level`` tag the
-        serializer dispatches on (raw -> double, decimated ->
-        minMaxDouble). ``periods`` restricts to the channel's configured
-        levels (samples() passes the store∩config set)."""
-        cols = [
-            "channel", "t", "v", "severity", "status",
-            "mean", "vmin", "vmax", "quality", "level",
-        ]
-        out = {}
-        for period in (
-            self.store.levels() if periods is None else periods
-        ):
-            df = self.store.read_samples(period, channels=[channel])
-            if period == 0:
-                df = df.select(
-                    "channel", "t", "v", "severity", "status",
-                    F.lit(None).cast("double").alias("mean"),
-                    F.lit(None).cast("double").alias("vmin"),
-                    F.lit(None).cast("double").alias("vmax"),
-                    F.lit(None).cast("string").alias("quality"),
-                    F.lit(0).alias("level"),
-                )
-            else:
-                df = df.select(
-                    "channel", "t",
-                    F.lit(None).cast("double").alias("v"),
-                    "severity", "status", "mean", "vmin", "vmax", "quality",
-                    F.lit(period).alias("level"),
-                )
-            out[period] = df.select(cols)
-        return out
 
-
-def _render_plan_json_v1(plan):
-    """One ``json`` column per planned row: raw rows through the raw
-    double serializer, decimated rows through minMaxDouble
+def _render_json_v1(period: int, df):
+    """One level's rows as ``(channel, t, json)``: raw rows through the
+    raw double serializer, decimated rows through minMaxDouble
     (`ChannelAccessSampleValueAccess.java:238-316,413-514`)."""
-    from .functions.json_v1 import aggregated_to_json, raw_double_to_json
-
-    cols = ["channel", "t", "level", "json"]
-    raw = plan.filter(F.col("level") == 0)
-    dec = plan.filter(F.col("level") != 0)
-    out = raw_double_to_json(raw).select(cols)
-    return out.unionByName(aggregated_to_json(dec).select(cols))
+    if period == 0:
+        out = raw_double_to_json(df.select(
+            "channel", "t", "v", "severity", "status",
+            F.lit(None).cast("string").alias("quality"),
+        ))
+    else:
+        out = aggregated_to_json(df.select(
+            "channel", "t", "severity", "status",
+            "mean", "vmin", "vmax", "quality",
+        ))
+    return out.select("channel", "t", "json")
 
 
 class _Handler(BaseHTTPRequestHandler):

@@ -34,9 +34,12 @@ production values justified there):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "cassandra-pv-archiver-spark") -> SparkSession:
@@ -52,8 +55,14 @@ def get_spark(app_name: str = "cassandra-pv-archiver-spark") -> SparkSession:
     aqe_env = os.environ.get("SPARK_GRAFT_AQE")
     if aqe_env is not None:
         aqe = "true" if aqe_env == "1" else "false"
+    elif parts_env:
+        aqe = "true"
+        log.info(
+            "SPARK_GRAFT_SHUFFLE_PARTITIONS=%s turns AQE on; set "
+            "SPARK_GRAFT_AQE=0 to keep it off", parts_env,
+        )
     else:
-        aqe = "true" if parts_env else "false"
+        aqe = "false"
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -436,14 +436,7 @@ class ArchiveStore:
         Snapshots older than ``keep_versions`` commits are pruned by
         compaction/retention gc; asking for one raises with the retained
         range (the VACUUM-horizon error lakehouses give)."""
-        if at_version is not None:
-            retained = self._level_table(level).versions()
-            if at_version not in retained:
-                raise ValueError(
-                    f"version {at_version} of level {level} is not "
-                    f"retained (available: {retained}); raise "
-                    f"keep_versions to widen the time-travel horizon"
-                )
+        self._check_retained(level, at_version)
         files = self._level_files(
             level,
             None if lo_ns is None else _py_date(lo_ns),
@@ -460,6 +453,16 @@ class ArchiveStore:
         if channels is not None:
             df = df.filter(F.col("channel").isin(list(channels)))
         return df.drop("date")
+
+    def _check_retained(self, level: int, at_version: int | None) -> None:
+        if at_version is not None:
+            retained = self._level_table(level).versions()
+            if at_version not in retained:
+                raise ValueError(
+                    f"version {at_version} of level {level} is not "
+                    f"retained (available: {retained}); raise "
+                    f"keep_versions to widen the time-travel horizon"
+                )
 
     def _empty(self, level: int, at_version: int | None) -> DataFrame:
         """Schema-stable empty result: after evolution an empty time
@@ -583,7 +586,12 @@ class ArchiveStore:
 
     # -- planner probes --------------------------------------------------
     def probe_stats(
-        self, level: int, start_ns: int, end_ns: int, channels: list[str]
+        self,
+        level: int,
+        start_ns: int,
+        end_ns: int,
+        channels: list[str],
+        at_version: int | None = None,
     ) -> dict[str, tuple[int | None, int | None, int | None]]:
         """Per-channel planner probes ``(bt, rmin, ft)`` = latest t <=
         start / min t in [start, end] / min t >= end, for
@@ -603,18 +611,23 @@ class ArchiveStore:
             step, until every channel resolves. The first window holding
             a channel's probe row is the nearest one, so a sparse channel
             costs O(log #partitions) jobs and the common case none.
+
+        ``at_version`` probes an older retained snapshot, as in
+        :meth:`read_samples`; a caller that reads the planned rows at the
+        same version gets one snapshot's answer.
         """
+        self._check_retained(level, at_version)
         out = {c: [None, None, None] for c in channels}
         table = self._level_table(level)
         by_date: dict[str, list[str]] = {}
-        for r in table.files() or []:
+        for r in table.files(at_version) or []:
             by_date.setdefault(_file_date(r), []).append(f"{table.root}/{r}")
         dates = sorted(d for d in by_date if d is not None)
         d_start, d_end = _py_date(start_ns), _py_date(end_ns)
 
         def scan(window: list[str], pending: set[str]) -> None:
             df = self._read_level_files(
-                level, [f for d in window for f in by_date[d]]
+                level, [f for d in window for f in by_date[d]], at_version
             ).filter(F.col("channel").isin(sorted(pending)))
             for r in probe_triples(df, start_ns, end_ns).collect():
                 # a set slot is final: later windows lie farther out

@@ -237,6 +237,79 @@ def test_stats_injection_reproduces_probe_plan(spark):
     assert injected == baseline
 
 
+def test_exact_ranges_match_limit_mode_queries(spark):
+    """The planned exact ranges serve exactly the limit-mode rows
+    (`ArchiveAccessServiceImpl.java:756-813`) of each key's fallback walk:
+    per key, plan_samples equals asof.get_samples over the walk's pieces
+    (finest piece AT_OR_BEFORE/AT_OR_AFTER, coarser ones capped
+    AT_OR_BEFORE/AT_OR_BEFORE). Keys A and B share level 0 with distinct
+    bt/ft (the per-key bound lookup); A has samples exactly at start and
+    end; C and D fall back to level 60; start == end covers the 0/1/1/2
+    cardinality table."""
+    from cassandra_pv_archiver_spark.operators import asof
+    from cassandra_pv_archiver_spark.plans.planner import probe_triples
+
+    raw = {
+        "A": [40, 100, 160, 300, 360],
+        "B": [70, 130, 250, 420],
+        "C": [200, 260, 330],
+        "D": [500],
+        "E": [],
+    }
+    l0 = spark.createDataFrame(
+        [(k, t * NS, float(t), 0) for k, ts in raw.items() for t in ts],
+        "channel string, t long, value double, level int",
+    )
+    l1 = spark.createDataFrame(
+        [(k, t * NS, -float(t), 60) for k in "ABCD" for t in range(0, 660, 60)],
+        "channel string, t long, value double, level int",
+    )
+    levels = {0: l0, 60: l1}
+    B, A = asof.AT_OR_BEFORE, asof.AT_OR_AFTER  # limit modes
+    cases = {
+        (100, 300): {
+            "A": [(0, 100, 300, B, A)],
+            "B": [(0, 100, 300, B, A)],
+            "C": [(60, 100, 199, B, B), (0, 100, 300, B, A)],
+            "D": [(60, 100, 300, B, B), (0, 100, 300, B, A)],
+        },
+        # start == end: on a sample 1 row (A), between two 2 rows (B, C),
+        # only after 1 row (D's level 0, plus its level-60 fallback), none 0
+        (300, 300): {
+            "A": [(0, 300, 300, B, A)],
+            "B": [(0, 300, 300, B, A)],
+            "C": [(0, 300, 300, B, A)],
+            "D": [(60, 300, 300, B, B), (0, 300, 300, B, A)],
+        },
+    }
+    for (lo_s, hi_s), walks in cases.items():
+        lo, hi = lo_s * NS, hi_s * NS
+        pieces = [
+            asof.get_samples(
+                levels[period].filter(F.col("channel") == k),
+                plo * NS, phi * NS, lo_mode, hi_mode,
+            )
+            for k, walk in walks.items()
+            for period, plo, phi, lo_mode, hi_mode in walk
+        ]
+        union = pieces[0]
+        for p in pieces[1:]:
+            union = union.unionByName(p)
+        served = sorted(tuple(r) for r in union.collect())
+        want = {k: [r for r in served if r[0] == k] for k in walks}
+        stats = {
+            (period, r.channel): (r.bt, r.rmin, r.ft)
+            for period, df in levels.items()
+            for r in probe_triples(df, lo, hi).collect()
+        }
+        for kwargs in ({}, {"stats": stats}):
+            out = plan_samples(levels, lo, hi, count=10**6, **kwargs).collect()
+            got = {k: [tuple(r) for r in out if r.channel == k] for k in raw}
+            assert got == {**want, "E": []}, (lo_s, hi_s, kwargs.keys())
+    assert [r[1] // NS for r in want["B"]] == [250, 420]
+    assert [r[1] // NS for r in want["D"]] == [300, 500]
+
+
 def test_store_probe_stats_matches_scan(spark, tmp_path):
     """ArchiveStore.probe_stats (partition-bounded manifest walk) returns
     the same triples as a full-scan aggregation."""

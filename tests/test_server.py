@@ -385,3 +385,62 @@ def test_samples_probe_only_usable_levels(
     assert probed == [0, 3600]
     assert got == want and json.loads(got)
     assert jobs < jobs_all
+
+
+@pytest.mark.parametrize("commit", ["before_probe", "after_probe"])
+def test_samples_read_the_probed_snapshot(spark, tmp_path, monkeypatch, commit):
+    """A commit landing while a request runs must not change its
+    response: the probe finds the backward boundary row bt, the plan
+    serves the exact range from bt, and both the probe and the read are
+    pinned to the level's manifest version resolved first. The spy
+    commits a raw row inside (bt, start) just before or just after the
+    raw level's probe."""
+    rows = [("PV:S", k * NS, float(k), 0, 0) for k in range(0, 7200, 60)]
+    raw = spark.createDataFrame(
+        rows, "channel string, t long, v double, severity int, status int"
+    )
+    store = ArchiveStore(spark, str(tmp_path / f"snap_archive_{commit}"))
+    store.write_samples(raw, level=0)
+    store.write_samples(decimate(raw, 3600), level=3600)
+    reg = ChannelRegistry(spark, str(tmp_path / f"snap_channels_{commit}"))
+    reg.add_channel(
+        ChannelConfig(
+            channel_name="PV:S",
+            control_system_type="channel_access",
+            enabled=True,
+            decimation_levels={0: 0, 3600: 0},
+        )
+    )
+    app = ArchiveApp(store, reg)
+    # bt = 3600 s, start = 3630 s: the late row at 3615 s lies between
+    query = {"start": [str(3630 * NS)], "end": [str(3900 * NS)]}
+    late = spark.createDataFrame(
+        [("PV:S", 3615 * NS, -1.0, 0, 0)],
+        "channel string, t long, v double, severity int, status int",
+    )
+
+    def body() -> list:
+        return list(app.samples("PV:S", query))
+
+    want = body()
+    assert [s["time"] for s in want][:2] == [3600 * NS, 3660 * NS]
+    probe = store.probe_stats
+    committed = []
+
+    def commit_late(level):
+        if level == 0 and not committed:
+            store.write_samples(late, level=0)
+            committed.append(level)
+
+    def spy(level, *args, **kwargs):
+        if commit == "before_probe":
+            commit_late(level)
+        out = probe(level, *args, **kwargs)
+        if commit == "after_probe":
+            commit_late(level)
+        return out
+
+    monkeypatch.setattr(store, "probe_stats", spy)
+    assert body() == want and committed
+    # the commit is real: the next request sees the late row as bt
+    assert [s["time"] for s in body()][0] == 3615 * NS

@@ -979,8 +979,9 @@ EXPECTATIONS: dict[str, tuple[int | None, list[str], list[str]]] = {
          "ArrowEvalPython"],
     ),
     "retention_fallback_plan": (
-        None,  # post-sweep planner: grouped IN-filtered level scans,
-        # no join between levels (ordered union), no Python
+        1,  # post-sweep planner: one exact range scan per level, one
+        # ordered union and its one sort; no join between levels, no
+        # Python
         ["Union"],
         ["SortMergeJoin", "CartesianProduct", "BatchEvalPython",
          "ArrowEvalPython"],
@@ -1090,8 +1091,9 @@ EXPECTATIONS: dict[str, tuple[int | None, list[str], list[str]]] = {
         ["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"],
     ),
     "planner_fallback": (
-        11,  # one bounded scan + sort per level of the union plan —
-        # the planner probes every retained level once by design
+        4,  # one exact range scan per level and one sort over their
+        # union; the other three are the channel hash exchanges of the
+        # raw load and the 6 h re-aggregation that build the levels
         ["codegen id", "PushedFilters"],
         ["CartesianProduct", "SortMergeJoin", "BatchEvalPython",
          "ArrowEvalPython"],
