@@ -21,6 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cassandra_pv_archiver_spark import cache_scope
+from cassandra_pv_archiver_spark import catalog_data as cd
 from cassandra_pv_archiver_spark.registry import REGISTRY
 from cassandra_pv_archiver_spark.session import get_spark
 
@@ -234,111 +235,74 @@ BENCH_QUERIES = [
 WARMUP_DIR = "/root/testdata/sf0.001"
 
 
-def _materialize(kind: str):
-    """Bench-only entries timing the COLD build of the session-level LSH
-    pair tables (catalog_data._PAIR_CACHE). The registry queries that
-    consume a pair table measure their INCREMENTAL cost (the
-    materialized-view usage model); these two entries keep the one-time
-    build cost visible in the record instead of letting min-of-two-passes
-    absorb it silently."""
-    from cassandra_pv_archiver_spark import catalog_data as cd
+def _materialize(view):
+    """Bench-only row timing the COLD build of a session view: the
+    registry queries that consume it measure their incremental cost, and
+    this row keeps the one-time build visible in the record instead of
+    letting min-of-two-passes absorb it."""
 
     def run(spark, sf_dir):
-        key = (spark.sparkContext.applicationId, sf_dir, kind)
-        df = cd._PAIR_CACHE.pop(key, None)
-        if df is not None:
-            df.unpersist()
-        if kind == "minhash_pairs":
-            return cd._minhash_pairs(spark, sf_dir)
-        return cd._srp_pairs(spark, sf_dir)
+        out = cache_scope.rebuild(spark, sf_dir, view)
+        parts = out if isinstance(out, tuple) else (out,)
+        for df in parts[1:]:
+            df.count()
+        return parts[0]
 
     return run
 
 
-def _pair_update():
-    """Bench-only entry timing ONE incremental pair-table maintenance
+@cache_scope.session_view("pair_update_setup")
+def _pair_update_setup(spark, sf_dir):
+    """The batch shingle table and the maintained corpus LSH index
+    (band keys + shingle sets) that `pair_table_update` probes; the
+    operational per-batch path probes the index instead of re-deriving
+    minhashes over the corpus each batch, so THAT is what the row times
+    (the index build itself is the one-time cost the materialize_* rows
+    keep visible)."""
+    from pyspark.sql import functions as F
+
+    from cassandra_pv_archiver_spark.operators import dedup
+
+    docs = cd.load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    is_new = F.col("doc_id") % cd.DELTA_NEW_MOD == 0
+    sh_batch = dedup.shingles(docs.filter(is_new))
+    bands, sets = dedup.corpus_index(
+        dedup.shingles(docs.filter(~is_new)), cd.MINHASH_K, cd.MINHASH_BAND
+    )
+    for df in (bands, sets, sh_batch):
+        df.persist().count()
+    return sh_batch, bands, sets
+
+
+def _pair_update(spark, sf_dir):
+    """Bench-only row timing ONE incremental pair-table maintenance
     batch (sources/pair_store.PairTableView.apply_batch): the per-ingest
     operational cost of the persisted materialized view — cross + within
     -batch pair computation plus the manifest commit, corpus ⋈ corpus
-    never recomputed. Setup (doc-table commits, corpus/batch shingle
-    tables) is session-cached so the timed body is the update alone."""
-    state: dict = {}
+    never recomputed. The set-up is a session view, so the timed body is
+    the update alone."""
+    from cassandra_pv_archiver_spark.catalog import _scratch_dir
+    from cassandra_pv_archiver_spark.sources.pair_store import PairTableView
 
-    def run(spark, sf_dir):
-        import uuid as _uuid
-
-        from pyspark.sql import functions as F
-
-        from cassandra_pv_archiver_spark import catalog_data as cd
-        from cassandra_pv_archiver_spark.catalog import _scratch_dir
-        from cassandra_pv_archiver_spark.operators import dedup
-        from cassandra_pv_archiver_spark.sources.pair_store import PairTableView
-
-        key = (spark.sparkContext.applicationId, sf_dir)
-        if state.get("key") != key:
-            docs = cd.load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            is_new = F.col("doc_id") % cd.DELTA_NEW_MOD == 0
-            state["key"] = key
-            state["root"] = _scratch_dir("pvpairs_bench_")
-            state["sh_batch"] = dedup.shingles(docs.filter(is_new)).persist()
-            # the maintained corpus LSH index (band keys + shingle sets):
-            # the operational per-batch path probes it instead of
-            # re-deriving minhashes over the corpus each batch, so THAT
-            # is what this entry times (the index build itself is the
-            # one-time cost the materialize_* entries keep visible)
-            bands, sets = dedup.corpus_index(
-                dedup.shingles(docs.filter(~is_new)),
-                cd.MINHASH_K, cd.MINHASH_BAND,
-            )
-            state["index"] = (bands.persist(), sets.persist())
-            state["index"][0].count(), state["index"][1].count()
-            state["sh_batch"].count()
-        view = PairTableView(
-            spark,
-            state["root"] + "/view-" + _uuid.uuid4().hex,
-            cd.MINHASH_K,
-            cd.MINHASH_BAND,
-            cd.MINHASH_VERIFY,
-        )
-        view.apply_batch(
-            None, state["sh_batch"], corpus_index=state["index"]
-        )
-        return view.read()
-
-    return run
-
-
-def _materialize_pq():
-    """Bench-only entry timing the COLD PQ index fit (codes + books) —
-    the one-time build the two PQ consumers (`pq_codebook_audit`,
-    `pq_adc_recall`) amortize through catalog_data._pq_fit's session
-    cache; same visibility contract as the pair-table materialize
-    entries."""
-    from cassandra_pv_archiver_spark import catalog_data as cd
-
-    def run(spark, sf_dir):
-        key = (spark.sparkContext.applicationId, sf_dir, "pq_fit")
-        fit = cd._PAIR_CACHE.pop(key, None)
-        if fit is not None:
-            for df in fit:
-                df.unpersist()
-        codes, books = cd._pq_fit(spark, sf_dir)
-        books.count()
-        return codes
-
-    return run
+    sh_batch, bands, sets = _pair_update_setup(spark, sf_dir)
+    view = PairTableView(
+        spark,
+        _scratch_dir("pvpairs_bench_") + "/pairs",
+        cd.MINHASH_K,
+        cd.MINHASH_BAND,
+        cd.MINHASH_VERIFY,
+    )
+    view.apply_batch(None, sh_batch, corpus_index=(bands, sets))
+    return view.read()
 
 
 #: bench-only callables (not registry queries — no oracle of their own;
 #: their outputs ARE the oracled pair queries)
 SPECIAL = {
-    "materialize_minhash_pairs": _materialize("minhash_pairs"),
-    "materialize_srp_pairs": _materialize("srp_pairs"),
-    "pair_table_update": _pair_update(),
-    "materialize_pq_index": _materialize_pq(),
+    f"materialize_{view.kind}": _materialize(view)
+    for view in (cd._minhash_pairs, cd._srp_pairs, cd._pq_fit)
 }
+SPECIAL["pair_table_update"] = _pair_update
 
 
 def run_one(spark, name: str, sf_dir: str) -> float:
@@ -354,8 +318,8 @@ def run_one(spark, name: str, sf_dir: str) -> float:
     # cache built in pass 1 and min-of-two under-reported those rows
     # (r11 record: cms_heavy_hitters 0.29 s vs ~0.7 s honest). The
     # drain runs AFTER the timed action, so each pass pays its full
-    # plan. Session-scoped pair/PQ caches are untouched (their build
-    # cost is adjudicated by the materialize_* entries).
+    # plan. Session views are untouched (their build cost is
+    # adjudicated by the materialize_* entries).
     cache_scope.drain()
     return dt
 

@@ -1,61 +1,153 @@
-"""Invocation-scoped persist registry (r11 review: persist hygiene).
+"""The one owner of persisted-DataFrame lifetimes.
 
-Several query bodies ``persist()`` a subtree that feeds two or more
-consumers of ONE returned plan (the cms exact term table, oov's
-doc-term table, the bpe occurrence table, vocab-overlap's top table).
-The persist is the right §7.2 fix *within* an invocation, but the
-operator cannot unpersist it itself — the caller actions the returned
-DataFrame later — and a bare ``persist()`` then outlives the query:
-Spark's CacheManager dedupes by analyzed-plan equality, so a repeated
-timing pass silently reads pass 1's cache and under-reports the
-aggregation cost, and a long-lived session leaks executor memory.
+An operator often ``persist()``s a subtree that feeds two or more
+consumers of the plan it returns, but it cannot unpersist it itself:
+the caller actions the returned DataFrame later. A bare ``persist()``
+would outlive the query, and since Spark's CacheManager dedupes by
+analyzed-plan equality, a repeated timing pass would silently read the
+first pass's cache while a long-lived driver leaks executor memory.
+Every such persist goes through :func:`persist`, and lives for one of
+three lifetimes:
 
-:func:`persist_scoped` registers every such persist here;
-:func:`drain` unpersists and clears. ``bench.run_one`` drains after
-each timed action (each bench pass pays the full plan), and any
-bounded-lifetime caller can do the same. Session-scoped materialized
-views (catalog_data._PAIR_CACHE) deliberately do NOT go through this —
-their lifetime is the session by design and their build cost is
-adjudicated by the ``materialize_*`` bench entries.
+* **call** -- inside an open :func:`scope`, the persist belongs to the
+  innermost one and is unpersisted when that ``with`` block exits,
+  normally or by an exception. A caller that materializes the result
+  inside the block (``PairTableView.apply_batch``, a session-view
+  build) uses this.
+* **invocation** -- outside any scope, the persist goes to the
+  invocation log, which :func:`drain` empties. Whoever runs one query
+  at a time drains after each: ``bench.run_one`` after the timed
+  action, ``tools/check_oracles.py`` after each query.
+* **session** -- a :func:`session_view` is built once per
+  ``(Spark application, sf_dir, kind)`` by its declared builder and kept
+  until :func:`rebuild` (the bench's cold-build rows) or
+  :func:`drop_views` releases it.
+
+:func:`persist` never takes over a DataFrame that is already cached
+(Spark's cache is keyed by plan, so a plan-equal copy counts): a table
+someone else owns must not be unpersisted from under them, and a query
+re-run before a drain registers nothing new.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import contextlib
+import functools
+import threading
+from collections.abc import Callable, Iterator
+
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+
+class _Scopes(threading.local):
+    """Open scopes, innermost last. Per thread: a foreachBatch
+    callback's scope must not capture the driver thread's persists."""
+
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
+
 
 _LOG: list[DataFrame] = []
+_SCOPES = _Scopes()
+_VIEWS: dict[tuple, tuple[DataFrame, ...]] = {}
 
 
-def persist_scoped(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for the next :func:`drain`."""
-    df.persist()
-    _LOG.append(df)
-    return df
-
-
-def persist_logged(df: DataFrame, cache_log: list | None = None) -> DataFrame:
-    """The canonical operator-internal persist (r12): if the caller
-    manages lifetime (``cache_log`` list — the round-10 convention),
-    record it there; otherwise register here so a bounded-lifetime
-    caller's :func:`drain` still reaches it (pre-r12, a ``None``
-    cache_log leaked the entry for the driver's lifetime AND let a
-    repeated timing pass silently reuse it). Never re-persists a
-    DataFrame the caller already cached — a session-scoped table must
-    not be unpersisted out from under its owner."""
-    if df.is_cached:
-        return df
-    df.persist()
-    (_LOG if cache_log is None else cache_log).append(df)
-    return df
-
-
-def drain() -> int:
-    """Unpersist every registered DataFrame; returns how many."""
-    n = len(_LOG)
-    for df in _LOG:
+def _unpersist(dfs) -> None:
+    for df in dfs:
         try:
             df.unpersist()
         except Exception:  # noqa: BLE001 — a dead session has nothing to free
             pass
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it in the innermost open scope, or in
+    the invocation log outside any. A DataFrame already cached -- this
+    object, or a plan-equal one that someone else persisted -- is
+    returned untouched and not registered: its owner releases it."""
+    if df.is_cached or df.storageLevel != StorageLevel.NONE:
+        return df
+    df.persist()
+    stack = _SCOPES.stack
+    (stack[-1] if stack else _LOG).append(df)
+    return df
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist ``df`` now if :func:`persist` registered it; a
+    DataFrame it did not register (the caller's own cache) is left
+    alone."""
+    for owned in (*_SCOPES.stack, _LOG):
+        for i, d in enumerate(owned):
+            if d is df:
+                del owned[i]
+                _unpersist([df])
+                return
+
+
+@contextlib.contextmanager
+def scope() -> Iterator[None]:
+    """Unpersist everything :func:`persist` registers inside the block
+    when it exits, whether normally or by an exception."""
+    owned: list[DataFrame] = []
+    _SCOPES.stack.append(owned)
+    try:
+        yield
+    finally:
+        _SCOPES.stack.pop()
+        _unpersist(owned)
+
+
+def drain() -> int:
+    """Unpersist the invocation log; returns how many it held."""
+    n = len(_LOG)
+    _unpersist(_LOG)
     _LOG.clear()
+    return n
+
+
+def session_view(kind: str):
+    """Declare ``build(spark, sf_dir)`` as the builder of the session
+    view ``kind``. The decorated function returns the view: built on
+    first use per (application, sf_dir), every DataFrame the builder
+    returns persisted and owned by the view, then the same objects until
+    the view is dropped."""
+
+    def declare(build: Callable) -> Callable:
+        @functools.wraps(build)
+        def view(spark: SparkSession, sf_dir: str):
+            key = (spark.sparkContext.applicationId, sf_dir, kind)
+            parts = _VIEWS.get(key)
+            if parts is None:
+                out = build(spark, sf_dir)
+                parts = out if isinstance(out, tuple) else (out,)
+                for df in parts:
+                    if not df.is_cached:
+                        df.persist()
+                _VIEWS[key] = parts
+            return parts if len(parts) > 1 else parts[0]
+
+        view.kind = kind
+        return view
+
+    return declare
+
+
+def _drop(key: tuple) -> None:
+    _unpersist(_VIEWS.pop(key, ()))
+
+
+def rebuild(spark: SparkSession, sf_dir: str, view: Callable):
+    """Drop ``view``'s session copy for ``sf_dir`` and build it afresh:
+    the bench's cold-build rows."""
+    _drop((spark.sparkContext.applicationId, sf_dir, view.kind))
+    return view(spark, sf_dir)
+
+
+def drop_views() -> int:
+    """Unpersist every session view; returns how many were held."""
+    n = len(_VIEWS)
+    for key in list(_VIEWS):
+        _drop(key)
     return n

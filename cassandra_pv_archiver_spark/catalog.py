@@ -1191,7 +1191,7 @@ def _ca_wire_reconstructed(spark: SparkSession, sf_dir: str) -> DataFrame:
     union (markers re-unioned; they never cross the wire) — the shared
     reconstruction the decimation roundtrip and the JSON rendering
     roundtrip both consume."""
-    from .cache_scope import persist_logged
+    from . import cache_scope
     from .functions import ca_wire_typed as cwt
     from .sources.testdata import load_typed_samples
 
@@ -1199,7 +1199,7 @@ def _ca_wire_reconstructed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below) AND the markers re-union — persist it so the ~0.4 s typed
     # derivation runs once per invocation, not twice (guide §7.2, r12;
     # the eager checkpoint job doubles as the cache-population pass)
-    typed = persist_logged(load_typed_samples(spark, sf_dir))
+    typed = cache_scope.persist(load_typed_samples(spark, sf_dir))
     wire = typed.filter(~F.col("type").isin(*_MARKER_TYPES))
     markers = typed.filter(F.col("type").isin(*_MARKER_TYPES))
     subs = _md5_sids(wire)
@@ -1877,14 +1877,14 @@ _PLAN_START = LO - 5 * DAY_NS
 def q_planner_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§4 planner: level selection (count -> level 0 here) + retention
     fallback union across three levels (`Api10Controller.java:396-518`)."""
-    from .cache_scope import persist_logged
+    from . import cache_scope
 
     raw = load_samples(spark, sf_dir, channels=["PV:3"])
     # the 1 h level feeds l1, l2 (via re-agg) AND the planner's per-level
     # min(t) probes — persist it (invocation-scoped, r12: bench drains
     # it after the timed action), as a real deployment reads these
     # levels from materialized archive tables, not by re-decimating raw
-    dec = persist_logged(decimate(raw, PERIOD_1H))
+    dec = cache_scope.persist(decimate(raw, PERIOD_1H))
     l0 = raw.select(
         "channel", "t", F.col("v").alias("value"), F.lit(0).alias("level")
     ).filter(F.col("t") >= MID)

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import cache_scope
 from .operators import dedup, multimodal, sampling, similarity, stats, text
 from .sources.testdata import load_table
 
@@ -75,41 +76,22 @@ MINHASH_BAND = 2
 MINHASH_VERIFY = 0.2
 
 
-#: Session-level materialized pair tables. Five registry queries consume
-#: the MinHash-LSH pair set and three consume the SRP-LSH pair set at
-#: identical parameters; recomputing the shingle explode + signatures +
-#: verify per query was the dominant repeated work in the driver's
-#: correctness gate (round-2 ADVICE). A production deployment would
-#: PERSIST the pair table as a maintained artifact next to the corpus —
-#: this cache is that materialized view at session scope. Keyed by
-#: (Spark application, sf_dir); pair tables are tiny (O(near-dup pairs)).
-_PAIR_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _cached(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _PAIR_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _PAIR_CACHE[key] = df
-    return df
-
-
+#: Five registry queries consume the MinHash-LSH pair set and three the
+#: SRP-LSH pair set at identical parameters, so each is a session view
+#: (cache_scope.session_view): a production deployment would persist the
+#: pair table as a maintained artifact next to the corpus.
+@cache_scope.session_view("minhash_pairs")
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        sh = dedup.shingles(docs)
-        return dedup.minhash_lsh_pairs(
-            sh, MINHASH_K, MINHASH_BAND, MINHASH_VERIFY
-        )
-
-    return _cached(spark, sf_dir, "minhash_pairs", build)
+    docs = load_table(spark, sf_dir, "documents")
+    return dedup.minhash_lsh_pairs(
+        dedup.shingles(docs), MINHASH_K, MINHASH_BAND, MINHASH_VERIFY
+    )
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8) + LSH(4 bands of 2) candidates, verified by true Jaccard
-    >= 0.2 — the 100 TB-safe near-dup plan. (Pair table materialized once
-    per session — see _PAIR_CACHE.)"""
+    >= 0.2 — the 100 TB-safe near-dup plan. (The pair table is a session
+    view.)"""
     return _minhash_pairs(spark, sf_dir).orderBy("id_a", "id_b")
 
 
@@ -210,29 +192,28 @@ def q_pair_table_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-batch pairs appended, corpus ⋈ corpus never recomputed. The
     oracle is the FULL-corpus rebuild (SQL_DEDUP_MINHASH_LSH's chain):
     a value-hash match proves rebuild-vs-incremental equivalence."""
+    return _pair_table_incremental(spark, sf_dir).orderBy("id_a", "id_b")
+
+
+@cache_scope.session_view("pair_table_incremental")
+def _pair_table_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .catalog import _scratch_dir
     from .sources.pair_store import DocTable, PairTableView
 
-    def build():
-        from .catalog import _scratch_dir
-
-        root = _scratch_dir("pvpairs_")
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        dt = DocTable(spark, root + "/docs", "doc_id bigint, text string")
-        v0 = dt.append(docs.filter(F.col("doc_id") % DELTA_NEW_MOD != 0))
-        v1 = dt.append(docs.filter(F.col("doc_id") % DELTA_NEW_MOD == 0))
-        view = PairTableView(
-            spark, root + "/pairs", MINHASH_K, MINHASH_BAND, MINHASH_VERIFY
-        )
-        view.rebuild(dedup.shingles(dt.read(at_version=v0)))
-        batch = dt.read_changes(v0, v1)  # CDC: only the delta's files
-        view.apply_batch(
-            dedup.shingles(dt.read(at_version=v0)), dedup.shingles(batch)
-        )
-        return view.read().persist()
-
-    return _cached(spark, sf_dir, "pair_table_incremental", build).orderBy(
-        "id_a", "id_b"
+    root = _scratch_dir("pvpairs_")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    dt = DocTable(spark, root + "/docs", "doc_id bigint, text string")
+    v0 = dt.append(docs.filter(F.col("doc_id") % DELTA_NEW_MOD != 0))
+    v1 = dt.append(docs.filter(F.col("doc_id") % DELTA_NEW_MOD == 0))
+    view = PairTableView(
+        spark, root + "/pairs", MINHASH_K, MINHASH_BAND, MINHASH_VERIFY
     )
+    view.rebuild(dedup.shingles(dt.read(at_version=v0)))
+    batch = dt.read_changes(v0, v1)  # CDC: only the delta's files
+    view.apply_batch(
+        dedup.shingles(dt.read(at_version=v0)), dedup.shingles(batch)
+    )
+    return view.read()
 
 
 SQL_PAIR_TABLE_INCREMENTAL = f"""
@@ -254,41 +235,38 @@ def q_pair_table_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the FULL-corpus rebuild chain, so a value-hash match
     proves the two-stream composition lands on exactly the batch-free
     answer."""
+    return _pair_table_streams(spark, sf_dir).orderBy("id_a", "id_b")
+
+
+@cache_scope.session_view("pair_table_streams")
+def _pair_table_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .catalog import _scratch_dir
     from .sources.pair_store import (
         DocTable,
         PairTableView,
         start_pair_table_maintenance,
     )
 
-    def build():
-        from .catalog import _scratch_dir
-
-        root = _scratch_dir("pvpairs_streams_")
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        schema = "doc_id bigint, text string"
-        dt = DocTable(spark, root + "/docs", schema)
-        view = PairTableView(
-            spark, root + "/pairs", MINHASH_K, MINHASH_BAND, MINHASH_VERIFY
-        )
-        parts = (
-            docs.filter(F.col("doc_id") % DELTA_NEW_MOD != 0),
-            docs.filter(F.col("doc_id") % DELTA_NEW_MOD == 0),
-        )
-        for i, part in enumerate(parts):
-            src = f"{root}/src{i}"
-            part.coalesce(1).write.mode("overwrite").parquet(src)
-            stream = spark.readStream.schema(schema).parquet(src)
-            q = start_pair_table_maintenance(
-                stream, dt, view, f"{root}/ckpt{i}", available_now=True
-            )
-            q.awaitTermination(300)
-        return view.read().persist()
-
-    return _cached(spark, sf_dir, "pair_table_streams", build).orderBy(
-        "id_a", "id_b"
+    root = _scratch_dir("pvpairs_streams_")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    schema = "doc_id bigint, text string"
+    dt = DocTable(spark, root + "/docs", schema)
+    view = PairTableView(
+        spark, root + "/pairs", MINHASH_K, MINHASH_BAND, MINHASH_VERIFY
     )
+    parts = (
+        docs.filter(F.col("doc_id") % DELTA_NEW_MOD != 0),
+        docs.filter(F.col("doc_id") % DELTA_NEW_MOD == 0),
+    )
+    for i, part in enumerate(parts):
+        src = f"{root}/src{i}"
+        part.coalesce(1).write.mode("overwrite").parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        q = start_pair_table_maintenance(
+            stream, dt, view, f"{root}/ckpt{i}", available_now=True
+        )
+        q.awaitTermination(300)
+    return view.read()
 
 
 #: identical oracle to the CDC-incremental row: both must land on the
@@ -309,45 +287,37 @@ def q_pair_table_probe_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL as ``dedup_incremental``) proves. A tiny ``probe_prune`` cap
     (1) is also exercised under test to pin the fallback-to-full-scan
     path; here the cap is the production default."""
+    return _pair_table_probe_pruned(spark, sf_dir).orderBy("old_id", "new_id")
+
+
+@cache_scope.session_view("pair_table_probe_pruned")
+def _pair_table_probe_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .catalog import _scratch_dir
     from .sources.pair_store import CorpusIndexStore, DocTable
 
-    def build():
-        from .catalog import _scratch_dir
-
-        root = _scratch_dir("pvprobe_")
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        is_new = F.col("doc_id") % DELTA_NEW_MOD == 0
-        dt = DocTable(spark, root + "/docs", "doc_id bigint, text string")
-        v0 = dt.append(docs.filter(~is_new))
-        idx = CorpusIndexStore(
-            spark, root + "/cindex", MINHASH_K, MINHASH_BAND
-        )
-        bands, sets = idx.sync(dt)  # first-ever build, persisted
-        assert idx.version() == v0
-        cache_log: list = []
-        try:
-            out = dedup.minhash_lsh_delta_pairs(
-                None,
-                dedup.shingles(docs.filter(is_new)),
-                MINHASH_K,
-                MINHASH_BAND,
-                MINHASH_VERIFY,
-                old_index=(bands, sets),
-                cache_log=cache_log,
-                probe_prune=8192,
-            ).persist()
-            # materialize BEFORE the finally unpersists the probe
-            # intermediates, or the final evaluation recomputes the
-            # whole delta chain they amortize (round-11 review)
-            out.count()
-            return out
-        finally:
-            for df in cache_log:
-                df.unpersist()
-
-    return _cached(spark, sf_dir, "pair_table_probe_pruned", build).orderBy(
-        "old_id", "new_id"
-    )
+    root = _scratch_dir("pvprobe_")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    is_new = F.col("doc_id") % DELTA_NEW_MOD == 0
+    dt = DocTable(spark, root + "/docs", "doc_id bigint, text string")
+    v0 = dt.append(docs.filter(~is_new))
+    idx = CorpusIndexStore(spark, root + "/cindex", MINHASH_K, MINHASH_BAND)
+    bands, sets = idx.sync(dt)  # first-ever build, persisted
+    assert idx.version() == v0
+    with cache_scope.scope():
+        out = dedup.minhash_lsh_delta_pairs(
+            None,
+            dedup.shingles(docs.filter(is_new)),
+            MINHASH_K,
+            MINHASH_BAND,
+            MINHASH_VERIFY,
+            old_index=(bands, sets),
+            probe_prune=8192,
+        ).persist()
+        # materialize BEFORE the scope releases the probe intermediates,
+        # or the final evaluation recomputes the whole delta chain they
+        # amortize (round-11 review)
+        out.count()
+    return out
 
 
 #: identical oracle to dedup_incremental: the persisted, probe-pruned
@@ -1316,15 +1286,13 @@ SRP_SEED = 0x9E3779B9
 SRP_N_PROBES = SRP_N_BITS  # full Hamming-1 neighborhood
 
 
+@cache_scope.session_view("srp_pairs")
 def _srp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build():
-        emb = load_table(spark, sf_dir, "embeddings")
-        return similarity.srp_near_pairs(
-            emb, NEAR_DUP_TAU, n_bits=SRP_N_BITS, n_bands=SRP_N_BANDS,
-            n_probes=SRP_N_PROBES,
-        )
-
-    return _cached(spark, sf_dir, "srp_pairs", build)
+    emb = load_table(spark, sf_dir, "embeddings")
+    return similarity.srp_near_pairs(
+        emb, NEAR_DUP_TAU, n_bits=SRP_N_BITS, n_bands=SRP_N_BANDS,
+        n_probes=SRP_N_PROBES,
+    )
 
 
 def q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4031,9 +3999,7 @@ def q_bpe_tokenize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merges = [(r["lhs"], r["rhs"]) for r in merges_df.collect()]
 
-    from .cache_scope import persist_scoped
-
-    occ = persist_scoped(
+    occ = cache_scope.persist(
         docs.select(
             "lang", "source", F.explode(F.expr(_WORDS)).alias("word")
         )
@@ -4042,8 +4008,7 @@ def q_bpe_tokenize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_occ"))
         # invocation-scoped persist (r12): feeds the word-type
         # extraction AND the final occurrence join — the corpus explode
-        # + rlike + agg ran twice (guide §7.2); drained by bench.run_one
-        # after the timed action (r11 review: persist hygiene)
+        # + rlike + agg ran twice (guide §7.2)
     )
     # per word TYPE: base symbol count and merged token count
     types = occ.select("word").distinct().select(
@@ -4165,27 +4130,20 @@ PQ_K = 8
 PQ_ITERS = 2
 
 
+@cache_scope.session_view("pq_index")
 def _pq_fit(spark: SparkSession, sf_dir: str):
-    """Session-materialized PQ index (codes + books persisted once):
-    the two PQ consumers below measure their SEARCH/AUDIT cost, not a
-    refit per query — the _PAIR_CACHE usage model; bench keeps the
-    one-time fit visible as its own `materialize_pq_index` entry."""
-    from .operators import similarity
-
-    key = (spark.sparkContext.applicationId, sf_dir, "pq_fit")
-    fit = _PAIR_CACHE.get(key)
-    if fit is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        # checkpoint_books: this cache materializes codes and books in
-        # SEPARATE actions — without it each action re-runs the whole
-        # Lloyd chain (bench row materialize_pq_index 3.7 -> 1.7 s)
-        codes, books = similarity.pq_fit_encode(
-            emb, m=PQ_M, sub_dim=PQ_SUB_DIM, k=PQ_K, iters=PQ_ITERS,
-            checkpoint_books=True,
-        )
-        fit = (codes.persist(), books.persist())
-        _PAIR_CACHE[key] = fit
-    return fit
+    """The PQ index (codes, books) as a session view: the two PQ
+    consumers below measure their SEARCH/AUDIT cost, not a refit per
+    query; bench keeps the one-time fit visible as its own
+    `materialize_pq_index` entry."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    # checkpoint_books: this view materializes codes and books in
+    # SEPARATE actions — without it each action re-runs the whole
+    # Lloyd chain (bench row materialize_pq_index 3.7 -> 1.7 s)
+    return similarity.pq_fit_encode(
+        emb, m=PQ_M, sub_dim=PQ_SUB_DIM, k=PQ_K, iters=PQ_ITERS,
+        checkpoint_books=True,
+    )
 
 
 def q_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5467,16 +5425,13 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("source", F.explode(F.expr(text._WORDS)).alias("tok"))
     counts = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("source").orderBy(F.desc("n"), "tok")
-    from .cache_scope import persist_scoped
-
-    top = persist_scoped(
+    top = cache_scope.persist(
         counts.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= VOCAB_OVERLAP_TOP)
         .select("source", "tok")
         # invocation-scoped persist (r12): feeds sizes + BOTH sides of
         # the token self-join — without it the corpus token count +
-        # window runs three times (guide §7.2); drained by
-        # bench.run_one after the timed action (r11 review)
+        # window runs three times (guide §7.2)
     )
     sizes = top.groupBy("source").agg(F.count(F.lit(1)).alias("_sz"))
     a = top.select(F.col("source").alias("src_a"), "tok")

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache_scope
+
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup by content digest: one surviving (minimum) id per digest.
@@ -66,7 +68,6 @@ def jaccard_pairs(
     threshold: float,
     id_col: str = "doc_id",
     max_docs: int | None = EXACT_PAIRS_MAX_DOCS,
-    cache_log: list | None = None,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard over documents sharing >= 1 shingle.
 
@@ -82,10 +83,11 @@ def jaccard_pairs(
     # pure-overhead pass over the uncached shingle explode, and the main
     # plan then re-ran the explode for sizes + both self-join sides; the
     # persist turns the guard job into the cache-population pass
-    sh = _persist_logged(sh, cache_log)
+    sh = cache_scope.persist(sh)
     if max_docs is not None:
         n_docs = sh.select(id_col).distinct().count()
         if n_docs > max_docs:
+            cache_scope.release(sh)
             raise ValueError(
                 f"jaccard_pairs: {n_docs} documents; the all-shared-shingle "
                 f"pair join is quadratic in per-shingle doc frequency and is "
@@ -152,25 +154,12 @@ def _banded_signatures(
 
 
 
-def _persist_logged(df: DataFrame, cache_log: list | None) -> DataFrame:
-    """persist + record for caller-side unpersist — UNLESS the caller
-    already cached the input (a session-scoped table must not be
-    unpersisted out from under its owner by a bounded-lifetime call).
-    With ``cache_log=None`` the persist registers in the module-level
-    cache_scope instead (r12): bench drains it after each timed action,
-    so repeated passes recompute honestly and nothing leaks."""
-    from ..cache_scope import persist_logged
-
-    return persist_logged(df, cache_log)
-
-
 def minhash_lsh_pairs(
     sh: DataFrame,
     num_hashes: int = 8,
     band_size: int = 2,
     verify_threshold: float = 0.2,
     id_col: str = "doc_id",
-    cache_log: list | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs, verified with true Jaccard.
 
@@ -178,13 +167,6 @@ def minhash_lsh_pairs(
     -> candidate pairs -> exact Jaccard filter. The only joins are on band
     keys (candidates) and on ids (verification) — no quadratic blowup.
     Returns: id_a, id_b, jaccard, n_common.
-
-    ``cache_log`` (round-10 review): every DataFrame this function
-    persists is appended to it so a bounded-lifetime caller (the
-    streaming pair-table maintenance, one call per micro-batch) can
-    unpersist after materializing — without it each batch leaked 1-2
-    cached corpus-sized datasets for the life of the driver. Session
-    -scoped callers (the registry queries) omit it on purpose.
     """
     if num_hashes % band_size != 0:
         raise ValueError("num_hashes must be a multiple of band_size")
@@ -192,7 +174,7 @@ def minhash_lsh_pairs(
     # persist it so the (explode + md5) generation runs once, not three
     # times (measured −25% warm at sf0.1; at 100 TB recomputing the
     # shingle explode per consumer is the dominant waste)
-    sh = _persist_logged(sh, cache_log)
+    sh = cache_scope.persist(sh)
     banded = _banded_signatures(sh, num_hashes, band_size, id_col)
     cand = (
         banded.alias("x")
@@ -262,7 +244,6 @@ def minhash_lsh_delta_pairs(
     verify_threshold: float = 0.2,
     id_col: str = "doc_id",
     old_index: tuple[DataFrame, DataFrame] | None = None,
-    cache_log: list | None = None,
     probe_prune: int | None = None,
 ) -> DataFrame:
     """Incremental dedup: near-dup pairs between a NEW document batch and
@@ -274,8 +255,7 @@ def minhash_lsh_delta_pairs(
     ``old_index`` — a precomputed :func:`corpus_index` of the corpus
     side (``sh_old`` may then be None): each increment probes the
     maintained band/set tables instead of re-deriving minhashes and
-    collect_set over the whole corpus per batch. ``cache_log`` as in
-    :func:`minhash_lsh_pairs`.
+    collect_set over the whole corpus per batch.
 
     ``probe_prune`` (VERDICT r10 #2) — when ``old_index`` is backed by
     PERSISTED parquet tables (``sources.pair_store.CorpusIndexStore``),
@@ -297,11 +277,11 @@ def minhash_lsh_delta_pairs(
         raise ValueError(
             "pass sh_old (corpus shingles) or old_index (corpus_index)"
         )
-    sh_new = _persist_logged(sh_new, cache_log)
+    sh_new = cache_scope.persist(sh_new)
     if old_index is not None:
         b_old, sets_old_raw = old_index
     else:
-        sh_old = _persist_logged(sh_old, cache_log)
+        sh_old = cache_scope.persist(sh_old)
         b_old = _banded_signatures(sh_old, num_hashes, band_size, id_col)
         sets_old_raw = sh_old.groupBy(id_col).agg(
             F.collect_set("shingle").alias("sset")
@@ -311,8 +291,7 @@ def minhash_lsh_delta_pairs(
         # bounded collect: one md5 key per (doc, band) of the BATCH —
         # the In predicate reaches the persisted bands scan, where
         # key-sorted files turn it into row-group pruning
-        if cache_log is not None:  # don't leak persists on bare calls
-            b_new = _persist_logged(b_new, cache_log)
+        b_new = cache_scope.persist(b_new)
         keys = [
             r.key
             for r in b_new.select("key")
@@ -332,8 +311,7 @@ def minhash_lsh_delta_pairs(
     if probe_prune:
         # same trick for the verification join: candidates' old ids
         # prune the persisted shingle-set scan (doc_id-sorted files)
-        if cache_log is not None:
-            cand = _persist_logged(cand, cache_log)
+        cand = cache_scope.persist(cand)
         ids = [
             r.old_id
             for r in cand.select("old_id")
@@ -801,7 +779,6 @@ def containment_pairs(
     j_max: float = 0.5,
     id_col: str = "doc_id",
     max_docs: int | None = EXACT_PAIRS_MAX_DOCS,
-    cache_log: list | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup: Broder CONTAINMENT C(A in B) = |A∩B| / |A| —
     the quote-inside-article / doc-embedded-in-digest case that
@@ -824,10 +801,11 @@ def containment_pairs(
     """
     # persist FIRST (r12): see jaccard_pairs — the guard pass populates
     # the cache that sizes + both self-join sides then read
-    sh = _persist_logged(sh, cache_log)
+    sh = cache_scope.persist(sh)
     if max_docs is not None:
         n_docs = sh.select(id_col).distinct().count()
         if n_docs > max_docs:
+            cache_scope.release(sh)
             raise ValueError(
                 f"containment_pairs: {n_docs} documents exceeds the "
                 f"{max_docs}-doc cap of the exact baseline; use "
@@ -884,7 +862,6 @@ def containment_lsh_pairs(
     min_hits: int = 1,
     max_df: int | None = None,
     id_col: str = "doc_id",
-    cache_log: list | None = None,
 ) -> DataFrame:
     """Containment near-dup pairs at scale: band on the SMALLER side's
     signature — the production path :func:`containment_pairs` (the exact,
@@ -931,10 +908,9 @@ def containment_lsh_pairs(
     # the verification sets need (array_sort over the per-doc set instead
     # of a second window shuffle — identical (md5, shingle) order, so the
     # selected probes are byte-identical to a row_number formulation)
-    sh = _persist_logged(sh, cache_log)
-    doc_sets = _persist_logged(
-        sh.groupBy(id_col).agg(F.collect_set("shingle").alias("sset")),
-        cache_log,
+    sh = cache_scope.persist(sh)
+    doc_sets = cache_scope.persist(
+        sh.groupBy(id_col).agg(F.collect_set("shingle").alias("sset"))
     )
     probes = doc_sets.select(
         F.col(id_col).alias("_probe"),

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache_scope
 
 def _dot(a: str, b: str) -> F.Column:
     return F.expr(
@@ -540,7 +541,6 @@ def srp_candidate_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_probes: int = 0,
-    cache_log: list | None = None,
 ) -> DataFrame:
     """Same-bucket SRP candidate pairs (id_a < id_b, deduped across bands).
 
@@ -577,9 +577,7 @@ def srp_candidate_pairs(
             emb.sparkSession.sparkContext.defaultParallelism, "_id", "band"
         )
     )
-    from ..cache_scope import persist_logged
-
-    sig = persist_logged(sig, cache_log)
+    sig = cache_scope.persist(sig)
     if n_probes > 0:
         # probe side = base bucket + its Hamming-1 neighbors; index side
         # stays base-only, so the blowup is (1+q)x one side, not (1+q)^2.
@@ -630,7 +628,6 @@ def srp_near_pairs(
     vec_col: str = "embedding",
     round_to: int = 4,
     n_probes: int = 0,
-    cache_log: list | None = None,
 ) -> DataFrame:
     """LSH-bucketed near-duplicate pairs: SRP band buckets -> same-bucket
     candidate join -> exact cosine verify ``>= threshold``.
@@ -667,7 +664,7 @@ def srp_near_pairs(
     base = emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     cand = srp_candidate_pairs(
         base, n_bits=n_bits, n_bands=n_bands, dim=dim, id_col="_id",
-        vec_col="_v", n_probes=n_probes, cache_log=cache_log,
+        vec_col="_v", n_probes=n_probes,
     )
     sim = F.round(_batch_cosine_udf()(F.col("va"), F.col("vb")), round_to)
     # cosine verification is an Arrow/numpy kernel over ~2·dim doubles
@@ -881,7 +878,6 @@ def kmeans_ivf_topk(
     n_probe: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_log: list | None = None,
 ) -> DataFrame:
     """IVF top-k probe over the deterministic K-Means index: assign the
     corpus once, rank each query's centroids by cosine, search only the
@@ -893,10 +889,8 @@ def kmeans_ivf_topk(
 
     Returns (q_id, vec_id, sim, rank).
     """
-    from ..cache_scope import persist_logged
-
     assigned, cent = _kmeans_fit(emb, n_clusters, iters, id_col, vec_col)
-    assigned = persist_logged(assigned, cache_log)
+    assigned = cache_scope.persist(assigned)
     to_d = "transform({c}, x -> CAST(x AS DOUBLE))"
 
     qv = (
@@ -961,7 +955,6 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 4,
-    cache_log: list | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: pairwise cosine is
     computed only WITHIN each K-Means cluster of the deterministic Lloyd
@@ -985,13 +978,11 @@ def semantic_dedup_pairs(
     bit-reproducible at any parallelism. Returns (cluster, id_a, id_b,
     sim) with ``sim >= threshold``, id_a < id_b.
     """
-    from ..cache_scope import persist_logged
-
     assigned, _ = _kmeans_fit(emb, k, iters, id_col, vec_col)
     # persist: the helper self-joins the assignment, and without a cache
     # the full multi-shuffle Lloyd chain re-executes on BOTH join sides
     # (round-10 review; semantic_dedup below already did this)
-    assigned = persist_logged(assigned, cache_log)
+    assigned = cache_scope.persist(assigned)
     return _semantic_pairs_from_assigned(assigned, threshold, round_to)
 
 
@@ -1034,17 +1025,14 @@ def semantic_dedup(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_log: list | None = None,
 ) -> DataFrame:
     """SemDeDup keep/drop summary per cluster: a vector is DROPPED when a
     smaller-id vector in the same cluster has cosine >= threshold ("keep
     the first copy" — deterministic, order-free). Returns (cluster,
     n_vecs, n_dup_pairs, n_dropped, n_kept). The Lloyd fit runs ONCE
     (persisted assignment shared by the size and pair branches)."""
-    from ..cache_scope import persist_logged
-
     assigned, _ = _kmeans_fit(emb, k, iters, id_col, vec_col)
-    assigned = persist_logged(assigned, cache_log)
+    assigned = cache_scope.persist(assigned)
     sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_vecs"))
     pairs = _semantic_pairs_from_assigned(assigned, threshold)
     stats = pairs.groupBy("cluster").agg(

@@ -53,12 +53,10 @@ def cms_heavy_hitter_audit(
     toks = docs.select(F.explode(F.expr(_WORDS)).alias("token"))
     # persisted (invocation-scoped, r12): the term table feeds the top-k
     # ranking AND the sketch counters below — without it the token
-    # hash-agg shuffle runs twice. persist_scoped registers it so a
-    # bounded-lifetime caller (bench.run_one drains after each timed
-    # action) releases it instead of leaking a driver-lifetime entry.
-    from ..cache_scope import persist_scoped
+    # hash-agg shuffle runs twice.
+    from .. import cache_scope
 
-    exact = persist_scoped(
+    exact = cache_scope.persist(
         toks.groupBy("token").agg(F.count(F.lit(1)).alias("exact_n"))
     )
     top = exact.orderBy(F.col("exact_n").desc(), "token").limit(top_k)

@@ -417,13 +417,11 @@ def oov_rate(docs: DataFrame, top_n: int = 100) -> DataFrame:
     # table is persisted (tiny next to the token stream; CacheManager
     # dedupes repeated calls) and all counts recombine exactly:
     # occurrences per token == Σ tf, per-doc totals == Σ tf.
-    from ..cache_scope import persist_scoped
+    from .. import cache_scope
 
     toks = docs.select("doc_id", F.explode(F.expr(_WORDS)).alias("tok"))
-    # invocation-scoped persist (r12): three consumers of one term
-    # table; bench.run_one drains it after the timed action instead of
-    # leaking a driver-lifetime cache entry (r11 review)
-    dt = persist_scoped(
+    # invocation-scoped persist (r12): three consumers of one term table
+    dt = cache_scope.persist(
         toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     )
     top = (

@@ -2,7 +2,7 @@
 maintenance — the production materialized-view lifecycle for the LSH
 pair sets.
 
-The session-scoped `_PAIR_CACHE` in catalog_data.py amortizes the pair
+The pair-table session views in catalog_data.py amortize the pair
 build across one driver's queries; at 100 TB the pair table must instead
 be an OPERATIONAL artifact: stored next to the corpus, updated per
 ingest batch at O(batch) cost, never rebuilt. This module wires the
@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache_scope
 from ..operators import dedup
 from .lease import file_lease
 from .manifest import CommitRefused, ManifestTable
@@ -407,23 +408,20 @@ class PairTableView:
         for the life of the driver."""
         if marker is not None and self.has_marker(marker):
             return self.table.current_version()
-        cache_log: list = []
         try:
-            self._apply_batch(sh_corpus, sh_batch, marker, corpus_index,
-                              cache_log, probe_prune)
+            with cache_scope.scope():
+                self._apply_batch(
+                    sh_corpus, sh_batch, marker, corpus_index, probe_prune
+                )
         except CommitRefused:
             # a concurrent replay carrying the same marker won the
             # commit race after our fast-path check: the batch IS
             # applied — idempotent success (round-11 review)
             pass
-        finally:
-            for df in cache_log:
-                df.unpersist()
         return self.table.current_version()
 
     def _apply_batch(
-        self, sh_corpus, sh_batch, marker, corpus_index, cache_log,
-        probe_prune=None,
+        self, sh_corpus, sh_batch, marker, corpus_index, probe_prune=None,
     ) -> None:
         cross = dedup.minhash_lsh_delta_pairs(
             sh_corpus,
@@ -432,7 +430,6 @@ class PairTableView:
             self.band_size,
             self.verify_threshold,
             old_index=corpus_index,
-            cache_log=cache_log,
             probe_prune=probe_prune,
         ).select(
             F.least("old_id", "new_id").alias("id_a"),
@@ -442,7 +439,6 @@ class PairTableView:
         )
         within = dedup.minhash_lsh_pairs(
             sh_batch, self.num_hashes, self.band_size, self.verify_threshold,
-            cache_log=cache_log,
         ).select("id_a", "id_b", "jaccard", "n_common")
         self._publish(
             cross.unionByName(within), remove=[], marker=marker

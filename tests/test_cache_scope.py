@@ -84,3 +84,138 @@ def test_registry_persist_sites_register_with_cache_scope(spark, tmp_path):
     assert cache_scope.drain() >= 1
     q_bpe_tokenize_audit(spark, sf).count()
     assert cache_scope.drain() >= 1
+
+
+def _cm(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def _held(spark, df) -> bool:
+    return _cm(spark).lookupCachedData(df._jdf).isDefined()
+
+
+def _frame(spark, tag: str):
+    return spark.range(8).selectExpr(f"id * 7 + length('{tag}') AS x")
+
+
+def test_persist_of_caller_cached_frame_is_not_owned(spark):
+    from cassandra_pv_archiver_spark import cache_scope
+
+    cache_scope.drain()
+    df = _frame(spark, "caller-owned").persist()
+    try:
+        assert cache_scope.persist(df) is df
+        # Spark keys its cache by plan: a plan-equal twin is the same
+        # entry, and releasing it would unpersist the caller's table
+        cache_scope.persist(_frame(spark, "caller-owned"))
+        assert cache_scope.drain() == 0  # nothing was registered
+        assert _held(spark, df)
+    finally:
+        df.unpersist()
+
+
+def test_unscoped_persist_is_released_by_drain(spark):
+    from cassandra_pv_archiver_spark import cache_scope
+
+    cache_scope.drain()
+    df = cache_scope.persist(_frame(spark, "unscoped"))
+    assert _held(spark, df)
+    assert cache_scope.drain() == 1
+    assert not _held(spark, df)
+
+
+def test_scope_exit_by_exception_unpersists(spark):
+    import pytest
+
+    from cassandra_pv_archiver_spark import cache_scope
+
+    before = _cm(spark).numCachedEntries()
+    with pytest.raises(RuntimeError):
+        with cache_scope.scope():
+            df = cache_scope.persist(_frame(spark, "raises"))
+            assert _held(spark, df)
+            raise RuntimeError("mid-scope failure")
+    assert not _held(spark, df)
+    assert _cm(spark).numCachedEntries() == before
+    assert cache_scope.drain() == 0  # nothing leaked into the log
+
+
+def test_nested_scopes_release_only_their_own(spark):
+    from cassandra_pv_archiver_spark import cache_scope
+
+    cache_scope.drain()
+    with cache_scope.scope():
+        outer = cache_scope.persist(_frame(spark, "outer"))
+        with cache_scope.scope():
+            inner = cache_scope.persist(_frame(spark, "inner"))
+        assert not _held(spark, inner)
+        assert _held(spark, outer)
+    assert not _held(spark, outer)
+    assert cache_scope.drain() == 0
+
+
+def test_session_view_is_built_once_and_rebuilt_on_demand(spark):
+    from cassandra_pv_archiver_spark import cache_scope
+
+    builds = []
+
+    @cache_scope.session_view("test_two_part_view")
+    def view(spark, sf_dir):
+        builds.append(sf_dir)
+        return _frame(spark, "view-a" + sf_dir), _frame(spark, "view-b" + sf_dir)
+
+    a, b = view(spark, "x")
+    assert view(spark, "x") == (a, b) and builds == ["x"]
+    assert _held(spark, a) and _held(spark, b)
+    cache_scope.drain()  # invocation drains leave session views alone
+    assert _held(spark, a) and _held(spark, b)
+    a2, _ = cache_scope.rebuild(spark, "x", view)
+    assert builds == ["x", "x"] and a2 is not a
+    assert _held(spark, a2)
+    assert cache_scope.drop_views() >= 1
+    assert not _held(spark, a2)
+
+
+def test_apply_batch_leaves_cache_as_found(spark, tmp_path, monkeypatch):
+    """PairTableView.apply_batch releases every intermediate the dedup
+    operators persisted, on success and on a CommitRefused replay (a
+    concurrent replay that passed the marker fast path)."""
+    from cassandra_pv_archiver_spark.operators import dedup
+    from cassandra_pv_archiver_spark.sources.pair_store import PairTableView
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "p q r s t")],
+        "doc_id bigint, text string",
+    )
+    sh = dedup.shingles(docs)
+    view = PairTableView(spark, str(tmp_path / "pairs"))
+    before = _cm(spark).numCachedEntries()
+    v = view.apply_batch(sh, sh, marker="leak-batch-1")
+    assert _cm(spark).numCachedEntries() == before
+    monkeypatch.setattr(PairTableView, "has_marker", lambda self, m: False)
+    assert view.apply_batch(sh, sh, marker="leak-batch-1") == v
+    assert _cm(spark).numCachedEntries() == before
+
+
+def test_probe_pruned_build_releases_probe_intermediates(spark, tmp_path):
+    """The pair_table_probe_pruned view keeps exactly its materialized
+    pair table: the delta probe's persisted batch shingles, band keys
+    and candidates are released once it is built."""
+    from cassandra_pv_archiver_spark import cache_scope
+    from cassandra_pv_archiver_spark import catalog_data as cd
+
+    base = "alpha beta gamma delta epsilon zeta eta theta"
+    spark.createDataFrame(
+        [(i, f"{base} w{i % 3}") for i in range(1, 25)],
+        "doc_id bigint, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    cache_scope.drain()
+    before = _cm(spark).numCachedEntries()
+    out = cd._pair_table_probe_pruned(spark, str(tmp_path))
+    assert out.count() > 0
+    assert _held(spark, out)
+    assert _cm(spark).numCachedEntries() == before + 1
+    assert cache_scope.drain() == 0
+    cache_scope.rebuild(spark, str(tmp_path), cd._pair_table_probe_pruned)
+    assert not _held(spark, out)
+    assert _cm(spark).numCachedEntries() == before + 1

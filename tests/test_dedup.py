@@ -16,6 +16,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from cassandra_pv_archiver_spark import cache_scope
 from cassandra_pv_archiver_spark.operators import dedup
 from cassandra_pv_archiver_spark.sources.testdata import load_table
 
@@ -219,6 +220,34 @@ def test_exact_jaccard_guard_refuses_large_corpus(spark):
     assert dedup.jaccard_pairs(sh, 0.5, max_docs=50).count() >= 0
 
 
+@pytest.mark.parametrize(
+    "pairs", [dedup.jaccard_pairs, dedup.containment_pairs],
+    ids=["jaccard", "containment"],
+)
+def test_exact_guard_refusal_releases_only_its_own_persist(spark, pairs):
+    """A refused oversized corpus must not strand the shingle table the
+    guard's count materialized (no drain() needed), and must never
+    unpersist an input the caller cached."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    docs = spark.range(0, 30).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("refusal probe words "), F.col("id")).alias("text"),
+    )
+    sh = dedup.shingles(docs)
+    before = cm.numCachedEntries()
+    with pytest.raises(ValueError, match="max_docs|cap"):
+        pairs(sh, 0.5, max_docs=10)
+    assert cm.numCachedEntries() == before
+    sh.persist()
+    try:
+        with pytest.raises(ValueError):
+            pairs(sh, 0.5, max_docs=10)
+        assert cm.lookupCachedData(sh._jdf).isDefined()
+        assert cm.numCachedEntries() == before + 1
+    finally:
+        sh.unpersist()
+
+
 def test_minhash_lsh_recall_vs_exact_at_catalog_params(spark):
     """The SRP-side weak-gap honesty treatment applied to the text LSH:
     measured recall of the catalog MinHash config (k=8, bands of 2,
@@ -317,7 +346,7 @@ def test_connected_components_string_ids(spark):
 
 def test_minhash_delta_pairs_requires_corpus_side(spark):
     """ADVICE r10 (low): sh_old=None without old_index is a contract
-    error, not an AttributeError from deep inside _persist_logged."""
+    error, not an AttributeError from deep inside cache_scope.persist."""
     import pytest
 
     docs = spark.createDataFrame(
@@ -355,19 +384,15 @@ def test_delta_pairs_probe_prune_pushdown_and_fallback(spark, tmp_path):
     bands, sets = idx.sync(dt)
 
     def run(pp):
-        cl = []
-        try:
+        with cache_scope.scope():
             out = dedup.minhash_lsh_delta_pairs(
                 None, dedup.shingles(new), 8, 2, 0.2,
-                old_index=(bands, sets), cache_log=cl, probe_prune=pp,
+                old_index=(bands, sets), probe_prune=pp,
             )
             return sorted(
                 (r.old_id, r.new_id, round(r.jaccard, 12), r.n_common)
                 for r in out.collect()
             ), out
-        finally:
-            for df in cl:
-                df.unpersist()
     want, _ = run(None)
     got, pruned_df = run(8192)
     got_fb, _ = run(1)  # cap exceeded -> full-scan fallback

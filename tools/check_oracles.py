@@ -136,6 +136,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
+    from cassandra_pv_archiver_spark import cache_scope
     from cassandra_pv_archiver_spark.registry import REGISTRY
     from cassandra_pv_archiver_spark.session import get_spark
 
@@ -161,6 +162,9 @@ def main() -> int:
             print(f"[FAIL] {name}: spark error: {e}")
             failures += 1
             continue
+        finally:
+            # one query at a time: its body persists end with it
+            cache_scope.drain()
         if sql is None:
             print(f"[rows-only] {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
             continue

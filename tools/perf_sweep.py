@@ -15,11 +15,9 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from cassandra_pv_archiver_spark.registry import REGISTRY  # noqa: E402
 from cassandra_pv_archiver_spark.session import get_spark  # noqa: E402
 
 SF_DIRS = [
@@ -43,7 +41,7 @@ def main() -> int:
     if not names:
         print(__doc__)
         return 2
-    from bench import SPECIAL  # bench-only materialize entries
+    from bench import run_one  # drains after each pass
 
     spark = get_spark("perf-sweep")
     spark.sparkContext.setLogLevel("ERROR")
@@ -58,14 +56,10 @@ def main() -> int:
     print(hdr)
     print(sep)
     for name in names:
-        fn = SPECIAL.get(name) or REGISTRY[name][0]
         cells = []
         for sf in sf_dirs:
-            times = []
-            for _ in range(3):  # pass 0 = warmup, min of the rest
-                t0 = time.time()
-                fn(spark, sf).count()
-                times.append(time.time() - t0)
+            # pass 0 = warmup, min of the rest
+            times = [run_one(spark, name, sf) for _ in range(3)]
             cells.append(min(times[1:]))
         r100 = cells[2] / cells[0] if cells[0] > 0 else float("nan")
         row = (
