@@ -533,9 +533,8 @@ def q_store_level_drop_invariance(
     n_raw = store.read_samples(0).count()
     store.delete_channel_level("PV:0", PERIOD_1H)
     assert store.read_samples(0).count() == n_raw, "raw level disturbed"
-    hwm_df = store.channel_hwm(PERIOD_1H)  # None when the level was
-    # never written (empty input) — nothing to assert about then
-    hwm = set() if hwm_df is None else {r.channel for r in hwm_df.collect()}
+    # None when the level was never written (empty input)
+    hwm = store.channel_hwm(PERIOD_1H) or {}
     assert "PV:0" not in hwm, "dropped level kept the channel's hwm"
     seeds = store.read_seed_state(PERIOD_1H)
     if seeds is not None and "channel" in seeds.columns:

@@ -265,9 +265,10 @@ def minhash_lsh_delta_pairs(
     bit-identical; the point is row-group pruning — the corpus tables
     are written sorted by probe key, so a batch touches O(batch) row
     groups instead of scanning the whole persisted index. The value
-    caps the collected literal list (the `_CHANNEL_PRUNE_CAP` rule):
-    a batch with more distinct keys skips the pruning and pays the
-    full scan.
+    caps the collected literal list, because past a few thousand
+    elements the In predicate Catalyst plans costs more than the scan
+    it prunes: a batch with more distinct keys skips the pruning and
+    pays the full scan.
 
     Returns: old_id, new_id, jaccard, n_common.
     """

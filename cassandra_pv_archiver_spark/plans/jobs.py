@@ -9,10 +9,10 @@ picks as source the largest existing level that properly divides its own
 period, else raw (`ArchivedChannel.java:766-793`).
 
 Spark formulation: one batch job per (source level -> target level) edge.
-The high-water mark read prunes to the newest date partition; the source
-scan is bounded below by the as-of seed timestamp, so steady-state
-incremental runs scan hours of data, not years — the run cost is
-O(new data), independent of archive size.
+The high-water marks are a driver-side read of each level's manifest
+header; the source scan is bounded below by the as-of seed timestamp, so
+steady-state incremental runs scan hours of data, not years — the run
+cost is O(new data), independent of archive size.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.decimate import NS, decimate, reaggregate
-from ..sources.archive_store import ArchiveStore
+from ..sources.archive_store import ArchiveStore, hwm_frame
 from ..sources.lease import LeaseHeld, file_lease
 
 
@@ -64,17 +64,18 @@ def incremental_decimation(
     validity crosses that point. The seed selection is pure dataflow — keep
     rows whose ``lead(t)`` passes ``hwm_c + period`` — so there are no
     driver-side probes and channels at different progress catch up in one
-    job. The source scan is bounded below by ``min(hwm)`` over channels
-    (from the tiny metadata table), so steady-state cost is O(new data).
+    job. The source scan is bounded below by the oldest persisted seed,
+    so steady-state cost is O(new data).
 
     Returns the number of newly materialized intervals; idempotent until
     new source data arrives (W3).
 
     CONCURRENCY CONTRACT (round-10 review; VERDICT r10 #3): one writer
-    per (store, target) edge at a time. The anti-join against the
-    target guards against crash REPLAY, not two live runs — manifest
-    appends commute, so two concurrent runs of the same edge would both
-    commit and double-publish every interval. Two layers enforce it:
+    per (store, target) edge at a time. The target's marks commit with
+    its rows, so the ``t > hwm`` filter makes a crash REPLAY a no-op —
+    but not two live runs: both read the same marks before either
+    commits, manifest appends commute, and both would double-publish
+    every interval. Two layers enforce it:
 
     * in-process (the streaming per-batch cascade racing an operator
       backfill over the same store): a per-edge ``threading.Lock`` —
@@ -169,7 +170,6 @@ def _incremental_decimation_locked(
     period_ns = target_period_s * NS
     if source_level is None:
         source_level = pick_source_level(store.levels(), target_period_s)
-    hwm_df = store.channel_hwm(target_period_s)
     state = store.read_seed_state(target_period_s)
     # seed state is only meaningful for the source level it was derived
     # from: after a topology change (an intermediate level appears and
@@ -195,17 +195,16 @@ def _incremental_decimation_locked(
                 state = state.drop("_src_level", "_src_hwm")
         else:
             state = None
-    # one tiny metadata read serves the newcomer walk, the idle-run
-    # detection tag, and nothing else — never a data scan
-    src_hwm_df = store.channel_hwm(source_level)
-    src_hwm_max = None
-    if src_hwm_df is not None:
-        row = src_hwm_df.agg(F.max("hwm").alias("m")).first()
-        src_hwm_max = row.m if row is not None else None
+    # the two maps are driver-side header reads: the newcomer walk, the
+    # idle-run tag and the target filter all answer in Python
+    hwm = store.channel_hwm(target_period_s)
+    src_hwm = store.channel_hwm(source_level) or {}
+    src_hwm_max = max(src_hwm.values(), default=None)
 
-    if hwm_df is None:
+    if hwm is None:
         src_all = store.read_samples(source_level)
     else:
+        hwm_df = F.broadcast(hwm_frame(store.spark, hwm))
         # scan bound: nothing older than the oldest persisted seed is ever
         # needed — steady-state incremental cost is O(new data).
         lo = None
@@ -217,22 +216,17 @@ def _incremental_decimation_locked(
             # channels this edge has never seeded can carry history OLDER
             # than the scan bound (a newly onboarded channel arriving with
             # a backlog): scan their FULL history, channel-pruned. The
-            # channel sets come from the two tiny metadata tables — a
+            # channel sets are the seed table's and the source marks' — a
             # bounded driver-side set difference, not a data scan.
-            if src_hwm_df is not None:
-                known = {
-                    r.channel
-                    for r in state.select("channel").distinct().collect()
-                }
-                newcomers = sorted(
-                    r.channel
-                    for r in src_hwm_df.select("channel").collect()
-                    if r.channel not in known
+            known = {
+                r.channel
+                for r in state.select("channel").distinct().collect()
+            }
+            newcomers = sorted(set(src_hwm) - known)
+            if newcomers:
+                scan = scan.unionByName(
+                    store.read_samples(source_level, channels=newcomers)
                 )
-                if newcomers:
-                    scan = scan.unionByName(
-                        store.read_samples(source_level, channels=newcomers)
-                    )
         if state is not None:
             # allowMissingColumns: a source-level ADD COLUMN evolution
             # after these seeds were persisted would otherwise crash
@@ -243,7 +237,7 @@ def _incremental_decimation_locked(
             ).dropDuplicates(["channel", "t"])
         w = Window.partitionBy("channel").orderBy("t")
         src_all = (
-            scan.join(F.broadcast(hwm_df), "channel", "left")
+            scan.join(hwm_df, "channel", "left")
             .withColumn("_tn", F.lead("t").over(w))
             .filter(
                 F.col("hwm").isNull()
@@ -258,65 +252,18 @@ def _incremental_decimation_locked(
             dec = decimate(src_all, target_period_s)
         else:
             dec = reaggregate(src_all, source_level, target_period_s)
-        if hwm_df is not None:
+        if hwm is not None:
+            # the target's guard: its marks commit with its rows, so
+            # every interval at or below a channel's mark has landed
             dec = (
-                dec.join(F.broadcast(hwm_df), "channel", "left")
+                dec.join(hwm_df, "channel", "left")
                 .filter(F.col("hwm").isNull() | (F.col("t") > F.col("hwm")))
                 .drop("hwm")
             )
-        # crash-consistency second layer (same discipline as
-        # ingest_batch's level-0 anti-join): write_samples commits the
-        # DATA manifest, then the hwm manifest — a crash between the two
-        # leaves committed decimated rows ABOVE the stale hwm, and the
-        # replayed run would regenerate and re-append them forever. The
-        # anti-join re-reads only the target's rows above min(hwm) (a
-        # partition-pruned, normally-empty slice) and drops exactly the
-        # orphaned duplicates.
-        lo_t = None
-        no_hwm_channels = []
-        if hwm_df is not None:
-            lo_row = hwm_df.agg(F.min("hwm").alias("m")).first()
-            lo_t = lo_row.m if lo_row is not None else None
-            # a channel whose FIRST-ever decimated window was orphaned
-            # (data manifest committed, hwm manifest not) has NO hwm row
-            # at all, so its orphans can sit BELOW min(hwm) of the other
-            # channels and the bounded slice above lo_t would miss them —
-            # the replay would re-append them as permanent duplicates.
-            # Widen to full history for exactly those channels,
-            # channel-pruned (a driver-side set difference over the two
-            # tiny hwm metadata tables, normally empty).
-            if src_hwm_df is not None:
-                with_hwm = {
-                    r.channel for r in hwm_df.select("channel").collect()
-                }
-                no_hwm_channels = sorted(
-                    r.channel
-                    for r in src_hwm_df.select("channel").collect()
-                    if r.channel not in with_hwm
-                )
-        existing = store.read_samples(target_period_s, lo_ns=lo_t).select(
-            "channel", "t"
+        return _publish_decimation(
+            store, dec, src_all, target_period_s, source_level,
+            period_ns, state, prev_src_hwm, src_hwm_max,
         )
-        if no_hwm_channels:
-            # duplicates between the two reads are harmless: `existing`
-            # is only ever the right side of a left_anti join
-            existing = existing.unionByName(
-                store.read_samples(
-                    target_period_s, channels=no_hwm_channels
-                ).select("channel", "t")
-            )
-        dec = dec.join(existing, ["channel", "t"], "left_anti")
-        # persist released in finally: a transient write_samples failure
-        # (rewrite-conflict IOError, commit race) must not leak cached
-        # blocks in the long-lived streaming driver (round-10 review)
-        dec = dec.persist()
-        try:
-            return _publish_decimation(
-                store, dec, src_all, target_period_s, source_level,
-                period_ns, state, prev_src_hwm, src_hwm_max,
-            )
-        finally:
-            dec.unpersist()
     finally:
         src_all.unpersist()
 
@@ -325,19 +272,16 @@ def _publish_decimation(
     store, dec, src_all, target_period_s, source_level, period_ns,
     state, prev_src_hwm, src_hwm_max,
 ) -> int:
-    n = dec.count()
-    if n:
-        store.write_samples(dec, target_period_s)
+    n = store.write_samples(dec, target_period_s)
     # persist the next run's seeds: latest source row at/before each
     # channel's new next-interval start (the reference's decimator
     # carry state, `...DecimatedSamplesDecimationLevel.java:1127-1146`)
-    # idle-run fast path: nothing materialized AND the source hwm is
+    # idle-run fast path: nothing materialized AND the source marks are
     # exactly where the persisted seeds were built -> the recompute
     # would rewrite byte-identical seeds (plus a manifest commit and
-    # gc) on every empty micro-batch; skip it. Crash-orphaned source
-    # rows (data committed, hwm not) are picked up as soon as the
-    # next source append bumps the hwm — the seed recompute rescans
-    # storage, not a delta.
+    # gc) on every empty micro-batch; skip it. Source rows always land
+    # with their marks, so no committed source row can hide below an
+    # unchanged mark.
     if (
         n == 0
         and state is not None
@@ -348,7 +292,9 @@ def _publish_decimation(
     new_hwm = store.channel_hwm(target_period_s)
     if new_hwm is not None:
         cols = src_all.columns
-        j = src_all.join(F.broadcast(new_hwm), "channel", "left")
+        j = src_all.join(
+            F.broadcast(hwm_frame(store.spark, new_hwm)), "channel", "left"
+        )
         mature = (
             j.filter(
                 F.col("hwm").isNotNull()
@@ -408,9 +354,10 @@ def level_freshness(store, levels: list[int]) -> "DataFrame":
 
     For channel c and level p: ``lag_periods = raw_hwm div p − level_hwm
     div p`` (0 = the level's last window contains the newest raw sample).
-    All inputs come from the store's append-log hwm snapshots — O(#
-    channels × #appends) metadata rows, no sample scan at all, which is
-    what makes this report viable as a monitoring poll at 100 TB.
+    All inputs are the levels' high-water-mark maps, read from their
+    manifest headers on the driver — O(#channels) per level, no sample
+    scan at all, which is what makes this report viable as a monitoring
+    poll at 100 TB.
 
     Returns: channel, level_s, level_hwm, raw_hwm, lag_periods.
     """
@@ -422,7 +369,9 @@ def level_freshness(store, levels: list[int]) -> "DataFrame":
     if raw_hwm is None:  # empty store: an empty report, not an error —
         # a freshness poll against a not-yet-started archive is routine
         return store.spark.createDataFrame([], schema)
-    raw_hwm = raw_hwm.select("channel", F.col("hwm").alias("raw_hwm"))
+    raw_hwm = hwm_frame(store.spark, raw_hwm).select(
+        "channel", F.col("hwm").alias("raw_hwm")
+    )
     outs = []
     for lvl in levels:
         if lvl <= 0:
@@ -431,11 +380,9 @@ def level_freshness(store, levels: list[int]) -> "DataFrame":
             # (ANSI abort); skipping makes level_freshness(store,
             # store.levels()) safe to call as-is
             continue
-        lh = store.channel_hwm(lvl)
-        if lh is None:
-            # level never materialized at all: still report every raw
-            # channel (below), never silently drop the whole level
-            lh = store.spark.createDataFrame([], "channel string, hwm bigint")
+        # a level never materialized at all still reports every raw
+        # channel (below), never silently drops the whole level
+        lh = hwm_frame(store.spark, store.channel_hwm(lvl) or {})
         period_ns = lvl * NS
         # LEFT join from the raw spine: a channel whose first window
         # never closed has no level hwm yet, but the freshness report

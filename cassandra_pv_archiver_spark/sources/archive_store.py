@@ -25,10 +25,18 @@ Design for 100 TB / 100k channels:
     like the reference's bucket drops — and rewrites only the single
     boundary partition for exact trim.
   * **High-water mark** (W3, `...DecimatedSamplesDecimationLevel.java:
-    890-927`): per-channel max t in a small append-log folded by
-    :meth:`ArchiveStore.channel_hwm`, never a data-file scan.
-  * **File format**: every file the store writes (samples, hwm log, seed
-    state) goes through :meth:`ArchiveStore._write`, which fixes Parquet
+    890-927`): each level's per-channel max t rides that level's manifest
+    header, ``{"schema": <DDL>, "hwm": {channel: max_t}}``, next to the
+    files it describes (the reference keeps a bucket's latest timestamp
+    in its bucket state the same way). The commit that publishes a
+    batch's rows folds the batch's maxima into the map, so one manifest
+    version holds both and no crash can split them: the monotonic guard
+    alone makes a replayed write a no-op. :meth:`ArchiveStore.channel_hwm`
+    parses the header on the driver, never a Spark job. The map is
+    O(#channels) per manifest, the same order as the manifest's O(#files)
+    list.
+  * **File format**: every file the store writes (samples, seed state)
+    goes through :meth:`ArchiveStore._write`, which fixes Parquet
     v2 data pages, zstd, and no dictionary on ``t``. v2 pages fall back
     to ``DELTA_BINARY_PACKED`` for int64 columns, so the (channel, t)
     sort order makes a regularly spaced ``t`` cost about one bit per row
@@ -45,6 +53,8 @@ consistent for any ns value (no TimestampType round-trip).
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -119,6 +129,19 @@ class ArchiveStore:
         #: cache forever because manifests and data files are both
         #: immutable (manifest.py contract)
         self._schema_cache: dict = {}
+        #: level -> (version, (schema DDL, hwm map)) of the newest header
+        #: parsed: one O(#channels) map per level, never one per version
+        self._header_cache: dict = {}
+
+    def _level_header(self, level: int, version: int):
+        """``(schema DDL, hwm map)`` of one level version's manifest
+        header, parsed once (manifests are immutable); either is None
+        when the header predates it."""
+        got = self._header_cache.get(level)
+        if got is None or got[0] != version:
+            hdr = self._level_table(level).header(version)
+            got = self._header_cache[level] = (version, _parse_header(hdr))
+        return got[1]
 
     # -- schema evolution (ADD COLUMN) ------------------------------------
     def level_schema(self, level: int, at_version: int | None = None):
@@ -160,9 +183,9 @@ class ArchiveStore:
         cached = self._schema_cache.get(key)
         if cached is not None:
             return cached
-        hdr = table.header(version)
-        if hdr is not None:
-            schema = StructType.fromDDL(hdr)
+        ddl, _ = self._level_header(level, version)
+        if ddl is not None:
+            schema = StructType.fromDDL(ddl)
             self._schema_cache[key] = schema
             return schema
         rel = table.files(version)
@@ -206,16 +229,6 @@ class ArchiveStore:
         retention swaps are atomic to them."""
         return ManifestTable(self.spark, self._level_path(level))
 
-    def _hwm_path(self, level: int) -> str:
-        return f"{self.root}/meta/hwm_level={level}"
-
-    def _hwm_table(self, level: int) -> ManifestTable:
-        return ManifestTable(self.spark, self._hwm_path(level))
-
-    def _read_hwm(self, paths: list[str]) -> DataFrame:
-        """The hwm log's files under its fixed schema (no inference job)."""
-        return self.spark.read.schema(HWM_SCHEMA).parquet(*paths)
-
     def _write(
         self, df: DataFrame, stage: str, partition_by: str | None = None
     ) -> None:
@@ -233,17 +246,20 @@ class ArchiveStore:
         w.parquet(stage)
 
     # -- write (S5) ------------------------------------------------------
-    def write_samples(self, df: DataFrame, level: int) -> None:
-        """Append a sample batch to one decimation level (commits one new
-        manifest version; concurrent appends commute).
+    def write_samples(self, df: DataFrame, level: int) -> int:
+        """Append a sample batch to one decimation level in ONE manifest
+        version and return the rows written. Concurrent appends commute;
+        a batch that would change nothing (no rows and no new column on
+        an existing level) commits nothing.
 
         The batch is hash-distributed by ``(date, channel)`` (so one task
         owns one channel's day — co-locating later per-channel windowing)
         and sorted by ``(channel, t)`` within files for row-group pruning.
-        Also folds the batch into the per-channel high-water-mark metadata
-        table — the Spark analog of the reference's
-        ``decimation_level_to_current_bucket_start_time`` map
-        (`ChannelMetaDataDAOImpl.java:2111-2123`).
+        The same commit folds the batch's per-channel maxima into the
+        level's high-water marks in the manifest header — the Spark analog
+        of the reference's ``decimation_level_to_current_bucket_start_time``
+        map (`ChannelMetaDataDAOImpl.java:2111-2123`) — so rows and marks
+        land together or not at all.
         """
         cur = self.level_schema(level)
         if cur is not None:
@@ -272,6 +288,17 @@ class ArchiveStore:
                     )
         df = df.persist()
         try:
+            n, maxima = 0, {}
+            for r in (
+                df.groupBy("channel")
+                .agg(F.max("t").alias("t"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            ):
+                n += r.n
+                if r.channel is not None and r.t is not None:
+                    maxima[r.channel] = r.t
+            if not n and cur is not None and len(df.columns) == len(cur):
+                return 0  # every column exists (guard above): a no-op
             # "date" MUST lead the sort: the V1 parquet writer requires
             # its partition columns as a sort prefix, and when the
             # existing order does not satisfy that, it inserts its own
@@ -291,93 +318,85 @@ class ArchiveStore:
             # rename makes them visible — a crashed writer leaves only
             # unreferenced files for gc, never a half-visible batch
             table = self._level_table(level)
+            base = table.current_version()
             stage = table.stage_dir()
             self._write(out, stage, partition_by="date")
-            # the level's schema record rides the manifest header: the
-            # union is computed INSIDE the commit's rebase loop, so a
-            # concurrent wider append can never be shadowed by this one
-            # (check-then-act on the newest footer could lose a column)
+            # the level's schema and marks ride the manifest header: both
+            # fold INSIDE the commit's rebase loop, so a concurrent append
+            # can never be shadowed by this one (check-then-act on the
+            # newest footer could lose a column, a precomputed map a mark)
             batch_fields = [
                 (f.name, f.dataType.simpleString()) for f in df.schema.fields
             ]
             table.publish_stage(
-                stage, header_fn=_union_header_fn(batch_fields, legacy=cur)
+                stage,
+                header_fn=_union_header_fn(
+                    batch_fields, legacy=cur, maxima=maxima,
+                    legacy_hwm=(
+                        None if base is None else self.channel_hwm(level, base)
+                    ),
+                ),
             )
-            self._update_channel_hwm(df, level)
+            return n
         finally:
             df.unpersist()
 
-    #: compact the HWM append-log once it fragments past this many files
-    HWM_COMPACT_THRESHOLD = 16
+    def channel_hwm(
+        self, level: int, at_version: int | None = None
+    ) -> dict[str, int] | None:
+        """Per-channel high-water marks ``{channel: max t}`` of one level
+        at its current version (or ``at_version``), or None if the level
+        has never been written. A driver-side parse of that version's
+        manifest header (cached per level): no Spark job, and exactly
+        the per-channel max t ever committed to the level at that
+        version, minus channels removed by delete or rename (retention
+        and compaction keep a channel's mark).
 
-    def _update_channel_hwm(self, batch: DataFrame, level: int) -> None:
-        """APPEND the batch's per-channel maxima to the HWM log — no
-        read-merge-rewrite of the whole table on the hot write path (the
-        round-1 coalesce(1) overwrite was O(#channels) per batch and
-        local-FS-only). Readers fold the log with a groupBy max; the log
-        is compacted in place once it passes ``HWM_COMPACT_THRESHOLD``
-        files (one listStatus RPC to check). Each append is ONE file:
-        the groupBy's shuffle partitions would otherwise each add a tiny
-        file and fire the compaction every few appends."""
-        table = self._hwm_table(level)
-        stage = table.stage_dir()
-        self._write(
-            batch.groupBy("channel").agg(F.max("t").alias("hwm")).coalesce(1),
-            stage,
+        A level whose header predates the map (written before marks
+        moved into the manifest) derives it once per version from the
+        old ``meta/hwm_level=<level>`` log and the version's data files —
+        see :meth:`_legacy_hwm`; its next write or rewrite converts it."""
+        table = self._level_table(level)
+        version = (
+            at_version if at_version is not None else table.current_version()
         )
-        table.publish_stage(stage)
-        if len(table.files() or []) > self.HWM_COMPACT_THRESHOLD:
-            self._compact_hwm(level)
-
-    def heal_channel_hwm(self, batch: DataFrame, level: int) -> None:
-        """PUBLIC crash-heal surface for ingest (round-10 review): fold a
-        batch's per-channel maxima into the hwm log. write_samples
-        commits data then hwm in two separate commits; a crash between
-        them leaves the hwm stale, and the replaying ingester heals it
-        from the replayed rows through THIS method — the append-log is
-        fold-max, so overlapping with write_samples' own update is
-        idempotent. Owning the contract here keeps streaming/ingest.py
-        off the store's private internals."""
-        self._update_channel_hwm(batch, level)
-
-    def _compact_hwm(self, level: int) -> None:
-        table = self._hwm_table(level)
-        old = table.files() or []
-        folded = (
-            self._read_hwm(table.paths())
-            .groupBy("channel")
-            .agg(F.max("hwm").alias("hwm"))
-        )
-        stage = table.stage_dir()
-        self._write(folded.coalesce(1), stage)
-        # one commit replaces the whole log; a concurrent hwm reader
-        # resolving the previous manifest still finds its files until gc
-        table.publish_stage(stage, remove=old)
-        table.gc(keep_versions=self.keep_versions)
-
-    def _localize(self, df: DataFrame) -> DataFrame:
-        """Materialize a BOUNDED metadata table into a driver-local
-        relation. Metadata reads must be snapshots: lazy plans would pin
-        parquet file listings that a concurrent append/compact/swap
-        invalidates mid-job (observed as FILE_NOT_EXIST task failures).
-        Both metadata tables are O(#channels) rows — the reference holds
-        the same state in memory (`ChannelMetaDataDAOImpl.java:2111-2123`),
-        so a driver-side copy is the faithful cost."""
-        rows = df.collect()
-        return self.spark.createDataFrame(rows, df.schema)
-
-    def channel_hwm(self, level: int) -> DataFrame | None:
-        """Per-channel high-water mark snapshot ``(channel, hwm)`` for one
-        level, or None if the level has never been written. Folds the
-        append-log (one small job over O(#channels x #appends) rows)."""
-        paths = self._hwm_table(level).paths()
-        if not paths:
+        if version is None:
             return None
-        return self._localize(
-            self._read_hwm(paths)
-            .groupBy("channel")
-            .agg(F.max("hwm").alias("hwm"))
-        )
+        ddl, hwm = self._level_header(level, version)
+        if hwm is None:
+            hwm = self._legacy_hwm(level, version)
+            self._header_cache[level] = (version, (ddl, hwm))
+        return dict(hwm)
+
+    def _legacy_hwm(self, level: int, version: int) -> dict[str, int]:
+        """Marks of a legacy level version: the per-channel max of the old
+        ``meta/hwm_level=<level>`` append-log's fold and of max(t) over
+        the version's files, in one job. Exact even for a store left
+        between the old layout's data and hwm commits (rows above the
+        log) and for a channel retention emptied (log only). This is the
+        one reader of the old layout; the log itself is left in place."""
+        log = ManifestTable(
+            self.spark, f"{self.root}/meta/hwm_level={level}"
+        ).paths()
+        parts = []
+        if log:
+            parts.append(self.spark.read.schema(HWM_SCHEMA).parquet(*log))
+        files = self._level_files(level, at_version=version)
+        if files:
+            parts.append(
+                self._read_level_files(level, files, version).select(
+                    "channel", F.col("t").alias("hwm")
+                )
+            )
+        if not parts:
+            return {}
+        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        return {
+            r.channel: r.hwm
+            for r in df.groupBy("channel").agg(F.max("hwm").alias("hwm"))
+            .collect()
+            if r.channel is not None and r.hwm is not None
+        }
 
     # -- decimation carry state (T3 seeds) -------------------------------
     def _seed_path(self, level: int) -> str:
@@ -386,11 +405,16 @@ class ArchiveStore:
     def read_seed_state(self, target_level: int) -> DataFrame | None:
         """Per-channel seed rows persisted by the last incremental
         decimation run targeting ``target_level`` (the decimator carry
-        state — one full source row per channel)."""
+        state — one full source row per channel), as a driver-local
+        snapshot: a lazy plan would pin a file listing that a concurrent
+        swap invalidates mid-job (observed as FILE_NOT_EXIST task
+        failures). O(#channels) rows — the reference holds the same
+        state in memory (`ChannelMetaDataDAOImpl.java:2111-2123`)."""
         paths = ManifestTable(self.spark, self._seed_path(target_level)).paths()
         if not paths:
             return None
-        return self._localize(self.spark.read.parquet(*paths))
+        df = self.spark.read.parquet(*paths)
+        return self.spark.createDataFrame(df.collect(), df.schema)
 
     def write_seed_state(
         self, target_level: int, seeds: DataFrame
@@ -660,7 +684,9 @@ class ArchiveStore:
         """Drop data with ``t < cutoff``: whole partitions below the cutoff
         date are removed (metadata-only, like the reference's bucket drops);
         the boundary partition is rewritten with the exact predicate.
-        Returns the number of partitions dropped."""
+        The level's marks carry forward unchanged: a channel's mark
+        outlives its expired rows, so a late replay of them stays
+        rejected. Returns the number of partitions dropped."""
         table = self._level_table(level)
         cutoff_date = _py_date(cutoff_ns)
         rel = table.files() or []
@@ -704,9 +730,10 @@ class ArchiveStore:
         and swaps them in with ONE atomic manifest commit per level — a
         concurrent reader sees the old name or the new name, never both
         or neither. Time-travel reads at pre-rename versions still show
-        the old name (immutable files). HWM and decimation seed state
-        follow in their own single-commit replaces. Returns the number
-        of sample rows that changed name.
+        the old name (immutable files). A level's high-water marks move
+        in that level's own swap commit; decimation seed state follows
+        in its own single-commit replace. Returns the number of sample
+        rows that changed name.
 
         Renaming onto an existing channel refuses loudly (the reference
         rejects colliding renames the same way). A failure mid-way
@@ -736,24 +763,24 @@ class ArchiveStore:
           this, e.g. the admin cascade's rename-intent marker, or an
           operator who verified the registry still maps one of the two
           names);
-        * metadata is repaired on EVERY level whose hwm/seed state still
-          MENTIONS ``old`` — a crash between a level's data swap and its
-          hwm fold leaves old-name metadata on a level with no old-name
-          data rows, which the normal per-level walk skips. On such a
-          level the fold never ran (the fold eliminates old-name rows),
-          so any ``new``-named metadata there is a fully-expired FOREIGN
-          channel's stale leftovers and the fresh-rename purge applies
-          unchanged; levels whose metadata no longer mentions ``old``
-          already folded (their ``new``-named rows are the renamed
-          channel's own state) and are left untouched.
+        * metadata is repaired on EVERY level whose marks or seeds still
+          MENTION ``old`` — a crash between a level's swap (rows and
+          marks, one commit) and its seed rewrite leaves old-name seeds
+          on a level with no old-name data rows, which the normal
+          per-level walk skips. On such a table the rename never ran (it
+          eliminates old-name rows), so any ``new``-named metadata there
+          is a fully-expired FOREIGN channel's stale leftovers and the
+          fresh-rename purge applies unchanged; tables that no longer
+          mention ``old`` were already renamed (their ``new``-named rows
+          are the renamed channel's own state) and are left untouched.
 
         The purge is DIRECTION-AWARE per metadata table (ADVICE r10):
         a hit-triggered level whose metadata no longer mentions ``old``
         renames without purging, because its ``new``-named rows may be
         the channel's own. That state arises when repairing in the
         ROLLBACK direction — ``repair_rename(B, A)`` after a crashed
-        ``A -> B`` rename — on the level the crash split: data already
-        under ``B`` (the repair source), hwm/seeds still under ``A``
+        ``A -> B`` rename — on the level the crash split: rows and marks
+        already under ``B`` (the repair source), seeds still under ``A``
         (the repair target, and genuine).
 
         **Rolling BACK a crashed rename? Pass ``rollback=True``.** The
@@ -804,7 +831,7 @@ class ArchiveStore:
 
         def _meta_xf(df: DataFrame) -> DataFrame:
             # a fully-expired channel named `new` passes the collision
-            # probe (no DATA rows) but can still own stale hwm/seed
+            # probe (no DATA rows) but can still own stale marks/seed
             # metadata; folding that into the renamed channel would make
             # incremental decimation silently skip windows up to the
             # stale mark. Purge it, then rename — data levels are
@@ -822,10 +849,10 @@ class ArchiveStore:
             # exist). A table that no longer mentions `old` may hold the
             # channel's GENUINE metadata under `new`: in the ROLLBACK
             # direction (repair_rename(B, A) after a crashed A->B
-            # rename) a level left between the data swap and the hwm
-            # fold has DATA rows under the repair source and the
-            # channel's own pre-fold hwm/seeds under the repair TARGET —
-            # the unconditional fresh-rename purge would delete them,
+            # rename) a level left between its swap and its seed rewrite
+            # has rows and marks under the repair source and the
+            # channel's own seeds under the repair TARGET — the
+            # unconditional fresh-rename purge would delete them,
             # silently weakening monotonic-append enforcement and
             # incremental-decimation exactly-once until re-seeded. The
             # extra limit(1) probe per metadata table only runs on the
@@ -840,9 +867,9 @@ class ArchiveStore:
             # a fully-expired FOREIGN channel's stale metadata can
             # legitimately sit under (the original probe only verified
             # it free of DATA). Source-named rows are the channel's OWN
-            # exactly when the original fold completed on this table:
-            # the data swap preceded the fold (hit-triggered level) and
-            # the fold eliminated every target-named row. Everywhere
+            # exactly when the original rename completed on this table:
+            # the level's swap ran (hit-triggered level) and eliminated
+            # every target-named row. Everywhere
             # else they are foreign leftovers: DROP them instead of
             # folding them into the restored channel (inheriting a
             # foreign high-water mark would make incremental decimation
@@ -906,9 +933,10 @@ class ArchiveStore:
         the channel are rewritten (one channel's footprint, never the
         table), swapped in with ONE atomic manifest commit per level —
         a file whose rewrite comes up empty publishes as a pure removal
-        (a whole-file delete costs no data write). HWM log and
-        decimation seed state drop the channel in their own
-        single-commit replaces; pre-delete snapshots still show it
+        (a whole-file delete costs no data write). A level's marks drop
+        the channel in that level's own swap commit (header-only where
+        no row is left), decimation seed state in its own single-commit
+        replace; pre-delete snapshots still show it
         (immutable files + time travel). Returns sample rows removed.
         Deleting an unknown channel is a no-op returning 0.
 
@@ -920,14 +948,19 @@ class ArchiveStore:
         referenced by the previous manifest version (``keep_versions >=
         2`` retains it, and gc never collects files a retained version
         lists) — so the compensation re-commits each journaled table
-        back to exactly its pre-delete file list, newest swap first.
+        back to exactly its pre-delete file list, and each level to its
+        pre-delete header so the rows come back with their marks (else
+        the monotonic guard would accept replays of them), newest swap
+        first.
         With ``keep_versions == 1`` the pre-delete files may already be
         collected, so the compensation is skipped (documented trade of
         that setting) and a crash leaves a partial delete whose retry
         completes it (the rewrite is idempotent per level)."""
-        undo_log: list[tuple[ManifestTable, list[str], list[str]]] = []
+        undo_log: list[
+            tuple[ManifestTable, list[str], list[str], str | None]
+        ] = []
         try:
-            # meta_all_levels: a fully-expired channel has hwm/seed rows
+            # meta_all_levels: a fully-expired channel has marks/seed rows
             # on levels with NO data files left; a hits-only walk would
             # leave that stale metadata behind forever, and a later
             # re-creation of the name would make incremental decimation
@@ -941,8 +974,13 @@ class ArchiveStore:
         except Exception:
             if self.keep_versions >= 2:
                 try:
-                    for table, added, removed in reversed(undo_log):
-                        table.commit(add=removed, remove=added)
+                    for table, added, removed, header in reversed(undo_log):
+                        # a level's marks come back with its rows
+                        table.commit(
+                            add=removed, remove=added,
+                            header_fn=None if header is None
+                            else (lambda _prev, h=header: h),
+                        )
                 except Exception:  # noqa: BLE001 - keep the primary error
                     pass
             raise
@@ -983,33 +1021,37 @@ class ArchiveStore:
         ``channel`` (bounded metadata collect — a subset of one
         channel's footprint), apply ``transform`` to exactly those
         files' rows, and swap the rewrite in with ONE atomic manifest
-        commit; then fold-and-replace the HWM log and rewrite the
-        decimation seed state through ``meta_transform`` (defaults to
-        ``transform`` — rename passes a variant that additionally purges
-        a fully-expired target channel's STALE metadata rows, which the
-        data-level collision probe cannot see). Returns the number of
-        sample rows that matched ``channel``.
+        commit whose header carries the level's marks passed through
+        ``meta_transform``; then rewrite the decimation seed state
+        through ``meta_transform`` in its own commit. ``meta_transform``
+        maps a ``(channel, ...)`` frame (the marks as ``(channel, hwm)``
+        rows, then the seeds) and defaults to ``transform``; rename
+        passes a variant that additionally purges a fully-expired target
+        channel's STALE metadata, which the data-level collision probe
+        cannot see. Returns the number of sample rows that matched
+        ``channel``.
 
-        ``meta_all_levels=True`` (repair_rename, delete_channel) runs
-        the hwm/seed rewrite even on levels with no matching DATA rows:
-        a crash between a level's data swap and its hwm fold leaves
-        old-name metadata on a level the normal hits-only walk would
-        skip, and a fully-expired channel has metadata but no data at
-        all. On such no-hit levels the rewrite is GUARDED on the
-        metadata actually mentioning ``channel`` — an unconditional
-        republish would commit a new manifest version of every
-        metadata table on every no-op invocation, churning the
+        ``meta_all_levels=True`` (repair_rename, delete_channel) walks
+        the metadata even on levels with no matching DATA rows: a
+        fully-expired channel keeps marks and seeds with no data at all,
+        and a crash between a level's swap and its seed rewrite leaves
+        old-name seeds on a level the hits-only walk would skip. On such
+        no-hit levels the marks change in a header-only commit and the
+        seeds in their own, each GUARDED on the metadata actually
+        mentioning ``channel`` — an unconditional republish would commit
+        a new version on every no-op invocation, churning the
         keep_versions horizon for nothing.
 
         ``undo_log`` (delete_channel's compensation journal) receives a
-        ``(table, added, removed)`` entry immediately after EVERY
-        manifest swap this call commits."""
+        ``(table, added, removed, header)`` entry immediately after EVERY
+        manifest swap this call commits; ``header`` is a level's
+        pre-swap header (None for the seed table, which keeps its own)."""
         if meta_transform is None:
             meta_transform = transform
 
-        def _journal(table: ManifestTable, added, removed) -> None:
+        def _journal(table, added, removed, header=None) -> None:
             if undo_log is not None:
-                undo_log.append((table, list(added), list(removed)))
+                undo_log.append((table, list(added), list(removed), header))
 
         def _mentions(df: DataFrame) -> bool:
             return (
@@ -1021,7 +1063,10 @@ class ArchiveStore:
             if only_levels is not None and level not in only_levels:
                 continue
             table = self._level_table(level)
-            rel = table.files() or []
+            base = table.current_version()
+            if base is None:
+                continue
+            rel = table.files(base)
             if not rel and not meta_all_levels:
                 continue
             hit: set[str] = set()
@@ -1044,42 +1089,34 @@ class ArchiveStore:
                 # channel (the rollback rule needs it — see
                 # _rollback_meta_xf)
                 meta_ctx["hit"] = bool(hit)
-            if hit:
-                affected = _match_manifest_files(rel, hit)
-                part = self._read_level_files(
-                    level, [f"{table.root}/{r}" for r in affected]
+            if hit or channel in self.channel_hwm(level, base):
+                header_fn, before = self._marks_header_fn(
+                    level, base, meta_transform
                 )
-                touched += part.filter(F.col("channel") == channel).count()
-                out = (
-                    transform(part)
-                    .repartition("date", "channel")
-                    .sortWithinPartitions("date", "channel", "t")
-                )
-                stage = table.stage_dir()
-                self._write(out, stage, partition_by="date")
-                added = table.publish_stage(stage, remove=affected)
-                _journal(table, added, affected)
-                table.gc(keep_versions=self.keep_versions)
-            # HWM log: fold through the same transform, replace in one
-            # commit (for a rename the groupBy merges old+new maxima).
-            # No-hit levels (the meta_all_levels sweep) rewrite only
-            # when the table mentions the channel — see docstring.
-            htable = self._hwm_table(level)
-            hpaths = htable.paths()
-            if hpaths:
-                hdf = self._read_hwm(hpaths)
-                if hit or _mentions(hdf):
-                    folded = (
-                        meta_transform(hdf)
-                        .groupBy("channel")
-                        .agg(F.max("hwm").alias("hwm"))
+                affected: list[str] = []
+                added: list[str] = []
+                if hit:
+                    affected = _match_manifest_files(rel, hit)
+                    part = self._read_level_files(
+                        level, [f"{table.root}/{r}" for r in affected]
                     )
-                    hstage = htable.stage_dir()
-                    self._write(folded.coalesce(1), hstage)
-                    hold = htable.files() or []
-                    hadded = htable.publish_stage(hstage, remove=hold)
-                    _journal(htable, hadded, hold)
-                    htable.gc(keep_versions=self.keep_versions)
+                    touched += part.filter(
+                        F.col("channel") == channel
+                    ).count()
+                    out = (
+                        transform(part)
+                        .repartition("date", "channel")
+                        .sortWithinPartitions("date", "channel", "t")
+                    )
+                    stage = table.stage_dir()
+                    self._write(out, stage, partition_by="date")
+                    added = table.publish_stage(
+                        stage, remove=affected, header_fn=header_fn
+                    )
+                else:
+                    table.commit(header_fn=header_fn)  # marks only
+                _journal(table, added, affected, before["header"])
+                table.gc(keep_versions=self.keep_versions)
             # decimation carry seeds for this target level
             seeds = self.read_seed_state(level)
             if seeds is not None and "channel" in seeds.columns:
@@ -1089,6 +1126,31 @@ class ArchiveStore:
                     )
                     _journal(stable, sadded, sold)
         return touched
+
+    def _marks_header_fn(self, level: int, base: int, meta_transform):
+        """``(header_fn, before)`` for a rewrite commit on one level: the
+        header keeps the schema and maps the marks of the base the commit
+        builds on through ``meta_transform`` (one small local job, on the
+        rare rename/delete path); ``before["header"]`` receives that
+        base's header for compensation."""
+        legacy_hwm = self.channel_hwm(level, base)
+        before: dict = {}
+
+        def _header_fn(prev: str | None) -> str:
+            ddl, hwm = _parse_header(prev)
+            if hwm is None:
+                hwm = legacy_hwm
+            before["header"] = _format_header(ddl, hwm)
+            mapped = (
+                meta_transform(hwm_frame(self.spark, hwm))
+                .groupBy("channel")
+                .agg(F.max("hwm").alias("hwm"))
+            )
+            return _format_header(
+                ddl, {r.channel: r.hwm for r in mapped.collect()}
+            )
+
+        return _header_fn, before
 
     @staticmethod
     def zorder_key_expr(channel_col: str = "channel", t_col: str = "t") -> str:
@@ -1185,8 +1247,8 @@ def _match_manifest_files(rel: list[str], hit: set[str]) -> list[str]:
     O(|rel| + |hit|), replacing the old O(|rel| x |hit|) ``endswith``
     scan (VERDICT r9 #7): each hit's table-relative path is its last 1-3
     path segments (``date=.../file`` for a data level, bare ``file`` for
-    hwm/seed tables — basenames alone are NOT unique: one publish writes
-    the same part-file name into every date dir), looked up in a set of
+    an unpartitioned table — basenames alone are NOT unique: one publish
+    writes the same part-file name into every date dir), looked up in a set of
     the manifest's paths. A hit no suffix-key resolves (deeper layout
     than any this store writes) falls back to the suffix scan for that
     one hit. ``input_file_name`` percent-encodes special characters;
@@ -1211,12 +1273,42 @@ def _match_manifest_files(rel: list[str], hit: set[str]) -> list[str]:
     return [r for r in rel if r in matched]
 
 
-def _union_header_fn(batch_fields: list[tuple[str, str]], legacy=None):
+def hwm_frame(spark: SparkSession, hwm: dict[str, int]) -> DataFrame:
+    """A :meth:`ArchiveStore.channel_hwm` map as a driver-local
+    ``(channel, hwm)`` relation for broadcast joins (no Spark job)."""
+    return spark.createDataFrame(sorted(hwm.items()), HWM_SCHEMA)
+
+
+def _parse_header(hdr: str | None) -> tuple[str | None, dict | None]:
+    """``(schema DDL, hwm map)`` of a level manifest header. The header
+    is compact JSON ``{"schema": <DDL>, "hwm": {channel: max_t}}``; a
+    legacy header is the bare DDL and carries no map."""
+    if hdr is None:
+        return None, None
+    if hdr.startswith("{"):
+        rec = json.loads(hdr)
+        return rec["schema"], rec["hwm"]
+    return hdr, None
+
+
+def _format_header(ddl: str | None, hwm: dict) -> str:
+    """One manifest line (JSON escapes any newline in a channel name)."""
+    return json.dumps(
+        {"schema": ddl, "hwm": dict(sorted(hwm.items()))},
+        separators=(",", ":"),
+    )
+
+
+def _union_header_fn(
+    batch_fields: list[tuple[str, str]], legacy=None, maxima=None,
+    legacy_hwm=None,
+):
     """``header_fn`` for a sample-batch commit: the new manifest header
-    is the UNION of the base version's schema and the batch's, evaluated
-    INSIDE the commit's rebase loop so a concurrent wider append can
-    never be shadowed (check-then-act on the newest footer could lose a
-    column).
+    is the UNION of the base version's schema and the batch's, and the
+    base version's marks with the batch's per-channel ``maxima`` folded
+    in — both evaluated INSIDE the commit's rebase loop so a concurrent
+    append can never be shadowed (check-then-act on the newest footer
+    could lose a column, a precomputed map a mark).
 
     A same-name/different-type collision REFUSES the commit loudly
     instead of silently keeping one side: write_samples' pre-commit type
@@ -1228,15 +1320,16 @@ def _union_header_fn(batch_fields: list[tuple[str, str]], legacy=None):
     manifest rename: the loser's already-published stage files stay
     unreferenced and gc collects them.
 
-    ``legacy`` (a StructType or None) seeds the base when the previous
-    manifest predates headers."""
+    ``legacy`` (a StructType or None) seeds the schema and
+    ``legacy_hwm`` the marks when the base manifest predates them."""
     from pyspark.sql.types import StructType
 
     def _header_fn(prev: str | None) -> str:
-        if prev is not None:
+        ddl, hwm = _parse_header(prev)
+        if ddl is not None:
             base_fields = [
                 (f.name, f.dataType.simpleString())
-                for f in StructType.fromDDL(prev).fields
+                for f in StructType.fromDDL(ddl).fields
             ]
         elif legacy is not None:
             base_fields = [
@@ -1259,7 +1352,13 @@ def _union_header_fn(batch_fields: list[tuple[str, str]], legacy=None):
                     "this writer's pre-check; type changes are not "
                     "supported — add a NEW column instead)"
                 )
-        return ", ".join(f"`{n}` {t}" for n, t in merged)
+        hwm = dict(legacy_hwm or {}) if hwm is None else hwm
+        for c, t in (maxima or {}).items():
+            if c not in hwm or t > hwm[c]:
+                hwm[c] = t
+        return _format_header(
+            ", ".join(f"`{n}` {t}" for n, t in merged) or None, hwm
+        )
 
     return _header_fn
 

@@ -486,8 +486,7 @@ def start_pair_table_maintenance(
       the same atomic manifest commit — a ``foreachBatch`` replay of the
       same batch id is a no-op on the pair side;
     * DOCS append second, replay-guarded by an exact ``doc_id``
-      anti-join against the current corpus (the `streaming/ingest.py`
-      replay-guard pattern);
+      anti-join against the current corpus;
     * a crash between the two commits leaves pairs applied and docs
       missing — the replay skips the pair step (marker) and heals the
       doc append; Structured Streaming replays the interrupted batch

@@ -778,8 +778,8 @@ def spool_capture(
     would let replayed duplicates consume the quota while the tail of
     the schedule never arrives (observed under host load: 4 full chunks
     of duplicates spooled, the last 40 unique events lost). Duplicates
-    are dropped at the spool — the downstream sink's monotonic/anti-join
-    guard would reconcile them anyway — and capture stops early via the
+    are dropped at the spool — the downstream sink's monotonic guard
+    would reconcile them anyway — and capture stops early via the
     ``on_frame`` return signal once the unique quota is met."""
     import hashlib
     import os
@@ -882,8 +882,8 @@ def start_ca_ingest(
     Streaming), stream-static broadcast sid resolution from the LIVE
     handshake bindings, then the shared guarded ``foreachBatch`` store
     sink + decimation cascade (`start_ingest`). Exactly-once comes from
-    the spool being a replayable source plus the sink's hwm/anti-join
-    guard — the same contract the other three sources pin.
+    the spool being a replayable source plus the sink's hwm guard — the
+    same contract the other three sources pin.
 
     Reference: this is `ChannelAccessArchivingChannel.java` ->
     `SampleListener.java` -> archive pipeline, with the listener's

@@ -6,9 +6,11 @@ SURVEY.md §3.2). Spark formulation: ``readStream`` (any replayable source —
 file source in tests, Kafka in production) -> ``foreachBatch`` which applies
 the F5 monotonicity guard against the store's per-channel high-water marks
 and appends via :class:`ArchiveStore`. Exactly-once: the file/Kafka source
-is replayable and the foreachBatch write is idempotent under the guard (a
-replayed batch's rows are all ``t <= hwm`` and get dropped), which is the
-Spark analog of the reference's T2 storage/stream reconciliation.
+is replayable and the sink is idempotent under the guard alone — each
+level commits a batch's rows and its marks in ONE manifest version, so a
+replayed batch's rows are all ``t <= hwm`` and get dropped (the Structured
+Streaming recipe, and the Spark analog of the reference's T2
+storage/stream reconciliation).
 
 Optionally runs incremental decimation for a cascade of levels after each
 batch — the reference's continuous materialization (§3.3) expressed as
@@ -21,28 +23,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.jobs import EdgeLeaseHeld, incremental_decimation
-from ..sources.archive_store import ArchiveStore
-
-# widest batch channel set still worth shipping to the driver as an In
-# predicate for anti-join scan pruning; wider batches fall back to
-# time-range pruning only (ADVICE r10)
-_CHANNEL_PRUNE_CAP = 4096
+from ..sources.archive_store import ArchiveStore, hwm_frame
 
 
 def monotonic_guard(batch: DataFrame, hwm: DataFrame | None) -> DataFrame:
     """F5 (`ArchivedChannelDecimationLevel.java:398-425`): drop any sample
     whose timestamp is not strictly greater than everything already written
     for its channel, and dedupe inside the batch (first occurrence wins,
-    mirroring arrival order).
+    mirroring arrival order). ``hwm`` is the level's ``(channel, hwm)``
+    marks, committed with the rows they describe — so this filter alone
+    makes a replayed write a no-op.
 
     Null channel/t rows are dropped HERE, the shared chokepoint (round-10
-    review): a null key defeats BOTH exactly-once layers — the hwm fast
-    path keeps it forever (null hwm passes ``isNull()``), the (channel, t)
-    anti-join can never match it (SQL null equality), so every crash
-    replay would re-append it; and a first-row null t would fold a
-    permanently-null hwm for its channel, disabling the fast path. The
-    reference rejects samples without a valid timestamp at the listener
-    the same way."""
+    review): a null key passes the guard forever (a null hwm passes
+    ``isNull()``), so every replay would re-append it, and a first-row
+    null t would leave its channel without a usable mark. The reference
+    rejects samples without a valid timestamp at the listener the same
+    way."""
     batch = batch.filter(
         F.col("channel").isNotNull() & F.col("t").isNotNull()
     )
@@ -70,91 +67,36 @@ def ingest_batch(
     """One micro-batch: guard -> append -> cascade catch-up. Returns rows
     written.
 
-    Exactly-once has TWO layers. The hwm fast path drops replayed rows
-    cheaply, but ``write_samples`` commits the data manifest and the hwm
-    metadata in two separate commits — a crash between them leaves the
-    hwm stale, and a replayed batch would pass the fast path and append
-    duplicates. The second layer closes that window exactly: surviving
-    rows anti-join against the rows already present in the batch's own
-    time range (a pruned scan of the recent date partitions only, cost
-    bounded by the batch span). If the anti-join drops everything the
-    fast path kept, the data commit had landed but the hwm commit had
-    not — the hwm metadata is healed from the replayed rows so the fast
-    path recovers (the hwm log is fold-max, so healing is idempotent)."""
-    guarded = monotonic_guard(batch, store.channel_hwm(0)).persist()
-    final = guarded
-    try:
-        # ONE job for count + bounds + the batch's channel set (was two;
-        # per-batch scheduler latency matters at 1 s triggers). The
-        # channel set is bounded metadata (channels in one micro-batch)
-        # and prunes the anti-join scan to the batch's channels — the
-        # existing-rows read otherwise scans EVERY channel's row groups
-        # in the date range, scaling with store width instead of batch
-        # width (round-10 review).
-        stats = guarded.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("t").alias("mn"),
-            F.max("t").alias("mx"),
-            # slice caps the driver transfer AND the size of the In
-            # predicate Catalyst plans per 1 s trigger: a wide batch at
-            # the 100k-channel envelope would otherwise ship a ~100k
-            # element literal list every batch, costing more than the
-            # scan it prunes (ADVICE r10). One element past the cap is
-            # enough to detect overflow.
-            F.slice(
-                F.collect_set("channel"), 1, _CHANNEL_PRUNE_CAP + 1
-            ).alias("chans"),
-        ).first()
-        n_fast = stats.n
-        if n_fast:
-            chans = (
-                stats.chans
-                if len(stats.chans) <= _CHANNEL_PRUNE_CAP
-                else None  # too wide: lo/hi pruning alone is cheaper
-            )
-            existing = store.read_samples(
-                0, lo_ns=stats.mn, hi_ns=stats.mx, channels=chans
-            ).select("channel", "t")
-            final = guarded.join(
-                existing, ["channel", "t"], "left_anti"
-            ).persist()
-        n = final.count() if n_fast else 0
-        if n:
-            store.write_samples(final, level=0)
-        if n < n_fast:
-            # The anti-join dropped crash-replayed rows for at least one
-            # channel whose hwm commit never landed. write_samples above
-            # advances the hwm only for channels in `final`, so a MIXED
-            # batch (new rows for channel Q, replayed rows for channel P)
-            # would leave P's hwm stale indefinitely — correct (the
-            # anti-join still guards), but P would pay the anti-join scan
-            # on every later batch. Heal from the full guarded batch; the
-            # hwm log is fold-max, so the overlap with write_samples'
-            # update is idempotent.
-            store.heal_channel_hwm(guarded, 0)
-        # the cascade runs even for an empty/fully-deduped batch ON
-        # PURPOSE: a crash after the level-0 write but before the cascade
-        # leaves the decimated levels behind, and the replayed batch
-        # (n == 0) is the first chance to catch them up — skipping it
-        # would delay T3 recovery until the next data arrival
-        for period in cascade_periods or []:
-            try:
-                incremental_decimation(store, period)
-            except EdgeLeaseHeld:
-                # another process (an operator backfill) holds this
-                # edge: skip it for THIS batch instead of killing the
-                # ingest stream — the level-0 write above already
-                # landed, and the next batch's cascade catches the
-                # level up (incremental_decimation is a pure catch-up,
-                # per its own contract). Round-11 review: without this
-                # the cross-process lease turned a busy auxiliary
-                # level into a full archiving outage.
-                continue
-        return n
-    finally:
-        guarded.unpersist()
-        if final is not guarded:
-            final.unpersist()
+    Exactly-once is the guard alone: ``write_samples`` publishes the
+    surviving rows and their per-channel maxima in one level-0 manifest
+    version, so after any crash the marks describe exactly the rows that
+    landed, and a replay of the batch is dropped by the guard."""
+    hwm = store.channel_hwm(0)
+    n = store.write_samples(
+        monotonic_guard(
+            batch, None if hwm is None else hwm_frame(store.spark, hwm)
+        ),
+        level=0,
+    )
+    # the cascade runs even for an empty/fully-deduped batch ON PURPOSE:
+    # a crash after the level-0 write but before the cascade leaves the
+    # decimated levels behind, and the replayed batch (n == 0) is the
+    # first chance to catch them up — skipping it would delay T3
+    # recovery until the next data arrival
+    for period in cascade_periods or []:
+        try:
+            incremental_decimation(store, period)
+        except EdgeLeaseHeld:
+            # another process (an operator backfill) holds this edge:
+            # skip it for THIS batch instead of killing the ingest
+            # stream — the level-0 write above already landed, and the
+            # next batch's cascade catches the level up
+            # (incremental_decimation is a pure catch-up, per its own
+            # contract). Round-11 review: without this the cross-process
+            # lease turned a busy auxiliary level into a full archiving
+            # outage.
+            continue
+    return n
 
 
 def start_file_ingest(
@@ -206,8 +148,9 @@ def start_ingest(
     soak runs, Kafka for a production message bus (the reference's
     `SampleListener.java` role is played by whatever produced the
     stream). Exactly-once needs only a REPLAYABLE source (file/Kafka/
-    rate all are): the sink's hwm fast path + anti-join make replays
-    no-ops regardless of where the rows came from."""
+    rate all are): every level commits its rows and marks together, so
+    the monotonic guard alone makes replays no-ops regardless of where
+    the rows came from."""
     def _sink(batch: DataFrame, batch_id: int) -> None:
         ingest_batch(store, batch, cascade_periods)
         if on_batch is not None:

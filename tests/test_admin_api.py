@@ -758,8 +758,7 @@ class TestRenameIntentMarker:
             F.col("channel") == "PV:A").count() == 0
         assert not os.path.exists(app2._rename_intent_path())
         # hwm followed too
-        hwm = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
-        assert list(hwm) == ["PV:B"]
+        assert list(store.channel_hwm(0)) == ["PV:B"]
 
     def test_crash_before_registry_flush_rolls_store_back(
         self, spark, tmp_path
@@ -931,7 +930,7 @@ class TestRound11Review:
         app2 = AdminApp(reg, store=store)  # restart repairs
         assert store.read_samples(0).count() == 0
         assert not os.path.exists(app2._rename_intent_path())
-        assert {r.channel for r in store.channel_hwm(0).collect()} == set()
+        assert store.channel_hwm(0) == {}
 
     def test_remove_crash_before_registry_flush_is_noop(
         self, spark, tmp_path
@@ -977,8 +976,7 @@ class TestRound11Review:
         assert lvl.filter(F.col("channel") == "PV:OTHER").count() > 0
         assert store.read_samples(0).filter(
             F.col("channel") == "PV:A").count() > 0  # raw untouched
-        hwm = {r.channel for r in store.channel_hwm(3600).collect()}
-        assert hwm == {"PV:OTHER"}
+        assert set(store.channel_hwm(3600)) == {"PV:OTHER"}
 
     def test_update_level_drop_store_failure_rolls_back_config(
         self, spark, tmp_path, monkeypatch

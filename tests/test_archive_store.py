@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from cassandra_pv_archiver_spark.operators.decimate import NS, decimate
@@ -18,13 +20,43 @@ from cassandra_pv_archiver_spark.sources.archive_store import (
     DAY_NS,
     ArchiveStore,
 )
+from cassandra_pv_archiver_spark.sources.manifest import ManifestTable
 from cassandra_pv_archiver_spark.sources.testdata import load_samples
 
 SF_DIR = "/root/testdata/sf0.001"
+SCHEMA = "channel string, t long, v double, severity int, status int"
 
 
 def _store(spark, tmp_path) -> ArchiveStore:
     return ArchiveStore(spark, str(tmp_path / "archive"))
+
+
+def _seed_version(store: ArchiveStore, level: int) -> int | None:
+    table = ManifestTable(store.spark, store._seed_path(level))
+    return table.current_version()
+
+
+def _seed_ts(store: ArchiveStore, level: int) -> list[tuple[str, int]]:
+    seeds = store.read_seed_state(level)
+    return sorted(
+        (r.channel, r.t) for r in seeds.select("channel", "t").collect()
+    )
+
+
+def _plant_expired(spark, store, channel, t0, levels=(0,)):
+    """A FOREIGN channel that lived and fully expired: hours of history
+    from ``t0`` (decimated into every level of ``levels`` past 0), then
+    every level swept past it — its rows are gone, its marks (and seeds)
+    are not."""
+    rows = [(channel, t0 + i * 3600 * NS, 1.0, 0, 0) for i in range(5)]
+    store.write_samples(spark.createDataFrame(rows, SCHEMA), level=0)
+    for level in levels:
+        if level:
+            assert incremental_decimation(store, level) > 0
+    for level in levels:
+        store.delete_older_than(level, t0 + 10 * DAY_NS)
+        assert store.read_samples(level).count() == 0
+        assert channel in store.channel_hwm(level)
 
 
 def test_write_read_roundtrip_and_pruning(spark, tmp_path):
@@ -70,7 +102,7 @@ def test_high_water_mark_and_asof_probe(spark, tmp_path):
     store = _store(spark, tmp_path)
     raw = load_samples(spark, SF_DIR).select("channel", "t", "v", "severity", "status")
     store.write_samples(raw, level=0)
-    hwm = max(r.hwm for r in store.channel_hwm(0).collect())
+    hwm = max(store.channel_hwm(0).values())
     assert hwm == raw.agg(F.max("t")).first()[0]
     mid = hwm - 5 * DAY_NS
     chans = [r.channel for r in raw.select("channel").distinct().collect()]
@@ -166,11 +198,10 @@ def test_store_module_free_of_local_fs_primitives():
         assert banned not in src, f"local-FS primitive in archive_store: {banned}"
 
 
-def test_hwm_append_log_and_compaction(spark, tmp_path):
-    """HWM updates are append-only (no whole-table rewrite per batch);
-    the log folds correctly on read and compacts past the threshold."""
+def test_marks_fold_into_one_manifest_version_per_write(spark, tmp_path):
+    """Each write adds ONE level manifest version, whose header map is
+    the per-channel fold of every write so far — no side table."""
     store = _store(spark, tmp_path)
-    store.HWM_COMPACT_THRESHOLD = 3
     rows = [("A", 10 * NS, 1.0, 0, 0), ("B", 20 * NS, 2.0, 0, 0)]
     mk = lambda shift: spark.createDataFrame(
         [(c, t + shift * NS, v, s, st) for c, t, v, s, st in rows],
@@ -178,12 +209,9 @@ def test_hwm_append_log_and_compaction(spark, tmp_path):
     )
     for i in range(5):
         store.write_samples(mk(i), level=0)
-    hwm = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
-    assert hwm == {"A": 14 * NS, "B": 24 * NS}
-    # compaction kicked in: the CURRENT MANIFEST is back under the
-    # threshold (physical files of the immediately-previous version may
-    # linger until the next gc — that's the crash-safe commit design)
-    assert len(store._hwm_table(0).files()) <= 3 + 1
+        assert store.level_versions(0)[-1] == i
+        assert store.channel_hwm(0) == {"A": (10 + i) * NS, "B": (20 + i) * NS}
+    assert not os.path.exists(tmp_path / "archive" / "meta" / "hwm_level=0")
 
 
 def test_hadoop_fs_facade_roundtrip(spark, tmp_path):
@@ -472,7 +500,7 @@ class TestRenameChannel:
         # untouched channel intact
         assert store.read_samples(0, channels=["PV:b"]).count() == 5
         # hwm followed the rename
-        hwm = {r["channel"]: r["hwm"] for r in store.channel_hwm(0).collect()}
+        hwm = store.channel_hwm(0)
         assert "PV:a" not in hwm and "PV:renamed" in hwm
         # time travel: pre-rename snapshot still shows the old name
         old_snap = store.read_samples(
@@ -554,7 +582,7 @@ class TestDeleteChannel:
         assert sorted((r["t"], r["v"]) for r in got) == sorted(
             (t, v) for _c, t, v, _s, _st in self._rows("PV:b", 5)
         )
-        hwm = {r["channel"] for r in store.channel_hwm(0).collect()}
+        hwm = store.channel_hwm(0)
         assert "PV:a" not in hwm and "PV:b" in hwm
         # time travel: the pre-delete snapshot still shows the channel
         old_snap = store.read_samples(
@@ -625,79 +653,53 @@ def test_negative_ns_write_read_same_partition(spark, tmp_path):
     assert store.probe_stats(0, -1, -1, ["PV:N"])["PV:N"][0] == -1
 
 
-def test_cascade_crash_between_data_and_hwm_commits(spark, tmp_path):
-    """write_samples commits the DATA manifest, then the hwm manifest; a
-    crash in between leaves decimated rows above the stale hwm. The
-    replayed incremental run must NOT re-append them (the anti-join
-    second layer — same discipline as the level-0 ingest guard)."""
+def test_cascade_crash_lands_rows_and_marks_together(
+    spark, tmp_path, crash_commit
+):
+    """A cascade edge killed before its level publish, between the stage
+    move and the manifest rename, or after the commit: the level's rows
+    and marks land together or not at all, a replayed run is dropped by
+    the ``t > hwm`` guard alone, and the level ends equal to a
+    from-scratch decimation with no (channel, t) pair duplicated."""
     store = _store(spark, tmp_path)
-    raw = load_samples(spark, SF_DIR).select(
-        "channel", "t", "v", "severity", "status"
-    )
-    tmin = raw.agg(F.min("t")).first()[0]
-    cut = tmin + 15 * DAY_NS
-    store.write_samples(raw.filter(F.col("t") < cut), level=0)
-    incremental_decimation(store, 3600)
-    store.write_samples(raw.filter(F.col("t") >= cut), level=0)
-    incremental_decimation(store, 3600)
-    before = store.read_samples(3600).count()
-
-    # simulate the crash: revert the target's hwm table to its previous
-    # committed version (data manifest stays at the newer state)
-    ht = store._hwm_table(3600)
-    vs = ht.versions()
-    assert len(vs) >= 2
-    ht.fs.delete(f"{ht._mdir}/m-{vs[-1]:020d}")
-
-    # replay: no duplicates, no row-count change
-    incremental_decimation(store, 3600)
-    after = store.read_samples(3600)
-    assert after.count() == before
-    assert after.count() == (
-        after.dropDuplicates(["channel", "t"]).count()
-    )
-
-
-def test_replay_first_window_orphan_below_min_hwm(spark, tmp_path):
-    """ADVICE r8 #1: a channel whose FIRST-ever decimated window was
-    orphaned (data manifest committed, hwm manifest not) has no hwm row
-    at all, so its orphans sit BELOW min(hwm) of the other channels —
-    the bounded anti-join slice must widen to full history for exactly
-    those channels or the replay re-appends permanent duplicates."""
-    store = _store(spark, tmp_path)
-    schema = "channel string, t long, v double, severity int, status int"
     hour = 3600 * NS
-
-    # channel A: 40 hours of history, decimated FIRST -> its hwm is high
-    rows_a = [("PV:A", i * hour + 7, float(i), 0, 0) for i in range(41)]
-    store.write_samples(spark.createDataFrame(rows_a, schema), level=0)
+    raw = spark.createDataFrame(
+        [(c, i * 600 * NS + off, float(i % 7), 0, 0)
+         for c, off in (("PV:A", 7), ("PV:B", 9)) for i in range(60)],
+        SCHEMA,
+    )
+    store.write_samples(raw.filter(F.col("t") < 5 * hour), level=0)
     assert incremental_decimation(store, 3600) > 0
-
-    # channel B arrives late with EARLY history (entirely below A's hwm)
-    rows_b = [("PV:B", i * hour + 9, float(i), 0, 0) for i in range(6)]
-    store.write_samples(spark.createDataFrame(rows_b, schema), level=0)
-    assert incremental_decimation(store, 3600) > 0
+    store.write_samples(raw.filter(F.col("t") >= 5 * hour), level=0)
     before = store.read_samples(3600).count()
+    hwm_before = store.channel_hwm(3600)
 
-    # crash between B's data commit and B's hwm commit: revert the hwm
-    # append-log one version (drops B's hwm rows, keeps A's)
-    ht = store._hwm_table(3600)
-    vs = ht.versions()
-    assert len(vs) >= 2
-    ht.fs.delete(f"{ht._mdir}/m-{vs[-1]:020d}")
-    hwm = store.channel_hwm(3600)
-    assert hwm.filter(F.col("channel") == "PV:B").count() == 0  # no hwm
-    min_hwm = hwm.agg(F.min("hwm")).first()[0]
-    orphan_max = store.read_samples(3600).filter(
-        F.col("channel") == "PV:B"
-    ).agg(F.max("t")).first()[0]
-    assert orphan_max < min_hwm  # the slice above min(hwm) misses them
+    def marks_match_rows():
+        got = store.read_samples(3600).groupBy("channel").agg(
+            F.max("t").alias("m"))
+        assert store.channel_hwm(3600) == {
+            r.channel: r.m for r in got.collect()
+        }
 
-    # replay: B's orphans must be recognized, not re-appended
-    incremental_decimation(store, 3600)
-    after = store.read_samples(3600)
-    assert after.count() == before
-    assert after.count() == after.dropDuplicates(["channel", "t"]).count()
+    crash_commit("/decimation_level=3600")
+    with pytest.raises(IOError, match="simulated crash"):
+        incremental_decimation(store, 3600)
+    landed = crash_commit.point == "after_commit"
+    marks_match_rows()
+    if landed:
+        assert store.read_samples(3600).count() > before
+    else:
+        assert store.read_samples(3600).count() == before
+        assert store.channel_hwm(3600) == hwm_before
+
+    version = store.level_versions(3600)[-1]
+    assert (incremental_decimation(store, 3600) == 0) == landed
+    assert (store.level_versions(3600)[-1] == version) == landed
+    marks_match_rows()
+    cols = ["channel", "t", "n_samples", F.round("mean", 9)]
+    got = store.read_samples(3600).select(*cols).collect()
+    want = decimate(raw, 3600).select(*cols).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_rename_mid_level_failure_compensates(spark, tmp_path, monkeypatch):
@@ -779,13 +781,12 @@ def test_rename_onto_expired_channel_purges_stale_hwm(spark, tmp_path):
     store.write_samples(spark.createDataFrame(rows_b, schema), level=0)
     store.delete_older_than(0, 2000 * hour)
     assert store.read_samples(0).count() == 0
-    hwm_b = store.channel_hwm(0).filter(F.col("channel") == "PV:B").first()
-    assert hwm_b is not None  # the stale metadata the probe cannot see
+    assert "PV:B" in store.channel_hwm(0)  # the mark the probe cannot see
     # A: early history, renamed onto the dead name
     rows_a = [("PV:A", i * hour, 1.0, 0, 0) for i in range(3)]
     store.write_samples(spark.createDataFrame(rows_a, schema), level=0)
     assert store.rename_channel("PV:A", "PV:B") > 0
-    got = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
+    got = store.channel_hwm(0)
     # the renamed channel's hwm is A's real mark, NOT the stale max
     assert got["PV:B"] == 2 * hour
     # and incremental decimation materializes A's windows normally
@@ -957,8 +958,7 @@ def test_delete_mid_level_failure_compensates(spark, tmp_path, monkeypatch):
         for level in store.levels()
     }
     hwm_before = {
-        level: {r.channel: r.hwm for r in store.channel_hwm(level).collect()}
-        for level in store.levels()
+        level: store.channel_hwm(level) for level in store.levels()
     }
     assert before[0]["PV:A"] == 30 and 3600 in before
 
@@ -987,10 +987,7 @@ def test_delete_mid_level_failure_compensates(spark, tmp_path, monkeypatch):
             .groupBy("channel").agg(F.count("*").alias("n")).collect()
         }
         assert after == before[level]
-        hwm_after = {
-            r.channel: r.hwm for r in store.channel_hwm(level).collect()
-        }
-        assert hwm_after == hwm_before[level]
+        assert store.channel_hwm(level) == hwm_before[level]
     # and the delete is retriable to completion
     assert store.delete_channel("PV:A") > 0
     for level in store.levels():
@@ -1019,8 +1016,7 @@ def test_repair_rename_unwedges_half_renamed_store(
     assert incremental_decimation(store, 3600) > 0
     total = {lvl: store.read_samples(lvl).count() for lvl in store.levels()}
     hwm_before = {
-        lvl: {r.channel: r.hwm for r in store.channel_hwm(lvl).collect()}
-        for lvl in store.levels()
+        lvl: store.channel_hwm(lvl) for lvl in store.levels()
     }
 
     state = {"mode": "forward", "n3600": 0}
@@ -1065,23 +1061,22 @@ def test_repair_rename_unwedges_half_renamed_store(
         df = store.read_samples(lvl)
         assert df.filter(F.col("channel") == "PV:A").count() == 0
         assert df.filter(F.col("channel") == "PV:B").count() == total[lvl]
-        hwm = {r.channel: r.hwm for r in store.channel_hwm(lvl).collect()}
-        assert hwm == {"PV:B": hwm_before[lvl]["PV:A"]}
+        assert store.channel_hwm(lvl) == {"PV:B": hwm_before[lvl]["PV:A"]}
         seeds = store.read_seed_state(lvl)
         if seeds is not None and "channel" in seeds.columns:
             assert seeds.filter(F.col("channel") == "PV:A").count() == 0
     # idempotent AND no-op-cheap: a second repair renames nothing and
     # commits nothing (round-10 review: an unconditional metadata
     # republish would churn a manifest version per table per call)
-    versions_before = {
-        lvl: store._hwm_table(lvl).current_version()
-        for lvl in store.levels()
-    }
+    def versions():
+        return {
+            lvl: (store.level_versions(lvl)[-1], _seed_version(store, lvl))
+            for lvl in store.levels()
+        }
+
+    versions_before = versions()
     assert store.repair_rename("PV:A", "PV:B") == 0
-    assert versions_before == {
-        lvl: store._hwm_table(lvl).current_version()
-        for lvl in store.levels()
-    }
+    assert versions_before == versions()
 
 
 def test_match_manifest_files_linear_matcher():
@@ -1105,9 +1100,9 @@ def test_match_manifest_files_linear_matcher():
     assert _match_manifest_files(rel, hit) == [
         "date=2020-01-02/aa-part-00000.parquet"
     ]
-    # root-level layout (hwm/seed tables)
+    # root-level layout (unpartitioned tables)
     assert _match_manifest_files(
-        ["x.parquet", "y.parquet"], {"file:///t/meta/hwm_level=0/y.parquet"}
+        ["x.parquet", "y.parquet"], {"file:///t/meta/seed_level=0/y.parquet"}
     ) == ["y.parquet"]
     # percent-encoded URI resolves to the raw manifest path
     assert _match_manifest_files(
@@ -1138,118 +1133,110 @@ def test_delete_purges_metadata_of_fully_expired_channel(spark, tmp_path):
     # and its hwm/seed metadata — the fully-expired state
     retention_sweep(store, {3600: 1}, now_ns=tmax + 10 * DAY_NS)
     assert store.read_samples(3600).count() == 0
-    assert "PV:X" in {r.channel for r in store.channel_hwm(3600).collect()}
+    assert "PV:X" in store.channel_hwm(3600)
 
     n = store.delete_channel("PV:X")
     assert n == 30  # level-0 data rows (3600 had none left)
     # metadata followed on the data-less level too
-    hwm3600 = {r.channel for r in store.channel_hwm(3600).collect()}
-    assert hwm3600 == {"PV:Y"}
+    assert set(store.channel_hwm(3600)) == {"PV:Y"}
     seeds = store.read_seed_state(3600)
     if seeds is not None and "channel" in seeds.columns:
         assert seeds.filter(F.col("channel") == "PV:X").count() == 0
     # the survivor is untouched everywhere
     assert store.read_samples(0).filter(
         F.col("channel") == "PV:Y").count() == 30
-    hwm0 = {r.channel for r in store.channel_hwm(0).collect()}
-    assert hwm0 == {"PV:Y"}
+    assert set(store.channel_hwm(0)) == {"PV:Y"}
 
 
 def test_repair_rename_purges_stale_foreign_metadata(spark, tmp_path):
     """Round-10 review: on a level whose metadata still mentions the old
-    name, the fold never ran — any metadata under the NEW name there is
+    name, the rename never ran — any metadata under the NEW name there is
     a fully-expired FOREIGN channel's stale leftovers and must be purged
     (folding it in would inherit its high-water mark and make
     incremental decimation silently skip windows), exactly as a fresh
     rename purges it."""
     store = _store(spark, tmp_path)
-    schema = "channel string, t long, v double, severity int, status int"
+    # stale FOREIGN marks under the target name, far ahead of A's
+    # history (the expired channel whose data is gone but whose marks
+    # are not)
+    _plant_expired(spark, store, "PV:B", 10**6 * 3600 * NS)
     rows = [("PV:A", i * 3600 * NS, float(i), 0, 0) for i in range(10)]
-    store.write_samples(spark.createDataFrame(rows, schema), level=0)
-    a_max = 9 * 3600 * NS
-    # stale FOREIGN hwm under the target name, far ahead of A's history
-    # (the expired channel whose data is gone but whose metadata is not)
-    stale = spark.createDataFrame(
-        [("PV:B", 10**6 * 3600 * NS, 0.0, 0, 0)], schema)
-    store._update_channel_hwm(stale, level=0)
+    store.write_samples(spark.createDataFrame(rows, SCHEMA), level=0)
 
     assert store.repair_rename("PV:A", "PV:B") == 10
-    hwm = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
     # the stale mark did NOT fold in — B carries A's true maximum
-    assert hwm == {"PV:B": a_max}
+    assert store.channel_hwm(0) == {"PV:B": 9 * 3600 * NS}
 
 
-def test_repair_rename_rollback_preserves_prefold_metadata(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r10 (medium): rolling BACK a crashed rename must not
-    purge the channel's own pre-fold metadata. A rename A->B that dies
-    between a level's data swap and its hwm fold leaves data under B
-    and hwm/seeds under A; ``repair_rename(B, A)`` then sees a
-    hit-triggered level (data rows under the repair source B) whose
-    metadata rows carry the repair TARGET name A — the unconditional
-    fresh-rename purge would delete the channel's genuine high-water
-    mark, silently weakening monotonic-append enforcement and
-    incremental-decimation exactly-once until re-seeded. The purge must
-    apply only on tables that still mention the repair SOURCE (fold
-    never ran there, so target-named rows cannot be the channel's
-    own)."""
-    import pytest
-
+def _crash_rename_before_seed_rewrite(store, monkeypatch, old, new):
+    """Kill ``rename_channel(old, new)`` after the decimated level's
+    swap (rows and marks, one commit) but before its seed rewrite, and
+    make the compensation die on its first data read, so the split
+    state survives: rows and marks under ``new``, seeds under ``old``."""
     from cassandra_pv_archiver_spark.sources import archive_store as mod
 
-    store = _store(spark, tmp_path)
-    schema = "channel string, t long, v double, severity int, status int"
-    rows = [("PV:A", i * 3600 * NS, float(i), 0, 0) for i in range(20)]
-    store.write_samples(spark.createDataFrame(rows, schema), level=0)
-    a_max = 19 * 3600 * NS
-    assert {r.channel: r.hwm for r in store.channel_hwm(0).collect()} == {
-        "PV:A": a_max
-    }
-
-    # crash the forward rename A->B after level 0's data swap but
-    # BEFORE its hwm fold, and make the compensation die on its first
-    # data read so the split state survives
     state = {"phase": "forward"}
-    orig_hwm = mod.ArchiveStore._hwm_table
+    orig_seed = mod.ArchiveStore.write_seed_state
     orig_read = mod.ArchiveStore._read_level_files
 
-    def flaky_hwm(self, level):
+    def flaky_seed(self, target_level, seeds):
         if state["phase"] == "forward":
             state["phase"] = "wedged"
-            raise RuntimeError("simulated crash before hwm fold")
-        return orig_hwm(self, level)
+            raise RuntimeError("simulated crash before seed rewrite")
+        return orig_seed(self, target_level, seeds)
 
     def flaky_read(self, level, paths, at_version=None):
         if state["phase"] == "wedged":
             raise RuntimeError("simulated compensation failure")
         return orig_read(self, level, paths, at_version=at_version)
 
-    monkeypatch.setattr(mod.ArchiveStore, "_hwm_table", flaky_hwm)
+    monkeypatch.setattr(mod.ArchiveStore, "write_seed_state", flaky_seed)
     monkeypatch.setattr(mod.ArchiveStore, "_read_level_files", flaky_read)
-    with pytest.raises(RuntimeError, match="before hwm fold"):
-        store.rename_channel("PV:A", "PV:B")
-    monkeypatch.setattr(mod.ArchiveStore, "_hwm_table", orig_hwm)
+    with pytest.raises(RuntimeError, match="before seed rewrite"):
+        store.rename_channel(old, new)
+    monkeypatch.setattr(mod.ArchiveStore, "write_seed_state", orig_seed)
     monkeypatch.setattr(mod.ArchiveStore, "_read_level_files", orig_read)
 
-    # the split state: data under B, hwm still under A (pre-fold)
-    assert store.read_samples(0).filter(
-        F.col("channel") == "PV:B").count() == 20
-    assert store.read_samples(0).filter(
-        F.col("channel") == "PV:A").count() == 0
-    assert {r.channel: r.hwm for r in store.channel_hwm(0).collect()} == {
-        "PV:A": a_max
-    }
 
-    # roll back: the channel ends fully under A, hwm INTACT
-    assert store.repair_rename("PV:B", "PV:A") == 20
-    assert store.read_samples(0).filter(
-        F.col("channel") == "PV:A").count() == 20
-    assert store.read_samples(0).filter(
-        F.col("channel") == "PV:B").count() == 0
-    hwm = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
-    assert hwm == {"PV:A": a_max}, (
-        "rollback repair purged the channel's own pre-fold metadata"
+def test_repair_rename_rollback_preserves_prefold_metadata(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r10 (medium): rolling BACK a crashed rename must not
+    purge the channel's own not-yet-renamed metadata. A rename A->B
+    that dies between a decimated level's swap and its seed rewrite
+    leaves rows and marks under B and seeds under A; ``repair_rename(B,
+    A)`` then sees a hit-triggered level (rows under the repair source
+    B) whose seeds carry the repair TARGET name A — the unconditional
+    fresh-rename purge would delete the channel's genuine carry state,
+    silently breaking incremental-decimation exactly-once until
+    re-seeded. The purge must apply only on tables that still mention
+    the repair SOURCE (the rename never ran there, so target-named rows
+    cannot be the channel's own)."""
+    store = _store(spark, tmp_path)
+    rows = [("PV:A", i * 3600 * NS, float(i), 0, 0) for i in range(30)]
+    store.write_samples(spark.createDataFrame(rows, SCHEMA), level=0)
+    assert incremental_decimation(store, 3600) > 0
+    total = sum(store.read_samples(lvl).count() for lvl in store.levels())
+    marks = {lvl: store.channel_hwm(lvl)["PV:A"] for lvl in store.levels()}
+    seeds = _seed_ts(store, 3600)
+    assert {c for c, _ in seeds} == {"PV:A"}
+
+    _crash_rename_before_seed_rewrite(store, monkeypatch, "PV:A", "PV:B")
+    # the split state: rows and marks under B, seeds still under A
+    for lvl in store.levels():
+        assert store.read_samples(lvl).filter(
+            F.col("channel") == "PV:A").count() == 0
+        assert store.channel_hwm(lvl) == {"PV:B": marks[lvl]}
+    assert _seed_ts(store, 3600) == seeds
+
+    # roll back: the channel ends fully under A, seeds INTACT
+    assert store.repair_rename("PV:B", "PV:A") == total
+    for lvl in store.levels():
+        assert store.read_samples(lvl).filter(
+            F.col("channel") == "PV:B").count() == 0
+        assert store.channel_hwm(lvl) == {"PV:A": marks[lvl]}
+    assert _seed_ts(store, 3600) == seeds, (
+        "rollback repair purged the channel's own seeds"
     )
     # and the store is fully functional under the restored name
     assert store.repair_rename("PV:B", "PV:A") == 0
@@ -1261,65 +1248,43 @@ def test_rollback_repair_drops_foreign_stale_metadata(
     """Round-11 review: rolling back a crashed rename when a FOREIGN
     expired channel's stale metadata sits under the crashed rename's
     TARGET name. The repair source then mentions a name that is NOT the
-    channel's own — the forward heuristic ('mentions source => fold
+    channel's own — the forward heuristic ('mentions source => rename
     never ran => purge target') would purge the channel's genuine
-    metadata AND adopt the foreign stale rows; repair_rename(...,
+    seeds AND adopt the foreign stale ones; repair_rename(...,
     rollback=True) must instead keep the channel's own metadata and
-    DROP the foreign rows (folding a foreign high-water mark in would
-    make incremental decimation silently skip windows forever)."""
-    import pytest
-
-    from cassandra_pv_archiver_spark.sources import archive_store as mod
-
+    DROP the foreign rows (folding a foreign carry state or mark in
+    would make incremental decimation silently skip windows)."""
     store = _store(spark, tmp_path)
-    schema = "channel string, t long, v double, severity int, status int"
-    rows = [("PV:A", i * 3600 * NS, float(i), 0, 0) for i in range(20)]
-    store.write_samples(spark.createDataFrame(rows, schema), level=0)
-    a_max = 19 * 3600 * NS
-    # the foreign expired channel: stale hwm under the name the rename
-    # will target, FAR ahead of A's history — exactly what the fresh
-    # rename's purge exists for, and what a rollback must never adopt
-    stale_t = 10**6 * 3600 * NS
-    stale = spark.createDataFrame([("PV:B", stale_t, 0.0, 0, 0)], schema)
-    store._update_channel_hwm(stale, level=0)
+    # the foreign expired channel: stale marks and seeds under the name
+    # the rename will target, FAR ahead of A's history — exactly what
+    # the fresh rename's purge exists for, and what a rollback must
+    # never adopt
+    _plant_expired(
+        spark, store, "PV:B", 10**6 * 3600 * NS, levels=(0, 3600)
+    )
+    rows = [("PV:A", i * 3600 * NS, float(i), 0, 0) for i in range(30)]
+    store.write_samples(spark.createDataFrame(rows, SCHEMA), level=0)
+    assert incremental_decimation(store, 3600) > 0
+    total = sum(store.read_samples(lvl).count() for lvl in store.levels())
+    marks = {lvl: store.channel_hwm(lvl)["PV:A"] for lvl in store.levels()}
+    own = [x for x in _seed_ts(store, 3600) if x[0] == "PV:A"]
+    assert own and len(own) < len(_seed_ts(store, 3600))
 
-    # crash the forward rename A->B after the data swap, before the
-    # fold (same harness as the pre-fold preservation test)
-    state = {"phase": "forward"}
-    orig_hwm = mod.ArchiveStore._hwm_table
-    orig_read = mod.ArchiveStore._read_level_files
-
-    def flaky_hwm(self, level):
-        if state["phase"] == "forward":
-            state["phase"] = "wedged"
-            raise RuntimeError("simulated crash before hwm fold")
-        return orig_hwm(self, level)
-
-    def flaky_read(self, level, paths, at_version=None):
-        if state["phase"] == "wedged":
-            raise RuntimeError("simulated compensation failure")
-        return orig_read(self, level, paths, at_version=at_version)
-
-    monkeypatch.setattr(mod.ArchiveStore, "_hwm_table", flaky_hwm)
-    monkeypatch.setattr(mod.ArchiveStore, "_read_level_files", flaky_read)
-    with pytest.raises(RuntimeError, match="before hwm fold"):
-        store.rename_channel("PV:A", "PV:B")
-    monkeypatch.setattr(mod.ArchiveStore, "_hwm_table", orig_hwm)
-    monkeypatch.setattr(mod.ArchiveStore, "_read_level_files", orig_read)
-
-    # split state: data under B, metadata = own under A + foreign B
-    assert store.read_samples(0).filter(
-        F.col("channel") == "PV:B").count() == 20
-    hwm = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
-    assert hwm == {"PV:A": a_max, "PV:B": stale_t}
+    _crash_rename_before_seed_rewrite(store, monkeypatch, "PV:A", "PV:B")
+    # split state: rows and marks under B (the fresh rename purged the
+    # foreign marks in the same commit), seeds = own under A + foreign B
+    for lvl in store.levels():
+        assert store.channel_hwm(lvl) == {"PV:B": marks[lvl]}
+    assert {c for c, _ in _seed_ts(store, 3600)} == {"PV:A", "PV:B"}
 
     # rollback with the explicit flag: own metadata survives, the
-    # foreign stale mark is DROPPED (not renamed into PV:A)
-    assert store.repair_rename("PV:B", "PV:A", rollback=True) == 20
-    assert store.read_samples(0).filter(
-        F.col("channel") == "PV:A").count() == 20
-    hwm = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
-    assert hwm == {"PV:A": a_max}, (
+    # foreign stale seeds are DROPPED (not renamed into PV:A)
+    assert store.repair_rename("PV:B", "PV:A", rollback=True) == total
+    for lvl in store.levels():
+        assert store.read_samples(lvl).filter(
+            F.col("channel") == "PV:A").count() > 0
+        assert store.channel_hwm(lvl) == {"PV:A": marks[lvl]}
+    assert _seed_ts(store, 3600) == own, (
         "rollback adopted or purged the wrong metadata"
     )
 
@@ -1531,8 +1496,8 @@ def _two_day_raw(spark, shift_ns: int = 0):
 
 def test_every_store_write_uses_the_store_format(spark, tmp_path):
     """Each write path adds files, and every file it adds is zstd with
-    v2 pages and a DELTA_BINARY_PACKED ``t`` — data levels, the hwm log
-    (append and compaction) and the seed table alike."""
+    v2 pages and a DELTA_BINARY_PACKED ``t`` — data levels and the seed
+    table alike."""
     store = _store(spark, tmp_path)
     root = str(tmp_path / "archive")
     seen: set[str] = set()
@@ -1548,13 +1513,7 @@ def test_every_store_write_uses_the_store_format(spark, tmp_path):
         return added
 
     step("write_samples", store.write_samples, _two_day_raw(spark), 0)
-    store.HWM_COMPACT_THRESHOLD = 1
-    added = step(
-        "write_samples + _compact_hwm", store.write_samples,
-        _two_day_raw(spark, 30 * NS), 0,
-    )
-    assert len(store._hwm_table(0).files()) == 1
-    assert any("/meta/hwm_level=0/" in f for f in added)
+    step("write_samples", store.write_samples, _two_day_raw(spark, 30 * NS), 0)
     added = step("incremental_decimation", incremental_decimation, store, 3600)
     assert any("/meta/seed_level=3600/" in f for f in added)
     step("compact(zorder=True)", store.compact, 0, zorder=True)
@@ -1563,9 +1522,8 @@ def test_every_store_write_uses_the_store_format(spark, tmp_path):
     step("compact", store.compact, 0)
     step("delete_older_than", store.delete_older_than, 0, DAY_NS // 2)
     added = step("rename_channel", store.rename_channel, "PV:0", "PV:9")
-    for table in ("samples/decimation_level=0/", "samples/decimation_level=3600/",
-                  "meta/hwm_level=0/", "meta/hwm_level=3600/",
-                  "meta/seed_level=3600/"):
+    for table in ("samples/decimation_level=0/",
+                  "samples/decimation_level=3600/", "meta/seed_level=3600/"):
         assert any(table in f for f in added), table
 
 
@@ -1625,28 +1583,20 @@ def test_duckdb_reads_store_files_like_spark(spark, tmp_path):
         con.close()
 
 
-def test_hwm_append_adds_one_file(spark, tmp_path):
-    store = _store(spark, tmp_path)
-    store.write_samples(_two_day_raw(spark), 0)
-    assert len(store._hwm_table(0).files()) == 1
-    store.write_samples(_two_day_raw(spark, 30 * NS), 0)
-    assert len(store._hwm_table(0).files()) == 2
-
-
 def test_metadata_reads_launch_no_schema_inference(
     spark, tmp_path, count_jobs
 ):
-    """hwm reads declare their schema and level reads use the level's
-    manifest schema, so none launches a footer-inference job:
-    channel_hwm is one job, and probe_stats on a one-day store, whose
+    """Level reads use the level's manifest schema, so none launches a
+    footer-inference job: channel_hwm parses the manifest header on the
+    driver (no job at all), and probe_stats on a one-day store, whose
     bt, rmin and ft all lie in the query's own partition, is one job
     with no walk."""
     store = _store(spark, tmp_path)
     day = _two_day_raw(spark).filter(f"t < {DAY_NS}")
     store.write_samples(day, 0)
     hwm, jobs = count_jobs(store.channel_hwm, 0)
-    assert jobs == 1
-    assert {r.channel: r.hwm for r in hwm.collect()} == {
+    assert jobs == 0
+    assert hwm == {
         r.channel: r.m
         for r in day.groupBy("channel").agg(F.max("t").alias("m")).collect()
     }
@@ -1655,3 +1605,119 @@ def test_metadata_reads_launch_no_schema_inference(
     )
     assert jobs == 1
     assert stats["PV:1"][0] <= 6 * 3600 * NS <= stats["PV:1"][1]
+
+
+def test_ingest_batch_commits_one_version_per_level(
+    spark, tmp_path, count_jobs
+):
+    """The write path's budget: one ingest_batch through a two-edge
+    cascade stays within 29 Spark jobs and commits exactly one manifest
+    version per level it writes, plus the seed commits; no hwm side
+    table exists; and reading the marks afterwards launches no job."""
+    from cassandra_pv_archiver_spark.streaming.ingest import ingest_batch
+
+    store = _store(spark, tmp_path)
+    history = _two_day_raw(spark).filter(f"t < {6 * 3600 * NS}")
+    ingest_batch(store, history, cascade_periods=[30, 900])
+    levels = (0, 30, 900)
+
+    def versions():
+        return (
+            {lvl: store.level_versions(lvl)[-1] for lvl in levels},
+            {lvl: _seed_version(store, lvl) for lvl in levels[1:]},
+        )
+
+    def rows():
+        return {lvl: store.read_samples(lvl).count() for lvl in levels}
+
+    rows_before, (before, seeds_before) = rows(), versions()
+    batch = spark.range(3 * 60).selectExpr(
+        "concat('PV:', id % 3) AS channel",
+        f"{6 * 3600 * NS} + (id div 3) * {NS} AS t",
+        "CAST(id AS DOUBLE) AS v",
+        "CAST(0 AS INT) AS severity",
+        "CAST(0 AS INT) AS status",
+    )
+    n, jobs = count_jobs(
+        ingest_batch, store, batch, cascade_periods=[30, 900]
+    )
+    assert n == 180 and jobs <= 29
+    rows_after, (after, seeds_after) = rows(), versions()
+    for lvl in levels:
+        wrote = rows_after[lvl] > rows_before[lvl]
+        assert after[lvl] - before[lvl] == int(wrote), lvl
+    assert rows_after[30] > rows_before[30]
+    for lvl in levels[1:]:
+        assert seeds_after[lvl] - seeds_before[lvl] <= 1, lvl
+    assert not any(
+        name.startswith("hwm_level=")
+        for name in os.listdir(tmp_path / "archive" / "meta")
+    )
+    for lvl in levels:
+        assert count_jobs(store.channel_hwm, lvl)[1] == 0
+
+
+def test_legacy_level_marks_derive_from_log_and_data(
+    spark, tmp_path, count_jobs
+):
+    """A level written before marks moved into its manifest: a DDL-only
+    header next to the old ``meta/hwm_level=0`` append-log. Its marks
+    are the per-channel max of the log and the data — exact for rows
+    above the log's mark (the old two-commit crash window), for a
+    channel with rows but no log entry, and for a channel retention
+    emptied — so a replayed batch appends nothing, and the next write
+    puts the map into the header."""
+    from cassandra_pv_archiver_spark.sources.archive_store import (
+        HWM_SCHEMA,
+        RAW_SCHEMA,
+        _date_expr,
+        _parse_header,
+    )
+    from cassandra_pv_archiver_spark.streaming.ingest import ingest_batch
+
+    root = tmp_path / "archive"
+
+    def publish(rel, df, header=None):
+        table = ManifestTable(spark, str(root / rel))
+        stage = table.stage_dir()
+        if "date" in df.columns:
+            df.write.partitionBy("date").parquet(stage)
+        else:
+            df.coalesce(1).write.parquet(stage)
+        table.publish_stage(
+            stage, header_fn=None if header is None else (lambda _p: header)
+        )
+        return table
+
+    rows = [("PV:A", k * NS, float(k), 0, 0) for k in range(15)]
+    rows += [("PV:B", k * NS, 1.0, 0, 0) for k in range(5)]
+    level = publish(
+        "samples/decimation_level=0",
+        spark.createDataFrame(rows, SCHEMA).withColumn(
+            "date", _date_expr("t")
+        ),
+        header=RAW_SCHEMA,
+    )
+    publish("meta/hwm_level=0", spark.createDataFrame(
+        [("PV:A", 9 * NS), ("PV:C", 50 * NS)], HWM_SCHEMA))
+    assert _parse_header(level.header()) == (RAW_SCHEMA, None)
+
+    store = _store(spark, tmp_path)
+    want = {"PV:A": 14 * NS, "PV:B": 4 * NS, "PV:C": 50 * NS}
+    assert store.channel_hwm(0) == want
+    assert count_jobs(store.channel_hwm, 0) == (want, 0)  # once per version
+
+    version = store.level_versions(0)[-1]
+    replay = [("PV:A", k * NS, 0.0, 0, 0) for k in range(10, 15)]
+    replay += [("PV:B", 4 * NS, 0.0, 0, 0), ("PV:C", 50 * NS, 0.0, 0, 0)]
+    assert ingest_batch(store, spark.createDataFrame(replay, SCHEMA)) == 0
+    assert store.level_versions(0)[-1] == version
+    assert store.read_samples(0).count() == 20
+
+    store.write_samples(
+        spark.createDataFrame([("PV:B", 5 * NS, 1.0, 0, 0)], SCHEMA), level=0
+    )
+    want["PV:B"] = 5 * NS
+    ddl, marks = _parse_header(level.header())
+    assert marks == want and "`severity` int" in ddl
+    assert count_jobs(_store(spark, tmp_path).channel_hwm, 0) == (want, 0)

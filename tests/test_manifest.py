@@ -250,8 +250,7 @@ def test_concurrent_store_appends_commute(spark, tmp_path):
     th1.join(180), th2.join(180)
     assert not errs, errs
     assert store.read_samples(0).count() == 60
-    hwm = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
-    assert hwm == {"A": 1_029 * NS, "B": 2_029 * NS}
+    assert store.channel_hwm(0) == {"A": 1_029 * NS, "B": 2_029 * NS}
 
 
 def test_four_concurrent_committers_stress(spark, tmp_path):
@@ -923,23 +922,40 @@ class TestSchemaEvolution:
         healed = sorted(tuple(r) for r in store.read_samples(0).collect())
         assert healed == before
 
-    def test_crash_between_evolution_data_and_hwm_commit(
-        self, spark, tmp_path
+    def test_crash_before_evolution_commit_keeps_schema_and_marks(
+        self, spark, tmp_path, crash_commit
     ):
-        """Crash point: the EVOLUTION batch's data manifest committed,
-        hwm manifest not (the write_samples ordering). The schema record
-        (newest footer) must already show the new column — a replayed
-        writer re-reading the level sees the evolved schema and the
-        anti-join dedup layers operate on the union, never a stripped
-        view."""
+        """Crash points of an EVOLUTION batch: the schema record, the
+        marks and the rows all ride one manifest version, so a crash
+        before the rename leaves the level exactly as it was (the new
+        column absent too), a crash after it publishes all three, and
+        the replayed write lands them once."""
         store = self._store(spark, tmp_path)
-        ht = store._hwm_table(0)
-        vs = ht.versions()
-        ht.fs.delete(f"{ht._mdir}/m-{vs[-1]:020d}")  # revert hwm only
-        sch = store.level_schema(0)
-        assert "src_tag" in [f.name for f in sch.fields]
+        before = sorted(tuple(r) for r in store.read_samples(0).collect())
+        hwm_before = store.channel_hwm(0)
+        evo2 = self.EVO + ", src_rank int"
+        batch = spark.createDataFrame(
+            [("PV:A", (8 + i) * 3600 * NS, float(i), 0, 0, "x", i)
+             for i in range(2)], evo2)
+        crash_commit("/decimation_level=0")
+        import pytest
+
+        with pytest.raises(IOError, match="simulated crash"):
+            store.write_samples(batch, level=0)
+        landed = crash_commit.point == "after_commit"
+        cols = [f.name for f in store.level_schema(0).fields]
+        assert ("src_rank" in cols) == landed
+        assert store.channel_hwm(0) == (
+            {"PV:A": 9 * 3600 * NS} if landed else hwm_before
+        )
+        if not landed:
+            got = sorted(tuple(r) for r in store.read_samples(0).collect())
+            assert got == before
+            store.write_samples(batch, level=0)  # the replay lands it
         df = store.read_samples(0)
-        assert df.filter(F.col("src_tag").isNotNull()).count() == 3
+        assert df.count() == 10
+        assert df.filter(F.col("src_rank").isNotNull()).count() == 2
+        assert store.channel_hwm(0) == {"PV:A": 9 * 3600 * NS}
 
 
 class TestRound9ManifestHardening:

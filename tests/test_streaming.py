@@ -514,58 +514,49 @@ def test_restart_from_checkpoint_exactly_once(spark, tmp_path):
         assert got == want, f"level {level} differs after restart"
 
 
-def test_replay_after_crash_between_data_and_hwm_commit(spark, tmp_path):
-    """Review-pinned: write_samples commits the data manifest and the hwm
-    metadata separately; a crash BETWEEN them leaves a stale hwm, and the
-    replayed batch passes the fast-path guard. The anti-join layer must
-    drop the replay exactly (no duplicate rows) and heal the hwm metadata
-    so the fast path recovers for later batches."""
-    from pyspark.sql import functions as F
-
+def test_ingest_crash_lands_rows_and_marks_together(
+    spark, tmp_path, crash_commit
+):
+    """A level-0 ingest killed before its publish, between the stage
+    move and the manifest rename, or after the commit: the batch's rows
+    and marks land together or not at all, a replay is dropped by the
+    monotonic guard alone, and no (channel, t) pair is duplicated."""
     from cassandra_pv_archiver_spark.sources.archive_store import (
         NS,
         ArchiveStore,
+        hwm_frame,
     )
     from cassandra_pv_archiver_spark.streaming.ingest import ingest_batch
 
     store = ArchiveStore(spark, str(tmp_path / "crash"))
-    batch = spark.createDataFrame(
-        [("P", k * NS, float(k), 0, 0) for k in range(10)],
+    mk = lambda lo, hi: spark.createDataFrame(
+        [(c, k * NS, float(k), 0, 0) for c in ("P", "Q")
+         for k in range(lo, hi)],
         "channel string, t long, v double, severity int, status int",
     )
-    # crash the hwm commit once: data lands, metadata does not
-    real_update = store._update_channel_hwm
-    calls = {"n": 0}
+    assert ingest_batch(store, mk(0, 10)) == 20
+    batch = mk(10, 20)
+    crash_commit("/decimation_level=0")
+    with pytest.raises(IOError, match="simulated crash"):
+        ingest_batch(store, batch)
 
-    def crashing(batch_df, level):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise IOError("simulated crash between data and hwm commits")
-        return real_update(batch_df, level)
+    landed = crash_commit.point == "after_commit"
+    top = (19 if landed else 9) * NS
+    assert store.read_samples(0).count() == (40 if landed else 20)
+    hwm = store.channel_hwm(0)
+    assert hwm == {"P": top, "Q": top}
 
-    store._update_channel_hwm = crashing
-    try:
-        import pytest
-
-        with pytest.raises(IOError, match="simulated crash"):
-            ingest_batch(store, batch)
-        assert store.read_samples(0).count() == 10  # data committed
-        assert store.channel_hwm(0) is None         # metadata did not
-
-        # "restart": the streaming engine replays the SAME batch
-        n = ingest_batch(store, batch)
-        assert n == 0                               # exact replay drop
-        rows = store.read_samples(0).collect()
-        assert len(rows) == 10                      # NO duplicates
-        hwm = {r.channel: r.hwm for r in store.channel_hwm(0).collect()}
-        assert hwm == {"P": 9 * NS}                 # metadata healed
-
-        # a later batch flows normally through the recovered fast path
-        nxt = batch.withColumn("t", F.col("t") + 100 * NS)
-        assert ingest_batch(store, nxt) == 10
-        assert store.read_samples(0).count() == 20
-    finally:
-        store._update_channel_hwm = real_update
+    # the guard alone decides the replay: it keeps exactly what did
+    # not land, and a fully-landed replay commits nothing
+    kept = monotonic_guard(batch, hwm_frame(spark, hwm)).count()
+    assert kept == (0 if landed else 20)
+    version = store.level_versions(0)[-1]
+    assert ingest_batch(store, batch) == kept
+    assert (store.level_versions(0)[-1] == version) == landed
+    rows = store.read_samples(0)
+    assert rows.count() == 40
+    assert rows.dropDuplicates(["channel", "t"]).count() == 40
+    assert store.channel_hwm(0) == {"P": 19 * NS, "Q": 19 * NS}
 
 
 def test_min_update_period_stream_group_spanning_arrow_chunks(spark, tmp_path):
