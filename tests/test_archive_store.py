@@ -198,9 +198,11 @@ def test_store_module_free_of_local_fs_primitives():
         assert banned not in src, f"local-FS primitive in archive_store: {banned}"
 
 
-def test_marks_fold_into_one_manifest_version_per_write(spark, tmp_path):
-    """Each write adds ONE level manifest version, whose header map is
-    the per-channel fold of every write so far — no side table."""
+def test_hwm_append_log_and_compaction(spark, tmp_path):
+    """Mark updates append to the level header, never to a side table:
+    after N writes the header map is the per-channel fold of every
+    write so far, one entry per channel however many writes there were,
+    and no ``meta/hwm_level=*`` log is left to compact."""
     store = _store(spark, tmp_path)
     rows = [("A", 10 * NS, 1.0, 0, 0), ("B", 20 * NS, 2.0, 0, 0)]
     mk = lambda shift: spark.createDataFrame(
@@ -209,7 +211,6 @@ def test_marks_fold_into_one_manifest_version_per_write(spark, tmp_path):
     )
     for i in range(5):
         store.write_samples(mk(i), level=0)
-        assert store.level_versions(0)[-1] == i
         assert store.channel_hwm(0) == {"A": (10 + i) * NS, "B": (20 + i) * NS}
     assert not os.path.exists(tmp_path / "archive" / "meta" / "hwm_level=0")
 
@@ -1581,6 +1582,28 @@ def test_duckdb_reads_store_files_like_spark(spark, tmp_path):
             assert sorted(got) == sorted(map(tuple, df.collect())), level
     finally:
         con.close()
+
+
+def test_hwm_append_adds_one_file(spark, tmp_path):
+    """Each write adds ONE level manifest version, and that version
+    carries the write's marks: rows and marks publish together, and an
+    older version still answers with the marks it committed."""
+    store = _store(spark, tmp_path)
+    first = _two_day_raw(spark)
+    store.write_samples(first, 0)
+    assert store.level_versions(0) == [0]
+    store.write_samples(_two_day_raw(spark, 30 * NS), 0)
+    assert store.level_versions(0) == [0, 1]
+
+    def fold(df):
+        return {
+            r.channel: r.m
+            for r in df.groupBy("channel").agg(F.max("t").alias("m")).collect()
+        }
+
+    assert store.channel_hwm(0, at_version=0) == fold(first)
+    assert store.channel_hwm(0) == fold(store.read_samples(0))
+    assert store.channel_hwm(0) != store.channel_hwm(0, at_version=0)
 
 
 def test_metadata_reads_launch_no_schema_inference(
