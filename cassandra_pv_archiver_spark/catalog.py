@@ -517,8 +517,8 @@ def q_store_level_drop_invariance(
     PV:0's 1 h level on a freshly decimated store, the 1 h level equals
     the batch decimation oracle with PV:0 excluded — bit-identical
     surviving rows prove the shared-file rewrite disturbed no
-    neighbour. Raw stays untouched and the level's hwm/seed metadata
-    drops the channel (asserted inline; a violation fails the row)."""
+    neighbour. Raw stays untouched and the level's marks drop the
+    channel (asserted inline; a violation fails the row)."""
     from .plans.jobs import incremental_decimation
     from .sources.archive_store import ArchiveStore
 
@@ -536,9 +536,6 @@ def q_store_level_drop_invariance(
     # None when the level was never written (empty input)
     hwm = store.channel_hwm(PERIOD_1H) or {}
     assert "PV:0" not in hwm, "dropped level kept the channel's hwm"
-    seeds = store.read_seed_state(PERIOD_1H)
-    if seeds is not None and "channel" in seeds.columns:
-        assert seeds.filter(F.col("channel") == "PV:0").count() == 0
     return store.read_samples(PERIOD_1H).select(
         "channel", "t", "mean", "std", "vmin", "vmax", "covered_fraction",
         "severity", "status", "n_samples", "quality",

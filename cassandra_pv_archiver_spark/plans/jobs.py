@@ -10,9 +10,11 @@ period, else raw (`ArchivedChannel.java:766-793`).
 
 Spark formulation: one batch job per (source level -> target level) edge.
 The high-water marks are a driver-side read of each level's manifest
-header; the source scan is bounded below by the as-of seed timestamp, so
-steady-state incremental runs scan hours of data, not years — the run
-cost is O(new data), independent of archive size.
+header. The decimator carry rows are never persisted: each run derives
+them from the source level, whose as-of probe at the lowest mark bounds
+one exact range scan, so steady-state incremental runs scan hours of
+data, not years — the run cost is O(new data), independent of archive
+size.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ import contextlib
 import threading
 import weakref
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.decimate import NS, decimate, reaggregate
@@ -60,12 +62,21 @@ def incremental_decimation(
     Per-channel high-water marks (the Spark analog of the reference's
     ``decimation_level_to_current_bucket_start_time`` metadata) drive the
     catch-up: for channel c with mark ``hwm_c``, new intervals start at
-    ``hwm_c + period``; the seed is the source row whose hold-forward
-    validity crosses that point. The seed selection is pure dataflow — keep
-    rows whose ``lead(t)`` passes ``hwm_c + period`` — so there are no
-    driver-side probes and channels at different progress catch up in one
-    job. The source scan is bounded below by the oldest persisted seed,
-    so steady-state cost is O(new data).
+    ``hwm_c + period``; the carry row is the source row whose hold-forward
+    validity crosses that point. Nothing of it is persisted: every run
+    derives it from the source level (:meth:`ArchiveStore.read_seed_state`)
+    — one ``probe_stats`` call at ``min(hwm) + period`` bounds an exact
+    range scan, and keeping the rows whose ``lead(t)`` passes ``hwm_c +
+    period`` selects every channel's carry row in the same job, so
+    channels at different progress catch up together and steady-state
+    cost is O(new data). The source marks, the probe and the scan read
+    one source manifest version: a source commit landing mid-run is the
+    next run's.
+
+    Source retention: a channel whose carry row has already expired from
+    the source is decimated from what the source retains — every window
+    after the target's mark equals a from-scratch decimation of the
+    retained source.
 
     Returns the number of newly materialized intervals; idempotent until
     new source data arrives (W3).
@@ -100,13 +111,11 @@ def incremental_decimation(
       ``lease_ttl_s`` well above the slowest expected run, or 0 to
       disable leasing (single-writer deployments).
     """
-    from pyspark.sql import Window
-
     wrapper = _edge_lock(store.root, target_period_s)
     with wrapper.lock:
         with _edge_lease(store, target_period_s, lease_ttl_s):
             return _incremental_decimation_locked(
-                store, target_period_s, source_level, Window
+                store, target_period_s, source_level
             )
 
 
@@ -165,79 +174,20 @@ def _incremental_decimation_locked(
     store: ArchiveStore,
     target_period_s: int,
     source_level: int | None,
-    Window,
 ) -> int:
     period_ns = target_period_s * NS
     if source_level is None:
         source_level = pick_source_level(store.levels(), target_period_s)
-    state = store.read_seed_state(target_period_s)
-    # seed state is only meaningful for the source level it was derived
-    # from: after a topology change (an intermediate level appears and
-    # pick_source_level switches edges) the persisted rows have the OTHER
-    # level's schema — unioning them would crash every subsequent run.
-    # Discard mismatched (or legacy untagged) state: the scan falls back
-    # to a one-time full rescan and the hwm filter keeps outputs exact.
-    prev_src_hwm = None  # the source hwm the persisted seeds were built at
-    if state is not None:
-        if "_src_level" in state.columns:
-            tag = state.select(
-                "_src_level",
-                *(
-                    ["_src_hwm"]
-                    if "_src_hwm" in state.columns
-                    else []
-                ),
-            ).first()
-            if tag is None or tag._src_level != source_level:
-                state = None
-            else:
-                prev_src_hwm = getattr(tag, "_src_hwm", None)
-                state = state.drop("_src_level", "_src_hwm")
-        else:
-            state = None
-    # the two maps are driver-side header reads: the newcomer walk, the
-    # idle-run tag and the target filter all answer in Python
+    store.write_seed_state(target_period_s)  # sheds a legacy seed table
     hwm = store.channel_hwm(target_period_s)
-    src_hwm = store.channel_hwm(source_level) or {}
-    src_hwm_max = max(src_hwm.values(), default=None)
-
-    if hwm is None:
-        src_all = store.read_samples(source_level)
-    else:
+    src_all = store.read_seed_state(target_period_s, source_level, hwm)
+    if hwm is not None:
+        # keep each channel's carry row (the last row at or before its
+        # next interval start) and every row after it
         hwm_df = F.broadcast(hwm_frame(store.spark, hwm))
-        # scan bound: nothing older than the oldest persisted seed is ever
-        # needed — steady-state incremental cost is O(new data).
-        lo = None
-        if state is not None:
-            lo_row = state.agg(F.min("t").alias("m")).first()
-            lo = lo_row.m if lo_row is not None else None
-        scan = store.read_samples(source_level, lo_ns=lo)
-        if state is not None and lo is not None:
-            # channels this edge has never seeded can carry history OLDER
-            # than the scan bound (a newly onboarded channel arriving with
-            # a backlog): scan their FULL history, channel-pruned. The
-            # channel sets are the seed table's and the source marks' — a
-            # bounded driver-side set difference, not a data scan.
-            known = {
-                r.channel
-                for r in state.select("channel").distinct().collect()
-            }
-            newcomers = sorted(set(src_hwm) - known)
-            if newcomers:
-                scan = scan.unionByName(
-                    store.read_samples(source_level, channels=newcomers)
-                )
-        if state is not None:
-            # allowMissingColumns: a source-level ADD COLUMN evolution
-            # after these seeds were persisted would otherwise crash
-            # every subsequent run (seeds lack the new column; NULL is
-            # exactly what reading their rows from storage would give)
-            scan = scan.unionByName(
-                state, allowMissingColumns=True
-            ).dropDuplicates(["channel", "t"])
         w = Window.partitionBy("channel").orderBy("t")
         src_all = (
-            scan.join(hwm_df, "channel", "left")
+            src_all.join(hwm_df, "channel", "left")
             .withColumn("_tn", F.lead("t").over(w))
             .filter(
                 F.col("hwm").isNull()
@@ -246,86 +196,19 @@ def _incremental_decimation_locked(
             )
             .drop("_tn", "hwm")
         )
-    src_all = src_all.persist()
-    try:
-        if source_level == 0:
-            dec = decimate(src_all, target_period_s)
-        else:
-            dec = reaggregate(src_all, source_level, target_period_s)
-        if hwm is not None:
-            # the target's guard: its marks commit with its rows, so
-            # every interval at or below a channel's mark has landed
-            dec = (
-                dec.join(hwm_df, "channel", "left")
-                .filter(F.col("hwm").isNull() | (F.col("t") > F.col("hwm")))
-                .drop("hwm")
-            )
-        return _publish_decimation(
-            store, dec, src_all, target_period_s, source_level,
-            period_ns, state, prev_src_hwm, src_hwm_max,
+    if source_level == 0:
+        dec = decimate(src_all, target_period_s)
+    else:
+        dec = reaggregate(src_all, source_level, target_period_s)
+    if hwm is not None:
+        # the target's guard: its marks commit with its rows, so
+        # every interval at or below a channel's mark has landed
+        dec = (
+            dec.join(hwm_df, "channel", "left")
+            .filter(F.col("hwm").isNull() | (F.col("t") > F.col("hwm")))
+            .drop("hwm")
         )
-    finally:
-        src_all.unpersist()
-
-
-def _publish_decimation(
-    store, dec, src_all, target_period_s, source_level, period_ns,
-    state, prev_src_hwm, src_hwm_max,
-) -> int:
-    n = store.write_samples(dec, target_period_s)
-    # persist the next run's seeds: latest source row at/before each
-    # channel's new next-interval start (the reference's decimator
-    # carry state, `...DecimatedSamplesDecimationLevel.java:1127-1146`)
-    # idle-run fast path: nothing materialized AND the source marks are
-    # exactly where the persisted seeds were built -> the recompute
-    # would rewrite byte-identical seeds (plus a manifest commit and
-    # gc) on every empty micro-batch; skip it. Source rows always land
-    # with their marks, so no committed source row can hide below an
-    # unchanged mark.
-    if (
-        n == 0
-        and state is not None
-        and prev_src_hwm is not None
-        and prev_src_hwm == src_hwm_max
-    ):
-        return 0
-    new_hwm = store.channel_hwm(target_period_s)
-    if new_hwm is not None:
-        cols = src_all.columns
-        j = src_all.join(
-            F.broadcast(hwm_frame(store.spark, new_hwm)), "channel", "left"
-        )
-        mature = (
-            j.filter(
-                F.col("hwm").isNotNull()
-                & (F.col("t") <= F.col("hwm") + period_ns)
-            )
-            .groupBy("channel")
-            .agg(
-                F.expr(
-                    "max_by(named_struct("
-                    + ", ".join(f"'{c}', {c}" for c in cols if c != "channel")
-                    + "), t)"
-                ).alias("_s")
-            )
-            .select("channel", *[F.col(f"_s.{c}").alias(c) for c in cols if c != "channel"])
-        )
-        # channels with NO completed window yet: every scanned row is
-        # still inside the first (incomplete) interval — persist them
-        # ALL, not just the latest (collapsing them computed the first
-        # window from its tail rows only once it finally closed).
-        # Bounded: no completed window ⇒ the rows span < ~2 periods.
-        young = j.filter(F.col("hwm").isNull()).select(*cols)
-        seeds = (
-            mature.unionByName(young)
-            .withColumn("_src_level", F.lit(source_level))
-            .withColumn(
-                "_src_hwm",
-                F.lit(src_hwm_max).cast("long"),  # idle-run tag
-            )
-        )
-        store.write_seed_state(target_period_s, seeds)
-    return n
+    return store.write_samples(dec, target_period_s)
 
 
 def retention_sweep(

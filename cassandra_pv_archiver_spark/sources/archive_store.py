@@ -35,9 +35,9 @@ Design for 100 TB / 100k channels:
     parses the header on the driver, never a Spark job. The map is
     O(#channels) per manifest, the same order as the manifest's O(#files)
     list.
-  * **File format**: every file the store writes (samples, seed state)
-    goes through :meth:`ArchiveStore._write`, which fixes Parquet
-    v2 data pages, zstd, and no dictionary on ``t``. v2 pages fall back
+  * **File format**: every data file the store writes goes through
+    :meth:`ArchiveStore._write`, which fixes Parquet v2 data pages,
+    zstd, and no dictionary on ``t``. v2 pages fall back
     to ``DELTA_BINARY_PACKED`` for int64 columns, so the (channel, t)
     sort order makes a regularly spaced ``t`` cost about one bit per row
     (the Gorilla delta-of-delta observation, ``operators/storage.py``)
@@ -110,7 +110,7 @@ class ArchiveStore:
         self.spark = spark
         self.root = root.rstrip("/")
         self.max_records_per_file = max_records_per_file
-        #: manifest versions (snapshots) retained through compaction gc —
+        #: manifest versions (snapshots) retained through gc and appends —
         #: the time-travel horizon. 2 = just enough for in-flight readers
         #: of the previous version; raise it to keep older snapshots
         #: readable via read_samples(at_version=...) (VACUUM-retention
@@ -259,7 +259,8 @@ class ArchiveStore:
         level's high-water marks in the manifest header — the Spark analog
         of the reference's ``decimation_level_to_current_bucket_start_time``
         map (`ChannelMetaDataDAOImpl.java:2111-2123`) — so rows and marks
-        land together or not at all.
+        land together or not at all. The level then keeps only its newest
+        ``keep_versions`` manifests.
         """
         cur = self.level_schema(level)
         if cur is not None:
@@ -337,6 +338,9 @@ class ArchiveStore:
                     ),
                 ),
             )
+            # an append replaces no file, so only its manifest history
+            # grows: each version carries the O(#channels) marks map
+            table._prune_manifests(self.keep_versions)
             return n
         finally:
             df.unpersist()
@@ -398,37 +402,60 @@ class ArchiveStore:
             if r.channel is not None and r.hwm is not None
         }
 
-    # -- decimation carry state (T3 seeds) -------------------------------
-    def _seed_path(self, level: int) -> str:
-        return f"{self.root}/meta/seed_level={level}"
+    # -- decimation carry rows (T3) --------------------------------------
+    def read_seed_state(
+        self, target_level: int, source_level: int, hwm: dict | None
+    ) -> DataFrame:
+        """The source rows one incremental run of the ``source_level ->
+        target_level`` edge needs, derived from the source level alone —
+        the reference keeps no decimator carry state either, it re-reads
+        the source from the target's last window on every (re)start
+        (T3, `ArchivedChannelDecimatedSamplesDecimationLevel.java:
+        343-490`). ``hwm`` is the target's marks map (None: never
+        written).
 
-    def read_seed_state(self, target_level: int) -> DataFrame | None:
-        """Per-channel seed rows persisted by the last incremental
-        decimation run targeting ``target_level`` (the decimator carry
-        state — one full source row per channel), as a driver-local
-        snapshot: a lazy plan would pin a file listing that a concurrent
-        swap invalidates mid-job (observed as FILE_NOT_EXIST task
-        failures). O(#channels) rows — the reference holds the same
-        state in memory (`ChannelMetaDataDAOImpl.java:2111-2123`)."""
-        paths = ManifestTable(self.spark, self._seed_path(target_level)).paths()
-        if not paths:
-            return None
-        df = self.spark.read.parquet(*paths)
-        return self.spark.createDataFrame(df.collect(), df.schema)
+        A channel's carry row is its latest source row at or before its
+        ``hwm + period``, so it is no older than its latest row at or
+        before ``min(hwm) + period`` (the minimum over the channels in
+        both marks maps). One :meth:`probe_stats` call there — the
+        doubling walk finds a sparse channel's row in O(log #partitions)
+        jobs — gives ``lo``, the earliest such row, and one exact range
+        scan reads the source from ``lo``. Source channels without a mark
+        (no completed window yet) add their rows below ``lo``,
+        channel-pruned and disjoint by ``t``. With no channel in both
+        maps the result is the full source scan. The source marks, the
+        probe and every scan read ONE source manifest version."""
+        version = self._level_table(source_level).current_version()
+        if version is None:
+            return self._empty(source_level, None)
+        src = self.channel_hwm(source_level, version)
+        known = sorted(set(hwm or ()) & set(src))
+        if not known:
+            return self.read_samples(source_level, at_version=version)
+        at = min(hwm[c] for c in known) + target_level * NS
+        probed = self.probe_stats(
+            source_level, at, at, known, at_version=version
+        )
+        lo = min(
+            (bt for bt, _, _ in probed.values() if bt is not None),
+            default=at,
+        )
+        scan = self.read_samples(source_level, lo_ns=lo, at_version=version)
+        newcomers = sorted(set(src) - set(hwm))
+        if newcomers:
+            scan = scan.unionByName(self.read_samples(
+                source_level, hi_ns=lo - 1, channels=newcomers,
+                at_version=version,
+            ))
+        return scan
 
-    def write_seed_state(
-        self, target_level: int, seeds: DataFrame
-    ) -> tuple[ManifestTable, list[str], list[str]]:
-        """Replace the seed table in one commit. Returns
-        ``(table, added, removed)`` so a compensating caller
-        (:meth:`delete_channel`) can journal the swap for undo."""
-        table = ManifestTable(self.spark, self._seed_path(target_level))
-        old = table.files() or []
-        stage = table.stage_dir()
-        self._write(seeds.coalesce(1), stage)
-        added = table.publish_stage(stage, remove=old)
-        table.gc(keep_versions=self.keep_versions)
-        return table, added, old
+    def write_seed_state(self, target_level: int) -> None:
+        """Remove the ``meta/seed_level=<target_level>`` table that stores
+        written before carry rows were derived (:meth:`read_seed_state`)
+        kept for the edge into ``target_level``. Nothing reads or writes
+        it any more; each edge run sheds it (one delete, a no-op once
+        gone)."""
+        self.fs.delete(f"{self.root}/meta/seed_level={target_level}")
 
     # -- read (S1/S2) ----------------------------------------------------
     def read_samples(
@@ -458,7 +485,7 @@ class ArchiveStore:
         IS a version log, and because data files are immutable, reading
         version N's file list reproduces version N's table bit-exactly.
         Snapshots older than ``keep_versions`` commits are pruned by
-        compaction/retention gc; asking for one raises with the retained
+        gc and by every append; asking for one raises with the retained
         range (the VACUUM-horizon error lakehouses give)."""
         self._check_retained(level, at_version)
         files = self._level_files(
@@ -719,7 +746,7 @@ class ArchiveStore:
 
     # -- compaction (96 MB rollover analog) ------------------------------
     def rename_channel(self, old: str, new: str, preflighted: bool = False) -> int:
-        """Rename a channel across every level, metadata included — the
+        """Rename a channel across every level, marks included — the
         reference's configuration rename/move operation
         (`ArchiveConfigurationService.java`, `archiving/internal/
         RenameChannelOperation`). The reference keys sample buckets by a
@@ -731,9 +758,9 @@ class ArchiveStore:
         concurrent reader sees the old name or the new name, never both
         or neither. Time-travel reads at pre-rename versions still show
         the old name (immutable files). A level's high-water marks move
-        in that level's own swap commit; decimation seed state follows
-        in its own single-commit replace. Returns the number of sample
-        rows that changed name.
+        in that level's own swap commit, so no crash can split a level's
+        rows from its marks. Returns the number of sample rows that
+        changed name.
 
         Renaming onto an existing channel refuses loudly (the reference
         rejects colliding renames the same way). A failure mid-way
@@ -763,41 +790,29 @@ class ArchiveStore:
           this, e.g. the admin cascade's rename-intent marker, or an
           operator who verified the registry still maps one of the two
           names);
-        * metadata is repaired on EVERY level whose marks or seeds still
-          MENTION ``old`` — a crash between a level's swap (rows and
-          marks, one commit) and its seed rewrite leaves old-name seeds
-          on a level with no old-name data rows, which the normal
-          per-level walk skips. On such a table the rename never ran (it
-          eliminates old-name rows), so any ``new``-named metadata there
-          is a fully-expired FOREIGN channel's stale leftovers and the
-          fresh-rename purge applies unchanged; tables that no longer
-          mention ``old`` were already renamed (their ``new``-named rows
-          are the renamed channel's own state) and are left untouched.
-
-        The purge is DIRECTION-AWARE per metadata table (ADVICE r10):
-        a hit-triggered level whose metadata no longer mentions ``old``
-        renames without purging, because its ``new``-named rows may be
-        the channel's own. That state arises when repairing in the
-        ROLLBACK direction — ``repair_rename(B, A)`` after a crashed
-        ``A -> B`` rename — on the level the crash split: rows and marks
-        already under ``B`` (the repair source), seeds still under ``A``
-        (the repair target, and genuine).
+        * marks are repaired on EVERY level whose rows or marks still
+          mention ``old``, not only where rows do: a fully-expired
+          channel keeps marks with no rows. A level's rows and marks
+          move in one commit, so a level that still mentions ``old`` was
+          never renamed — any ``new``-named mark there is a fully-expired
+          FOREIGN channel's stale leftover and the fresh-rename purge
+          applies unchanged; levels that no longer mention ``old`` were
+          already renamed and are left untouched.
 
         **Rolling BACK a crashed rename? Pass ``rollback=True``.** The
         two directions are indistinguishable from table contents alone
-        when a fully-expired FOREIGN channel's stale metadata sits
-        under the crashed rename's TARGET name (round-11 review): in a
-        rollback that name is the repair SOURCE, and the default
-        (forward) heuristic would read the foreign rows as proof the
-        fold never ran — purging the channel's genuine metadata and
-        adopting the foreign stale rows. With ``rollback=True`` the
-        rule inverts correctly: per table, the repair-source-named
-        rows are the channel's own ONLY on a hit-triggered level whose
-        metadata no longer mentions the repair target (the fold
-        completed there); everywhere else they are foreign leftovers
-        and are dropped, never folded in. The admin cascade's
-        compensation and intent-marker recovery pass the flag on their
-        rollback legs.
+        when a fully-expired FOREIGN channel's stale marks sit under the
+        crashed rename's TARGET name (round-11 review): in a rollback
+        that name is the repair SOURCE, and on a level the crash left
+        unrenamed the default (forward) rule would read the foreign
+        marks as proof the rename never ran there — purging the
+        channel's genuine marks and adopting the foreign stale ones.
+        With ``rollback=True`` the repair-source-named marks are the
+        channel's own ONLY on a level holding repair-source rows and no
+        repair-target mark (the rename completed there); everywhere else
+        they are foreign leftovers and are dropped, never folded in. The
+        admin cascade's compensation and intent-marker recovery pass the
+        flag on their rollback legs.
 
         Idempotent AND no-op-cheap: repairing an already-complete (or
         never-started) rename renames nothing, commits nothing, and
@@ -829,77 +844,41 @@ class ArchiveStore:
 
             return xf
 
-        def _meta_xf(df: DataFrame) -> DataFrame:
+        def _meta_xf(marks: dict, hit: bool) -> dict:
             # a fully-expired channel named `new` passes the collision
-            # probe (no DATA rows) but can still own stale marks/seed
-            # metadata; folding that into the renamed channel would make
-            # incremental decimation silently skip windows up to the
-            # stale mark. Purge it, then rename — data levels are
-            # unaffected (the probe guarantees no rows named `new`).
-            return _xf(old, new)(df.filter(F.col("channel") != new))
+            # probe (no DATA rows) but can still own a stale mark;
+            # folding it into the renamed channel would make incremental
+            # decimation silently skip windows up to the stale mark.
+            # Purge it, then rename — data levels are unaffected (the
+            # probe guarantees no rows named `new`).
+            return _rename_mark(_drop_mark(marks, new), old, new)
 
-        meta_ctx: dict = {}
-
-        def _repair_meta_xf(df: DataFrame) -> DataFrame:
-            # Direction-aware purge (ADVICE r10, medium): only purge
-            # `new`-named rows when THIS table still mentions `old` —
-            # then its fold never ran, so `new`-named rows cannot be the
-            # channel's own folded state (they are a fully-expired
-            # FOREIGN channel's stale leftovers, the purge's reason to
-            # exist). A table that no longer mentions `old` may hold the
-            # channel's GENUINE metadata under `new`: in the ROLLBACK
-            # direction (repair_rename(B, A) after a crashed A->B
-            # rename) a level left between its swap and its seed rewrite
-            # has rows and marks under the repair source and the
-            # channel's own seeds under the repair TARGET — the
-            # unconditional fresh-rename purge would delete them,
-            # silently weakening monotonic-append enforcement and
-            # incremental-decimation exactly-once until re-seeded. The
-            # extra limit(1) probe per metadata table only runs on the
-            # rare repair path.
-            if df.filter(F.col("channel") == old).limit(1).count() > 0:
-                return _meta_xf(df)
-            return _xf(old, new)(df)
-
-        def _rollback_meta_xf(df: DataFrame) -> DataFrame:
+        def _rollback_meta_xf(marks: dict, hit: bool) -> dict:
             # Explicit-rollback rule (round-11 review): the repair
             # SOURCE here is the crashed rename's TARGET — the one name
-            # a fully-expired FOREIGN channel's stale metadata can
-            # legitimately sit under (the original probe only verified
-            # it free of DATA). Source-named rows are the channel's OWN
-            # exactly when the original rename completed on this table:
-            # the level's swap ran (hit-triggered level) and eliminated
-            # every target-named row. Everywhere
-            # else they are foreign leftovers: DROP them instead of
-            # folding them into the restored channel (inheriting a
-            # foreign high-water mark would make incremental decimation
-            # silently skip windows — and the forward heuristic above
-            # would even purge the channel's own rows first).
-            own_folded = meta_ctx.get("hit") and (
-                df.filter(F.col("channel") == new).limit(1).count() == 0
-            )
-            if own_folded:
-                return _xf(old, new)(df)
-            return _xf(old, new)(df.filter(F.col("channel") != old))
+            # a fully-expired FOREIGN channel's stale mark can sit under
+            # (the original probe only verified it free of DATA).
+            # Source-named marks are the channel's OWN exactly when the
+            # original rename completed on this level: its swap ran (the
+            # level holds source-named rows) and left no target-named
+            # mark. Everywhere else they are foreign leftovers: DROP
+            # them instead of folding them into the restored channel
+            # (inheriting a foreign mark would make incremental
+            # decimation silently skip windows).
+            if hit and new not in marks:
+                return _rename_mark(marks, old, new)
+            return _drop_mark(marks, old)
 
         if repair:
             # no compensation wrapper: repair is idempotent — on failure
-            # re-run it, rather than half-reversing a half-repair. The
-            # meta transform purges-then-renames ONLY on tables whose
-            # fold never ran (see _repair_meta_xf); already-folded
-            # levels are skipped untouched (see repair_rename).
+            # re-run it, rather than half-reversing a half-repair
             return self._rewrite_channel_rows(
                 old, _xf(old, new),
-                meta_transform=(
-                    _rollback_meta_xf if rollback else _repair_meta_xf
-                ),
+                _rollback_meta_xf if rollback else _meta_xf,
                 meta_all_levels=True,
-                meta_ctx=meta_ctx,
             )
         try:
-            return self._rewrite_channel_rows(
-                old, _xf(old, new), meta_transform=_meta_xf
-            )
+            return self._rewrite_channel_rows(old, _xf(old, new), _meta_xf)
         except Exception:
             # roll already-renamed levels back (rows under `new` can only
             # be ours: the probe above found none). If the compensation
@@ -908,7 +887,10 @@ class ArchiveStore:
             # probe-guarded API refuses to touch; :meth:`repair_rename`
             # (either direction) is the documented way out.
             try:
-                self._rewrite_channel_rows(new, _xf(new, old))
+                self._rewrite_channel_rows(
+                    new, _xf(new, old),
+                    lambda marks, _hit: _rename_mark(marks, new, old),
+                )
             except Exception:  # noqa: BLE001 - keep the primary error
                 pass
             raise
@@ -925,7 +907,7 @@ class ArchiveStore:
         return None
 
     def delete_channel(self, channel: str) -> int:
-        """Remove a channel across every level, metadata included — the
+        """Remove a channel across every level, marks included — the
         other `ArchiveConfigurationService` mutation (remove-channel,
         `archiving/internal/RemoveChannelOperation`; the reference also
         deletes the channel's sample buckets). Same bounded-rewrite
@@ -935,8 +917,7 @@ class ArchiveStore:
         a file whose rewrite comes up empty publishes as a pure removal
         (a whole-file delete costs no data write). A level's marks drop
         the channel in that level's own swap commit (header-only where
-        no row is left), decimation seed state in its own single-commit
-        replace; pre-delete snapshots still show it
+        no row is left); pre-delete snapshots still show it
         (immutable files + time travel). Returns sample rows removed.
         Deleting an unknown channel is a no-op returning 0.
 
@@ -947,27 +928,25 @@ class ArchiveStore:
         (``undo_log``) and each level's pre-delete files are still
         referenced by the previous manifest version (``keep_versions >=
         2`` retains it, and gc never collects files a retained version
-        lists) — so the compensation re-commits each journaled table
-        back to exactly its pre-delete file list, and each level to its
-        pre-delete header so the rows come back with their marks (else
-        the monotonic guard would accept replays of them), newest swap
-        first.
+        lists) — so the compensation re-commits each journaled level
+        back to exactly its pre-delete file list and header, so the rows
+        come back with their marks (else the monotonic guard would
+        accept replays of them), newest swap first.
         With ``keep_versions == 1`` the pre-delete files may already be
         collected, so the compensation is skipped (documented trade of
         that setting) and a crash leaves a partial delete whose retry
         completes it (the rewrite is idempotent per level)."""
-        undo_log: list[
-            tuple[ManifestTable, list[str], list[str], str | None]
-        ] = []
+        undo_log: list[tuple[ManifestTable, list[str], list[str], str]] = []
         try:
-            # meta_all_levels: a fully-expired channel has marks/seed rows
-            # on levels with NO data files left; a hits-only walk would
-            # leave that stale metadata behind forever, and a later
+            # meta_all_levels: a fully-expired channel has marks on
+            # levels with NO data files left; a hits-only walk would
+            # leave that stale mark behind forever, and a later
             # re-creation of the name would make incremental decimation
-            # silently skip every window up to the stale high-water mark
+            # silently skip every window up to it
             return self._rewrite_channel_rows(
                 channel,
                 lambda df: df.filter(F.col("channel") != channel),
+                lambda marks, _hit: _drop_mark(marks, channel),
                 undo_log=undo_log,
                 meta_all_levels=True,
             )
@@ -975,18 +954,16 @@ class ArchiveStore:
             if self.keep_versions >= 2:
                 try:
                     for table, added, removed, header in reversed(undo_log):
-                        # a level's marks come back with its rows
                         table.commit(
                             add=removed, remove=added,
-                            header_fn=None if header is None
-                            else (lambda _prev, h=header: h),
+                            header_fn=lambda _prev, h=header: h,
                         )
                 except Exception:  # noqa: BLE001 - keep the primary error
                     pass
             raise
 
     def delete_channel_level(self, channel: str, level: int) -> int:
-        """Remove ONE channel's rows and metadata from a SINGLE
+        """Remove ONE channel's rows and marks from a SINGLE
         decimation level — the ``update_channel`` cascade for a dropped
         level (the reference's configuration update deletes the removed
         level's sample buckets, `ArchiveConfigurationService`). Same
@@ -1002,6 +979,7 @@ class ArchiveStore:
         return self._rewrite_channel_rows(
             channel,
             lambda df: df.filter(F.col("channel") != channel),
+            lambda marks, _hit: _drop_mark(marks, channel),
             meta_all_levels=True,
             only_levels={level},
         )
@@ -1010,10 +988,9 @@ class ArchiveStore:
         self,
         channel: str,
         transform,
-        meta_transform=None,
+        meta_transform,
         meta_all_levels: bool = False,
         undo_log: list | None = None,
-        meta_ctx: dict | None = None,
         only_levels: set | None = None,
     ) -> int:
         """Bounded-rewrite machinery shared by :meth:`rename_channel` and
@@ -1021,43 +998,27 @@ class ArchiveStore:
         ``channel`` (bounded metadata collect — a subset of one
         channel's footprint), apply ``transform`` to exactly those
         files' rows, and swap the rewrite in with ONE atomic manifest
-        commit whose header carries the level's marks passed through
-        ``meta_transform``; then rewrite the decimation seed state
-        through ``meta_transform`` in its own commit. ``meta_transform``
-        maps a ``(channel, ...)`` frame (the marks as ``(channel, hwm)``
-        rows, then the seeds) and defaults to ``transform``; rename
-        passes a variant that additionally purges a fully-expired target
-        channel's STALE metadata, which the data-level collision probe
-        cannot see. Returns the number of sample rows that matched
-        ``channel``.
+        commit whose header carries the level's marks mapped by
+        ``meta_transform(marks, hit) -> marks``, a driver-side dict
+        function (``hit``: the level's rows carry ``channel``). The marks
+        are a level's only metadata, so no crash can split them from its
+        rows. Rename passes a mark transform that also purges a
+        fully-expired target channel's STALE mark, which the data-level
+        collision probe cannot see. Returns the number of sample rows
+        that matched ``channel``.
 
-        ``meta_all_levels=True`` (repair_rename, delete_channel) walks
-        the metadata even on levels with no matching DATA rows: a
-        fully-expired channel keeps marks and seeds with no data at all,
-        and a crash between a level's swap and its seed rewrite leaves
-        old-name seeds on a level the hits-only walk would skip. On such
-        no-hit levels the marks change in a header-only commit and the
-        seeds in their own, each GUARDED on the metadata actually
-        mentioning ``channel`` — an unconditional republish would commit
-        a new version on every no-op invocation, churning the
-        keep_versions horizon for nothing.
+        ``meta_all_levels=True`` (repair_rename, delete_channel) also
+        maps the marks of levels with no matching DATA rows: a
+        fully-expired channel keeps its mark with no data at all. There
+        the marks change in a header-only commit, GUARDED on the marks
+        actually mentioning ``channel`` — an unconditional republish
+        would commit a new version on every no-op invocation, churning
+        the keep_versions horizon for nothing.
 
         ``undo_log`` (delete_channel's compensation journal) receives a
         ``(table, added, removed, header)`` entry immediately after EVERY
-        manifest swap this call commits; ``header`` is a level's
-        pre-swap header (None for the seed table, which keeps its own)."""
-        if meta_transform is None:
-            meta_transform = transform
-
-        def _journal(table, added, removed, header=None) -> None:
-            if undo_log is not None:
-                undo_log.append((table, list(added), list(removed), header))
-
-        def _mentions(df: DataFrame) -> bool:
-            return (
-                df.filter(F.col("channel") == channel).limit(1).count() > 0
-            )
-
+        swap this call commits; ``header`` is the level's pre-swap
+        header."""
         touched = 0
         for level in self.levels():
             if only_levels is not None and level not in only_levels:
@@ -1081,58 +1042,46 @@ class ArchiveStore:
                     .distinct()
                     .collect()
                 }
-            if not hit and not meta_all_levels:
+            if not hit and not (
+                meta_all_levels and channel in self.channel_hwm(level, base)
+            ):
                 continue
-            if meta_ctx is not None:
-                # per-level context for direction-aware repair metadata
-                # transforms: whether THIS level's data rows carry the
-                # channel (the rollback rule needs it — see
-                # _rollback_meta_xf)
-                meta_ctx["hit"] = bool(hit)
-            if hit or channel in self.channel_hwm(level, base):
-                header_fn, before = self._marks_header_fn(
-                    level, base, meta_transform
+            header_fn, before = self._marks_header_fn(
+                level, base, meta_transform, bool(hit)
+            )
+            affected: list[str] = []
+            added: list[str] = []
+            if hit:
+                affected = _match_manifest_files(rel, hit)
+                part = self._read_level_files(
+                    level, [f"{table.root}/{r}" for r in affected]
                 )
-                affected: list[str] = []
-                added: list[str] = []
-                if hit:
-                    affected = _match_manifest_files(rel, hit)
-                    part = self._read_level_files(
-                        level, [f"{table.root}/{r}" for r in affected]
-                    )
-                    touched += part.filter(
-                        F.col("channel") == channel
-                    ).count()
-                    out = (
-                        transform(part)
-                        .repartition("date", "channel")
-                        .sortWithinPartitions("date", "channel", "t")
-                    )
-                    stage = table.stage_dir()
-                    self._write(out, stage, partition_by="date")
-                    added = table.publish_stage(
-                        stage, remove=affected, header_fn=header_fn
-                    )
-                else:
-                    table.commit(header_fn=header_fn)  # marks only
-                _journal(table, added, affected, before["header"])
-                table.gc(keep_versions=self.keep_versions)
-            # decimation carry seeds for this target level
-            seeds = self.read_seed_state(level)
-            if seeds is not None and "channel" in seeds.columns:
-                if hit or _mentions(seeds):
-                    stable, sadded, sold = self.write_seed_state(
-                        level, meta_transform(seeds)
-                    )
-                    _journal(stable, sadded, sold)
+                touched += part.filter(F.col("channel") == channel).count()
+                out = (
+                    transform(part)
+                    .repartition("date", "channel")
+                    .sortWithinPartitions("date", "channel", "t")
+                )
+                stage = table.stage_dir()
+                self._write(out, stage, partition_by="date")
+                added = table.publish_stage(
+                    stage, remove=affected, header_fn=header_fn
+                )
+            else:
+                table.commit(header_fn=header_fn)  # marks only
+            if undo_log is not None:
+                undo_log.append((table, added, affected, before["header"]))
+            table.gc(keep_versions=self.keep_versions)
         return touched
 
-    def _marks_header_fn(self, level: int, base: int, meta_transform):
+    def _marks_header_fn(
+        self, level: int, base: int, meta_transform, hit: bool
+    ):
         """``(header_fn, before)`` for a rewrite commit on one level: the
         header keeps the schema and maps the marks of the base the commit
-        builds on through ``meta_transform`` (one small local job, on the
-        rare rename/delete path); ``before["header"]`` receives that
-        base's header for compensation."""
+        builds on through ``meta_transform(marks, hit)`` (no Spark job);
+        ``before["header"]`` receives that base's header for
+        compensation."""
         legacy_hwm = self.channel_hwm(level, base)
         before: dict = {}
 
@@ -1141,14 +1090,7 @@ class ArchiveStore:
             if hwm is None:
                 hwm = legacy_hwm
             before["header"] = _format_header(ddl, hwm)
-            mapped = (
-                meta_transform(hwm_frame(self.spark, hwm))
-                .groupBy("channel")
-                .agg(F.max("hwm").alias("hwm"))
-            )
-            return _format_header(
-                ddl, {r.channel: r.hwm for r in mapped.collect()}
-            )
+            return _format_header(ddl, meta_transform(hwm, hit))
 
         return _header_fn, before
 
@@ -1271,6 +1213,19 @@ def _match_manifest_files(rel: list[str], hit: set[str]) -> list[str]:
         else:
             matched.update(r for r in rel if hd.endswith(r))
     return [r for r in rel if r in matched]
+
+
+def _drop_mark(marks: dict, channel: str) -> dict:
+    return {c: t for c, t in marks.items() if c != channel}
+
+
+def _rename_mark(marks: dict, a: str, b: str) -> dict:
+    """``marks`` with ``a``'s mark moved onto ``b`` (their max if ``b``
+    has one too)."""
+    out = _drop_mark(marks, a)
+    if a in marks:
+        out[b] = max(marks[a], out.get(b, marks[a]))
+    return out
 
 
 def hwm_frame(spark: SparkSession, hwm: dict[str, int]) -> DataFrame:

@@ -350,19 +350,10 @@ class ManifestTable:
                 continue
             self.fs.delete(full)
             deleted.append(rel)
-        # manifest pruning: only versions STRICTLY OLDER than the oldest
-        # retained one. `not in keep` would also delete a version a
-        # concurrent writer committed AFTER this gc's versions() snapshot
-        # — destroying a committed append (readers would resolve the
-        # previous version again and the new data files, then
-        # never-referenced, would be collected after the grace period).
-        keep_floor = keep[0] if keep else -1
+        self._prune_manifests(keep_versions)
         for name in self.fs.listdir(self._mdir):
             full = f"{self._mdir}/{name}"
-            if name.startswith(".tmp-"):
-                if not young(full):
-                    self.fs.delete(full)
-            elif name.startswith("m-") and int(name[2:]) < keep_floor:
+            if name.startswith(".tmp-") and not young(full):
                 self.fs.delete(full)
         # crashed-publish staging debris: stage dirs are underscore-
         # prefixed, so list_files_recursive (and every reader) never sees
@@ -394,6 +385,20 @@ class ManifestTable:
             if stage_grace_ms <= 0 or now_ms - newest >= stage_grace_ms:
                 self.fs.delete(full)
         return deleted
+
+    def _prune_manifests(self, keep_versions: int) -> None:
+        """Delete the manifests of versions STRICTLY OLDER than the oldest
+        of the newest ``keep_versions`` in one :meth:`versions` snapshot.
+        Data files are :meth:`gc`'s to delete (after a pure append the
+        retained versions still list every file a pruned one did).
+        Pruning ``not in keep`` instead would also delete a version a
+        concurrent writer committed AFTER the snapshot — destroying a
+        committed append (readers would resolve the previous version
+        again and the new data files, then never-referenced, would be
+        collected after the grace period)."""
+        vs = self.versions()
+        for v in vs[:-keep_versions]:
+            self.fs.delete(f"{self._mdir}/m-{v:020d}")
 
     # -- staged writes ---------------------------------------------------
     def stage_dir(self) -> str:

@@ -3,6 +3,7 @@ high-water-mark idempotence."""
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -31,23 +32,10 @@ def _store(spark, tmp_path) -> ArchiveStore:
     return ArchiveStore(spark, str(tmp_path / "archive"))
 
 
-def _seed_version(store: ArchiveStore, level: int) -> int | None:
-    table = ManifestTable(store.spark, store._seed_path(level))
-    return table.current_version()
-
-
-def _seed_ts(store: ArchiveStore, level: int) -> list[tuple[str, int]]:
-    seeds = store.read_seed_state(level)
-    return sorted(
-        (r.channel, r.t) for r in seeds.select("channel", "t").collect()
-    )
-
-
 def _plant_expired(spark, store, channel, t0, levels=(0,)):
     """A FOREIGN channel that lived and fully expired: hours of history
     from ``t0`` (decimated into every level of ``levels`` past 0), then
-    every level swept past it — its rows are gone, its marks (and seeds)
-    are not."""
+    every level swept past it — its rows are gone, its marks are not."""
     rows = [(channel, t0 + i * 3600 * NS, 1.0, 0, 0) for i in range(5)]
     store.write_samples(spark.createDataFrame(rows, SCHEMA), level=0)
     for level in levels:
@@ -405,8 +393,9 @@ def test_incremental_onboards_channel_with_backlog(spark, tmp_path):
 
 def test_incremental_first_window_accumulates_across_runs(spark, tmp_path):
     """Review-pinned: a channel whose first batches never complete a
-    window must carry ALL its rows in seed state — once the window finally
-    closes, its aggregate covers every row, not just the latest one."""
+    window has no mark, so each run reads ALL its source rows — once the
+    window finally closes, its aggregate covers every row, not just the
+    latest one."""
     from cassandra_pv_archiver_spark.operators.decimate import NS, decimate
     from cassandra_pv_archiver_spark.plans.jobs import incremental_decimation
     from cassandra_pv_archiver_spark.sources.archive_store import ArchiveStore
@@ -414,7 +403,7 @@ def test_incremental_first_window_accumulates_across_runs(spark, tmp_path):
     store = ArchiveStore(spark, str(tmp_path / "fw"))
     h = 3600 * NS
     # an ESTABLISHED channel with completed windows, so the target hwm
-    # exists and the young channel goes through the seed-state path (not
+    # exists and the young channel goes through the probed-scan path (not
     # the no-hwm full-rescan path)
     est = _mini_raw(spark, "A", [k * h // 4 for k in range(12)])
     early = [0, 10 * 60 * NS, 20 * 60 * NS]              # window 0 only
@@ -441,10 +430,10 @@ def test_incremental_first_window_accumulates_across_runs(spark, tmp_path):
 
 
 def test_incremental_survives_source_level_switch(spark, tmp_path):
-    """Review-pinned: persisted seed state is tagged with its source
-    level; when the edge's source switches (an intermediate level appears),
-    stale state is discarded instead of unioning incompatible schemas —
-    the run completes and outputs stay exact."""
+    """Review-pinned: when the edge's source switches (an intermediate
+    level appears), the carry rows are derived from the new source level
+    alone, never mixed with rows of the old one's schema — the run
+    completes and outputs stay exact."""
     from cassandra_pv_archiver_spark.operators.decimate import NS, decimate
     from cassandra_pv_archiver_spark.plans.jobs import (
         incremental_decimation,
@@ -538,9 +527,9 @@ class TestRenameChannel:
                 for r in store.read_samples(level).select("channel").distinct().collect()
             }
             assert chans == {"PV:x"}, level
-        # incremental decimation keeps working after the rename (seed
-        # state followed): appending more data decimates under the new
-        # name from the carried state
+        # incremental decimation keeps working after the rename (the
+        # marks followed): appending more data decimates under the new
+        # name from the carry rows
         more = spark.createDataFrame(
             [
                 ("PV:x", 10**18 + (50 + i) * 600 * 10**9, float(i), 0, 0)
@@ -618,7 +607,7 @@ class TestDeleteChannel:
         n_b = store.read_samples(3600, channels=["PV:b"]).count()
         assert n_b > 0
         # later catch-up neither resurrects the deleted channel nor
-        # disturbs the survivor (seed state dropped cleanly)
+        # disturbs the survivor
         assert incremental_decimation(store, 3600) == 0
         assert store.read_samples(3600, channels=["PV:a"]).count() == 0
         assert store.read_samples(3600, channels=["PV:b"]).count() == n_b
@@ -817,16 +806,16 @@ def test_schema_survives_retention_emptying_level(spark, tmp_path):
 
 
 def test_incremental_decimation_survives_source_evolution(spark, tmp_path):
-    """Round-9 review: seeds persisted BEFORE a source-level ADD COLUMN
-    lack the new column; the seed union must fill nulls, not crash every
-    subsequent run with an AnalysisException."""
+    """Round-9 review: a source-level ADD COLUMN between two runs must
+    not crash the next run with an AnalysisException — its carry rows
+    predate the column and read it as NULL."""
     store = _store(spark, tmp_path)
     base = "channel string, t long, v double, severity int, status int"
     evo = base + ", src_tag string"
     hour = 3600 * NS
     rows = [("PV:A", i * hour, float(i), 0, 0) for i in range(5)]
     store.write_samples(spark.createDataFrame(rows, base), level=0)
-    assert incremental_decimation(store, 3600) > 0  # seeds persisted
+    assert incremental_decimation(store, 3600) > 0
     more = [("PV:A", (5 + i) * hour, float(i), 0, 0, "tag") for i in range(3)]
     store.write_samples(spark.createDataFrame(more, evo), level=0)
     n = incremental_decimation(store, 3600)  # was: AnalysisException
@@ -1056,24 +1045,18 @@ def test_repair_rename_unwedges_half_renamed_store(
     # Already-folded metadata (level 0's hwm, renamed before the crash)
     # is PRESERVED — repair skips levels whose metadata no longer
     # mentions the old name; still-old metadata is purged-and-renamed
-    # exactly like a fresh rename. Seeds follow the same rule.
+    # exactly like a fresh rename.
     assert store.repair_rename("PV:A", "PV:B") > 0
     for lvl in store.levels():
         df = store.read_samples(lvl)
         assert df.filter(F.col("channel") == "PV:A").count() == 0
         assert df.filter(F.col("channel") == "PV:B").count() == total[lvl]
         assert store.channel_hwm(lvl) == {"PV:B": hwm_before[lvl]["PV:A"]}
-        seeds = store.read_seed_state(lvl)
-        if seeds is not None and "channel" in seeds.columns:
-            assert seeds.filter(F.col("channel") == "PV:A").count() == 0
     # idempotent AND no-op-cheap: a second repair renames nothing and
     # commits nothing (round-10 review: an unconditional metadata
     # republish would churn a manifest version per table per call)
     def versions():
-        return {
-            lvl: (store.level_versions(lvl)[-1], _seed_version(store, lvl))
-            for lvl in store.levels()
-        }
+        return {lvl: store.level_versions(lvl)[-1] for lvl in store.levels()}
 
     versions_before = versions()
     assert store.repair_rename("PV:A", "PV:B") == 0
@@ -1119,7 +1102,7 @@ def test_match_manifest_files_linear_matcher():
 
 def test_delete_purges_metadata_of_fully_expired_channel(spark, tmp_path):
     """Round-10 review: a channel whose DATA fully expired still owns
-    hwm (and seed) rows; a hits-only delete walk left that stale
+    marks; a hits-only delete walk left that stale
     metadata behind forever, and a later re-creation of the name would
     make incremental decimation silently skip every window up to the
     stale high-water mark."""
@@ -1131,7 +1114,7 @@ def test_delete_purges_metadata_of_fully_expired_channel(spark, tmp_path):
     assert incremental_decimation(store, 3600) > 0
     tmax = 29 * 3600 * NS
     # expire EVERY level-3600 row: the level keeps its (empty) manifest
-    # and its hwm/seed metadata — the fully-expired state
+    # and its marks — the fully-expired state
     retention_sweep(store, {3600: 1}, now_ns=tmax + 10 * DAY_NS)
     assert store.read_samples(3600).count() == 0
     assert "PV:X" in store.channel_hwm(3600)
@@ -1140,9 +1123,6 @@ def test_delete_purges_metadata_of_fully_expired_channel(spark, tmp_path):
     assert n == 30  # level-0 data rows (3600 had none left)
     # metadata followed on the data-less level too
     assert set(store.channel_hwm(3600)) == {"PV:Y"}
-    seeds = store.read_seed_state(3600)
-    if seeds is not None and "channel" in seeds.columns:
-        assert seeds.filter(F.col("channel") == "PV:X").count() == 0
     # the survivor is untouched everywhere
     assert store.read_samples(0).filter(
         F.col("channel") == "PV:Y").count() == 30
@@ -1169,34 +1149,28 @@ def test_repair_rename_purges_stale_foreign_metadata(spark, tmp_path):
     assert store.channel_hwm(0) == {"PV:B": 9 * 3600 * NS}
 
 
-def _crash_rename_before_seed_rewrite(store, monkeypatch, old, new):
-    """Kill ``rename_channel(old, new)`` after the decimated level's
-    swap (rows and marks, one commit) but before its seed rewrite, and
-    make the compensation die on its first data read, so the split
-    state survives: rows and marks under ``new``, seeds under ``old``."""
+def _crash_rename_between_levels(store, monkeypatch, old, new):
+    """Kill ``rename_channel(old, new)`` after level 0's swap (rows and
+    marks, one commit) but before level 3600's, and make the
+    compensation die on its first data read, so the split survives:
+    level 0 under ``new``, level 3600 still under ``old``."""
     from cassandra_pv_archiver_spark.sources import archive_store as mod
 
-    state = {"phase": "forward"}
-    orig_seed = mod.ArchiveStore.write_seed_state
-    orig_read = mod.ArchiveStore._read_level_files
+    wedged = []
+    orig = mod.ArchiveStore._read_level_files
 
-    def flaky_seed(self, target_level, seeds):
-        if state["phase"] == "forward":
-            state["phase"] = "wedged"
-            raise RuntimeError("simulated crash before seed rewrite")
-        return orig_seed(self, target_level, seeds)
+    def flaky(self, level, paths, at_version=None):
+        if wedged or (level == 3600 and paths):
+            wedged.append(level)
+            raise RuntimeError("simulated crash between level swaps")
+        return orig(self, level, paths, at_version=at_version)
 
-    def flaky_read(self, level, paths, at_version=None):
-        if state["phase"] == "wedged":
-            raise RuntimeError("simulated compensation failure")
-        return orig_read(self, level, paths, at_version=at_version)
-
-    monkeypatch.setattr(mod.ArchiveStore, "write_seed_state", flaky_seed)
-    monkeypatch.setattr(mod.ArchiveStore, "_read_level_files", flaky_read)
-    with pytest.raises(RuntimeError, match="before seed rewrite"):
-        store.rename_channel(old, new)
-    monkeypatch.setattr(mod.ArchiveStore, "write_seed_state", orig_seed)
-    monkeypatch.setattr(mod.ArchiveStore, "_read_level_files", orig_read)
+    assert store.rename_target_occupied(new) is None
+    monkeypatch.setattr(mod.ArchiveStore, "_read_level_files", flaky)
+    with pytest.raises(RuntimeError, match="between level swaps"):
+        store.rename_channel(old, new, preflighted=True)
+    monkeypatch.setattr(mod.ArchiveStore, "_read_level_files", orig)
+    assert wedged == [3600, 0]  # the compensation died on level 0
 
 
 def test_repair_rename_rollback_preserves_prefold_metadata(
@@ -1204,90 +1178,76 @@ def test_repair_rename_rollback_preserves_prefold_metadata(
 ):
     """ADVICE r10 (medium): rolling BACK a crashed rename must not
     purge the channel's own not-yet-renamed metadata. A rename A->B
-    that dies between a decimated level's swap and its seed rewrite
-    leaves rows and marks under B and seeds under A; ``repair_rename(B,
-    A)`` then sees a hit-triggered level (rows under the repair source
-    B) whose seeds carry the repair TARGET name A — the unconditional
-    fresh-rename purge would delete the channel's genuine carry state,
-    silently breaking incremental-decimation exactly-once until
-    re-seeded. The purge must apply only on tables that still mention
-    the repair SOURCE (the rename never ran there, so target-named rows
-    cannot be the channel's own)."""
+    that dies between two levels' swaps leaves level 0's rows and marks
+    under B and level 3600's still under A. ``repair_rename(B, A)`` must
+    rename level 0 back and leave level 3600 untouched: its marks carry
+    the repair TARGET name and are the channel's own — purging them
+    would let the monotonic guard accept replays and incremental
+    decimation re-materialize every window of the level."""
     store = _store(spark, tmp_path)
     rows = [("PV:A", i * 3600 * NS, float(i), 0, 0) for i in range(30)]
     store.write_samples(spark.createDataFrame(rows, SCHEMA), level=0)
     assert incremental_decimation(store, 3600) > 0
-    total = sum(store.read_samples(lvl).count() for lvl in store.levels())
     marks = {lvl: store.channel_hwm(lvl)["PV:A"] for lvl in store.levels()}
-    seeds = _seed_ts(store, 3600)
-    assert {c for c, _ in seeds} == {"PV:A"}
 
-    _crash_rename_before_seed_rewrite(store, monkeypatch, "PV:A", "PV:B")
-    # the split state: rows and marks under B, seeds still under A
-    for lvl in store.levels():
-        assert store.read_samples(lvl).filter(
-            F.col("channel") == "PV:A").count() == 0
-        assert store.channel_hwm(lvl) == {"PV:B": marks[lvl]}
-    assert _seed_ts(store, 3600) == seeds
+    _crash_rename_between_levels(store, monkeypatch, "PV:A", "PV:B")
+    # the split state: level 0 under B, level 3600 under A
+    assert store.channel_hwm(0) == {"PV:B": marks[0]}
+    assert store.channel_hwm(3600) == {"PV:A": marks[3600]}
+    assert store.read_samples(0, channels=["PV:A"]).count() == 0
 
-    # roll back: the channel ends fully under A, seeds INTACT
-    assert store.repair_rename("PV:B", "PV:A") == total
+    # roll back: the channel ends fully under A, its own marks INTACT
+    assert store.repair_rename("PV:B", "PV:A") == len(rows)
     for lvl in store.levels():
-        assert store.read_samples(lvl).filter(
-            F.col("channel") == "PV:B").count() == 0
-        assert store.channel_hwm(lvl) == {"PV:A": marks[lvl]}
-    assert _seed_ts(store, 3600) == seeds, (
-        "rollback repair purged the channel's own seeds"
-    )
+        assert store.read_samples(lvl, channels=["PV:B"]).count() == 0
+        assert store.channel_hwm(lvl) == {"PV:A": marks[lvl]}, (
+            "rollback repair purged the channel's own marks"
+        )
     # and the store is fully functional under the restored name
     assert store.repair_rename("PV:B", "PV:A") == 0
+    assert incremental_decimation(store, 3600) == 0
 
 
 def test_rollback_repair_drops_foreign_stale_metadata(
     spark, tmp_path, monkeypatch
 ):
     """Round-11 review: rolling back a crashed rename when a FOREIGN
-    expired channel's stale metadata sits under the crashed rename's
-    TARGET name. The repair source then mentions a name that is NOT the
-    channel's own — the forward heuristic ('mentions source => rename
-    never ran => purge target') would purge the channel's genuine
-    seeds AND adopt the foreign stale ones; repair_rename(...,
-    rollback=True) must instead keep the channel's own metadata and
-    DROP the foreign rows (folding a foreign carry state or mark in
-    would make incremental decimation silently skip windows)."""
+    expired channel's stale marks sit under the crashed rename's TARGET
+    name. On the level the crash left unrenamed, the repair source then
+    names a mark that is NOT the channel's own — the forward rule
+    ('mentions source => rename never ran => purge target') would purge
+    the channel's genuine mark AND adopt the foreign stale one;
+    repair_rename(..., rollback=True) must instead keep the channel's
+    own marks and DROP the foreign ones (folding a foreign mark in would
+    make incremental decimation silently skip windows)."""
     store = _store(spark, tmp_path)
-    # the foreign expired channel: stale marks and seeds under the name
-    # the rename will target, FAR ahead of A's history — exactly what
-    # the fresh rename's purge exists for, and what a rollback must
-    # never adopt
+    # the foreign expired channel: stale marks under the name the rename
+    # will target, FAR ahead of A's history — exactly what the fresh
+    # rename's purge exists for, and what a rollback must never adopt
     _plant_expired(
         spark, store, "PV:B", 10**6 * 3600 * NS, levels=(0, 3600)
     )
+    foreign = store.channel_hwm(3600)["PV:B"]
     rows = [("PV:A", i * 3600 * NS, float(i), 0, 0) for i in range(30)]
     store.write_samples(spark.createDataFrame(rows, SCHEMA), level=0)
     assert incremental_decimation(store, 3600) > 0
-    total = sum(store.read_samples(lvl).count() for lvl in store.levels())
     marks = {lvl: store.channel_hwm(lvl)["PV:A"] for lvl in store.levels()}
-    own = [x for x in _seed_ts(store, 3600) if x[0] == "PV:A"]
-    assert own and len(own) < len(_seed_ts(store, 3600))
 
-    _crash_rename_before_seed_rewrite(store, monkeypatch, "PV:A", "PV:B")
-    # split state: rows and marks under B (the fresh rename purged the
-    # foreign marks in the same commit), seeds = own under A + foreign B
-    for lvl in store.levels():
-        assert store.channel_hwm(lvl) == {"PV:B": marks[lvl]}
-    assert {c for c, _ in _seed_ts(store, 3600)} == {"PV:A", "PV:B"}
+    _crash_rename_between_levels(store, monkeypatch, "PV:A", "PV:B")
+    # split state: level 0 under B (the fresh rename purged the foreign
+    # mark in the same commit); level 3600 keeps A's rows and marks next
+    # to the foreign stale mark
+    assert store.channel_hwm(0) == {"PV:B": marks[0]}
+    assert store.channel_hwm(3600) == {"PV:A": marks[3600], "PV:B": foreign}
 
-    # rollback with the explicit flag: own metadata survives, the
-    # foreign stale seeds are DROPPED (not renamed into PV:A)
-    assert store.repair_rename("PV:B", "PV:A", rollback=True) == total
+    # rollback with the explicit flag: own marks survive, the foreign
+    # stale mark is DROPPED (not renamed into PV:A)
+    assert store.repair_rename("PV:B", "PV:A", rollback=True) == len(rows)
     for lvl in store.levels():
-        assert store.read_samples(lvl).filter(
-            F.col("channel") == "PV:A").count() > 0
-        assert store.channel_hwm(lvl) == {"PV:A": marks[lvl]}
-    assert _seed_ts(store, 3600) == own, (
-        "rollback adopted or purged the wrong metadata"
-    )
+        assert store.read_samples(lvl, channels=["PV:A"]).count() > 0
+        assert store.channel_hwm(lvl) == {"PV:A": marks[lvl]}, (
+            "rollback adopted or purged the wrong metadata"
+        )
 
 
 def test_concurrent_incremental_decimation_single_publish(spark, tmp_path):
@@ -1462,8 +1422,6 @@ def test_cross_process_concurrent_runs_single_materialize(
 
 # -- file format -------------------------------------------------------------
 def _parquet_files(root: str) -> set[str]:
-    import glob
-
     return set(glob.glob(f"{root}/**/*.parquet", recursive=True))
 
 
@@ -1497,8 +1455,7 @@ def _two_day_raw(spark, shift_ns: int = 0):
 
 def test_every_store_write_uses_the_store_format(spark, tmp_path):
     """Each write path adds files, and every file it adds is zstd with
-    v2 pages and a DELTA_BINARY_PACKED ``t`` — data levels and the seed
-    table alike."""
+    v2 pages and a DELTA_BINARY_PACKED ``t``, on every level it writes."""
     store = _store(spark, tmp_path)
     root = str(tmp_path / "archive")
     seen: set[str] = set()
@@ -1515,8 +1472,7 @@ def test_every_store_write_uses_the_store_format(spark, tmp_path):
 
     step("write_samples", store.write_samples, _two_day_raw(spark), 0)
     step("write_samples", store.write_samples, _two_day_raw(spark, 30 * NS), 0)
-    added = step("incremental_decimation", incremental_decimation, store, 3600)
-    assert any("/meta/seed_level=3600/" in f for f in added)
+    step("incremental_decimation", incremental_decimation, store, 3600)
     step("compact(zorder=True)", store.compact, 0, zorder=True)
     store.write_samples(_two_day_raw(spark, 45 * NS), 0)
     seen.update(_parquet_files(root))
@@ -1524,7 +1480,7 @@ def test_every_store_write_uses_the_store_format(spark, tmp_path):
     step("delete_older_than", store.delete_older_than, 0, DAY_NS // 2)
     added = step("rename_channel", store.rename_channel, "PV:0", "PV:9")
     for table in ("samples/decimation_level=0/",
-                  "samples/decimation_level=3600/", "meta/seed_level=3600/"):
+                  "samples/decimation_level=3600/"):
         assert any(table in f for f in added), table
 
 
@@ -1634,8 +1590,8 @@ def test_ingest_batch_commits_one_version_per_level(
     spark, tmp_path, count_jobs
 ):
     """The write path's budget: one ingest_batch through a two-edge
-    cascade stays within 29 Spark jobs and commits exactly one manifest
-    version per level it writes, plus the seed commits; no hwm side
+    cascade stays within 11 Spark jobs and commits exactly one manifest
+    version per level it writes and nothing else; no hwm or seed side
     table exists; and reading the marks afterwards launches no job."""
     from cassandra_pv_archiver_spark.streaming.ingest import ingest_batch
 
@@ -1645,15 +1601,12 @@ def test_ingest_batch_commits_one_version_per_level(
     levels = (0, 30, 900)
 
     def versions():
-        return (
-            {lvl: store.level_versions(lvl)[-1] for lvl in levels},
-            {lvl: _seed_version(store, lvl) for lvl in levels[1:]},
-        )
+        return {lvl: store.level_versions(lvl)[-1] for lvl in levels}
 
     def rows():
         return {lvl: store.read_samples(lvl).count() for lvl in levels}
 
-    rows_before, (before, seeds_before) = rows(), versions()
+    rows_before, before = rows(), versions()
     batch = spark.range(3 * 60).selectExpr(
         "concat('PV:', id % 3) AS channel",
         f"{6 * 3600 * NS} + (id div 3) * {NS} AS t",
@@ -1664,18 +1617,14 @@ def test_ingest_batch_commits_one_version_per_level(
     n, jobs = count_jobs(
         ingest_batch, store, batch, cascade_periods=[30, 900]
     )
-    assert n == 180 and jobs <= 29
-    rows_after, (after, seeds_after) = rows(), versions()
+    assert n == 180 and jobs <= 11
+    rows_after, after = rows(), versions()
     for lvl in levels:
         wrote = rows_after[lvl] > rows_before[lvl]
         assert after[lvl] - before[lvl] == int(wrote), lvl
     assert rows_after[30] > rows_before[30]
-    for lvl in levels[1:]:
-        assert seeds_after[lvl] - seeds_before[lvl] <= 1, lvl
-    assert not any(
-        name.startswith("hwm_level=")
-        for name in os.listdir(tmp_path / "archive" / "meta")
-    )
+    for side_table in ("hwm_level=*", "seed_level=*"):
+        assert not glob.glob(f"{store.root}/meta/{side_table}"), side_table
     for lvl in levels:
         assert count_jobs(store.channel_hwm, lvl)[1] == 0
 
@@ -1744,3 +1693,178 @@ def test_legacy_level_marks_derive_from_log_and_data(
     ddl, marks = _parse_header(level.header())
     assert marks == want and "`severity` int" in ddl
     assert count_jobs(_store(spark, tmp_path).channel_hwm, 0) == (want, 0)
+
+
+# -- derived carry rows -------------------------------------------------------
+HOUR = 3600 * NS
+
+
+def _dec_rows(df, after=None):
+    """Comparable decimated rows, only those after the channel's mark in
+    ``after`` when given."""
+    cols = [
+        "channel", "t", "n_samples", "vmin", "vmax",
+        F.round("mean", 9), F.round("covered_fraction", 9),
+    ]
+    rows = sorted(map(tuple, df.select(*cols).collect()))
+    if after is None:
+        return rows
+    return [r for r in rows if r[1] > after.get(r[0], r[1] - 1)]
+
+
+def test_derived_carry_row_of_sparse_channel_many_partitions_back(
+    spark, tmp_path, monkeypatch, count_jobs
+):
+    """A sparse channel's carry row lies 15 date partitions before the
+    probe point: probe_stats' doubling walk finds it in at most
+    ceil(log2 n) + 1 jobs for the n older partitions, and the run
+    equals a from-scratch decimation."""
+    import math
+
+    store = _store(spark, tmp_path)
+    day = 24 * HOUR
+    dense = [k * HOUR for k in range(16 * 24)]  # days 0..15, hourly
+    raw = _mini_raw(spark, "PV:A", dense).unionByName(
+        _mini_raw(spark, "PV:S", [HOUR // 2, 15 * day + 12 * HOUR + HOUR // 2])
+    )
+    store.write_samples(raw, level=0)
+    assert incremental_decimation(store, 3600) > 0
+    marks = store.channel_hwm(3600)
+    # the sparse channel lags: the probe point min(hwm) + 1 h is its own
+    assert min(marks.values()) == marks["PV:S"] == 15 * day + 11 * HOUR
+    more = _mini_raw(spark, "PV:A", [16 * day + k * HOUR for k in range(24)])
+    more = more.unionByName(_mini_raw(spark, "PV:S", [16 * day + 6 * HOUR]))
+    store.write_samples(more, level=0)
+
+    probes = []
+    probe = store.probe_stats
+
+    def spy(*args, **kwargs):
+        out, jobs = count_jobs(probe, *args, **kwargs)
+        probes.append(jobs)
+        return out
+
+    monkeypatch.setattr(store, "probe_stats", spy)
+    assert incremental_decimation(store, 3600) > 0
+    n_older = 15  # days 0..14 lie before the probe point's day
+    assert len(probes) == 1
+    assert 1 < probes[0] <= math.ceil(math.log2(n_older)) + 1, probes
+    assert _dec_rows(store.read_samples(3600)) == _dec_rows(
+        decimate(raw.unionByName(more), 3600)
+    )
+
+
+def test_derived_carry_rows_for_channels_at_different_marks(spark, tmp_path):
+    """Channels whose marks lie many periods apart catch up in one run,
+    each from its own carry row."""
+    store = _store(spark, tmp_path)
+    step = 10 * 60 * NS
+    first = _mini_raw(spark, "PV:A", range(0, 20 * HOUR, step)).unionByName(
+        _mini_raw(spark, "PV:B", range(0, 5 * HOUR, step))
+    )
+    store.write_samples(first, level=0)
+    assert incremental_decimation(store, 3600) > 0
+    marks = store.channel_hwm(3600)
+    assert marks["PV:A"] - marks["PV:B"] >= 10 * HOUR
+    second = _mini_raw(spark, "PV:A", range(20 * HOUR, 30 * HOUR, step))
+    second = second.unionByName(
+        _mini_raw(spark, "PV:B", range(5 * HOUR, 25 * HOUR, step))
+    )
+    store.write_samples(second, level=0)
+    assert incremental_decimation(store, 3600) > 0
+    assert _dec_rows(store.read_samples(3600)) == _dec_rows(
+        decimate(first.unionByName(second), 3600)
+    )
+
+
+def test_derived_carry_rows_read_the_probed_source_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    """A source append committed between the probe and the scan is not
+    part of the run: the source marks, the probe and the scan read one
+    source version, so the level equals a from-scratch decimation of
+    that version, and the next run picks the append up."""
+    store = _store(spark, tmp_path)
+    step = 10 * 60 * NS
+    first = _mini_raw(spark, "PV:A", range(0, 10 * HOUR, step))
+    store.write_samples(first, level=0)
+    assert incremental_decimation(store, 3600) > 0
+    second = _mini_raw(spark, "PV:A", range(10 * HOUR, 20 * HOUR, step))
+    store.write_samples(second, level=0)
+    late = _mini_raw(spark, "PV:A", [30 * HOUR])  # closes windows up to 29 h
+
+    probe = store.probe_stats
+    committed = []
+
+    def spy(*args, **kwargs):
+        out = probe(*args, **kwargs)
+        store.write_samples(late, level=0)
+        committed.append(store.level_versions(0)[-1])
+        return out
+
+    monkeypatch.setattr(store, "probe_stats", spy)
+    assert incremental_decimation(store, 3600) > 0
+    monkeypatch.undo()
+    assert committed
+    pinned = first.unionByName(second)
+    assert _dec_rows(store.read_samples(3600)) == _dec_rows(
+        decimate(pinned, 3600)
+    )
+    assert incremental_decimation(store, 3600) > 0
+    assert _dec_rows(store.read_samples(3600)) == _dec_rows(
+        decimate(pinned.unionByName(late), 3600)
+    )
+
+
+def test_derived_carry_row_removed_by_source_retention(spark, tmp_path):
+    """A channel whose carry row already expired from the source: the
+    run decimates what the source retains, so every window after the
+    target's mark equals a from-scratch decimation of the retained
+    source."""
+    store = _store(spark, tmp_path)
+    day = 24 * HOUR
+    raw = _mini_raw(spark, "PV:A", [k * HOUR for k in range(3 * 24)])
+    raw = raw.unionByName(
+        _mini_raw(spark, "PV:S", [HOUR // 2, 2 * day + 12 * HOUR + HOUR // 2])
+    )
+    store.write_samples(raw, level=0)
+    assert incremental_decimation(store, 3600) > 0
+    marks = store.channel_hwm(3600)
+    assert marks["PV:S"] == 2 * day + 11 * HOUR
+    # the sparse channel's carry row (0.5 h) expires with day 0
+    store.delete_older_than(0, day)
+    assert store.read_samples(0, hi_ns=day - 1).count() == 0
+    more = _mini_raw(spark, "PV:A", [3 * day + k * HOUR for k in range(24)])
+    more = more.unionByName(_mini_raw(spark, "PV:S", [3 * day + 6 * HOUR]))
+    store.write_samples(more, level=0)
+    assert incremental_decimation(store, 3600) > 0
+
+    retained = raw.filter(F.col("t") >= day).unionByName(more)
+    got = _dec_rows(store.read_samples(3600), after=marks)
+    assert any(r[0] == "PV:S" for r in got)
+    assert got == _dec_rows(decimate(retained, 3600), after=marks)
+
+
+def test_legacy_seed_table_is_ignored_and_removed(spark, tmp_path):
+    """A store written while carry rows were persisted still holds a
+    ``meta/seed_level=3600`` table: the next run neither reads it (its
+    rows here are deliberately wrong) nor keeps it."""
+    store = _store(spark, tmp_path)
+    step = 10 * 60 * NS
+    first = _mini_raw(spark, "PV:A", range(0, 10 * HOUR, step))
+    store.write_samples(first, level=0)
+    assert incremental_decimation(store, 3600) > 0
+    legacy = ManifestTable(spark, f"{store.root}/meta/seed_level=3600")
+    stage = legacy.stage_dir()
+    spark.createDataFrame(
+        [("PV:A", 9 * HOUR, -1e9, 0, 0, 0, 10 * HOUR)],
+        SCHEMA + ", _src_level int, _src_hwm long",
+    ).coalesce(1).write.parquet(stage)
+    legacy.publish_stage(stage)
+    second = _mini_raw(spark, "PV:A", range(10 * HOUR, 20 * HOUR, step))
+    store.write_samples(second, level=0)
+    assert incremental_decimation(store, 3600) > 0
+    assert not os.path.exists(f"{tmp_path}/archive/meta/seed_level=3600")
+    assert _dec_rows(store.read_samples(3600)) == _dec_rows(
+        decimate(first.unionByName(second), 3600)
+    )

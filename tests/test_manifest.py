@@ -349,6 +349,63 @@ def test_keep_versions_zero_rejected(spark, tmp_path):
         ArchiveStore(spark, str(tmp_path / "kv0"), keep_versions=0)
 
 
+def test_append_prunes_manifests_beyond_keep_versions(spark, tmp_path):
+    """Every append used to leave one more manifest, each carrying the
+    level's O(#channels) marks map: write_samples now keeps only the
+    newest ``keep_versions`` of them, and its data reads back whole."""
+    store = ArchiveStore(spark, str(tmp_path / "prune"))  # keep_versions=2
+    batch = _mini_samples(spark)
+    for i in range(5):
+        store.write_samples(batch.withColumn("t", F.col("t") + i), level=0)
+        assert len(store.level_versions(0)) <= store.keep_versions
+    assert store.level_versions(0) == [3, 4]
+    assert store.read_samples(0).count() == 5 * batch.count()
+
+
+def test_pinned_reader_reads_through_one_concurrent_append(spark, tmp_path):
+    """A reader pinned to the current version (planned before an append
+    lands) reads that snapshot after the append and its pruning: the
+    append keeps the previous version, and replaced no data file."""
+    store = ArchiveStore(spark, str(tmp_path / "pin"))  # keep_versions=2
+    a, b = _mini_samples(spark, parity=0), _mini_samples(spark, parity=1)
+    store.write_samples(a, level=0)
+    store.write_samples(b, level=0)
+    pinned = store.level_versions(0)[-1]
+    df = store.read_samples(0, at_version=pinned)
+    store.write_samples(a.withColumn("t", F.col("t") + 1), level=0)
+    assert store.level_versions(0) == [pinned, pinned + 1]
+    want = sorted(map(tuple, a.unionByName(b).collect()))
+    assert sorted(map(tuple, df.collect())) == want
+    again = store.read_samples(0, at_version=pinned)
+    assert sorted(map(tuple, again.collect())) == want
+
+
+def test_prune_spares_version_committed_after_its_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    """A commit landing right after the pruner lists the versions is
+    newer than every version it may delete: it survives and stays
+    current."""
+    t = _mk(spark, str(tmp_path / "t"))
+    for _ in range(3):
+        _write_files(spark, t, 1)
+    orig = ManifestTable.versions
+    late = []
+
+    def racing(self):
+        vs = orig(self)
+        if not late:
+            late.append(None)
+            late.append(t.commit(add=[]))  # the concurrent writer
+        return vs
+
+    monkeypatch.setattr(ManifestTable, "versions", racing)
+    t._prune_manifests(keep_versions=2)
+    monkeypatch.setattr(ManifestTable, "versions", orig)
+    assert late[1] == 3
+    assert t.versions() == [1, 2, 3] and t.current_version() == 3
+
+
 class TestPairStore:
     def _docs(self, spark, rows):
         return spark.createDataFrame(rows, "doc_id bigint, text string")
