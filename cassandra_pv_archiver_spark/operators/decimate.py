@@ -54,13 +54,21 @@ def big_to_double(col: str) -> str:
     casts plus IEEE mul/add in a fixed order, so *both* engines produce the
     bit-identical double (good to ~2^117).  The DuckDB mirror is
     :func:`big_to_double_duck` — same ops, `//` for integral division.
-    """
+
+    Fast path: ``abs(x) < 2^63 - 1`` takes ``CAST(CAST(x AS BIGINT) AS
+    DOUBLE)``, skipping the four BigDecimal div/mod ops. It is
+    bit-identical to the decomposition there: hi is 0, so the hi term is
+    0.0, ``mid·2^32`` (mid < 2^31) and ``lo`` (< 2^32) are exact doubles,
+    and their IEEE sum rounds the exact ``|x|`` once to nearest-even —
+    as Java's long→double conversion does, symmetrically in sign."""
     a = f"abs({col})"
     return (
-        f"((CASE WHEN {col} < 0 THEN -1.0 ELSE 1.0 END) * ("
+        f"(CASE WHEN {a} < 9223372036854775807"
+        f" THEN CAST(CAST({col} AS BIGINT) AS DOUBLE)"
+        f" ELSE (CASE WHEN {col} < 0 THEN -1.0 ELSE 1.0 END) * ("
         f"CAST({a} div {_B64} AS DOUBLE) * {_B64}.0 + "
         f"CAST(({a} % {_B64}) div {_B32} AS DOUBLE) * {_B32}.0 + "
-        f"CAST({a} % {_B32} AS DOUBLE)))"
+        f"CAST({a} % {_B32} AS DOUBLE)) END)"
     )
 
 
@@ -429,18 +437,23 @@ def decimate(
         F.expr("count(1) AS n_samples"),
     )
     swd = "CAST(_sw AS DOUBLE)"
-    grid_mean = (
+    # each sum converts ONCE per row, in its own Project: inlined into
+    # the CASE branches below, subexpression elimination cannot reach
+    # it and _swv would be decomposed three times
+    g = g.selectExpr(
+        "*",
         f"({big_to_double('_swv')} / {swd} / CAST({vs} AS DOUBLE))"
+        " AS _gmean",
+        f"{big_to_double('_swv2')} AS _dwv2",
     )
     grid_var = (
-        f"({big_to_double('_swv2')} / {swd} / CAST({vs * vs} AS DOUBLE)"
-        f" - {grid_mean} * {grid_mean})"
+        f"(_dwv2 / {swd} / CAST({vs * vs} AS DOUBLE) - _gmean * _gmean)"
     )
     grid_std = f"sqrt(greatest({grid_var}, 0.0D))"
     # non-finite windows: the integer grid saw garbage (NaN->0), so
     # replace with the Java double-sum outcome (_inf_flag_aggs doc);
     # any non-finite v makes the variance inf-inf or NaN -> std is NaN
-    mean = _nonfinite_mean_sql(grid_mean, "_has_nan", "_pi_v", "_ni_v")
+    mean = _nonfinite_mean_sql("_gmean", "_has_nan", "_pi_v", "_ni_v")
     std = (
         "CASE WHEN _has_nan OR _pi_v OR _ni_v THEN double('NaN')"
         f" ELSE {grid_std} END"
@@ -542,12 +555,16 @@ def reaggregate(
         _severity_agg(),
         F.expr("sum(n_samples) AS n_samples"),
     )
-    # every one of these sums can exceed 2^53 (weights carry the frac scale)
-    swd = big_to_double("_sw")
-    grid_mean = f"({big_to_double('_swm')} / {swd} / CAST({rs} AS DOUBLE))"
+    # every one of these sums can exceed 2^53 (weights carry the frac
+    # scale); each converts once per row, as in decimate
+    g = g.selectExpr(
+        "*",
+        f"{big_to_double('_sw')} AS _dw",
+        f"{big_to_double('_swm')} AS _dwm",
+        f"{big_to_double('_swm2')} AS _dwm2",
+    ).selectExpr("*", f"(_dwm / _dw / CAST({rs} AS DOUBLE)) AS _gmean")
     grid_var = (
-        f"({big_to_double('_swm2')} / {swd} / CAST({rs * rs} AS DOUBLE)"
-        f" - {grid_mean} * {grid_mean})"
+        f"(_dwm2 / _dw / CAST({rs * rs} AS DOUBLE) - _gmean * _gmean)"
     )
     grid_std = f"sqrt(greatest({grid_var}, 0.0D))"
     # non-finite source aggregates (see _inf_flag_aggs): the mean sum only
@@ -555,7 +572,7 @@ def reaggregate(
     # std^2 + mean^2, so a NaN in either poisons it, an infinite mean
     # makes var = inf - inf = NaN, and an infinite std alone makes
     # var = +inf -> std = +inf (Java Math.sqrt(inf))
-    mean = _nonfinite_mean_sql(grid_mean, "_nan_m", "_pi_m", "_ni_m")
+    mean = _nonfinite_mean_sql("_gmean", "_nan_m", "_pi_m", "_ni_m")
     std = (
         "CASE WHEN _nan_m OR _nan_s OR _pi_m OR _ni_m THEN double('NaN')"
         " WHEN _pi_s THEN double('inf')"
@@ -563,7 +580,7 @@ def reaggregate(
     )
     # sw is ns·frac-units: /1e9 -> s·frac-units, /rs -> s, /target -> fraction
     frac = (
-        f"({swd} / 1.0E9 / CAST({rs} AS DOUBLE)"
+        f"(_dw / 1.0E9 / CAST({rs} AS DOUBLE)"
         f" / CAST({target_period_s} AS DOUBLE))"
     )
     vmin, vmax = _extrema_cols()

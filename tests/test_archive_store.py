@@ -1425,22 +1425,36 @@ def _parquet_files(root: str) -> set[str]:
     return set(glob.glob(f"{root}/**/*.parquet", recursive=True))
 
 
-def _assert_store_format(path: str) -> None:
-    """zstd on every column, v2 data pages, and ``t`` delta-packed."""
+def _column_chunks(path: str) -> list:
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
-    for g in range(md.num_row_groups):
-        rg = md.row_group(g)
-        for i in range(rg.num_columns):
-            col = rg.column(i)
-            where = (path, col.path_in_schema)
-            assert col.compression == "ZSTD", where
-            # v1 pages name their dictionary encoding PLAIN_DICTIONARY;
-            # v2 pages write RLE_DICTIONARY
-            assert "PLAIN_DICTIONARY" not in col.encodings, where
-            if col.path_in_schema == "t":
-                assert col.encodings == ("DELTA_BINARY_PACKED",), where
+    return [
+        md.row_group(g).column(i)
+        for g in range(md.num_row_groups)
+        for i in range(md.num_columns)
+    ]
+
+
+def _has_dictionary(col) -> bool:
+    """A column chunk with a dictionary page or a ``*_DICTIONARY``
+    encoding (v1 pages name it PLAIN_DICTIONARY, v2 RLE_DICTIONARY)."""
+    return col.has_dictionary_page or any(
+        e.endswith("_DICTIONARY") for e in col.encodings
+    )
+
+
+def _assert_store_format(path: str) -> None:
+    """zstd on every column, v2 data pages, ``t`` delta-packed, and no
+    dictionary on any floating-point column."""
+    for col in _column_chunks(path):
+        where = (path, col.path_in_schema)
+        assert col.compression == "ZSTD", where
+        assert "PLAIN_DICTIONARY" not in col.encodings, where
+        if col.path_in_schema == "t":
+            assert col.encodings == ("DELTA_BINARY_PACKED",), where
+        if col.physical_type in ("DOUBLE", "FLOAT"):
+            assert not _has_dictionary(col), where
 
 
 def _two_day_raw(spark, shift_ns: int = 0):
@@ -1455,7 +1469,8 @@ def _two_day_raw(spark, shift_ns: int = 0):
 
 def test_every_store_write_uses_the_store_format(spark, tmp_path):
     """Each write path adds files, and every file it adds is zstd with
-    v2 pages and a DELTA_BINARY_PACKED ``t``, on every level it writes."""
+    v2 pages, a DELTA_BINARY_PACKED ``t`` and no dictionary on a double
+    column (an ADD COLUMN double included), on every level it writes."""
     store = _store(spark, tmp_path)
     root = str(tmp_path / "archive")
     seen: set[str] = set()
@@ -1478,6 +1493,14 @@ def test_every_store_write_uses_the_store_format(spark, tmp_path):
     seen.update(_parquet_files(root))
     step("compact", store.compact, 0)
     step("delete_older_than", store.delete_older_than, 0, DAY_NS // 2)
+    added = step(
+        "write_samples(ADD COLUMN double)", store.write_samples,
+        _two_day_raw(spark, 50 * NS).withColumn("v2", F.col("v") / 7), 0,
+    )
+    assert {
+        c.path_in_schema for f in added
+        for c in _column_chunks(f) if c.physical_type == "DOUBLE"
+    } == {"v", "v2"}
     added = step("rename_channel", store.rename_channel, "PV:0", "PV:9")
     for table in ("samples/decimation_level=0/",
                   "samples/decimation_level=3600/"):
@@ -1488,10 +1511,9 @@ def test_legacy_v1_snappy_files_read_back_and_compact_converts(
     spark, tmp_path
 ):
     """A level holding a file from Spark's default writer (v1 pages,
-    snappy) next to store-format files reads back exactly; compact
-    rewrites it into the store format with the same rows."""
-    import pyarrow.parquet as pq
-
+    snappy, dictionary-encoded doubles) next to store-format files reads
+    back exactly; compact rewrites it into the store format with the
+    same rows."""
     from cassandra_pv_archiver_spark.sources.archive_store import _date_expr
 
     store = _store(spark, tmp_path)
@@ -1504,9 +1526,14 @@ def test_legacy_v1_snappy_files_read_back_and_compact_converts(
         "date"
     ).parquet(stage)
     added = table.publish_stage(stage)
-    old = pq.ParquetFile(f"{tmp_path}/archive/samples/decimation_level=0/"
-                         f"{added[0]}").metadata.row_group(0)
-    assert old.column(0).compression == "SNAPPY"
+    old = {
+        c.path_in_schema: c
+        for c in _column_chunks(
+            f"{tmp_path}/archive/samples/decimation_level=0/{added[0]}"
+        )
+    }
+    assert old["channel"].compression == "SNAPPY"
+    assert _has_dictionary(old["v"])
 
     want = sorted(map(tuple, new.union(legacy).collect()))
     assert sorted(map(tuple, store.read_samples(0).collect())) == want
@@ -1629,25 +1656,17 @@ def test_ingest_batch_commits_one_version_per_level(
         assert count_jobs(store.channel_hwm, lvl)[1] == 0
 
 
-def test_legacy_level_marks_derive_from_log_and_data(
-    spark, tmp_path, count_jobs
-):
-    """A level written before marks moved into its manifest: a DDL-only
-    header next to the old ``meta/hwm_level=0`` append-log. Its marks
-    are the per-channel max of the log and the data — exact for rows
-    above the log's mark (the old two-commit crash window), for a
-    channel with rows but no log entry, and for a channel retention
-    emptied — so a replayed batch appends nothing, and the next write
-    puts the map into the header."""
+def _plant_legacy_level(spark, root) -> ManifestTable:
+    """Level 0 as written before marks moved into its manifest: a
+    DDL-only header over rows of PV:A (t 0..14 s) and PV:B (0..4 s),
+    next to the old ``meta/hwm_level=0`` append-log holding PV:A at 9 s
+    and PV:C (rows retention emptied) at 50 s."""
     from cassandra_pv_archiver_spark.sources.archive_store import (
         HWM_SCHEMA,
         RAW_SCHEMA,
         _date_expr,
         _parse_header,
     )
-    from cassandra_pv_archiver_spark.streaming.ingest import ingest_batch
-
-    root = tmp_path / "archive"
 
     def publish(rel, df, header=None):
         table = ManifestTable(spark, str(root / rel))
@@ -1673,6 +1692,25 @@ def test_legacy_level_marks_derive_from_log_and_data(
     publish("meta/hwm_level=0", spark.createDataFrame(
         [("PV:A", 9 * NS), ("PV:C", 50 * NS)], HWM_SCHEMA))
     assert _parse_header(level.header()) == (RAW_SCHEMA, None)
+    return level
+
+
+def test_legacy_level_marks_derive_from_log_and_data(
+    spark, tmp_path, count_jobs
+):
+    """A level written before marks moved into its manifest: a DDL-only
+    header next to the old ``meta/hwm_level=0`` append-log. Its marks
+    are the per-channel max of the log and the data — exact for rows
+    above the log's mark (the old two-commit crash window), for a
+    channel with rows but no log entry, and for a channel retention
+    emptied — so a replayed batch appends nothing, and the next write
+    puts the map into the header."""
+    from cassandra_pv_archiver_spark.sources.archive_store import (
+        _parse_header,
+    )
+    from cassandra_pv_archiver_spark.streaming.ingest import ingest_batch
+
+    level = _plant_legacy_level(spark, tmp_path / "archive")
 
     store = _store(spark, tmp_path)
     want = {"PV:A": 14 * NS, "PV:B": 4 * NS, "PV:C": 50 * NS}
@@ -1693,6 +1731,44 @@ def test_legacy_level_marks_derive_from_log_and_data(
     ddl, marks = _parse_header(level.header())
     assert marks == want and "`severity` int" in ddl
     assert count_jobs(_store(spark, tmp_path).channel_hwm, 0) == (want, 0)
+
+
+def test_compact_deletes_legacy_hwm_log_once_no_version_needs_it(
+    spark, tmp_path
+):
+    """A legacy level converts on its next write; ``compact`` deletes the
+    old ``meta/hwm_level=0`` log only once every retained version's
+    header carries marks, and each retained version's marks read the
+    same after the delete as before it."""
+    root = tmp_path / "archive"
+    log = root / "meta" / "hwm_level=0"
+    _plant_legacy_level(spark, root)
+    store = ArchiveStore(spark, str(root), keep_versions=3)
+    legacy = {"PV:A": 14 * NS, "PV:B": 4 * NS, "PV:C": 50 * NS}
+
+    def write(t_s):
+        store.write_samples(
+            spark.createDataFrame([("PV:B", t_s * NS, 1.0, 0, 0)], SCHEMA), 0
+        )
+
+    def marks():
+        fresh = ArchiveStore(spark, str(root), keep_versions=3)
+        return {v: fresh.channel_hwm(0, v) for v in fresh.level_versions(0)}
+
+    write(5)  # converts: retained = [legacy, converted]
+    store.compact(0)  # retained = [legacy, converted, compacted]
+    assert log.exists()
+    before = marks()
+    assert before[min(before)] == legacy
+    write(6)  # the append prunes the legacy version
+    before = marks()
+    store.compact(0)
+    assert not log.exists()
+    after = marks()
+    assert all(after[v] == before[v] for v in after if v in before)
+    assert after[max(after)] == before[max(before)] == {
+        **legacy, "PV:B": 6 * NS,
+    }
 
 
 # -- derived carry rows -------------------------------------------------------

@@ -391,3 +391,94 @@ class TestNonFiniteValues:
         want_mean = (w1 * 2.0 + w2 * 4.0) / (w1 + w2)
         assert abs(got.mean - want_mean) < 1e-9
         assert got.std == float("inf")
+
+
+# -- the exact-sum -> double kernel ---------------------------------------
+_KERNEL_VALUES = [0] + [
+    s * x
+    for x in (
+        1, 2**53 - 1, 2**53, 2**53 + 1, 2**63 - 2, 2**63 - 1, 2**63,
+        2**64 + 3, 10**37 + 7,
+    )
+    for s in (1, -1)
+]
+
+
+def _decomposed(col: str) -> str:
+    """``big_to_double`` without its fast path: sign x (hi·2^64 +
+    mid·2^32 + lo), every value through BigDecimal div/mod."""
+    a = f"abs({col})"
+    return (
+        f"((CASE WHEN {col} < 0 THEN -1.0 ELSE 1.0 END) * ("
+        f"CAST({a} div 18446744073709551616 AS DOUBLE)"
+        " * 18446744073709551616.0 + "
+        f"CAST(({a} % 18446744073709551616) div 4294967296 AS DOUBLE)"
+        " * 4294967296.0 + "
+        f"CAST({a} % 4294967296 AS DOUBLE)))"
+    )
+
+
+def test_big_to_double_fast_path_is_bit_identical(spark):
+    """The fast path, the full decomposition and the DuckDB mirror give
+    the same double, bit for bit, on both sides of 2^53 and 2^63; below
+    2^63 - 1 that double is the correctly rounded one."""
+    import struct
+    from decimal import Decimal
+
+    import duckdb
+
+    from cassandra_pv_archiver_spark.operators.decimate import (
+        big_to_double,
+        big_to_double_duck,
+    )
+
+    def bits(x: float) -> bytes:
+        return struct.pack("<d", x)
+
+    df = spark.createDataFrame(
+        [(i, Decimal(x)) for i, x in enumerate(_KERNEL_VALUES)],
+        "i int, x decimal(38,0)",
+    )
+    got = df.selectExpr(
+        "i", f"{big_to_double('x')} AS fast", f"{_decomposed('x')} AS old"
+    ).orderBy("i").collect()
+    con = duckdb.connect()
+    try:
+        duck = [
+            con.execute(
+                f"SELECT {big_to_double_duck('x')}"
+                " FROM (SELECT CAST(? AS HUGEINT) AS x)",
+                [str(x)],
+            ).fetchone()[0]
+            for x in _KERNEL_VALUES
+        ]
+    finally:
+        con.close()
+    for x, r, d in zip(_KERNEL_VALUES, got, duck):
+        assert bits(r.fast) == bits(r.old) == bits(d), x
+        if abs(x) < 2**63 - 1:
+            assert bits(r.fast) == bits(float(x)), x
+
+
+def _conversions(df) -> dict:
+    """Sum name -> how many times the optimized plan converts it to a
+    double (each conversion holds exactly one ``abs(sum) % 2^32``)."""
+    import re
+    from collections import Counter
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return dict(Counter(re.findall(r"abs\((\w+)#\d+\) % 4294967296\)", plan)))
+
+
+def test_kernels_convert_each_exact_sum_once(spark):
+    """The optimized plans convert each DECIMAL sum to a double exactly
+    once per output row: 2 in decimate, 3 in reaggregate. Inlined into
+    the final CASE branches (where subexpression elimination does not
+    reach) decimate would convert ``_swv`` 3 times and reaggregate
+    ``_sw`` 5 times."""
+    raw = _raw(spark, [("a", 0, 1.5, 0, 0), ("a", 7, 2.25, 0, 0)])
+    agg = _agg(spark, [("a", 0, 1.5, 0.5, 1.0, 2.0, 1.0, 0, 0, 2)])
+    assert _conversions(decimate(raw, 30)) == {"_swv": 1, "_swv2": 1}
+    assert _conversions(reaggregate(agg, 30, 900)) == {
+        "_sw": 1, "_swm": 1, "_swm2": 1,
+    }
