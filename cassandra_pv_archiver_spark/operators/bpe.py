@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache_scope
+
 #: end-of-word marker (its own symbol, as in the reference algorithm)
 EOW = "</w>"
 
@@ -88,29 +90,29 @@ def bpe_learn(
 
     The vocab is cached once (<= max_words rows) so the corpus is
     scanned exactly once across all iterations; each iteration's argmax
-    is a one-row bounded collect (documented justified-collect)."""
+    is a one-row bounded collect (documented justified-collect); the
+    cache lives for this call, an exception mid-loop included."""
     spark = docs.sparkSession
-    vocab = bpe_vocab(docs, max_words, max_word_len).cache()
-    syms = vocab.select("cnt", F.expr(_CHARS).alias("syms"))
-
     merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        pairs = (
-            syms.filter("size(syms) >= 2")
-            .select("cnt", F.explode(F.expr(_PAIRS)).alias("p"))
-            .groupBy(F.col("p.l").alias("lhs"), F.col("p.r").alias("rhs"))
-            .agg(F.sum("cnt").alias("c"))
-        )
-        best = pairs.orderBy(F.desc("c"), "lhs", "rhs").limit(1).collect()
-        if not best:
-            break
-        lhs, rhs, c = best[0]["lhs"], best[0]["rhs"], int(best[0]["c"])
-        merged = lhs + rhs
-        merges.append((rank, lhs, rhs, merged, c))
-        syms = syms.select(
-            "cnt", F.expr(_merge_expr(lhs, rhs, merged)).alias("syms")
-        )
-    vocab.unpersist()
+    with cache_scope.scope():
+        vocab = cache_scope.persist(bpe_vocab(docs, max_words, max_word_len))
+        syms = vocab.select("cnt", F.expr(_CHARS).alias("syms"))
+        for rank in range(1, n_merges + 1):
+            pairs = (
+                syms.filter("size(syms) >= 2")
+                .select("cnt", F.explode(F.expr(_PAIRS)).alias("p"))
+                .groupBy(F.col("p.l").alias("lhs"), F.col("p.r").alias("rhs"))
+                .agg(F.sum("cnt").alias("c"))
+            )
+            best = pairs.orderBy(F.desc("c"), "lhs", "rhs").limit(1).collect()
+            if not best:
+                break
+            lhs, rhs, c = best[0]["lhs"], best[0]["rhs"], int(best[0]["c"])
+            merged = lhs + rhs
+            merges.append((rank, lhs, rhs, merged, c))
+            syms = syms.select(
+                "cnt", F.expr(_merge_expr(lhs, rhs, merged)).alias("syms")
+            )
     return spark.createDataFrame(
         merges, "rank int, lhs string, rhs string, merged string, pair_count long"
     )

@@ -34,9 +34,14 @@ Design for 100 TB / 100k channels:
     alone makes a replayed write a no-op. :meth:`ArchiveStore.channel_hwm`
     parses the header on the driver, never a Spark job. The map is
     O(#channels) per manifest, the same order as the manifest's O(#files)
-    list.
+    list. This JSON record is the ONE header format a level version
+    has: a level whose manifest carries no such header (the bare schema
+    DDL, or no header at all, from before marks moved into the manifest)
+    is refused with a ``ValueError`` naming the level, never read with
+    an empty or guessed map — the monotonic guard would then re-append
+    every replayed row.
   * **File format**: every data file the store writes goes through
-    :meth:`ArchiveStore._write`, which fixes Parquet v2 data pages,
+    :meth:`ArchiveStore._publish`, which fixes Parquet v2 data pages,
     zstd, and no dictionary on ``t``. v2 pages fall back
     to ``DELTA_BINARY_PACKED`` for int64 columns, so the (channel, t)
     sort order makes a regularly spaced ``t`` cost about one bit per row
@@ -69,11 +74,11 @@ from __future__ import annotations
 
 import json
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, FloatType
+from pyspark.sql.types import DoubleType, FloatType, StructType
 
+from .. import cache_scope
 from ..plans.planner import probe_triples
 from .fs import HadoopFS
 from .manifest import ManifestTable
@@ -93,7 +98,7 @@ HWM_SCHEMA = "channel string, hwm long"
 
 #: per-write Parquet options of every store file (module docstring,
 #: "File format"); per-write so the session's other writers are untouched.
-#: ``_write`` adds ``parquet.enable.dictionary#<col>=false`` for each
+#: ``_publish`` adds ``parquet.enable.dictionary#<col>=false`` for each
 #: floating-point column of the frame it writes
 _PARQUET_OPTIONS = {
     "compression": "zstd",
@@ -141,24 +146,30 @@ class ArchiveStore:
         #: all metadata path ops go through Hadoop FileSystem so the store
         #: works on file:/hdfs:/s3a: alike — no local-FS-only primitives
         self.fs = HadoopFS(spark, self.root)
-        #: parsed-schema cache keyed by (level, manifest version) and,
-        #: for the legacy footer fallback, by data-file path — safe to
-        #: cache forever because manifests and data files are both
-        #: immutable (manifest.py contract)
-        self._schema_cache: dict = {}
-        #: level -> (version, (schema DDL, hwm map)) of the newest header
-        #: parsed: one O(#channels) map per level, never one per version
+        #: level -> (version, schema, hwm map) of the last header parsed:
+        #: one entry per level serves both :meth:`level_schema` and
+        #: :meth:`channel_hwm`, never one per version
         self._header_cache: dict = {}
 
     def _level_header(self, level: int, version: int):
-        """``(schema DDL, hwm map)`` of one level version's manifest
-        header, parsed once (manifests are immutable); either is None
-        when the header predates it."""
+        """``(schema, hwm map)`` of one level version's manifest header,
+        parsed once while it is the level's last one read (manifests are
+        immutable). A version without the JSON ``{"schema", "hwm"}``
+        header is refused (module docstring, "High-water mark")."""
         got = self._header_cache.get(level)
         if got is None or got[0] != version:
             hdr = self._level_table(level).header(version)
-            got = self._header_cache[level] = (version, _parse_header(hdr))
-        return got[1]
+            try:
+                ddl, hwm = _parse_header(hdr)
+            except ValueError as e:
+                raise ValueError(
+                    f"level {level} version {version}: {e}; the store "
+                    "reads only levels whose manifest header carries their "
+                    "high-water marks"
+                ) from None
+            schema = None if ddl is None else StructType.fromDDL(ddl)
+            got = self._header_cache[level] = (version, schema, hwm)
+        return got[1], got[2]
 
     # -- schema evolution (ADD COLUMN) ------------------------------------
     def level_schema(self, level: int, at_version: int | None = None):
@@ -176,45 +187,21 @@ class ArchiveStore:
         list), rename — carries the header forward by default. Iceberg
         records schemas in table metadata the same way.
 
-        Manifests from before headers existed fall back to ONE
-        driver-side footer read of the newest committed file (cached;
-        files are immutable) — correct for them because their writes
-        all predate evolution support.
+        The header is the level's one schema record: a level version
+        without it is refused (:meth:`_level_header`), never inferred
+        from file footers. The parsed header is cached per level, so a
+        read of the version last parsed costs one listdir
+        (current_version), not a re-read of the ~10^5-line manifest.
 
         Old files simply lack the new columns and read as NULL (the
         reference's pendant: a new per-sample metadata field arriving in
         mid-history — Cassandra's sparse rows return null for cells
         written before the column existed)."""
-        from pyspark.sql.types import StructType
-
-        table = self._level_table(level)
-        version = (
-            at_version if at_version is not None else table.current_version()
-        )
-        if version is None:
+        if at_version is None:
+            at_version = self._level_table(level).current_version()
+        if at_version is None:
             return None
-        # manifests are immutable per version: cache the parsed schema so
-        # a read costs one listdir (current_version), not a re-read and
-        # re-parse of the whole ~10^5-line manifest text per query
-        key = (level, version)
-        cached = self._schema_cache.get(key)
-        if cached is not None:
-            return cached
-        ddl, _ = self._level_header(level, version)
-        if ddl is not None:
-            schema = StructType.fromDDL(ddl)
-            self._schema_cache[key] = schema
-            return schema
-        rel = table.files(version)
-        if not rel:
-            return None
-        newest = f"{self._level_path(level)}/{rel[-1]}"
-        schema = self._schema_cache.get(newest)
-        if schema is None:
-            schema = self.spark.read.parquet(newest).schema
-            self._schema_cache[newest] = schema
-        self._schema_cache[key] = schema
-        return schema
+        return self._level_header(level, at_version)[0]
 
     def _read_level_files(
         self, level: int, paths: list[str], at_version: int | None = None
@@ -237,11 +224,6 @@ class ArchiveStore:
     def _level_path(self, level: int) -> str:
         return f"{self.samples_path}/decimation_level={level}"
 
-    def _hwm_log_path(self, level: int) -> str:
-        """The marks log of a level written before marks moved into its
-        manifest (:meth:`_legacy_hwm`)."""
-        return f"{self.root}/meta/hwm_level={level}"
-
     def _level_table(self, level: int) -> ManifestTable:
         """Each decimation level is a ManifestTable: immutable data files
         + one rename-committed manifest per version — the crash-safe
@@ -251,14 +233,18 @@ class ArchiveStore:
         retention swaps are atomic to them."""
         return ManifestTable(self.spark, self._level_path(level))
 
-    def _write(
-        self, df: DataFrame, stage: str, partition_by: str | None = None
-    ) -> None:
-        """Write ``df`` into a fresh stage dir in the store's file format
-        (module docstring, "File format") — the one writer every store
-        table uses. ``maxRecordsPerFile`` bounds files the way
-        ``MAX_BUCKET_SIZE_BYTES`` bounds a bucket, on every path: repeated
-        rewrites of a hot partition must not accrete files past it."""
+    def _publish(
+        self, table: ManifestTable, df: DataFrame, remove=(), header_fn=None
+    ) -> list[str]:
+        """Write ``df`` (which carries a ``date`` column) partitioned by
+        ``date`` into a fresh stage dir of ``table`` in the store's file
+        format (module docstring, "File format"), then publish it in ONE
+        commit dropping ``remove`` — the one writer of every store file.
+        A crashed writer leaves only unreferenced files for gc, never a
+        half-visible batch. ``maxRecordsPerFile`` bounds files the way
+        ``MAX_BUCKET_SIZE_BYTES`` bounds a bucket, on every path:
+        repeated rewrites of a hot partition must not accrete files past
+        it. Returns the committed relative paths."""
         w = (
             df.write.options(**_PARQUET_OPTIONS)
             .option("maxRecordsPerFile", self.max_records_per_file)
@@ -267,9 +253,9 @@ class ArchiveStore:
         for f in df.schema.fields:
             if isinstance(f.dataType, (DoubleType, FloatType)):
                 w = w.option(f"parquet.enable.dictionary#{f.name}", "false")
-        if partition_by is not None:
-            w = w.partitionBy(partition_by)
-        w.parquet(stage)
+        stage = table.stage_dir()
+        w.partitionBy("date").parquet(stage)
+        return table.publish_stage(stage, remove=remove, header_fn=header_fn)
 
     # -- write (S5) ------------------------------------------------------
     def write_samples(self, df: DataFrame, level: int) -> int:
@@ -290,9 +276,8 @@ class ArchiveStore:
         """
         cur = self.level_schema(level)
         if cur is not None:
-            # append-only evolution guard: the level_schema() fast path
-            # (newest footer = widest schema) holds only if no batch ever
-            # REGRESSES the schema; a shared column changing type would
+            # append-only evolution guard: no batch may REGRESS the
+            # level's header schema; a shared column changing type would
             # corrupt the parquet scan the same way
             missing = [
                 f.name for f in cur.fields if f.name not in df.columns
@@ -313,8 +298,8 @@ class ArchiveStore:
                         f"{have.get(f.name)} (type changes are not "
                         "supported; add a NEW column instead)"
                     )
-        df = df.persist()
-        try:
+        with cache_scope.scope():
+            df = cache_scope.persist(df)
             n, maxima = 0, {}
             for r in (
                 df.groupBy("channel")
@@ -340,14 +325,6 @@ class ArchiveStore:
                 .repartition("date", "channel")
                 .sortWithinPartitions("date", "channel", "t")
             )
-            # stage-then-publish: Spark writes a fresh hidden staging dir,
-            # then the files move into the hive layout and ONE manifest
-            # rename makes them visible — a crashed writer leaves only
-            # unreferenced files for gc, never a half-visible batch
-            table = self._level_table(level)
-            base = table.current_version()
-            stage = table.stage_dir()
-            self._write(out, stage, partition_by="date")
             # the level's schema and marks ride the manifest header: both
             # fold INSIDE the commit's rebase loop, so a concurrent append
             # can never be shadowed by this one (check-then-act on the
@@ -355,21 +332,14 @@ class ArchiveStore:
             batch_fields = [
                 (f.name, f.dataType.simpleString()) for f in df.schema.fields
             ]
-            table.publish_stage(
-                stage,
-                header_fn=_union_header_fn(
-                    batch_fields, legacy=cur, maxima=maxima,
-                    legacy_hwm=(
-                        None if base is None else self.channel_hwm(level, base)
-                    ),
-                ),
+            table = self._level_table(level)
+            self._publish(
+                table, out, header_fn=_union_header_fn(batch_fields, maxima)
             )
             # an append replaces no file, so only its manifest history
             # grows: each version carries the O(#channels) marks map
             table._prune_manifests(self.keep_versions)
             return n
-        finally:
-            df.unpersist()
 
     def channel_hwm(
         self, level: int, at_version: int | None = None
@@ -382,50 +352,15 @@ class ArchiveStore:
         version, minus channels removed by delete or rename (retention
         and compaction keep a channel's mark).
 
-        A level whose header predates the map (written before marks
-        moved into the manifest) derives it once per version from the
-        old ``meta/hwm_level=<level>`` log and the version's data files —
-        see :meth:`_legacy_hwm`; its next write or rewrite converts it."""
-        table = self._level_table(level)
-        version = (
-            at_version if at_version is not None else table.current_version()
-        )
-        if version is None:
+        The header is the level's one marks record: a level version
+        without it raises ``ValueError`` naming the level
+        (:meth:`_level_header`) — an empty map there would let the
+        monotonic guard re-append every replayed row."""
+        if at_version is None:
+            at_version = self._level_table(level).current_version()
+        if at_version is None:
             return None
-        ddl, hwm = self._level_header(level, version)
-        if hwm is None:
-            hwm = self._legacy_hwm(level, version)
-            self._header_cache[level] = (version, (ddl, hwm))
-        return dict(hwm)
-
-    def _legacy_hwm(self, level: int, version: int) -> dict[str, int]:
-        """Marks of a legacy level version: the per-channel max of the old
-        ``meta/hwm_level=<level>`` append-log's fold and of max(t) over
-        the version's files, in one job. Exact even for a store left
-        between the old layout's data and hwm commits (rows above the
-        log) and for a channel retention emptied (log only). This is the
-        one reader of the old layout; :meth:`compact` deletes the log
-        once no retained version needs it."""
-        log = ManifestTable(self.spark, self._hwm_log_path(level)).paths()
-        parts = []
-        if log:
-            parts.append(self.spark.read.schema(HWM_SCHEMA).parquet(*log))
-        files = self._level_files(level, at_version=version)
-        if files:
-            parts.append(
-                self._read_level_files(level, files, version).select(
-                    "channel", F.col("t").alias("hwm")
-                )
-            )
-        if not parts:
-            return {}
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        return {
-            r.channel: r.hwm
-            for r in df.groupBy("channel").agg(F.max("hwm").alias("hwm"))
-            .collect()
-            if r.channel is not None and r.hwm is not None
-        }
+        return dict(self._level_header(level, at_version)[1])
 
     # -- decimation carry rows (T3) --------------------------------------
     def read_seed_state(
@@ -756,20 +691,18 @@ class ArchiveStore:
             kept = self._read_level_files(
                 level, [f"{table.root}/{r}" for r in boundary]
             ).filter(F.col("t") >= cutoff_ns)
-            stage = table.stage_dir()
-            self._write(
+            self._publish(
+                table,
                 kept.withColumn("date", F.lit(cutoff_date))
                 .sortWithinPartitions("date", "channel", "t"),
-                stage,
-                partition_by="date",
+                remove=expired + boundary,
             )
-            table.publish_stage(stage, remove=expired + boundary)
         elif expired:
             table.commit(remove=expired)  # metadata-only, like bucket drops
         table.gc(keep_versions=self.keep_versions)
         return dropped
 
-    # -- compaction (96 MB rollover analog) ------------------------------
+    # -- channel rename / delete ----------------------------------------
     def rename_channel(self, old: str, new: str, preflighted: bool = False) -> int:
         """Rename a channel across every level, marks included — the
         reference's configuration rename/move operation
@@ -1071,9 +1004,7 @@ class ArchiveStore:
                 meta_all_levels and channel in self.channel_hwm(level, base)
             ):
                 continue
-            header_fn, before = self._marks_header_fn(
-                level, base, meta_transform, bool(hit)
-            )
+            header_fn, before = _marks_header_fn(meta_transform, bool(hit))
             affected: list[str] = []
             added: list[str] = []
             if hit:
@@ -1087,10 +1018,8 @@ class ArchiveStore:
                     .repartition("date", "channel")
                     .sortWithinPartitions("date", "channel", "t")
                 )
-                stage = table.stage_dir()
-                self._write(out, stage, partition_by="date")
-                added = table.publish_stage(
-                    stage, remove=affected, header_fn=header_fn
+                added = self._publish(
+                    table, out, remove=affected, header_fn=header_fn
                 )
             else:
                 table.commit(header_fn=header_fn)  # marks only
@@ -1098,26 +1027,6 @@ class ArchiveStore:
                 undo_log.append((table, added, affected, before["header"]))
             table.gc(keep_versions=self.keep_versions)
         return touched
-
-    def _marks_header_fn(
-        self, level: int, base: int, meta_transform, hit: bool
-    ):
-        """``(header_fn, before)`` for a rewrite commit on one level: the
-        header keeps the schema and maps the marks of the base the commit
-        builds on through ``meta_transform(marks, hit)`` (no Spark job);
-        ``before["header"]`` receives that base's header for
-        compensation."""
-        legacy_hwm = self.channel_hwm(level, base)
-        before: dict = {}
-
-        def _header_fn(prev: str | None) -> str:
-            ddl, hwm = _parse_header(prev)
-            if hwm is None:
-                hwm = legacy_hwm
-            before["header"] = _format_header(ddl, hwm)
-            return _format_header(ddl, meta_transform(hwm, hit))
-
-        return _header_fn, before
 
     @staticmethod
     def zorder_key_expr(channel_col: str = "channel", t_col: str = "t") -> str:
@@ -1142,6 +1051,7 @@ class ArchiveStore:
             terms.append(f"(shiftleft(shiftright({y}, {i}) & 1, {2 * i}))")
         return " | ".join(terms)
 
+    # -- compaction (96 MB rollover analog) ------------------------------
     def compact(
         self,
         level: int,
@@ -1165,9 +1075,9 @@ class ArchiveStore:
 
         ``target_files_per_partition=1`` is exact (each date is owned by
         one task); larger targets are a soft cap via (date, channel)
-        hashing. Rewritten files take the current store format, and after
-        the gc a converted legacy level sheds its old marks log
-        (:meth:`_drop_legacy_hwm_log`)."""
+        hashing. Rewritten files take the current store format (files
+        from Spark's default writer convert here); the manifest header,
+        schema and marks alike, carries forward unchanged."""
         table = self._level_table(level)
         by_date: dict[str, list[str]] = {}
         for r in table.files() or []:
@@ -1188,7 +1098,6 @@ class ArchiveStore:
         part_cols = (
             ["date"] if target_files_per_partition == 1 else ["date", "channel"]
         )
-        stage = table.stage_dir()
         if zorder:
             # multi-dim clustering: files cover (channel-hash x time)
             # rectangles so BOTH channel-slice and time-slice scans prune
@@ -1204,62 +1113,26 @@ class ArchiveStore:
             out = df.repartition(*part_cols).sortWithinPartitions(
                 "date", "channel", "t"
             )
-        self._write(out, stage, partition_by="date")
-        table.publish_stage(stage, remove=old)
+        self._publish(table, out, remove=old)
         table.gc(keep_versions=self.keep_versions)
-        self._drop_legacy_hwm_log(level)
-
-    def _drop_legacy_hwm_log(self, level: int) -> None:
-        """Delete a converted level's old ``meta/hwm_level=<level>`` log
-        once every retained version's header carries marks: only
-        :meth:`_legacy_hwm` reads the log, and only for a version
-        without them."""
-        log = self._hwm_log_path(level)
-        if not self.fs.exists(log):
-            return
-        table = self._level_table(level)
-        try:
-            marked = all(
-                _parse_header(table.header(v))[1] is not None
-                for v in table.versions()
-            )
-        except Py4JJavaError:  # a concurrent prune removed a manifest
-            return  # the next compact decides
-        if marked:
-            self.fs.delete(log)
 
 
 def _match_manifest_files(rel: list[str], hit: set[str]) -> list[str]:
     """Manifest-relative paths (in manifest order) whose data files
     appear in ``hit`` (absolute ``input_file_name()`` URIs).
 
-    O(|rel| + |hit|), replacing the old O(|rel| x |hit|) ``endswith``
-    scan (VERDICT r9 #7): each hit's table-relative path is its last 1-3
-    path segments (``date=.../file`` for a data level, bare ``file`` for
-    an unpartitioned table — basenames alone are NOT unique: one publish
-    writes the same part-file name into every date dir), looked up in a set of
-    the manifest's paths. A hit no suffix-key resolves (deeper layout
-    than any this store writes) falls back to the suffix scan for that
-    one hit. ``input_file_name`` percent-encodes special characters;
-    manifest paths are raw, hence the unquote."""
+    O(|rel| + |hit|): every level file lives at ``date=<day>/<file>``
+    (:meth:`ArchiveStore._publish`), so a hit's table-relative path is
+    its last two path segments — basenames alone are NOT unique, one
+    publish writes the same part-file name into every date dir.
+    ``input_file_name`` percent-encodes special characters; manifest
+    paths are raw, hence the unquote."""
     from urllib.parse import unquote
 
-    rel_set = set(rel)
-    matched: set[str] = set()
-    for h in hit:
-        hd = unquote(h.split("://", 1)[-1])
-        parts = hd.split("/")
-        # longest suffix first: the true relative path is the most
-        # specific match (a shorter key could alias a same-named file
-        # at a shallower layout depth)
-        for k in range(min(3, len(parts)), 0, -1):
-            cand = "/".join(parts[-k:])
-            if cand in rel_set:
-                matched.add(cand)
-                break
-        else:
-            matched.update(r for r in rel if hd.endswith(r))
-    return [r for r in rel if r in matched]
+    keys = {
+        "/".join(unquote(h.split("://", 1)[-1]).split("/")[-2:]) for h in hit
+    }
+    return [r for r in rel if r in keys]
 
 
 def _drop_mark(marks: dict, channel: str) -> dict:
@@ -1281,16 +1154,37 @@ def hwm_frame(spark: SparkSession, hwm: dict[str, int]) -> DataFrame:
     return spark.createDataFrame(sorted(hwm.items()), HWM_SCHEMA)
 
 
-def _parse_header(hdr: str | None) -> tuple[str | None, dict | None]:
-    """``(schema DDL, hwm map)`` of a level manifest header. The header
-    is compact JSON ``{"schema": <DDL>, "hwm": {channel: max_t}}``; a
-    legacy header is the bare DDL and carries no map."""
-    if hdr is None:
-        return None, None
-    if hdr.startswith("{"):
-        rec = json.loads(hdr)
-        return rec["schema"], rec["hwm"]
-    return hdr, None
+def _parse_header(hdr: str | None) -> tuple[str | None, dict]:
+    """``(schema DDL, hwm map)`` of a level manifest header, the compact
+    JSON ``{"schema": <DDL>, "hwm": {channel: max_t}}`` — the one header
+    format. Anything else (no header, or the bare DDL of a level written
+    before its marks moved into the manifest) raises ``ValueError``."""
+    try:
+        rec = json.loads(hdr) if hdr is not None else None
+    except ValueError:
+        rec = None
+    if not isinstance(rec, dict) or not {"schema", "hwm"} <= rec.keys():
+        raise ValueError(
+            "manifest header is not a {\"schema\", \"hwm\"} record: "
+            f"{'none' if hdr is None else repr(hdr[:80])}"
+        )
+    return rec["schema"], rec["hwm"]
+
+
+def _marks_header_fn(meta_transform, hit: bool):
+    """``(header_fn, before)`` for a rewrite commit on one level: the
+    header keeps the schema and maps the marks of the base the commit
+    builds on through ``meta_transform(marks, hit)`` (no Spark job);
+    ``before["header"]`` receives that base's header for
+    compensation."""
+    before: dict = {}
+
+    def _header_fn(prev: str | None) -> str:
+        ddl, hwm = _parse_header(prev)
+        before["header"] = prev
+        return _format_header(ddl, meta_transform(hwm, hit))
+
+    return _header_fn, before
 
 
 def _format_header(ddl: str | None, hwm: dict) -> str:
@@ -1301,16 +1195,15 @@ def _format_header(ddl: str | None, hwm: dict) -> str:
     )
 
 
-def _union_header_fn(
-    batch_fields: list[tuple[str, str]], legacy=None, maxima=None,
-    legacy_hwm=None,
-):
+def _union_header_fn(batch_fields: list[tuple[str, str]], maxima=None):
     """``header_fn`` for a sample-batch commit: the new manifest header
     is the UNION of the base version's schema and the batch's, and the
     base version's marks with the batch's per-channel ``maxima`` folded
     in — both evaluated INSIDE the commit's rebase loop so a concurrent
     append can never be shadowed (check-then-act on the newest footer
-    could lose a column, a precomputed map a mark).
+    could lose a column, a precomputed map a mark). The base header is
+    the one ``{"schema", "hwm"}`` format (an empty level has none); any
+    other refuses the commit (:func:`_parse_header`).
 
     A same-name/different-type collision REFUSES the commit loudly
     instead of silently keeping one side: write_samples' pre-commit type
@@ -1320,25 +1213,14 @@ def _union_header_fn(
     must fail HERE or its files would corrupt every scan planned with
     the header schema (VERDICT r9 #8). The refusal aborts before the
     manifest rename: the loser's already-published stage files stay
-    unreferenced and gc collects them.
-
-    ``legacy`` (a StructType or None) seeds the schema and
-    ``legacy_hwm`` the marks when the base manifest predates them."""
-    from pyspark.sql.types import StructType
+    unreferenced and gc collects them."""
 
     def _header_fn(prev: str | None) -> str:
-        ddl, hwm = _parse_header(prev)
-        if ddl is not None:
-            base_fields = [
-                (f.name, f.dataType.simpleString())
-                for f in StructType.fromDDL(ddl).fields
-            ]
-        elif legacy is not None:
-            base_fields = [
-                (f.name, f.dataType.simpleString()) for f in legacy.fields
-            ]
-        else:
-            base_fields = []
+        ddl, hwm = (None, {}) if prev is None else _parse_header(prev)
+        base_fields = [] if ddl is None else [
+            (f.name, f.dataType.simpleString())
+            for f in StructType.fromDDL(ddl).fields
+        ]
         types = dict(base_fields)
         merged = list(base_fields)
         for n, t in batch_fields:
@@ -1354,7 +1236,6 @@ def _union_header_fn(
                     "this writer's pre-check; type changes are not "
                     "supported — add a NEW column instead)"
                 )
-        hwm = dict(legacy_hwm or {}) if hwm is None else hwm
         for c, t in (maxima or {}).items():
             if c not in hwm or t > hwm[c]:
                 hwm[c] = t

@@ -144,11 +144,10 @@ class ManifestTable:
 
     def header(self, version: int | None = None) -> str | None:
         """The version's metadata header (one opaque line the table's
-        OWNER interprets — the archive store records the level's evolved
-        schema DDL here, Iceberg-style schema-in-table-metadata), or None
-        when the version has no header / the table is empty. Manifests
-        written before headers existed simply have no ``#header:`` line —
-        fully backward compatible."""
+        OWNER interprets — the archive store records each level's schema
+        and high-water marks here, Iceberg-style schema-in-table-metadata),
+        or None when the version has no ``#header:`` line or the table is
+        empty."""
         if version is None:
             version = self.current_version()
             if version is None:

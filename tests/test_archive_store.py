@@ -1084,10 +1084,6 @@ def test_match_manifest_files_linear_matcher():
     assert _match_manifest_files(rel, hit) == [
         "date=2020-01-02/aa-part-00000.parquet"
     ]
-    # root-level layout (unpartitioned tables)
-    assert _match_manifest_files(
-        ["x.parquet", "y.parquet"], {"file:///t/meta/seed_level=0/y.parquet"}
-    ) == ["y.parquet"]
     # percent-encoded URI resolves to the raw manifest path
     assert _match_manifest_files(
         ["date=2020-01-01/a b.parquet"],
@@ -1656,119 +1652,74 @@ def test_ingest_batch_commits_one_version_per_level(
         assert count_jobs(store.channel_hwm, lvl)[1] == 0
 
 
-def _plant_legacy_level(spark, root) -> ManifestTable:
-    """Level 0 as written before marks moved into its manifest: a
-    DDL-only header over rows of PV:A (t 0..14 s) and PV:B (0..4 s),
-    next to the old ``meta/hwm_level=0`` append-log holding PV:A at 9 s
-    and PV:C (rows retention emptied) at 50 s."""
+def test_level_without_marks_header_is_refused(spark, tmp_path):
+    """A level version whose manifest header is the bare DDL has no
+    high-water marks to guard a replay with: every entry point refuses
+    it, naming the level, and commits nothing — never an empty map,
+    under which the guard would re-append every replayed row."""
     from cassandra_pv_archiver_spark.sources.archive_store import (
-        HWM_SCHEMA,
         RAW_SCHEMA,
         _date_expr,
-        _parse_header,
-    )
-
-    def publish(rel, df, header=None):
-        table = ManifestTable(spark, str(root / rel))
-        stage = table.stage_dir()
-        if "date" in df.columns:
-            df.write.partitionBy("date").parquet(stage)
-        else:
-            df.coalesce(1).write.parquet(stage)
-        table.publish_stage(
-            stage, header_fn=None if header is None else (lambda _p: header)
-        )
-        return table
-
-    rows = [("PV:A", k * NS, float(k), 0, 0) for k in range(15)]
-    rows += [("PV:B", k * NS, 1.0, 0, 0) for k in range(5)]
-    level = publish(
-        "samples/decimation_level=0",
-        spark.createDataFrame(rows, SCHEMA).withColumn(
-            "date", _date_expr("t")
-        ),
-        header=RAW_SCHEMA,
-    )
-    publish("meta/hwm_level=0", spark.createDataFrame(
-        [("PV:A", 9 * NS), ("PV:C", 50 * NS)], HWM_SCHEMA))
-    assert _parse_header(level.header()) == (RAW_SCHEMA, None)
-    return level
-
-
-def test_legacy_level_marks_derive_from_log_and_data(
-    spark, tmp_path, count_jobs
-):
-    """A level written before marks moved into its manifest: a DDL-only
-    header next to the old ``meta/hwm_level=0`` append-log. Its marks
-    are the per-channel max of the log and the data — exact for rows
-    above the log's mark (the old two-commit crash window), for a
-    channel with rows but no log entry, and for a channel retention
-    emptied — so a replayed batch appends nothing, and the next write
-    puts the map into the header."""
-    from cassandra_pv_archiver_spark.sources.archive_store import (
-        _parse_header,
     )
     from cassandra_pv_archiver_spark.streaming.ingest import ingest_batch
 
-    level = _plant_legacy_level(spark, tmp_path / "archive")
-
-    store = _store(spark, tmp_path)
-    want = {"PV:A": 14 * NS, "PV:B": 4 * NS, "PV:C": 50 * NS}
-    assert store.channel_hwm(0) == want
-    assert count_jobs(store.channel_hwm, 0) == (want, 0)  # once per version
-
-    version = store.level_versions(0)[-1]
-    replay = [("PV:A", k * NS, 0.0, 0, 0) for k in range(10, 15)]
-    replay += [("PV:B", 4 * NS, 0.0, 0, 0), ("PV:C", 50 * NS, 0.0, 0, 0)]
-    assert ingest_batch(store, spark.createDataFrame(replay, SCHEMA)) == 0
-    assert store.level_versions(0)[-1] == version
-    assert store.read_samples(0).count() == 20
-
-    store.write_samples(
-        spark.createDataFrame([("PV:B", 5 * NS, 1.0, 0, 0)], SCHEMA), level=0
+    # level 0 as written before marks moved into its manifest
+    level = ManifestTable(
+        spark, str(tmp_path / "archive/samples/decimation_level=0")
     )
-    want["PV:B"] = 5 * NS
-    ddl, marks = _parse_header(level.header())
-    assert marks == want and "`severity` int" in ddl
-    assert count_jobs(_store(spark, tmp_path).channel_hwm, 0) == (want, 0)
+    stage = level.stage_dir()
+    spark.createDataFrame(
+        [("PV:A", k * NS, float(k), 0, 0) for k in range(5)], SCHEMA
+    ).withColumn("date", _date_expr("t")).write.partitionBy("date").parquet(
+        stage
+    )
+    level.publish_stage(stage, header_fn=lambda _prev: RAW_SCHEMA)
+    version = level.current_version()
+    store = _store(spark, tmp_path)
+    replay = spark.createDataFrame([("PV:A", 9 * NS, 9.0, 0, 0)], SCHEMA)
+    refused = pytest.raises(ValueError, match="level 0 version")
+    with refused:
+        store.channel_hwm(0)
+    with refused:
+        store.level_schema(0)
+    with refused:
+        store.read_samples(0)
+    with refused:
+        store.write_samples(replay, 0)
+    with refused:
+        ingest_batch(store, replay)
+    assert level.current_version() == version
+    assert store.level_versions(0) == [version]
 
 
-def test_compact_deletes_legacy_hwm_log_once_no_version_needs_it(
-    spark, tmp_path
-):
-    """A legacy level converts on its next write; ``compact`` deletes the
-    old ``meta/hwm_level=0`` log only once every retained version's
-    header carries marks, and each retained version's marks read the
-    same after the delete as before it."""
-    root = tmp_path / "archive"
-    log = root / "meta" / "hwm_level=0"
-    _plant_legacy_level(spark, root)
-    store = ArchiveStore(spark, str(root), keep_versions=3)
-    legacy = {"PV:A": 14 * NS, "PV:B": 4 * NS, "PV:C": 50 * NS}
-
-    def write(t_s):
-        store.write_samples(
-            spark.createDataFrame([("PV:B", t_s * NS, 1.0, 0, 0)], SCHEMA), 0
-        )
-
-    def marks():
-        fresh = ArchiveStore(spark, str(root), keep_versions=3)
-        return {v: fresh.channel_hwm(0, v) for v in fresh.level_versions(0)}
-
-    write(5)  # converts: retained = [legacy, converted]
-    store.compact(0)  # retained = [legacy, converted, compacted]
-    assert log.exists()
-    before = marks()
-    assert before[min(before)] == legacy
-    write(6)  # the append prunes the legacy version
-    before = marks()
-    store.compact(0)
-    assert not log.exists()
-    after = marks()
-    assert all(after[v] == before[v] for v in after if v in before)
-    assert after[max(after)] == before[max(before)] == {
-        **legacy, "PV:B": 6 * NS,
-    }
+def test_header_cache_holds_one_parsed_header_per_level(spark, tmp_path):
+    """Reads and marks of many versions share one parsed header per
+    level, and time travel still resolves each retained version's own
+    schema (here an ADD COLUMN on level 0 from the third write on)."""
+    store = ArchiveStore(spark, str(tmp_path / "archive"), keep_versions=5)
+    widths = {0: [], 30: []}
+    for i in range(5):
+        for level in widths:
+            df = spark.createDataFrame(
+                [("PV:A", (i + 1) * NS, float(i), 0, 0)], SCHEMA
+            )
+            if level == 0 and i >= 2:
+                df = df.withColumn("v2", F.col("v") * 2)
+            store.write_samples(df, level)
+            assert store.read_samples(level).count() == i + 1
+            assert store.channel_hwm(level) == {"PV:A": (i + 1) * NS}
+            widths[level].append(len(df.columns))
+    assert sorted(store._header_cache) == [0, 30]
+    # and no other store cache grows with the versions read
+    caches = [k for k, v in vars(store).items() if isinstance(v, dict)]
+    assert caches == ["_header_cache"]
+    for level, width in widths.items():
+        versions = store.level_versions(level)
+        assert versions == list(range(5))
+        for v in versions:
+            got = store.level_schema(level, at_version=v)
+            assert len(got.fields) == width[v], (level, v)
+    assert sorted(store._header_cache) == [0, 30]
 
 
 # -- derived carry rows -------------------------------------------------------

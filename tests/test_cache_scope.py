@@ -219,3 +219,44 @@ def test_probe_pruned_build_releases_probe_intermediates(spark, tmp_path):
     cache_scope.rebuild(spark, str(tmp_path), cd._pair_table_probe_pruned)
     assert not _held(spark, out)
     assert _cm(spark).numCachedEntries() == before + 1
+
+
+def test_write_samples_keeps_the_callers_cache(spark, tmp_path):
+    """``write_samples`` persists its batch for the maxima collect and
+    the write; a batch the caller already cached stays cached after it."""
+    from cassandra_pv_archiver_spark.sources.archive_store import (
+        RAW_SCHEMA,
+        ArchiveStore,
+    )
+
+    store = ArchiveStore(spark, str(tmp_path / "archive"))
+    df = spark.createDataFrame(
+        [("PV:A", 1_000_000_000, 1.0, 0, 0)], RAW_SCHEMA
+    ).persist()
+    try:
+        assert store.write_samples(df, 0) == 1
+        assert _held(spark, df)
+    finally:
+        df.unpersist()
+
+
+def test_bpe_learn_raising_mid_loop_leaves_nothing_cached(spark, monkeypatch):
+    import pytest
+
+    from cassandra_pv_archiver_spark import cache_scope
+    from cassandra_pv_archiver_spark.operators import bpe
+
+    def boom(*_args):
+        raise RuntimeError("merge failed mid-loop")
+
+    docs = spark.createDataFrame(
+        [(1, "lower lowest newer newest"), (2, "low new wider")],
+        "doc_id bigint, text string",
+    )
+    cache_scope.drain()
+    before = _cm(spark).numCachedEntries()
+    monkeypatch.setattr(bpe, "_merge_expr", boom)
+    with pytest.raises(RuntimeError, match="mid-loop"):
+        bpe.bpe_learn(docs, n_merges=3)
+    assert _cm(spark).numCachedEntries() == before
+    assert cache_scope.drain() == 0
