@@ -54,9 +54,12 @@ _VIEWS: dict[tuple, tuple[DataFrame, ...]] = {}
 
 
 def _unpersist(dfs) -> None:
+    """Unpersist each of ``dfs`` and wait until its blocks are gone, so
+    the job after a scope exit or drain never shares executor memory
+    with a released cache."""
     for df in dfs:
         try:
-            df.unpersist()
+            df.unpersist(blocking=True)
         except Exception:  # noqa: BLE001 — a dead session has nothing to free
             pass
 

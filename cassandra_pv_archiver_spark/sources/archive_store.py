@@ -16,9 +16,40 @@ Design for 100 TB / 100k channels:
     reference's bucket index (`channels` table + ``bucket_end_time``,
     `ChannelMetaDataDAOImpl.java:2092-2103`): partition pruning selects the
     date range, row-group stats select the channel slice.
+  * **Write clustering**: the reference keeps each (channel, level)
+    series together in buckets that grow up to
+    ``MAX_BUCKET_SIZE_BYTES = 96_000_000``
+    (`ArchivedChannelDecimationLevel.java:97`). Here every write is
+    range-partitioned on ``(date, channel)`` into ``k = min(shuffle
+    partitions, ceil(rows / ROWS_PER_WRITE_TASK))`` tasks
+    (:meth:`ArchiveStore._publish`). A write below the bound is ONE task:
+    one file per date, and no sampling job (Spark's range partitioner
+    samples only for ``k > 1``). A larger write keeps its parallelism,
+    and in each date its files cover disjoint, contiguous channel
+    ranges, so file-level channel statistics prune whole files. A hash
+    split on ``(date, channel)`` left ``k`` files per date, each with
+    channels from the whole name range. Contiguity also puts a channel's
+    name neighbours next to it for zstd — Gorilla's locality
+    (``operators/storage.py``), which pays when neighbouring names carry
+    correlated series (PVs of one device often do, not always).
+    Measured on the perfbench ``live_ingest`` store (seed 301, set-up
+    plus one batch, 4 CPUs), data bytes per level, hash split (4 files
+    per date) -> range, one file per date: 0 (raw) 195,293 -> 102,072;
+    30 s 1,527,969 -> 1,214,839; 15 min 141,595 -> 92,983; 6 h 20,490
+    -> 8,152; in all 1.885 -> 1.418 MB (0.75x). Range clustering into
+    the same 4 files per date gives 1.508 MB, so about 4/5 of the saving
+    is contiguity and 1/5 fewer files. One file per date with the
+    channels in hash order instead of name order gives 2.224 MB, more
+    than the hash split: in those histories channel i+1's values are
+    channel i's shifted by 100 steps, so only near names share a series.
+    Two rewrites keep their own layout: a rename rewrites only the files
+    carrying the old name, so such a file's range takes in the new name
+    wherever it sorts (per-file channel ranges are not in the manifest,
+    so finding the file that covers the new name would mean reading
+    footers) until :meth:`compact` rewrites the date; retention's
+    boundary trim keeps its input's splits.
   * **File sizing**: ``maxRecordsPerFile`` bounds file size the way
-    ``MAX_BUCKET_SIZE_BYTES = 96_000_000`` bounds a bucket
-    (`ArchivedChannelDecimationLevel.java:97`); :meth:`compact` is the
+    ``MAX_BUCKET_SIZE_BYTES`` bounds a bucket; :meth:`compact` is the
     OPTIMIZE-style rewrite for partitions fragmented by incremental appends.
   * **Retention** (S6, `ArchivedChannelDecimationLevel.java:1097-1320`)
     drops whole date partitions below the cutoff — a metadata operation,
@@ -55,16 +86,21 @@ Design for 100 TB / 100k channels:
     repeated values next to each other (Gorilla's other observation),
     which zstd shrinks, while dictionary indices of those values look
     random to it. String and integer columns keep the dictionary.
-    Measured on the perfbench ``live_ingest`` store (seed 301, set-up
-    plus one batch, 4 CPUs), bytes per level with dictionary -> without:
-    0 (raw) 346,957 -> 208,633; 30 s 2,328,231 -> 1,541,533; 15 min
-    178,494 -> 155,159; 6 h 27,327 -> 27,082 (at 30 s ``std`` grows,
-    171 -> 224 KB, while ``vmin``/``vmax``/``mean`` shrink by about
-    0.3 MB each). The format is the store's, not the session's: it is
-    set per write, so other Parquet writers in the process keep Spark's
-    defaults, and files written before it (v1/snappy, or
-    dictionary-encoded doubles) read unchanged until :meth:`compact`
-    rewrites them.
+    Measured on the range-clustered perfbench ``live_ingest`` store
+    (seed 301, set-up plus one batch, 4 CPUs), data bytes per level with
+    dictionary -> without: 0 (raw) 151,417 -> 102,072; 30 s 1,801,872
+    -> 1,214,839; 15 min 113,638 -> 92,983; 6 h 8,240 -> 8,152. Two
+    columns are smaller with a dictionary on some levels: at 30 s
+    ``std`` takes 182 KB with one and 225 KB without, and
+    ``covered_fraction`` 1.8 KB and 3.3 KB; at 15 min both are larger
+    with one (``std`` 20.8 against 17.4 KB). A dictionary on both would
+    save 40 KB of 1.418 MB (2.8 %) on that store and nothing on the
+    ``raw_export`` store (no such column), so the rule stays one rule
+    for every floating-point column. The format is the store's, not the
+    session's: it is set per write, so other Parquet writers in the
+    process keep Spark's defaults, and files written before it
+    (v1/snappy, or dictionary-encoded doubles) read unchanged until
+    :meth:`compact` rewrites them.
 
 All timestamps int64 ns; ``date`` is derived with integer division so it is
 consistent for any ns value (no TimestampType round-trip).
@@ -105,6 +141,18 @@ _PARQUET_OPTIONS = {
     "parquet.writer.version": "v2",
     "parquet.enable.dictionary#t": "false",
 }
+
+#: rows one write task takes before :meth:`ArchiveStore._publish` splits
+#: a write into more range-clustered tasks (module docstring, "Design").
+#: Swept with ``write_samples`` on ``local[4]`` (4 shuffle partitions),
+#: 200 channels at 10 s, warm, three runs each, one task against four:
+#: 0.25 M rows 1.1-2.4 s vs 1.3-2.5 s; 0.5 M 1.4-1.7 vs 1.7-1.8;
+#: 1 M 2.4-2.5 vs 2.3-2.7; 2 M 4.7-5.7 vs 3.5-4.1; 4 M 8.9-9.9 vs
+#: 5.5-6.8. One task costs nothing up to about 1 M rows, and spares the
+#: range partitioner's sampling job; from 2 M on the split pays. 500 k
+#: keeps the perfbench writes (the 432 k-row raw_export history, the
+#: 144 k-row live history, 12 k-row batches) at one task each.
+ROWS_PER_WRITE_TASK = 500_000
 
 
 def _date_expr(t_col: str = "t"):
@@ -233,8 +281,15 @@ class ArchiveStore:
         retention swaps are atomic to them."""
         return ManifestTable(self.spark, self._level_path(level))
 
+    def _write_tasks(self, rows: int) -> int:
+        """Tasks of a ``rows``-row write: one per ``ROWS_PER_WRITE_TASK``
+        rows, at most ``spark.sql.shuffle.partitions``, at least one."""
+        cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return max(1, min(cap, -(-rows // ROWS_PER_WRITE_TASK)))
+
     def _publish(
-        self, table: ManifestTable, df: DataFrame, remove=(), header_fn=None
+        self, table: ManifestTable, df: DataFrame, remove=(), header_fn=None,
+        tasks: int | None = None,
     ) -> list[str]:
         """Write ``df`` (which carries a ``date`` column) partitioned by
         ``date`` into a fresh stage dir of ``table`` in the store's file
@@ -244,7 +299,28 @@ class ArchiveStore:
         half-visible batch. ``maxRecordsPerFile`` bounds files the way
         ``MAX_BUCKET_SIZE_BYTES`` bounds a bucket, on every path:
         repeated rewrites of a hot partition must not accrete files past
-        it. Returns the committed relative paths."""
+        it. Returns the committed relative paths.
+
+        ``tasks`` range-clusters ``df`` first (module docstring,
+        "Design"): ``tasks`` contiguous ``(date, channel)`` ranges, one
+        per write task, each sorted by ``(date, channel, t)``, so a
+        task's files in one date cover a channel range no other file of
+        the write overlaps. Spark's range partitioner samples its bounds
+        in a job of its own only when ``tasks > 1``. Without ``tasks``
+        the caller has laid ``df`` out itself."""
+        if tasks is not None:
+            # "date" MUST lead the sort: the V1 parquet writer requires
+            # its partition columns as a sort prefix, and when the
+            # existing order does not satisfy that, it inserts its own
+            # (date)-only sort — and Catalyst's EliminateSorts then drops
+            # THIS sort as redundant, silently writing files in input
+            # order (no channel/t clustering at all; caught by
+            # test_files_are_channel_time_sorted). With the prefix, the
+            # writer's requirement is already satisfied and the order
+            # survives to the files.
+            df = df.repartitionByRange(
+                tasks, "date", "channel"
+            ).sortWithinPartitions("date", "channel", "t")
         w = (
             df.write.options(**_PARQUET_OPTIONS)
             .option("maxRecordsPerFile", self.max_records_per_file)
@@ -264,9 +340,13 @@ class ArchiveStore:
         a batch that would change nothing (no rows and no new column on
         an existing level) commits nothing.
 
-        The batch is hash-distributed by ``(date, channel)`` (so one task
-        owns one channel's day — co-locating later per-channel windowing)
-        and sorted by ``(channel, t)`` within files for row-group pruning.
+        The batch is range-clustered by ``(date, channel)``
+        (:meth:`_publish`): one write task per ``ROWS_PER_WRITE_TASK``
+        rows, counted by the marks job below, so a batch under that
+        bound adds one file per date and runs no sampling job, and a
+        larger one writes files whose channel ranges are disjoint in
+        each date. Each task owns whole channel-days, sorted by
+        ``(channel, t)`` for row-group pruning.
         The same commit folds the batch's per-channel maxima into the
         level's high-water marks in the manifest header — the Spark analog
         of the reference's ``decimation_level_to_current_bucket_start_time``
@@ -311,20 +391,6 @@ class ArchiveStore:
                     maxima[r.channel] = r.t
             if not n and cur is not None and len(df.columns) == len(cur):
                 return 0  # every column exists (guard above): a no-op
-            # "date" MUST lead the sort: the V1 parquet writer requires
-            # its partition columns as a sort prefix, and when the
-            # existing order does not satisfy that, it inserts its own
-            # (date)-only sort — and Catalyst's EliminateSorts then drops
-            # THIS sort as redundant, silently writing files in input
-            # order (no channel/t clustering at all; caught by
-            # test_files_are_channel_time_sorted). With the prefix, the
-            # writer's requirement is already satisfied and the order
-            # survives to the files.
-            out = (
-                df.withColumn("date", _date_expr("t"))
-                .repartition("date", "channel")
-                .sortWithinPartitions("date", "channel", "t")
-            )
             # the level's schema and marks ride the manifest header: both
             # fold INSIDE the commit's rebase loop, so a concurrent append
             # can never be shadowed by this one (check-then-act on the
@@ -334,7 +400,9 @@ class ArchiveStore:
             ]
             table = self._level_table(level)
             self._publish(
-                table, out, header_fn=_union_header_fn(batch_fields, maxima)
+                table, df.withColumn("date", _date_expr("t")),
+                header_fn=_union_header_fn(batch_fields, maxima),
+                tasks=self._write_tasks(n),
             )
             # an append replaces no file, so only its manifest history
             # grows: each version carries the O(#channels) marks map
@@ -1012,14 +1080,17 @@ class ArchiveStore:
                 part = self._read_level_files(
                     level, [f"{table.root}/{r}" for r in affected]
                 )
-                touched += part.filter(F.col("channel") == channel).count()
-                out = (
-                    transform(part)
-                    .repartition("date", "channel")
-                    .sortWithinPartitions("date", "channel", "t")
+                # rows matching ``channel`` and rows in all, one job
+                counts = dict(
+                    part.groupBy((F.col("channel") == channel).alias("hit"))
+                    .count()
+                    .collect()
                 )
+                touched += counts.get(True, 0)
                 added = self._publish(
-                    table, out, remove=affected, header_fn=header_fn
+                    table, transform(part), remove=affected,
+                    header_fn=header_fn,
+                    tasks=self._write_tasks(sum(counts.values())),
                 )
             else:
                 table.commit(header_fn=header_fn)  # marks only
@@ -1061,11 +1132,11 @@ class ArchiveStore:
         """Rewrite each date partition into ``target_files_per_partition``
         sorted files (the OPTIMIZE pass for append-fragmented partitions).
 
-        ALL fragmented partitions rewrite in ONE Spark job and swap in via
-        ONE manifest commit (a per-partition loop was ~1 driver-side job
-        per date — 100 sequential jobs for 100 days; one hash-on-date
-        repartition rewrites every fragmented day in parallel and scales
-        with the cluster, not the partition count). A concurrent reader
+        ALL fragmented partitions rewrite in ONE Spark write and swap in
+        via ONE manifest commit (a per-partition loop was ~1 driver-side
+        job per date — 100 sequential jobs for 100 days; one repartition
+        rewrites every fragmented day in parallel and scales with the
+        cluster, not the partition count). A concurrent reader
         always resolves either the fragmented or the compacted file set —
         never an empty/partial directory (the delete-then-rename failure
         mode this store had before round 3). Replaced files survive until
@@ -1074,8 +1145,12 @@ class ArchiveStore:
         finish cleanly.
 
         ``target_files_per_partition=1`` is exact (each date is owned by
-        one task); larger targets are a soft cap via (date, channel)
-        hashing. Rewritten files take the current store format (files
+        one task, hashed on date); a larger target range-clusters the
+        rewrite into ``#dates x target`` tasks (:meth:`_publish`), a soft
+        cap: a task whose range straddles two dates writes a file in
+        each, and every date's files keep disjoint channel ranges.
+        ``zorder`` keeps its hash on date (and channel, for a target
+        above 1). Rewritten files take the current store format (files
         from Spark's default writer convert here); the manifest header,
         schema and marks alike, carries forward unchanged."""
         table = self._level_table(level)
@@ -1095,25 +1170,31 @@ class ArchiveStore:
         df = self._read_level_files(
             level, [f"{table.root}/{r}" for r in old]
         )
-        part_cols = (
-            ["date"] if target_files_per_partition == 1 else ["date", "channel"]
-        )
+        tasks = None
         if zorder:
+            part_cols = (
+                ["date"] if target_files_per_partition == 1
+                else ["date", "channel"]
+            )
             # multi-dim clustering: files cover (channel-hash x time)
             # rectangles so BOTH channel-slice and time-slice scans prune
             out = (
                 df.withColumn("_z", F.expr(self.zorder_key_expr()))
                 .repartition(*part_cols)
-                # "date" prefix: see write_samples — without it the
-                # writer's own partition sort evicts this one
+                # "date" prefix: see _publish — without it the writer's
+                # own partition sort evicts this one
                 .sortWithinPartitions("date", "_z")
                 .drop("_z")
             )
-        else:
-            out = df.repartition(*part_cols).sortWithinPartitions(
+        elif target_files_per_partition == 1:
+            out = df.repartition("date").sortWithinPartitions(
                 "date", "channel", "t"
             )
-        self._publish(table, out, remove=old)
+        else:
+            out = df
+            n_dates = len({_file_date(r) for r in old})
+            tasks = n_dates * target_files_per_partition
+        self._publish(table, out, remove=old, tasks=tasks)
         table.gc(keep_versions=self.keep_versions)
 
 

@@ -1895,3 +1895,117 @@ def test_legacy_seed_table_is_ignored_and_removed(spark, tmp_path):
     assert _dec_rows(store.read_samples(3600)) == _dec_rows(
         decimate(first.unionByName(second), 3600)
     )
+
+
+def _one_day_raw(spark, n_ch: int = 16, n_t: int = 100):
+    """``n_ch`` channels x ``n_t`` samples inside one day, generated
+    t-major (the worst input order for channel clustering)."""
+    return spark.range(n_ch * n_t).selectExpr(
+        f"concat('PV:', lpad(CAST(id % {n_ch} AS STRING), 2, '0')) AS channel",
+        f"(id div {n_ch}) * {60 * NS} AS t",
+        "CAST(id % 7 AS DOUBLE) AS v",
+        "CAST(0 AS INT) AS severity",
+        "CAST(0 AS INT) AS status",
+    )
+
+
+def _channel_ranges(store, level: int) -> dict[str, list[tuple[str, str]]]:
+    """date -> ``[min, max]`` channel of each of the level's files, from
+    the row-group statistics in the parquet footers."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, list[tuple[str, str]]] = {}
+    for path in store._level_files(level):
+        md = pq.ParquetFile(path.replace("file:", "")).metadata
+        col = md.schema.names.index("channel")
+        stats = [md.row_group(g).column(col).statistics
+                 for g in range(md.num_row_groups)]
+        date = path.split("date=")[1].split("/")[0]
+        out.setdefault(date, []).append(
+            (min(s.min for s in stats), max(s.max for s in stats))
+        )
+    return out
+
+
+def _assert_disjoint(ranges: dict[str, list[tuple[str, str]]]) -> None:
+    for date, rs in ranges.items():
+        rs = sorted(rs)
+        for (_, hi), (lo, _) in zip(rs, rs[1:]):
+            assert hi < lo, (date, rs)
+
+
+def test_small_write_adds_one_file_per_date(spark, tmp_path, count_jobs):
+    """A multi-channel write below ROWS_PER_WRITE_TASK is one write task:
+    one file per date, and no range-sampling job on top of the marks
+    job and the write job."""
+    store = _store(spark, tmp_path)
+    df = _one_day_raw(spark).unionByName(
+        _one_day_raw(spark).withColumn("t", F.col("t") + DAY_NS)
+    )
+    n, jobs = count_jobs(store.write_samples, df, 0)
+    assert n == 2 * 16 * 100
+    assert jobs == 2
+    ranges = _channel_ranges(store, 0)
+    assert sorted(len(rs) for rs in ranges.values()) == [1, 1]
+    assert all(rs == [("PV:00", "PV:15")] for rs in ranges.values())
+
+
+def test_large_write_range_clusters_its_files(spark, tmp_path, monkeypatch):
+    """Above ROWS_PER_WRITE_TASK a one-date write splits into k =
+    min(shuffle partitions, ceil(rows / bound)) tasks, one file each,
+    and their channel ranges are pairwise disjoint."""
+    from cassandra_pv_archiver_spark.sources import archive_store
+
+    monkeypatch.setattr(
+        archive_store, "ROWS_PER_WRITE_TASK", 500, raising=False
+    )
+    store = _store(spark, tmp_path)
+    store.write_samples(_one_day_raw(spark), 0)  # 1,600 rows
+    k = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 4)
+    ranges = _channel_ranges(store, 0)
+    assert [len(rs) for rs in ranges.values()] == [k]
+    _assert_disjoint(ranges)
+    assert store.read_samples(0).count() == 1600
+
+
+def test_channel_ranges_stay_disjoint_after_rewrites(
+    spark, tmp_path, monkeypatch
+):
+    """A delete rewrites the files carrying the channel through the same
+    clustering, and compact with a target above one range-clusters each
+    date: every date's files keep disjoint channel ranges. A rename
+    rewrites only the file carrying the old name, so the other files
+    keep their ranges; the rewritten file's range takes in the new name
+    wherever it sorts (module docstring, "Design")."""
+    from cassandra_pv_archiver_spark.sources import archive_store
+
+    monkeypatch.setattr(
+        archive_store, "ROWS_PER_WRITE_TASK", 500, raising=False
+    )
+    store = _store(spark, tmp_path)
+    store.write_samples(_one_day_raw(spark), 0)
+    before = _channel_ranges(store, 0)
+
+    assert store.delete_channel("PV:05") == 100
+    after = _channel_ranges(store, 0)
+    _assert_disjoint(after)
+    assert len(after["1970-01-01"]) == len(before["1970-01-01"])
+
+    (hit,) = [r for r in after["1970-01-01"] if r[0] <= "PV:07" <= r[1]]
+    assert store.rename_channel("PV:07", "PV:99") == 100
+    renamed = set(_channel_ranges(store, 0)["1970-01-01"])
+    rest = set(after["1970-01-01"]) - {hit}
+    assert rest <= renamed and len(renamed) == len(after["1970-01-01"])
+    ((_, hi),) = renamed - rest
+    assert hi == "PV:99"
+
+    # a second append, shifted by a second: k more files in the date
+    store.write_samples(
+        _one_day_raw(spark).withColumn("t", F.col("t") + NS), 0
+    )
+    assert len(_channel_ranges(store, 0)["1970-01-01"]) > 2
+    store.compact(0, target_files_per_partition=2)
+    ranges = _channel_ranges(store, 0)
+    assert len(ranges["1970-01-01"]) == 2  # one date x target
+    _assert_disjoint(ranges)
+    assert store.read_samples(0).count() == 1600 - 100 + 1600

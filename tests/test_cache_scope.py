@@ -260,3 +260,32 @@ def test_bpe_learn_raising_mid_loop_leaves_nothing_cached(spark, monkeypatch):
         bpe.bpe_learn(docs, n_merges=3)
     assert _cm(spark).numCachedEntries() == before
     assert cache_scope.drain() == 0
+
+
+def _rdd_blocks(spark, rdd) -> int:
+    """Blocks of the JVM RDD ``rdd`` the local block manager (the one
+    executor of a ``local[n]`` session) still stores."""
+    jvm = spark.sparkContext._jvm
+    bm = spark.sparkContext._jsc.sc().env().blockManager()
+    return sum(
+        bm.getStatus(jvm.org.apache.spark.storage.RDDBlockId(rdd.id(), p))
+        .isDefined()
+        for p in range(rdd.getNumPartitions())
+    )
+
+
+def test_scope_exit_frees_the_blocks_before_returning(spark):
+    """``scope()`` unpersists with ``blocking=True``: right after the
+    ``with`` block the block manager holds none of the persist's blocks,
+    so the next job never shares executor memory with them."""
+    from cassandra_pv_archiver_spark import cache_scope
+
+    with cache_scope.scope():
+        df = cache_scope.persist(_frame(spark, "blocking").repartition(4))
+        df.count()
+        rdd = (
+            _cm(spark).lookupCachedData(df._jdf).get().cachedRepresentation()
+            .cacheBuilder().cachedColumnBuffers()
+        )
+        assert _rdd_blocks(spark, rdd) == 4
+    assert _rdd_blocks(spark, rdd) == 0

@@ -1226,11 +1226,17 @@ EXPECTATIONS: dict[str, tuple[int | None, list[str], list[str]]] = {
          "ArrowEvalPython"],
     ),
     "materialize_srp_pairs": (
-        2,  # ONE Arrow crossing: the numpy SRP signature kernel
+        4,  # ONE Arrow crossing: the numpy SRP signature kernel
         # (ArrowEvalPython is the vectorized pandas_udf — required,
-        # not forbidden, for this row). +1 exchange (r11): the
-        # cores-derived candidate repartition spreading the cosine
-        # verify kernel (similarity.srp_near_pairs)
+        # not forbidden, for this row). Exchanges: the candidate pair
+        # dedup; the cores-derived candidate repartition spreading the
+        # cosine verify kernel (similarity.srp_near_pairs), which reuses
+        # the dedup exchange when defaultParallelism equals
+        # spark.sql.shuffle.partitions (local[4]); and the cores-derived
+        # signature spread before its persist (srp_candidate_pairs),
+        # which runs once but prints under BOTH join sides'
+        # InMemoryRelation, so it counts twice: 4 on local[32], 3 on
+        # local[4]
         ["codegen id", "ArrowEvalPython", "BroadcastHashJoin"],
         ["CartesianProduct", "SortMergeJoin", "BatchEvalPython"],
     ),
