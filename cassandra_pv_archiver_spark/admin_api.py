@@ -640,23 +640,29 @@ class AdminApp:
         self, reg, incoming, names_in_file, add, update, remove,
         simulate, ok_up, fail_up, ok_rm, fail_rm,
     ) -> None:
+        adds, updates = [], []
+        added: set[str] = set()  # a name repeated in the file updates its add
         for cfg in incoming:
-            exists = reg.get_channel(cfg.channel_name) is not None
-            try:
-                if not exists and add:
-                    if not simulate:
-                        reg.add_channel(cfg)
-                    ok_up.append(cfg.channel_name)
-                elif exists and update:
-                    if not simulate:
-                        reg.update_channel(cfg)
-                    ok_up.append(cfg.channel_name)
-            # broad by the same never-abort contract as run_commands: a
-            # registry _flush I/O error on channel 5 of 20 must land in
-            # the per-channel *Failed map, not abort the import
-            # half-applied with no response
-            except Exception as e:  # noqa: BLE001 - per-channel report
-                fail_up[cfg.channel_name] = str(e) or type(e).__name__
+            exists = (
+                cfg.channel_name in added
+                or reg.get_channel(cfg.channel_name) is not None
+            )
+            if not exists and add:
+                adds.append(cfg)
+                added.add(cfg.channel_name)
+            elif exists and update:
+                updates.append(cfg)
+        batch = [c.channel_name for c in adds + updates]
+        try:
+            if not simulate:
+                # one registry write for the whole file, all or nothing
+                reg.apply(adds, updates)
+            ok_up.extend(batch)
+        # broad by the same never-abort contract as run_commands: a
+        # registry _flush I/O error must land in the per-channel *Failed
+        # map, not abort the import with no response
+        except Exception as e:  # noqa: BLE001 - per-channel report
+            fail_up.update(dict.fromkeys(batch, str(e) or type(e).__name__))
         if remove:
             for c in list(reg.list_channels()):
                 if c.channel_name not in names_in_file:

@@ -2390,16 +2390,14 @@ def q_channel_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .management import ChannelConfig, ChannelRegistry
 
     reg = ChannelRegistry(spark, _scratch_dir("pvreg_") + "/channels")
-    # bulk build (one flush) — add_channel flushes per call, too slow for 200
-    reg._channels = {
-        f"PV:{i}": ChannelConfig(
+    reg.apply(adds=[
+        ChannelConfig(
             f"PV:{i}",
             enabled=(i % 3 != 0),
             options={"tier": "fast" if i % 2 == 0 else "slow"},
         )
         for i in range(200)
-    }
-    reg._flush()
+    ])
     dim = reg.to_df().select(
         F.col("channel_name").alias("channel"),
         "enabled",

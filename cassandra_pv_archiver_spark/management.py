@@ -21,6 +21,7 @@ import shutil
 import threading
 import uuid
 import xml.etree.ElementTree as ET
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -228,28 +229,42 @@ class ChannelRegistry:
     # serving state diverged from the persisted registry (admin_api's
     # cascades compensate on the assumption these calls are atomic).
     def add_channel(self, config: ChannelConfig) -> None:
-        with self._lock:
-            if config.channel_name in self._channels:
-                raise ValueError(f"channel exists: {config.channel_name}")
-            self._channels[config.channel_name] = config
-            try:
-                self._flush()
-            except Exception:
-                del self._channels[config.channel_name]
-                raise
+        self.apply(adds=[config])
 
     def update_channel(self, config: ChannelConfig) -> None:
+        self.apply(updates=[config])
+
+    def apply(
+        self,
+        adds: Iterable[ChannelConfig] = (),
+        updates: Iterable[ChannelConfig] = (),
+    ) -> None:
+        """Add ``adds``, then update ``updates``, in ONE flush and all or
+        nothing: a name already present among ``adds``, a missing one
+        among ``updates`` or a failed flush leaves the registry as it
+        was. A batch of N channels writes the table once, where N
+        ``add_channel``/``update_channel`` calls would rewrite it N
+        times (O(N²) rows)."""
         with self._lock:
-            old = self._channels.get(config.channel_name)
-            if old is None:
-                raise KeyError(config.channel_name)
-            # data id is permanent (`SampleBucketId.java:80-89`)
-            config.channel_data_id = old.channel_data_id
-            self._channels[config.channel_name] = config
+            before = dict(self._channels)
             try:
+                for config in adds:
+                    if config.channel_name in self._channels:
+                        raise ValueError(
+                            f"channel exists: {config.channel_name}"
+                        )
+                    self._channels[config.channel_name] = config
+                for config in updates:
+                    old = self._channels.get(config.channel_name)
+                    if old is None:
+                        raise KeyError(config.channel_name)
+                    # data id is permanent (`SampleBucketId.java:80-89`)
+                    config.channel_data_id = old.channel_data_id
+                    self._channels[config.channel_name] = config
                 self._flush()
             except Exception:
-                self._channels[config.channel_name] = old
+                self._channels.clear()
+                self._channels.update(before)
                 raise
 
     def remove_channel(self, name: str) -> ChannelConfig:

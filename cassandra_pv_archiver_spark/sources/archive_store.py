@@ -73,34 +73,71 @@ Design for 100 TB / 100k channels:
     every replayed row.
   * **File format**: every data file the store writes goes through
     :meth:`ArchiveStore._publish`, which fixes Parquet v2 data pages,
-    zstd, and no dictionary on ``t``. v2 pages fall back
-    to ``DELTA_BINARY_PACKED`` for int64 columns, so the (channel, t)
-    sort order makes a regularly spaced ``t`` cost about one bit per row
-    (the Gorilla delta-of-delta observation, ``operators/storage.py``)
-    where v1 stores it PLAIN. Measured on 50 channels x 1 day at 10 s
-    (the perfbench ``raw_export`` store): 9.75 -> 1.48 stored bytes per
-    raw sample, ``t`` alone 7.01 -> 0.01 bytes.
+    zstd at level 6, data pages of up to 100,000 rows, and no
+    dictionary on ``t`` or on any floating-point column.
+    v2 pages fall back to ``DELTA_BINARY_PACKED`` for int64 columns, so
+    the (channel, t) sort order makes a regularly spaced ``t`` cost
+    about one bit per row (the Gorilla delta-of-delta observation,
+    ``operators/storage.py``) where v1 stores it PLAIN: on 50 channels x
+    1 day at 10 s (the perfbench ``raw_export`` store) 9.75 -> 1.48
+    stored bytes per raw sample, ``t`` alone 7.01 -> 0.01 bytes.
     Every top-level ``double``/``float`` column of the frame being
-    written (evolved ADD COLUMN ones included) is also written without a
-    dictionary, so PLAIN + zstd: the (channel, t) order puts a channel's
-    repeated values next to each other (Gorilla's other observation),
-    which zstd shrinks, while dictionary indices of those values look
-    random to it. String and integer columns keep the dictionary.
-    Measured on the range-clustered perfbench ``live_ingest`` store
-    (seed 301, set-up plus one batch, 4 CPUs), data bytes per level with
-    dictionary -> without: 0 (raw) 151,417 -> 102,072; 30 s 1,801,872
-    -> 1,214,839; 15 min 113,638 -> 92,983; 6 h 8,240 -> 8,152. Two
-    columns are smaller with a dictionary on some levels: at 30 s
-    ``std`` takes 182 KB with one and 225 KB without, and
-    ``covered_fraction`` 1.8 KB and 3.3 KB; at 15 min both are larger
-    with one (``std`` 20.8 against 17.4 KB). A dictionary on both would
-    save 40 KB of 1.418 MB (2.8 %) on that store and nothing on the
-    ``raw_export`` store (no such column), so the rule stays one rule
-    for every floating-point column. The format is the store's, not the
-    session's: it is set per write, so other Parquet writers in the
-    process keep Spark's defaults, and files written before it
-    (v1/snappy, or dictionary-encoded doubles) read unchanged until
-    :meth:`compact` rewrites them.
+    written (evolved ADD COLUMN ones included) is PLAIN + zstd: the
+    (channel, t) order puts a channel's repeated values next to each
+    other (Gorilla's other observation), which zstd shrinks, while
+    dictionary indices of those values look random to it. String and
+    integer columns keep the dictionary. On the range-clustered
+    ``live_ingest`` store this took the 30 s level from 1.80 to 1.21 MB;
+    ``std`` and ``covered_fraction`` alone would be smaller with a
+    dictionary at 30 s, by 40 KB in all (2.8 %), so the rule stays one
+    rule for every floating-point column.
+    zstd compresses each data page on its own, so a page bounds how far
+    back it finds a match. parquet-mr's defaults, 20,000-row pages and
+    level 3, leave it 160 KB of a double column; a page of 100,000 rows
+    (about one channel-day of 1 Hz samples; ``parquet.page.size`` is
+    8 MB so that the row limit binds for fixed-width columns) lets it
+    reach the same channel's values a day back and its name
+    neighbours'. Swept through ``write_samples`` (4 CPUs, data bytes
+    from :meth:`ArchiveStore.stats`), zstd level x page row limit:
+
+    ============  ==========  ==========  ==========  ==========
+    store, level  20 k        50 k        100 k       200 k
+    ============  ==========  ==========  ==========  ==========
+    live, 3       1,418,046   1,323,183   1,291,160   1,277,982
+    live, 6       1,317,304   1,217,148   1,179,283   1,164,602
+    live, 9       1,315,724   1,212,049   1,167,611   1,151,249
+    export, 3       418,998     193,603     123,175      87,413
+    export, 6       400,385     186,124     119,274      84,774
+    export, 9       397,695     184,337     117,760      83,941
+    ============  ==========  ==========  ==========  ==========
+
+    "live" is the perfbench ``live_ingest`` store (seed 301, set-up plus
+    one batch), all four levels; at level 6 and 100 k rows against 3 and
+    20 k its levels go 0 (raw) 102,072 -> 81,895, 30 s 1,214,839 ->
+    1,005,414, 15 min 92,983 -> 83,794 and 6 h 8,152 -> 8,180 bytes
+    (-16.8 % in all). "export" is the ``raw_export`` store (seed 301);
+    most of its -71.5 % comes from the generator's values repeating with
+    the row id (``id mod 20001``), which a longer page reaches, so it is
+    no field figure. A non-periodic random walk is: 200 channels x 12 h
+    at 30 s, each step holding its value with probability 0.7 and
+    otherwise moving by N(0, 1), rounded to two decimals, with its 30 s
+    level decimated from it. Level 0 goes 426,578 -> 355,843 bytes
+    (-16.6 %) and level 30 1,336,966 -> 1,125,384 (-15.8 %); level 6 at
+    20 k rows already gives 361,850 and 1,137,328, so there the gain is
+    the zstd level's, not the page's. Level 9 saves another 1-5 %, and
+    200 k rows another 1.2 % on live; 100 k keeps a page near one
+    channel-day, which a one-channel read decompresses whole. No
+    setting moved time beyond noise at this size: a 4.32 M-row write
+    (50 channels x 1 day at 1 Hz, four range-clustered files in one
+    date) took 4.5-6.3 s warm across all twelve settings (4.9 s at
+    3/20 k, 5.1 s at 6/100 k, best of two), and a one-channel one-hour
+    read of that date (3,601 rows, ``read_samples(...).collect()``,
+    best of four) 71-92 ms (77 ms at 3/20 k, 86 ms at 6/100 k).
+    The format is the store's, not the session's: it is set per write,
+    so other Parquet writers in the process keep Spark's defaults, and
+    files written before it (v1/snappy, dictionary-encoded doubles,
+    20,000-row pages) read unchanged until :meth:`compact` rewrites
+    them.
 
 All timestamps int64 ns; ``date`` is derived with integer division so it is
 consistent for any ns value (no TimestampType round-trip).
@@ -140,6 +177,12 @@ _PARQUET_OPTIONS = {
     "compression": "zstd",
     "parquet.writer.version": "v2",
     "parquet.enable.dictionary#t": "false",
+    # zstd compresses each data page on its own: a page of about one
+    # channel-day of 1 Hz samples, with the byte limit far enough out
+    # that the row limit binds for fixed-width columns
+    "parquet.page.row.count.limit": "100000",
+    "parquet.page.size": str(8 * 1024 * 1024),
+    "parquet.compression.codec.zstd.level": "6",
 }
 
 #: rows one write task takes before :meth:`ArchiveStore._publish` splits
@@ -631,12 +674,16 @@ class ArchiveStore:
         return df.drop("date")
 
     def stats(self) -> list[dict]:
-        """Per-level table statistics from MANIFESTS ALONE — zero data
-        reads, zero directory walks (the DESCRIBE DETAIL analog; the
-        reference answers the same questions from its bucket bookkeeping
-        tables, `ChannelMetaDataDAOImpl.java:2092-2123`). Returns one dict
-        per level: level, version, n_files, n_partitions, date_min,
-        date_max."""
+        """Per-level table statistics from the manifests plus ONE
+        recursive listing per level for file sizes — zero data reads
+        (the DESCRIBE DETAIL analog; the reference answers the same
+        questions from its bucket bookkeeping tables,
+        `ChannelMetaDataDAOImpl.java:2092-2123`). Returns one dict per
+        level: level, version, n_files, n_partitions, date_min, date_max,
+        and bytes, the summed size of the manifest-listed data files
+        (files gc has not yet collected, manifests and stage debris are
+        left out; a file a concurrent rewrite collects between the
+        manifest read and the listing counts 0)."""
         out = []
         for level in self.levels():
             table = self._level_table(level)
@@ -644,6 +691,7 @@ class ArchiveStore:
             dates = sorted(
                 {d for d in (_file_date(r) for r in rel) if d is not None}
             )
+            sizes = self.fs.file_sizes(table.root)
             out.append(
                 {
                     "level": level,
@@ -652,6 +700,7 @@ class ArchiveStore:
                     "n_partitions": len(dates),
                     "date_min": dates[0] if dates else None,
                     "date_max": dates[-1] if dates else None,
+                    "bytes": sum(sizes.get(r, 0) for r in rel),
                 }
             )
         return out

@@ -153,22 +153,30 @@ class HadoopFS:
         Spark's _temporary subtrees too), as paths relative to it. One
         listFiles(recursive) iterator — the single bulk-listing RPC
         pattern object stores optimize for."""
+        return sorted(self.file_sizes(path, include_hidden))
+
+    def file_sizes(
+        self, path: str, include_hidden: bool = False
+    ) -> dict[str, int]:
+        """:meth:`list_files_recursive`'s files mapped to their lengths in
+        bytes, from the same one listing (each listed status carries its
+        length, so no per-file RPC)."""
         p = self._Path(path)
         if not self._fs.exists(p):
-            return []
+            return {}
         base = self._fs.getFileStatus(p).getPath().toString().rstrip("/")
-        out = []
+        out = {}
         it = self._fs.listFiles(p, True)
         while it.hasNext():
-            f = it.next().getPath().toString()
-            rel = f[len(base) + 1 :]
+            st = it.next()
+            rel = st.getPath().toString()[len(base) + 1 :]
             parts = rel.split("/")
             if not include_hidden and any(
                 s.startswith(("_", ".")) for s in parts
             ):
                 continue
-            out.append(rel)
-        return sorted(out)
+            out[rel] = int(st.getLen())
+        return out
 
     def touch(self, path: str) -> None:
         """Set ``path``'s modification time to NOW (one setTimes RPC).

@@ -198,6 +198,68 @@ class TestImport:
         assert status == 400
 
 
+class TestImportBatch:
+    """An import writes the registry once, all or nothing."""
+
+    @staticmethod
+    def _xml(names) -> str:
+        body = "".join(f'<channel name="{n}"/>' for n in names)
+        return base64.b64encode(
+            f'<?xml version="1.0"?><server-configuration>{body}'
+            "</server-configuration>".encode()
+        ).decode("ascii")
+
+    def _app(self, spark, tmp_path, monkeypatch):
+        reg = ChannelRegistry(spark, str(tmp_path / "chan"))
+        reg.add_channel(ChannelConfig(channel_name="PV:OLD"))
+        flushes = []
+        flush = reg._flush
+
+        def counted():
+            flushes.append(1)
+            flush()
+
+        monkeypatch.setattr(reg, "_flush", counted)
+        return AdminApp(reg), reg, flushes
+
+    def test_import_of_2000_channels_flushes_once(
+        self, spark, tmp_path, monkeypatch
+    ):
+        app, reg, flushes = self._app(spark, tmp_path, monkeypatch)
+        old_id = reg.get_channel("PV:OLD").channel_data_id
+        names = [f"PV:{i:04d}" for i in range(2000)] + ["PV:OLD"]
+        out = app.import_config(SERVER_ID, {
+            "configurationFile": self._xml(names),
+        })
+        assert out["addOrUpdateSucceeded"] == sorted(names)
+        assert out["addOrUpdateFailed"] == {}
+        assert len(flushes) == 1
+        again = ChannelRegistry(spark, str(tmp_path / "chan"))
+        assert len(again.list_channels()) == 2001
+        # an update keeps the permanent data id
+        assert again.get_channel("PV:OLD").channel_data_id == old_id
+
+    def test_flush_error_fails_every_channel_and_changes_nothing(
+        self, spark, tmp_path, monkeypatch
+    ):
+        app, reg, _ = self._app(spark, tmp_path, monkeypatch)
+        before = reg.list_channels()
+
+        def boom():
+            raise OSError("disk full")
+
+        monkeypatch.setattr(reg, "_flush", boom)
+        names = ["PV:A1", "PV:A2", "PV:OLD"]
+        out = app.import_config(SERVER_ID, {
+            "configurationFile": self._xml(names),
+        })
+        assert out["addOrUpdateSucceeded"] == []
+        assert out["addOrUpdateFailed"] == dict.fromkeys(names, "disk full")
+        assert reg.list_channels() == before
+        again = ChannelRegistry(spark, str(tmp_path / "chan"))
+        assert again.list_channels() == before
+
+
 class TestReadsAndStatus:
     def test_channels_all_and_details(self, admin):
         base, _reg = admin

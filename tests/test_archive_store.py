@@ -240,6 +240,25 @@ def test_store_stats_metadata_only(spark, tmp_path):
     assert s3["version"] > s2["version"]
 
 
+def test_store_stats_bytes_sum_the_listed_files(spark, tmp_path):
+    """stats() reports each level's bytes as the summed on-disk size of
+    the files its current manifest lists: the files a compaction
+    replaced (still on disk for older readers) are not counted."""
+    store = _store(spark, tmp_path)
+    raw = _two_day_raw(spark)
+    store.write_samples(raw, 0)
+    store.write_samples(raw.withColumn("t", F.col("t") + 1), 0)
+    store.write_samples(decimate(raw, 3600), 3600)
+    store.compact(0)
+    level0 = tmp_path / "archive/samples/decimation_level=0"
+    on_disk = _parquet_files(str(level0))
+    listed = [f.split("://", 1)[-1] for f in store._level_files(0)]
+    assert set(listed) < on_disk  # replaced files are still there
+    for s in store.stats():
+        files = [f.split("://", 1)[-1] for f in store._level_files(s["level"])]
+        assert s["bytes"] == sum(map(os.path.getsize, files)) > 0, s
+
+
 def test_zorder_compaction_prunes_time_slices(spark, tmp_path):
     """compact(zorder=True) interleaves channel-hash and within-day time
     bits, so a narrow time slice across ALL channels skips most files by
@@ -1440,9 +1459,22 @@ def _has_dictionary(col) -> bool:
     )
 
 
-def _assert_store_format(path: str) -> None:
-    """zstd on every column, v2 data pages, ``t`` delta-packed, and no
-    dictionary on any floating-point column."""
+#: rows after which :func:`_periodic_raw`'s values repeat: past the
+#: 20,000-row data page of Spark's default writer, inside the store's
+#: 100,000-row one
+PERIOD = 30_000
+
+
+def _assert_store_format(path: str) -> int:
+    """zstd on every column, v2 data pages, ``t`` delta-packed, no
+    dictionary on any floating-point column, and data pages that let
+    zstd match across ``PERIOD`` rows: every double column chunk of at
+    least two periods compresses below half its PLAIN size. That holds
+    for the values of :func:`_periodic_raw` (and their copies, scalings
+    and constants) only when a page spans more than one period, so it
+    pins the store's page sizing. Returns the number of chunks the size
+    check covered."""
+    checked = 0
     for col in _column_chunks(path):
         where = (path, col.path_in_schema)
         assert col.compression == "ZSTD", where
@@ -1451,6 +1483,32 @@ def _assert_store_format(path: str) -> None:
             assert col.encodings == ("DELTA_BINARY_PACKED",), where
         if col.physical_type in ("DOUBLE", "FLOAT"):
             assert not _has_dictionary(col), where
+        if col.physical_type == "DOUBLE" and col.num_values >= 2 * PERIOD:
+            plain = 8 * col.num_values
+            assert col.total_compressed_size < plain / 2, (
+                where, col.total_compressed_size, plain,
+            )
+            checked += 1
+    return checked
+
+
+def _periodic_raw(spark, lo_s: float, hi_s: float, channel: str = "PV:0"):
+    """One channel at 1 Hz over ``[lo_s, hi_s)`` days, whose value at
+    second ``s`` is a hash of ``s % PERIOD`` below 10^10 with two
+    decimals: distinct within any ``PERIOD`` consecutive seconds (PLAIN
+    + zstd keeps about 0.9 of their bytes), repeating after it. Blocks
+    of consecutive days written one after another keep that sequence
+    in every file, merged or not; so does a 1 s decimation level
+    (``mean``/``vmin``/``vmax`` equal ``v``, ``std`` 0)."""
+    day = 86_400
+    return spark.range(int(lo_s * day), int(hi_s * day)).selectExpr(
+        f"'{channel}' AS channel",
+        f"id * {NS} AS t",
+        f"CAST(pmod(xxhash64(id % {PERIOD}), {10 ** 12}) AS DOUBLE) / 100"
+        " AS v",
+        "CAST(0 AS INT) AS severity",
+        "CAST(0 AS INT) AS status",
+    )
 
 
 def _two_day_raw(spark, shift_ns: int = 0):
@@ -1465,8 +1523,10 @@ def _two_day_raw(spark, shift_ns: int = 0):
 
 def test_every_store_write_uses_the_store_format(spark, tmp_path):
     """Each write path adds files, and every file it adds is zstd with
-    v2 pages, a DELTA_BINARY_PACKED ``t`` and no dictionary on a double
-    column (an ADD COLUMN double included), on every level it writes."""
+    v2 pages, a DELTA_BINARY_PACKED ``t``, no dictionary on a double
+    column (an ADD COLUMN double included) and pages sized for zstd, on
+    every level it writes; each path adds at least one file large
+    enough for the page-size check."""
     store = _store(spark, tmp_path)
     root = str(tmp_path / "archive")
     seen: set[str] = set()
@@ -1476,22 +1536,23 @@ def test_every_store_write_uses_the_store_format(spark, tmp_path):
         now = _parquet_files(root)
         added = now - seen
         assert added, f"{name} wrote no file"
-        for f in added:
-            _assert_store_format(f)
+        assert sum(_assert_store_format(f) for f in added), name
         seen.update(now)
         return added
 
-    step("write_samples", store.write_samples, _two_day_raw(spark), 0)
-    step("write_samples", store.write_samples, _two_day_raw(spark, 30 * NS), 0)
-    step("incremental_decimation", incremental_decimation, store, 3600)
+    # consecutive blocks: days 1 and 3 get a file from each side
+    step("write_samples", store.write_samples, _periodic_raw(spark, 0, 1.5), 0)
+    step("write_samples", store.write_samples,
+         _periodic_raw(spark, 1.5, 3.25), 0)
+    step("incremental_decimation", incremental_decimation, store, 1)
     step("compact(zorder=True)", store.compact, 0, zorder=True)
-    store.write_samples(_two_day_raw(spark, 45 * NS), 0)
+    store.write_samples(_periodic_raw(spark, 3.25, 4.25), 0)
     seen.update(_parquet_files(root))
     step("compact", store.compact, 0)
-    step("delete_older_than", store.delete_older_than, 0, DAY_NS // 2)
+    step("delete_older_than", store.delete_older_than, 0, DAY_NS // 10)
     added = step(
         "write_samples(ADD COLUMN double)", store.write_samples,
-        _two_day_raw(spark, 50 * NS).withColumn("v2", F.col("v") / 7), 0,
+        _periodic_raw(spark, 5, 6).withColumn("v2", F.col("v") / 7), 0,
     )
     assert {
         c.path_in_schema for f in added
@@ -1499,22 +1560,48 @@ def test_every_store_write_uses_the_store_format(spark, tmp_path):
     } == {"v", "v2"}
     added = step("rename_channel", store.rename_channel, "PV:0", "PV:9")
     for table in ("samples/decimation_level=0/",
-                  "samples/decimation_level=3600/"):
+                  "samples/decimation_level=1/"):
         assert any(table in f for f in added), table
+
+
+def test_periodic_values_need_the_store_pages(spark, tmp_path):
+    """The page-size check of ``_assert_store_format`` tells the page
+    sizes apart: the same day of ``_periodic_raw`` written PLAIN + zstd
+    with the default 20,000-row pages stays near its PLAIN size, while
+    the store's write of it passes the check."""
+    day = _periodic_raw(spark, 0, 1)
+    out = str(tmp_path / "default_pages")
+    day.coalesce(1).write.option("compression", "zstd").option(
+        "parquet.enable.dictionary", "false"
+    ).parquet(out)
+    (v,) = [
+        c for f in _parquet_files(out) for c in _column_chunks(f)
+        if c.path_in_schema == "v"
+    ]
+    assert v.total_compressed_size > 0.8 * 8 * v.num_values
+    store = _store(spark, tmp_path)
+    store.write_samples(day, 0)
+    files = _parquet_files(str(tmp_path / "archive"))
+    assert sum(map(_assert_store_format, files)) == 1
 
 
 def test_legacy_v1_snappy_files_read_back_and_compact_converts(
     spark, tmp_path
 ):
     """A level holding a file from Spark's default writer (v1 pages,
-    snappy, dictionary-encoded doubles) next to store-format files reads
-    back exactly; compact rewrites it into the store format with the
-    same rows."""
+    snappy, dictionary-encoded doubles, 20,000-row pages) next to
+    store-format files reads back exactly; compact rewrites it into the
+    store format, page sizing included, with the same rows."""
     from cassandra_pv_archiver_spark.sources.archive_store import _date_expr
 
     store = _store(spark, tmp_path)
-    new = _two_day_raw(spark)
-    legacy = _two_day_raw(spark, 30 * NS)
+    # a periodic channel, its legacy block ending the date the store
+    # format's block starts, next to channels whose doubles repeat often
+    # enough for Spark's writer to keep their dictionary
+    new = _two_day_raw(spark).union(_periodic_raw(spark, 0, 1.5, "PV:P"))
+    legacy = _two_day_raw(spark, 30 * NS).union(
+        _periodic_raw(spark, 1.5, 2, "PV:P")
+    )
     store.write_samples(new, 0)
     table = store._level_table(0)
     stage = table.stage_dir()
@@ -1531,12 +1618,19 @@ def test_legacy_v1_snappy_files_read_back_and_compact_converts(
     assert old["channel"].compression == "SNAPPY"
     assert _has_dictionary(old["v"])
 
-    want = sorted(map(tuple, new.union(legacy).collect()))
-    assert sorted(map(tuple, store.read_samples(0).collect())) == want
+    want = new.union(legacy)
+
+    def same_rows() -> bool:
+        got = store.read_samples(0)
+        return got.count() == want.count() and not got.exceptAll(want).count()
+
+    assert same_rows()
     store.compact(0)
-    for f in store._level_files(0):
+    assert sum(
         _assert_store_format(f.split("://", 1)[-1])
-    assert sorted(map(tuple, store.read_samples(0).collect())) == want
+        for f in store._level_files(0)
+    ) == 2
+    assert same_rows()
 
 
 def test_duckdb_reads_store_files_like_spark(spark, tmp_path):
